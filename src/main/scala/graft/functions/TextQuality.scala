@@ -321,18 +321,12 @@ object Dedup {
   /** Star-round count of the MOST RECENT connectedComponents call in
     * this JVM — a diagnostic for the scale smoke's round-flatness
     * evidence (CC rounds must stay ~log n, independent of data volume).
+    * 0 when no star round ran: either the input edge set was already a
+    * star forest, or it fit the broadcast budget and the driver finished
+    * it with union-find. A value ≥ 1 means the star-round path ran.
     * Last-writer-wins under concurrency; never consumed by query logic.
     */
   @volatile private[graft] var lastCcRounds: Int = -1
-
-  /** Measurement hook (VERDICT r18 #3): when set, the FIRST star round
-    * writes the small-star frame's formatted physical plan here before
-    * the localCheckpoint truncates its lineage — the committed
-    * plans/r18 dumps could not show the in-loop one-Exchange-per-step
-    * Window because the checkpoint had already flattened it. Written
-    * once per connectedComponents call; None (the default) is zero-cost.
-    */
-  @volatile private[graft] var ccStepPlanSink: Option[java.nio.file.Path] = None
 
   /** Exact dedup on a content digest: first row (min of `keep`) per
     * distinct value of `col`. The payload never shuffles — only the
@@ -663,6 +657,16 @@ object Dedup {
     * Both steps preserve components and never move an edge's small end
     * below the component minimum; an edge set fixed under BOTH is exactly
     * a star forest, whose centers are the component minima.
+    *
+    * Path selection: the first star-forest check also sums the edge
+    * count E (no extra job). An input that is already a star forest
+    * needs no work. Otherwise, when the (long, long) edge set fits the
+    * broadcast budget — E × 16 B ≤ `spark.sql.autoBroadcastJoinThreshold`
+    * — the edges are collected and the DRIVER finishes the components
+    * with union-find, whose (node, min id) rows join back like the
+    * rounds' star edges. Only larger edge sets pay the star rounds, so a
+    * threshold of -1 ("never ship a relation to every executor") always
+    * selects them. `lastCcRounds` tells the paths apart (0 vs ≥ 1).
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       idCol: String, aCol: String, bCol: String): DataFrame = {
@@ -690,15 +694,21 @@ object Dedup {
     // that is ALREADY a star forest (e.g. saved min-id labels) now
     // converges in zero rounds. One map-side-combinable aggregation,
     // whose collect also materializes the lazily-checkpointed frame.
-    def starForestViolations(e: DataFrame): Long =
-      e.select(explode(array(
+    // Returns (violating nodes, edges): Σ od over the groups is the edge
+    // count, which sizes the driver finish below at no extra job.
+    def starForestViolations(e: DataFrame): (Long, Long) = {
+      val r = e.select(explode(array(
           struct(col("u").as("n"), lit(1L).as("od"), lit(0).as("ctr")),
           struct(col("v").as("n"), lit(0L).as("od"), lit(1).as("ctr")))).as("x"))
         .select(col("x.n").as("n"), col("x.od").as("od"), col("x.ctr").as("ctr"))
         .groupBy("n")
         .agg(sum("od").as("od"), max("ctr").as("ctr"))
-        .filter(col("od") > 1 || (col("od") >= 1 && col("ctr") === 1))
-        .count()
+        .agg(
+          count(when(col("od") > 1 || (col("od") >= 1 && col("ctr") === 1), 1)),
+          coalesce(sum("od"), lit(0L)))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
     // direct every edge big→small (the small-star orientation; large-star
     // symmetrizes internally). localCheckpoint TRUNCATES lineage each
     // round — without it round k's plan embeds round k−1's several times
@@ -715,7 +725,16 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .distinct()
       .localCheckpoint(false) // the star test below forces it; cuts pair-derivation lineage
-    var converged = starForestViolations(edges) == 0L
+    val (violations, edgeCount) = starForestViolations(edges)
+    // Driver finish: an edge set that fits the broadcast budget (two
+    // longs per edge, the same bytes a broadcast would ship) is collected
+    // once and finished with union-find — one collect job in place of
+    // ~log n rounds of a few jobs each. The array-index bound keeps the
+    // 2E-slot id array addressable under an outsized threshold.
+    val spark = nodes.sparkSession
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val onDriver = violations > 0 && edgeCount * 16 <= threshold && edgeCount < (1L << 30)
+    var converged = violations == 0L
     var rounds = 0
     // Empirical safety margin, not the O(log² n) worst-case bound (which
     // is ~4096 for a 2⁶⁴-node graph): alternating star rounds converge in
@@ -731,7 +750,7 @@ object Dedup {
     // guide §2.3/§2.4 — same keyed work, one exchange instead of two).
     val wuv = org.apache.spark.sql.expressions.Window
       .partitionBy("u").orderBy("v")
-    while (!converged && rounds < maxRounds) {
+    while (!onDriver && !converged && rounds < maxRounds) {
       rounds += 1
       // large-star: attach each strictly-larger neighbor v of u to
       // m = min(Γ(u) ∪ {u}). The window runs over the FULL symmetrized
@@ -759,22 +778,17 @@ object Dedup {
         .select(col("e.eu").as("u"), col("e.ev").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-      if (rounds == 1) ccStepPlanSink.foreach { p =>
-        java.nio.file.Files.writeString(p, small.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        ccStepPlanSink = None
-      }
       val smallCp = small.localCheckpoint(false)
       // converged ⟺ the new edge set is a star forest — the exact
       // fixpoint of both steps — tested directly on `small` (one
       // aggregation job per round, which also truncates the lineage).
-      converged = starForestViolations(smallCp) == 0L
+      converged = starForestViolations(smallCp)._1 == 0L
       edges = smallCp
     }
     // an edge set still changing past maxRounds would yield labels above
     // the true component minimum. Fail loudly: silently wrong keep/drop
     // groups are worse than a crashed dedup job.
-    require(converged,
+    require(onDriver || converged,
       s"connectedComponents did not converge in $maxRounds star rounds " +
         "(edge set still changing)")
     lastCcRounds = rounds
@@ -783,8 +797,14 @@ object Dedup {
     // leaf/center disjointness), so the label frame is just the edge set
     // itself — no center rows, no union, no distinct exchange (r18):
     // centers never appear as a leaf and label themselves through the
-    // same coalesce that handles singletons below.
-    val labels = edges.select(col("u").as("_node"), col("v").as("cluster_id"))
+    // same coalesce that handles singletons below. The driver finish
+    // yields the same rows: (node, component min) for every non-minimum.
+    val labels =
+      if (onDriver) {
+        import spark.implicits._
+        unionFindLabels(edges.select("u", "v").as[(Long, Long)].collect())
+          .toSeq.toDF("_node", "cluster_id")
+      } else edges.select(col("u").as("_node"), col("v").as("cluster_id"))
     // join labels back on the long form of the caller's id (output keeps
     // the original id column type); singletons AND star centers miss the
     // join and label themselves via coalesce — ONE left join instead of
@@ -795,5 +815,40 @@ object Dedup {
       .select(col("_orig"),
         coalesce(col("cluster_id"), col("_node")).as("cluster_id"))
       .withColumnRenamed("_orig", idCol).select(idCol, "cluster_id")
+  }
+
+  /** Union-find over a collected (u, v) edge list: one (node, component
+    * min id) pair per node that is not its component's minimum — the
+    * rows a converged star forest holds. The distinct ids sort into a
+    * long[] so the parent array is an int[] over their indices, and a
+    * union keeps the SMALLER index as root: every root is then its
+    * component's minimum id.
+    */
+  private def unionFindLabels(uv: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val all = new Array[Long](2 * uv.length)
+    var i = 0
+    while (i < uv.length) { all(2 * i) = uv(i)._1; all(2 * i + 1) = uv(i)._2; i += 1 }
+    java.util.Arrays.sort(all)
+    var m = 0
+    i = 0
+    while (i < all.length) {
+      if (m == 0 || all(i) != all(m - 1)) { all(m) = all(i); m += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(m)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def index(id: Long): Int = java.util.Arrays.binarySearch(all, 0, m, id)
+    uv.foreach { case (u, v) =>
+      val (a, b) = (find(index(u)), find(index(v)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    (0 until m).iterator.flatMap { k =>
+      val r = find(k)
+      if (r == k) None else Some((all(k), all(r)))
+    }.toArray
   }
 }

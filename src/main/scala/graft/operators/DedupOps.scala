@@ -451,8 +451,11 @@ object DedupOps {
     // Dedup CLUSTERS: connected components over the multi-band LSH
     // candidate graph — the step that turns near-dup pairs into keep/drop
     // groups (cluster_id = min doc_id in the component; singletons label
-    // themselves). Spark side: alternating large-star/small-star
-    // (Dedup.connectedComponents) — O(log² n) rounds independent of graph
+    // themselves). Spark side: Dedup.connectedComponents — when the
+    // (long, long) edge set fits spark.sql.autoBroadcastJoinThreshold
+    // (16 B/edge) the driver finishes it with union-find in one collect;
+    // larger edge sets, or a threshold of -1, run alternating
+    // large-star/small-star rounds — O(log² n) rounds independent of graph
     // diameter, each shuffling only (long, long) edge pairs. Oracle:
     // recursive-CTE transitive closure with the same min-id reduction.
     //

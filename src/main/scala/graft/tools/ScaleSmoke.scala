@@ -112,7 +112,7 @@ object ScaleSmoke {
     // heavy family per VERDICT r5 #7; (name, claim-to-stress)
     val audited = Seq(
       "dd04_lsh_candidate_pairs" -> "banding volume linear in docs",
-      "dd08_dedup_clusters" -> "CC rounds shuffle (id,label) longs only",
+      "dd08_dedup_clusters" -> "CC shuffles (id,label) longs only",
       "tx12_winnow_overlap" -> "worst shuffle/scan ratio stays linear",
       "cu01_curation_ledger" -> "one-plan ledger, signals share a scan",
       "ss10_srp_neardup" -> "sign codes born in scan; capped banding",
@@ -149,6 +149,10 @@ object ScaleSmoke {
       "cu20_epoch_ordered_export" -> "epoch-ordered export: one Ordinal rank pass in longs plus the terminal sort-within-shard exchange carrying the corpus bytes ONCE — wall and shuffle must scale ≈ Nx like cu17, with the permutation (not the curriculum) as the placement key",
       "fn14_wmt_ingest" -> "the composed GNMT text chain (r17): ONE bucket exchange carrying the token-id arrays, reused by the batch-max window (plan-pinned) — shuffle ≈ Nx with zero spill; the vocab rollup ships (word, count) longs only")
     val byName = graft.SparkEntry.all.map(q => q.name -> q).toMap
+    // claim-column suffix naming the CC path each leg took
+    def ccPaths(cc1: Int, ccN: Int): String =
+      (for (a <- ShuffleAudit.ccPath(cc1); b <- ShuffleAudit.ccPath(ccN))
+        yield s" (CC path 1x: $a; ${copies}x: $b)").getOrElse("")
     def fmt(b: Long): String =
       if (b >= (1L << 20)) f"${b / 1048576.0}%.1f MiB"
       else if (b >= 1024) f"${b / 1024.0}%.1f KiB" else s"$b B"
@@ -268,12 +272,13 @@ object ScaleSmoke {
         "| wall ratio | claim |\n"
       sb ++= "|---|---|---|---|---|---|---|---|---|---|\n"
       picked.foreach { case (name, claim) =>
-        val (s1, _, dt1, r1, _) = run(name, sfDir)
-        val (sN, spN, dtN, rN, _) = run(name, dir, Some(nxParts))
+        val (s1, _, dt1, r1, cc1) = run(name, sfDir)
+        val (sN, spN, dtN, rN, ccN) = run(name, dir, Some(nxParts))
         val sRatio = if (s1 > 0) f"${sN.toDouble / s1}%.1fx" else "n/a"
         val wRatio = if (dt1 > 0) f"${dtN / dt1}%.1fx" else "n/a"
         sb ++= s"| $name | $r1 / $rN | ${fmt(s1)} | ${fmt(sN)} | $sRatio " +
-          f"| ${fmt(spN)} | $dt1%.1f s | $dtN%.1f s | $wRatio | $claim |\n"
+          f"| ${fmt(spN)} | $dt1%.1f s | $dtN%.1f s | $wRatio " +
+          s"| $claim${ccPaths(cc1, ccN)} |\n"
         println(f"$name subset done: ${fmt(sN)} shuffle, ${fmt(spN)} spill, " +
           f"$dtN%.1f s ($wRatio wall)")
       }
@@ -314,7 +319,7 @@ object ScaleSmoke {
       if (cc1 >= 0 && ccN >= 0) ccRounds += ((name, cc1, ccN, dt1, dtN))
       val ratio = if (s1 > 0) f"${sN.toDouble / s1}%.1f" + "x" else "n/a"
       sb ++= s"| $name | $r1 / $rN | ${fmt(s1)} | ${fmt(sN)} | $ratio " +
-        f"| ${fmt(spN)} | $dtN%.1f s | $claim |\n"
+        f"| ${fmt(spN)} | $dtN%.1f s | $claim${ccPaths(cc1, ccN)} |\n"
       println(s"$name done: ${fmt(sN)} shuffle, ${fmt(spN)} spill")
     }
     // Diameter-independence, measured: alternating large-star/small-star
@@ -322,6 +327,8 @@ object ScaleSmoke {
     // rounds — flat-ish round counts (±1) and sub-linear wall growth are
     // the evidence the CC claim rests on.
     sb ++= s"\n### CC round-count flatness (star rounds, 1x vs ${copies}x)\n\n"
+    sb ++= "0 rounds: the edge set fit spark.sql.autoBroadcastJoinThreshold\n"
+    sb ++= "(16 B/edge) and the driver finished it with union-find.\n\n"
     sb ++= "| query | rounds 1x | rounds " + copies + "x | wall 1x | wall " +
       copies + "x |\n|---|---|---|---|---|\n"
     ccRounds.foreach { case (name, c1, cN, d1, dN) =>

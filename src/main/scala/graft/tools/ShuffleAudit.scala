@@ -15,6 +15,15 @@ import org.apache.spark.sql.SparkSession
   */
 object ShuffleAudit {
 
+  /** Which connectedComponents path the last run took, read from
+    * `Dedup.lastCcRounds` after resetting it to -1: None when the run
+    * drove no CC, else the driver union-find finish or the star rounds.
+    */
+  private[tools] def ccPath(rounds: Int): Option[String] =
+    if (rounds < 0) None
+    else if (rounds == 0) Some("driver union-find")
+    else Some(s"$rounds star rounds")
+
   // queries whose shuffle behavior carries the scale argument, with the
   // claim the measurement should support
   private val audited: Seq[(String, String)] = Seq(
@@ -32,7 +41,7 @@ object ShuffleAudit {
     "ss07_dim_stats" -> "one-pass agg: shuffle is a few partial rows",
     "ss09_pq_recall" -> "training ranks only the 20% sample; cuts/codebook broadcast; ADC combines map-side",
     "ss10_srp_neardup" -> "planes are plan literals; only (vec_id, band, key) longs shuffle",
-    "dd14_semantic_dedup" -> "block join caps pair fan-out; CC rounds shuffle (id, label) longs only",
+    "dd14_semantic_dedup" -> "block join caps pair fan-out; CC shuffles (id, label) longs only",
     "cu01_curation_ledger" -> "signal projections share a scan (banding scans once more); only digest/label longs shuffle",
     "tx11_winnow_fingerprints" -> "winnow selection entirely inside the scan projection: zero shuffle",
     "tx12_winnow_overlap" -> "fp set + cap-bounded pair rows shuffle (linear under floods); text never does",
@@ -210,6 +219,7 @@ object ShuffleAudit {
     audited.foreach { case (name, claim) =>
       val q = byName(name)
       val l = new StageMetricsListener
+      graft.functions.Dedup.lastCcRounds = -1
       val df = q.fn(spark, sfDir)
       l.collect(spark) {
         df.write.format("noop").mode("overwrite").save()
@@ -219,8 +229,9 @@ object ShuffleAudit {
       val ratio =
         if (input > 0) f"${l.shuffleWriteBytes.toDouble / input}%.4f"
         else "n/a"
+      val path = ccPath(graft.functions.Dedup.lastCcRounds).fold("")("; CC path: " + _)
       sb ++= s"| $name | ${fmt(input)} | ${fmt(l.shuffleWriteBytes)} " +
-        s"| ${fmt(l.spillBytes)} | $ratio | $claim |\n"
+        s"| ${fmt(l.spillBytes)} | $ratio | $claim$path |\n"
     }
     sb ++= "\ntx12's 23.9× ratio was re-examined (VERDICT r5 #6, `graft.tools.Tx12Diet`):\n"
     sb ++= "a weighted distinct-doc-list variant (emit each bucket's pairs once per\n"
@@ -280,12 +291,14 @@ object ShuffleAudit {
       val rows = q.fn(spark, floodDir).count()
       spark.sharedState.cacheManager.clearCache()
       val l = new StageMetricsListener
+      graft.functions.Dedup.lastCcRounds = -1
       l.collect(spark) {
         q.fn(spark, floodDir).write.format("noop").mode("overwrite").save()
       }
       spark.sharedState.cacheManager.clearCache()
+      val path = ccPath(graft.functions.Dedup.lastCcRounds).fold("")("; CC path: " + _)
       sb ++= s"| $name | $plainRows | $rows | ${fmt(l.shuffleWriteBytes)} " +
-        s"| ${fmt(l.spillBytes)} | $claim |\n"
+        s"| ${fmt(l.spillBytes)} | $claim$path |\n"
     }
 
     // Cluster-once / audit-many: materialize the (doc_id, cluster_id)

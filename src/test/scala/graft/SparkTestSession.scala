@@ -20,4 +20,16 @@ object SparkTestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with `spark.sql.autoBroadcastJoinThreshold` at `bytes`,
+    * then restore the previous value (unset stays unset). -1 forces every
+    * size-gated choice onto its distributed path, e.g. the CC star rounds.
+    */
+  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

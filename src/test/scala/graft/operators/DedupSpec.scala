@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withBroadcastThreshold}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,9 +51,12 @@ class DedupSpec extends AnyFunSuite {
     val edges = DedupOps.bandStarEdges(bands)
     assert(edges.count() == 299L + 4L)
     val vertices = (flood ++ organic).map(_._1).toDF("doc_id")
-    val clusters = graft.functions.Dedup
-      .connectedComponents(vertices, edges, "doc_id", "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // threshold -1: the flood must converge through the star rounds
+    val clusters = withBroadcastThreshold(-1) {
+      graft.functions.Dedup
+        .connectedComponents(vertices, edges, "doc_id", "a_id", "b_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert((0L until 300L).forall(clusters(_) == 0L), "flood must be one cluster")
     assert((1000L until 1005L).forall(clusters(_) == 1000L))
   }
@@ -77,9 +80,13 @@ class DedupSpec extends AnyFunSuite {
     val n = 600L
     val verts = (0L to n).toDF("doc_id")
     val edges = (0L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val got = graft.functions.Dedup
-      .connectedComponents(verts, edges, "doc_id", "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    // threshold -1 forces the star rounds this law is about
+    val got = withBroadcastThreshold(-1) {
+      graft.functions.Dedup
+        .connectedComponents(verts, edges, "doc_id", "a_id", "b_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1))
+    }
+    assert(graft.functions.Dedup.lastCcRounds >= 1)
     assert(got.length == n + 1)
     assert(got.forall(_._2 == 0L), "every chain node must label to the minimum")
   }
@@ -88,12 +95,16 @@ class DedupSpec extends AnyFunSuite {
     // tinyint/smallint render as "tinyint"/"smallint" — the DataType
     // match must admit them (the old simpleString guard wrongly rejected
     // them) and still reject non-integral ids fast.
-    val verts = Seq(1, 2, 3).toDF("id").select(col("id").cast("smallint").as("id"))
-    val edges = Seq((1, 2)).toDF("a", "b")
+    val verts = Seq(1, 2, 3, 4).toDF("id").select(col("id").cast("smallint").as("id"))
+    // a 2-hop path is no star forest, so each conf takes its own path
+    val edges = Seq((1, 2), (3, 2)).toDF("a", "b")
       .select(col("a").cast("smallint").as("a"), col("b").cast("smallint").as("b"))
-    val got = graft.functions.Dedup.connectedComponents(verts, edges, "id", "a", "b")
-      .collect().map(r => (r.getShort(0).toLong, r.getLong(1))).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L))
+    def labels(): Map[Long, Long] =
+      graft.functions.Dedup.connectedComponents(verts, edges, "id", "a", "b")
+        .collect().map(r => (r.getShort(0).toLong, r.getLong(1))).toMap
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L)
+    assert(labels() == expected)
+    withBroadcastThreshold(-1) { assert(labels() == expected) }
     val bad = intercept[IllegalArgumentException] {
       graft.functions.Dedup.connectedComponents(
         Seq("a", "b").toDF("id"), Seq(("a", "b")).toDF("a", "b"), "id", "a", "b")
@@ -109,6 +120,35 @@ class DedupSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(api == gated)
     spark.catalog.clearCache()
+  }
+
+  test("clusterLabels finishes on the driver in few Spark jobs; -1 keeps the star-round job count") {
+    val docs = graft.Tables.documents(spark, sf)
+    def jobs(): Int = {
+      spark.catalog.clearCache()
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        DedupOps.clusterLabels(docs).write.format("noop").mode("overwrite").save()
+        org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext, 10000)
+      } finally spark.sparkContext.removeSparkListener(l)
+      n.get
+    }
+    // default conf: the fixture's edge set fits the broadcast budget and
+    // the driver finishes it (10 jobs here; 39 when it ran 5 star rounds)
+    val driverJobs = jobs()
+    assert(graft.functions.Dedup.lastCcRounds == 0)
+    assert(driverJobs <= 12, s"$driverJobs Spark jobs")
+    // -1: the star rounds run in exactly the 40 jobs they took before the
+    // size decision existed — reading the edge count adds no job
+    withBroadcastThreshold(-1) {
+      assert(jobs() == 40)
+      assert(graft.functions.Dedup.lastCcRounds == 5)
+    }
   }
 
   test("dd14 semantic dedup partitions the corpus into keep groups") {

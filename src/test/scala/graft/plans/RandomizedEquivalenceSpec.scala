@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.SparkTestSession.spark
+import graft.SparkTestSession.{spark, withBroadcastThreshold}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,11 +39,18 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
       }
       val expected = verts.map(v => v -> find(v.toInt).toLong).toMap
 
-      val got = graft.functions.Dedup.connectedComponents(
+      def labels(): Map[Long, Long] = graft.functions.Dedup.connectedComponents(
         verts.toDF("doc_id"), edges.toDF("a_id", "b_id"),
         "doc_id", "a_id", "b_id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"seed=$seed")
+      // default conf: the edge set fits the broadcast budget, so the
+      // driver finishes it (0 star rounds); -1 forces the star rounds
+      assert(labels() == expected, s"driver path, seed=$seed")
+      assert(graft.functions.Dedup.lastCcRounds == 0, s"seed=$seed")
+      withBroadcastThreshold(-1) {
+        assert(labels() == expected, s"star rounds, seed=$seed")
+        assert(graft.functions.Dedup.lastCcRounds >= 1, s"seed=$seed")
+      }
     }
   }
 
@@ -87,9 +94,12 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
     val verts = (0L to 10L).toDF("doc_id")
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (5L, 7L), (5L, 9L))
       .toDF("a_id", "b_id")
-    val got = graft.functions.Dedup.connectedComponents(
-        verts, edges, "doc_id", "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // threshold -1: the star-round path must itself stop at zero rounds
+    val got = withBroadcastThreshold(-1) {
+      graft.functions.Dedup.connectedComponents(
+          verts, edges, "doc_id", "a_id", "b_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(graft.functions.Dedup.lastCcRounds == 0)
     val expected = Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 4L -> 4L,
       5L -> 5L, 6L -> 6L, 7L -> 5L, 8L -> 8L, 9L -> 5L, 10L -> 10L)
@@ -100,12 +110,35 @@ class RandomizedEquivalenceSpec extends AnyFunSuite {
     val n = 31L
     val verts = (0L until n).toDF("doc_id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val got = graft.functions.Dedup.connectedComponents(
-        verts, edges, "doc_id", "a_id", "b_id")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // threshold -1 forces the star rounds this round-count law is about
+    val got = withBroadcastThreshold(-1) {
+      graft.functions.Dedup.connectedComponents(
+          verts, edges, "doc_id", "a_id", "b_id")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(got == (0L until n).map(_ -> 0L).toMap)
     // star rounds, not diameter rounds: ~log n, nowhere near 30
+    assert(graft.functions.Dedup.lastCcRounds >= 1)
     assert(graft.functions.Dedup.lastCcRounds <= 8)
+  }
+
+  test("the driver finish takes edge sets of exactly 16 B/edge × E, the rounds one byte less") {
+    // a 30-hop chain has E = 30 distinct edges, so 480 B is the boundary
+    val n = 31L
+    val verts = (0L until n).toDF("doc_id")
+    val edges = (0L until n - 1).map(i => (i + 1, i)).toDF("a_id", "b_id")
+    val expected = (0L until n).map(_ -> 0L).toMap
+    def labels(): Map[Long, Long] = graft.functions.Dedup.connectedComponents(
+        verts, edges, "doc_id", "a_id", "b_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    withBroadcastThreshold(16L * (n - 1)) {
+      assert(labels() == expected)
+      assert(graft.functions.Dedup.lastCcRounds == 0, "driver path expected")
+    }
+    withBroadcastThreshold(16L * (n - 1) - 1) {
+      assert(labels() == expected)
+      assert(graft.functions.Dedup.lastCcRounds >= 1, "star rounds expected")
+    }
   }
 
   test("duplicatedSpans match a brute-force reference on random corpora") {
