@@ -37,8 +37,26 @@ object Bench {
     * evaluates every output column and discards it — the cost a consumer
     * of the full result actually pays.
     */
-  private def materialize(df: org.apache.spark.sql.DataFrame): Unit =
+  private[graft] def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  /** Warm-up (untimed): JIT + codegen + broadcast machinery + FS cache.
+    * Guarded throughout — a missing/corrupt fixture must surface as a
+    * per-query "failed" entry, not kill the bench before timing.
+    */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1L << 20).selectExpr("sum(id)").collect()
+    for (t <- Seq("lineitem", "orders", "customer", "documents", "embeddings"))
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    SparkEntry.all.find(_.name == "q3_top_revenue_orders")
+      .foreach(q => try materialize(q.fn(spark, sfDir)) catch { case _: Throwable => () })
+  }
 
   /** Cross-run references are valid only between runs of the SAME
     * measurement methodology. r16 switched the timed action from
@@ -222,12 +240,7 @@ object Bench {
     */
   private[graft] def driftDivisor(sample: Seq[(Double, Double)]): Double = {
     val ratios = sample.collect { case (iso, ref) if ref > 0 => iso / ref }
-    if (ratios.isEmpty) 1.0
-    else {
-      val s = ratios.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
+    if (ratios.isEmpty) 1.0 else median(ratios)
   }
 
   /** Of the sampled (isolatedMin, priorRef) rows, how many individually
@@ -275,33 +288,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus(4))
     spark.sparkContext.setLogLevel("WARN")
-    graft.tools.LogHygiene.suppressTinyFrameWindowWarnings()
-
-    // Warm-up (untimed): JIT + codegen + broadcast machinery + FS cache.
-    // Guarded throughout — a missing/corrupt fixture must surface as a
-    // per-query "failed" entry below, not kill the bench before timing.
-    spark.range(1L << 20).selectExpr("sum(id)").collect()
-    for (t <- Seq("lineitem", "orders", "customer", "documents", "embeddings"))
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    SparkEntry.all.find(_.name == "q3_top_revenue_orders")
-      .foreach(q => try materialize(q.fn(spark, sfDir)) catch { case _: Throwable => () })
+    warmUp(spark, sfDir)
 
     def round3(v: Double): Double = math.rint(v * 1000) / 1000
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
 
     // min over reps (default 2, +1 extra rep for sub-second queries whose
     // round-over-round deltas are dominated by host noise): single-shot

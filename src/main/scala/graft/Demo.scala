@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end demo of the SURVEY §7.3 slice: build the flagship pipeline
   * IR, trace it instrumented, rank bottlenecks, solve the LP, apply
   * rewrites, and benchmark the optimized plan.
@@ -11,16 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(Session.envCpus(8))
 
     val g0 = api.Flagship.graph
     // honors GRAFT_NO_OPTIMIZE / GRAFT_APPLY_CACHING / GRAFT_MAX_CHANGE /

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Flood smoke for the adaptive hot-cell splitter (VERDICT r17 #6): the
@@ -32,15 +31,7 @@ object AdaptiveFloodSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.tools.LogHygiene.suppressTinyFrameWindowWarnings()
+    val spark = graft.Session.local(8)
 
     val base = graft.Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") < 400)

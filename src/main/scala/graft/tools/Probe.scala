@@ -1,0 +1,130 @@
+package graft.tools
+
+import graft.{Bench, Q, Session, SparkEntry}
+import graft.metrics.{StageMetricsListener, StageSpan}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
+
+/** One measurement path for registered queries.
+  *
+  *   sbt 'runMain graft.tools.Probe <q1,q2,...> [reps|jobs|plan|final-plan] [sfDir] [reps]'
+  *
+  *  - `reps` (default): Bench's warm-up, one untimed rep, then `reps` (3)
+  *    timed reps: median and min wall, and the fastest rep's jobs,
+  *    stages, shuffle read/write and spill.
+  *  - `jobs`: each job of one measured rep with its span, the driver gap
+  *    before it, and its stage names.
+  *  - `plan`: the formatted physical plan before execution.
+  *  - `final-plan`: the executed adaptive plan, where AQE's runtime stage
+  *    reuse shows, with its reuse, broadcast and shuffle-stage counts.
+  *
+  * sfDir defaults to `SPARK_GRAFT_SF_DIR` and cores to `SPARK_GRAFT_CPUS`
+  * (default 4), as in Bench, so rows line up with Bench rows.
+  */
+object Probe {
+
+  final case class Measured(wallS: Double, metrics: StageMetricsListener,
+      executedPlan: SparkPlan)
+
+  /** Builds a frame and materializes it to the noop sink (Bench's timed
+    * action) under ONE listener, so jobs run while the frame is built are
+    * counted; then clears the cache the query left. The frame's plan is
+    * taken first, so cached relations still show in it.
+    */
+  def measure(spark: SparkSession)(build: => DataFrame): Measured = {
+    val l = new StageMetricsListener
+    val t0 = System.nanoTime()
+    val df = l.collect(spark) { val df = build; Bench.materialize(df); df }
+    val wallS = (System.nanoTime() - t0) / 1e9
+    val plan = df.queryExecution.executedPlan
+    spark.sharedState.cacheManager.clearCache()
+    Measured(wallS, l, plan)
+  }
+
+  def query(name: String): Q = SparkEntry.all.find(_.name == name)
+    .getOrElse(throw new IllegalArgumentException(s"unknown query: $name"))
+
+  final case class Reps(wallS: Seq[Double], jobs: Int, stages: Int,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
+
+  def reps(spark: SparkSession, q: Q, sfDir: String, n: Int): Reps = {
+    measure(spark)(q.fn(spark, sfDir))
+    val runs = Seq.fill(n)(measure(spark)(q.fn(spark, sfDir)))
+    val l = runs.minBy(_.wallS).metrics
+    Reps(runs.map(_.wallS), l.spans.map(_.jobId).distinct.size, l.spans.size,
+      l.shuffleReadBytes, l.shuffleWriteBytes, l.spillBytes)
+  }
+
+  final case class Job(id: Int, spanMs: Long, gapMs: Long, stages: Seq[String])
+
+  /** Spans grouped by job in id order; the gap is the driver's idle time
+    * since the previous job ended (0 for the first).
+    */
+  def timeline(spans: Seq[StageSpan]): Seq[Job] = {
+    var prevEnd = 0L
+    spans.groupBy(_.jobId).toSeq.sortBy(_._1).map { case (id, js) =>
+      val start = js.map(_.startMs).min
+      val end = js.map(_.endMs).max
+      val gap = if (prevEnd == 0) 0L else start - prevEnd
+      prevEnd = math.max(prevEnd, end)
+      Job(id, end - start, gap, js.map(_.name))
+    }
+  }
+
+  /** One untimed rep, then the job timeline of one measured rep. */
+  def jobs(spark: SparkSession, q: Q, sfDir: String): (Measured, Seq[Job]) = {
+    measure(spark)(q.fn(spark, sfDir))
+    val m = measure(spark)(q.fn(spark, sfDir))
+    (m, timeline(m.metrics.spans))
+  }
+
+  def plan(spark: SparkSession, q: Q, sfDir: String): String =
+    q.fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+
+  /** Executes the frame's OWN QueryExecution (the noop sink would run a
+    * separate write execution and leave this plan unexecuted), dropping
+    * every row on the executors so nothing ships to the driver.
+    */
+  def finalPlan(spark: SparkSession, q: Q, sfDir: String): String = {
+    val qe = q.fn(spark, sfDir).queryExecution
+    SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+    spark.sharedState.cacheManager.clearCache()
+    qe.executedPlan.toString
+  }
+
+  def main(args: Array[String]): Unit = {
+    val usage = "usage: Probe <q1,q2,...> [reps|jobs|plan|final-plan] [sfDir] [reps]"
+    val qs = args.headOption.getOrElse(sys.error(usage)).split(',').toSeq.map(n => query(n.trim))
+    val mode = args.lift(1).getOrElse("reps")
+    require(Set("reps", "jobs", "plan", "final-plan")(mode), s"unknown mode: $mode; $usage")
+    val sfDir = args.lift(2).orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
+      .getOrElse(sys.error(s"$usage (or set SPARK_GRAFT_SF_DIR)"))
+    val n = args.lift(3).fold(3)(_.toInt)
+    val spark = Session.local(Session.envCpus(4))
+    def count(p: String, re: String) = re.r.findAllIn(p).size
+    if (mode == "reps") Bench.warmUp(spark, sfDir)
+    qs.foreach { q =>
+      println(s"== ${q.name}")
+      mode match {
+        case "reps" =>
+          val r = reps(spark, q, sfDir, n)
+          println(f"median ${Bench.median(r.wallS)}%.3f s  min ${r.wallS.min}%.3f s  " +
+            f"jobs ${r.jobs}  stages ${r.stages}  shufR ${r.shuffleReadBytes / 1e6}%.2f MB  " +
+            f"shufW ${r.shuffleWriteBytes / 1e6}%.2f MB  spill ${r.spillBytes / 1e6}%.2f MB  " +
+            "reps " + r.wallS.map(t => f"$t%.3f").mkString(","))
+        case "jobs" =>
+          val (m, js) = jobs(spark, q, sfDir)
+          js.foreach(j => println(f"job ${j.id}%4d  ${j.spanMs}%6d ms  gap ${j.gapMs}%5d ms  " +
+            f"[${j.stages.size}%2d st]  ${j.stages.distinct.mkString(" | ")}"))
+          println(f"TOTAL: ${m.wallS}%.3f s, ${js.size} jobs, ${m.metrics.spans.size} stages")
+        case "plan" => println(plan(spark, q, sfDir))
+        case "final-plan" =>
+          val p = finalPlan(spark, q, sfDir)
+          println(s"reuse_nodes=${count(p, "ReusedQueryStage|ReusedExchange")} " +
+            s"broadcast_nodes=${count(p, "BroadcastQueryStage|BroadcastExchange")} " +
+            s"shuffle_stages=${count(p, "ShuffleQueryStage")}\n$p")
+      }
+    }
+    spark.stop()
+  }
+}

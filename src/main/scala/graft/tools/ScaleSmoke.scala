@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.metrics.StageMetricsListener
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1-equivalent smoke for the heavy query family (VERDICT r5 #7): all
@@ -35,14 +34,7 @@ object ScaleSmoke {
       if (args.length > 2)
         Some(args(2).split(',').map(_.trim).filter(_.nonEmpty).toSet)
       else None
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
 
     val dir = java.nio.file.Files.createTempDirectory("graft-scale-smoke").toString
     val alpha = "abcdefghijklmnopqrstuvwxyz"

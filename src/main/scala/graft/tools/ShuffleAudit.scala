@@ -1,8 +1,5 @@
 package graft.tools
 
-import graft.metrics.StageMetricsListener
-import org.apache.spark.sql.SparkSession
-
 /** Emits SCALE.md — measured per-query byte flows (input read, shuffle
   * write, spill) at a given scale factor, as evidence for the repo's
   * scale claims: dedup/LSH queries must shuffle KILOBYTES of signatures
@@ -42,7 +39,7 @@ object ShuffleAudit {
     "ss09_pq_recall" -> "training ranks only the 20% sample; cuts/codebook broadcast; ADC combines map-side",
     "ss10_srp_neardup" -> "planes are plan literals; only (vec_id, band, key) longs shuffle",
     "dd14_semantic_dedup" -> "block join caps pair fan-out; CC shuffles (id, label) longs only",
-    "cu01_curation_ledger" -> "signal projections share a scan (banding scans once more); only digest/label longs shuffle",
+    "cu01_curation_ledger" -> "signal projections share a scan (banding scans once more); only digest, band-key and label longs shuffle",
     "tx11_winnow_fingerprints" -> "winnow selection entirely inside the scan projection: zero shuffle",
     "tx12_winnow_overlap" -> "fp set + cap-bounded pair rows shuffle (linear under floods); text never does",
     "tx13_gopher_rules" -> "pure scan projection: zero shuffle",
@@ -50,7 +47,7 @@ object ShuffleAudit {
     "cu02_adaptive_quality" -> "one exchange of (id, source, score); stacked windows share it",
     "ss12_semantic_contamination" -> "cross-set banding: only (id, band, key) longs shuffle, per-side caps",
     "dd15_incremental_neardup" -> "anti-join shaped: corpus reduces to distinct band keys, no pair enumeration",
-    "cu03_full_ledger" -> "all per-row signals in one scan projection; digest/source/count exchanges only",
+    "cu03_full_ledger" -> "all per-row signals in one scan projection; digest/band-key/source/count exchanges only",
     "tx16_bigram_fluency" -> "token-level shuffles (counts + occurrence joins), linear in corpus; text never shuffles",
     "sm05_dsir_weights" -> "bucket tables (≤1024 rows) broadcast back; tokens never shuffle, per-doc sums combine map-side",
     "tx17_pii_redact" -> "pure scan projection (regex count + replace): zero shuffle",
@@ -78,8 +75,8 @@ object ShuffleAudit {
     "tx20_mojibake_repair" -> "pure scan projection (literal replace chain): zero shuffle",
     "dd19_url_dedup" -> "canonicalization fuses into the scan; only short canonical-URL strings + ids exchange, text never moves",
     "cu07_mixture_rebalance" -> "digest window shuffles 60-bit longs; per-source rollup partial-aggregates to one row per source, weights broadcast",
-    "dd20_soft_weights" -> "dd08's (id, label)-long CC exchanges plus ONE per-cluster count window; text never shuffles",
-    "cu08_cluster_split" -> "split is a scan-local hash of the CC label; nothing beyond dd08's (id, label) longs shuffles",
+    "dd20_soft_weights" -> "dd08's (band, bucket, doc_id) banding exchange and (id, label)-long CC rows plus ONE per-cluster count window; text never shuffles",
+    "cu08_cluster_split" -> "split is a scan-local hash of the CC label; nothing beyond dd08's band keys and (id, label) longs shuffles",
     "ss17_rrf_hybrid" -> "each arm reduces to (id, score) longs, then ranks on the distributed quantile-bucketed ordinal (no single-partition window); fusion joins ids, top-k is a 20-row sort",
     "sm09_universe_sample" -> "membership is a scan-local key hash on both sides; truth + estimate share one broadcast join pass",
     "an13_value_drift" -> "extrema broadcast back; bin assignment scan-local; 10-bin rollup combines map-side",
@@ -153,26 +150,19 @@ object ShuffleAudit {
     "ss26_semdedup_increment" -> "incremental ingest: only kept corpus reps enter the cell-keyed join (the corpus never rescans); the batch pays one scored pass + a cell-bounded self-join — cost scales with the batch, not the corpus",
     "ss27_semdedup_tau_sweep" -> "ONE pair pass shared by every τ arm: max(cs) partial-aggregates map-side so the post-pair exchange is ≤ N slim (id, double) rows; the τ grid is a broadcast literal and the rollup is |τ| rows",
     "ss28_cell_geometry" -> "pre-flight before the pair stage: broadcast-scored assignment + k-row cell rollup, hot rule by integer cross-multiply — no pair join, no quadratic anywhere",
-    "st16_stream_semdedup" -> "sequential SemDeDup over 4 ingest batches on ONE persisted assignment: per level a cell-keyed kept-side join + a within-batch self-join, both bounded by the k∝N cell contract; the streaming twin's state is the kept reps per cell. NOTE: reads 0 B at the r19 HEAD because the per-level lazy localCheckpoint truncates lineage — the audited final plan is a union of checkpoint block scans; the per-level exchange bytes are carried by the bench/probe rows instead",
+    "st16_stream_semdedup" -> "sequential SemDeDup over 4 ingest batches on ONE persisted assignment: per level a cell-keyed kept-side join + a within-batch self-join, both bounded by the k∝N cell contract; the streaming twin's state is the kept reps per cell. NOTE: scans 0 B because the per-level localCheckpoint truncates lineage — the audited final plan is a union of checkpoint block scans; the per-level exchanges run while the frame is built (planning each checkpoint executes its adaptive plan), which the audit window includes",
     "ss29_bitext_margin" -> "A×B never forms: cross-side pairs are cell-keyed (k∝N-bounded); k-NN averages are per-vector windows over the ONE persisted pair frame; margin is row-local integer arithmetic on a three-way id join",
-    "q_tfrecord_roundtrip" -> "native TFRecord sink+source: shards are the read-parallelism unit (one binaryFile task per shard), records stream sequentially within a shard with both CRCs verified — TFRecordDataset's own contract",
+    "q_tfrecord_roundtrip" -> "native TFRecord sink+source: shards are the read-parallelism unit (one binaryFile task per shard), records stream sequentially within a shard with both CRCs verified — TFRecordDataset's own contract; the shuffle is the sink's repartition(8) of the document records into shards, the read side adds only the 1-row agg",
     "fn12_tfexample_roundtrip" -> "Example encode/parse are per-record byte arithmetic inside Dataset maps — no driver, no exchange before the final 6-row rollup; the TFRecord shards carry the parallelism",
-    "mm12_imagenet_ingest" -> "TFRecord→Example→PNG-decode all partition-local (Dataset maps over binaryFile shards); the only exchange is the 10-row label rollup — the imagenet_input path with zero shuffle before the agg",
+    "mm12_imagenet_ingest" -> "TFRecord→Example→PNG-decode all partition-local (Dataset maps over binaryFile shards); the read side's only exchange is the 10-row label rollup — the imagenet_input path with zero shuffle before the agg; the rest is the sink's repartition(4) of the encoded Examples into shards",
     "fn13_varlen_roundtrip" -> "variable-length int64 features (token-length lists) encode/parse partition-local; the output is per-document, so there is NO exchange at all — ingest of sequence features is pure scan work",
     "fn14_wmt_ingest" -> "the composed GNMT text chain: one corpus scan, vocab broadcast as one sorted array (lookup inside the scan projection), ONE bucket exchange that the batch-max window reuses (plan-pinned) — padded_batch costs a sort, never a second corpus shuffle",
-    "mm13_ssd_ingest" -> "the composed detection chain: TFRecord→Example(VarLen boxes)→PNG-decode→per-box crop all partition-local Dataset maps; output is per-box rows, so there is NO exchange at all")
+    "mm13_ssd_ingest" -> "the composed detection chain: TFRecord→Example(VarLen boxes)→PNG-decode→per-box crop all partition-local Dataset maps; output is per-box rows, so the read side has NO exchange at all; the shuffle is the sink's repartition(4) of the encoded Examples into shards")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "SCALE.md"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
 
     val byName = graft.SparkEntry.all.map(q => q.name -> q).toMap
     def fmt(b: Long): String =
@@ -211,21 +201,18 @@ object ShuffleAudit {
     sb ++= s"# Measured byte flows ($sfDir, local[8])\n\n"
     sb ++= "Generated by `graft.tools.ShuffleAudit`: scan bytes from the\n"
     sb ++= "executed plan's file listings (post partition-pruning), shuffle\n"
-    sb ++= "and spill from Spark TaskMetrics. `shuffle/scan` is the\n"
+    sb ++= "and spill from Spark TaskMetrics of every job the query runs, building\n"
+    sb ++= "the frame included. `shuffle/scan` is the\n"
     sb ++= "scale-relevant number: what crosses the network per byte\n"
     sb ++= "addressed when the same plan runs on 1000 executors at 100 TB.\n\n"
     sb ++= "| query | scan bytes | shuffle write | spill | shuffle/scan | claim |\n"
     sb ++= "|---|---|---|---|---|---|\n"
     audited.foreach { case (name, claim) =>
       val q = byName(name)
-      val l = new StageMetricsListener
       graft.functions.Dedup.lastCcRounds = -1
-      val df = q.fn(spark, sfDir)
-      l.collect(spark) {
-        df.write.format("noop").mode("overwrite").save()
-      }
-      val input = scannedBytes(df.queryExecution.executedPlan)
-      spark.sharedState.cacheManager.clearCache()
+      val m = Probe.measure(spark)(q.fn(spark, sfDir))
+      val l = m.metrics
+      val input = scannedBytes(m.executedPlan)
       val ratio =
         if (input > 0) f"${l.shuffleWriteBytes.toDouble / input}%.4f"
         else "n/a"
@@ -233,11 +220,13 @@ object ShuffleAudit {
       sb ++= s"| $name | ${fmt(input)} | ${fmt(l.shuffleWriteBytes)} " +
         s"| ${fmt(l.spillBytes)} | $ratio | $claim$path |\n"
     }
-    sb ++= "\ntx12's 23.9× ratio was re-examined (VERDICT r5 #6, `graft.tools.Tx12Diet`):\n"
+    sb ++= "\ntx12's shuffle/scan ratio was re-examined (VERDICT r5 #6; recorded in\n"
+    sb ++= "`OPTIMIZATION_r19.md`, \"Re-adjudications and negative results\"):\n"
     sb ++= "a weighted distinct-doc-list variant (emit each bucket's pairs once per\n"
     sb ++= "DISTINCT doc list with a multiplicity weight) measured **+7.8% shuffle**\n"
-    sb ++= "and flat wall at sf0.1 — doc lists repeat too rarely to pay for the extra\n"
-    sb ++= "list exchange — so the shipped formulation stands. The bytes are the\n"
+    sb ++= "and flat wall at sf0.1, and +6% shuffle with the same ~2.5 GiB spill at\n"
+    sb ++= "100× — doc lists repeat too rarely to pay for the extra list exchange —\n"
+    sb ++= "so the shipped formulation stands. The bytes are the\n"
     sb ++= "(doc_id, fp) set itself: ~0.25 fps/char × ~48 B/row ≈ 12 B shuffled per\n"
     sb ++= "char of text vs ~1.2 B/char of compressed scan — a density CONSTANT,\n"
     sb ++= "linear in corpus size, not a scale cliff.\n"
@@ -290,12 +279,8 @@ object ShuffleAudit {
       // (count() prunes work — the Bench r16 methodology)
       val rows = q.fn(spark, floodDir).count()
       spark.sharedState.cacheManager.clearCache()
-      val l = new StageMetricsListener
       graft.functions.Dedup.lastCcRounds = -1
-      l.collect(spark) {
-        q.fn(spark, floodDir).write.format("noop").mode("overwrite").save()
-      }
-      spark.sharedState.cacheManager.clearCache()
+      val l = Probe.measure(spark)(q.fn(spark, floodDir)).metrics
       val path = ccPath(graft.functions.Dedup.lastCcRounds).fold("")("; CC path: " + _)
       sb ++= s"| $name | $plainRows | $rows | ${fmt(l.shuffleWriteBytes)} " +
         s"| ${fmt(l.spillBytes)} | $claim$path |\n"
@@ -310,12 +295,10 @@ object ShuffleAudit {
     graft.operators.DedupOps.clusterLabels(corpusDocs)
       .write.mode("overwrite").parquet(labelDir)
     spark.sharedState.cacheManager.clearCache()
-    val auditDf = graft.operators.DedupOps.labelAudit(spark.read.parquet(labelDir))
-    val auditL = new StageMetricsListener
-    auditL.collect(spark) {
-      auditDf.write.format("noop").mode("overwrite").save()
-    }
-    val auditScan = scannedBytes(auditDf.queryExecution.executedPlan)
+    val audit = Probe.measure(spark)(
+      graft.operators.DedupOps.labelAudit(spark.read.parquet(labelDir)))
+    val auditL = audit.metrics
+    val auditScan = scannedBytes(audit.executedPlan)
     val corpusScan = scannedBytes(
       corpusDocs.queryExecution.executedPlan)
     sb ++= "\n## Cluster-once / audit-many (dd26 audit measured alone)\n\n"

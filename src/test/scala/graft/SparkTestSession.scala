@@ -7,16 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("WARN")
-    graft.tools.LogHygiene.suppressTinyFrameWindowWarnings()
     s
   }
   val sf: String = "/root/testdata/sf0.001"
