@@ -242,13 +242,7 @@ object TextOps {
         |SELECT sng, n_docs FROM (
         |  SELECT sng, count(*) AS n_docs FROM sh GROUP BY sng)
         |ORDER BY n_docs DESC, sng LIMIT 20""".stripMargin) { (s, d) =>
-      T.documents(s, d)
-        .selectExpr("doc_id", "split(text, '\\\\s+') as toks")
-        .selectExpr(
-          "doc_id",
-          "case when size(toks) < 3 then array() else " +
-            "transform(sequence(1, size(toks) - 2), i -> " +
-            "concat_ws(' ', element_at(toks, i), element_at(toks, i+1), element_at(toks, i+2))) end as shingles")
+      graft.operators.DedupOps.shingleSets(T.documents(s, d))
         // per-doc array_distinct ≡ DISTINCT (doc_id, sng) but dedups
         // locally inside the row — measured 17× faster than the
         // row-level distinct (which re-evaluates the shingle pipeline

@@ -385,7 +385,7 @@ object Dedup {
     */
   def nearDupCandidates(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import graft.operators.DedupOps
-    DedupOps.cappedBandPairs(DedupOps.r1Bands(df, idCol, textCol))
+    DedupOps.cappedBandPairs(DedupOps.r1Bands(df, idCol, textCol).persist())
   }
 
   /** Contamination audit — per TRAIN document, how many of its distinct
@@ -420,10 +420,10 @@ object Dedup {
   def incrementalNearDup(corpus: DataFrame, batch: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     import graft.operators.DedupOps
-    val cKeys = DedupOps.r1Bands(corpus, idCol, textCol, cache = false)
+    val cKeys = DedupOps.r1Bands(corpus, idCol, textCol)
       .select("band", "h").distinct() // one pass into the distinct
 
-    val bBands = DedupOps.r1Bands(batch, idCol, textCol)
+    val bBands = DedupOps.r1Bands(batch, idCol, textCol).persist() // read twice
     val rejected = bBands.join(cKeys, Seq("band", "h"), "left_semi")
       .select("doc_id").distinct()
     bBands.select("doc_id").distinct()
@@ -717,7 +717,11 @@ object Dedup {
     // build time (toRdd materializes intermediate stages), but the final
     // stage of each frame is deferred into the convergence-test collect —
     // one fewer result pass per frame and no standalone count jobs.
-    // Executor-local blocks are fine for iterative temp state.
+    // Executor-local blocks are fine for iterative temp state on one
+    // host, but a lost executor (preemption, dynamic allocation) makes
+    // them unrecoverable and fails the job; a cluster deployment that
+    // must survive executor loss should set spark.checkpoint.dir and use
+    // reliable Dataset.checkpoint() instead — same lineage cut.
     var edges = pairs
       .select(
         greatest(col(aCol).cast("long"), col(bCol).cast("long")).as("u"),

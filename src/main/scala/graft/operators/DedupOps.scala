@@ -18,6 +18,19 @@ import org.apache.spark.sql.functions._
   * dozen bytes/doc regardless of document size; candidate verification
   * (Jaccard) touches only within-bucket pairs. This is the standard
   * shingle→minhash→band→bucket-join plan and it parallelizes freely.
+  *
+  * Every MinHash/LSH decision has ONE definition per engine here, and
+  * every dedup query and `graft.functions.Dedup` API builds through them:
+  *   - the signature builder — Spark [[shingleSets]] → [[shingleHashSets]]
+  *     (`hs`, one md5 per 3-token shingle) → [[minhashSig]] (`mh0..`) →
+  *     [[r1BandRows]]; DuckDB [[duckSigCtes]] (`t → sh → hh → sig`) and
+  *     [[duckR1Bands]];
+  *   - the bucket cap — Spark [[cappedSelfJoin]]; DuckDB `duckCapPairs`;
+  *   - the overlap verify — Spark [[shingleOverlap]]; DuckDB
+  *     `duckOverlapCtes` (and the SimHash majority vote, `sparkSimBits` /
+  *     `duckSimBits`, for dd05/dd10).
+  * Callers decide whether the input goes through `T.spread` and what to
+  * persist; the builders branch on nothing.
   */
 object DedupOps {
 
@@ -97,6 +110,69 @@ object DedupOps {
       s"((${mhA1(k)}::BIGINT * (x % ${mhP1}) + ${mhB1(k)}) % ${mhP1}) * 2147483648 + " +
       s"((${mhA2(k)}::BIGINT * (x % ${mhP2}) + ${mhB2(k)}) % ${mhP2}))) AS mh$k"
 
+  /** Spark: (idCol, textCol) → (doc_id, shingles), the 3-token shingle
+    * arrays (tx06 counts them as strings).
+    */
+  private[graft] def shingleSets(df: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    df.selectExpr(s"$idCol as doc_id", s"split($textCol, '\\\\s+') as toks")
+      .selectExpr("doc_id", s"$sparkShingles as shingles")
+
+  /** Spark: (doc_id, hs), each shingle hashed once. */
+  private def shingleHashSets(df: DataFrame, idCol: String = "doc_id",
+      textCol: String = "text"): DataFrame =
+    shingleSets(df, idCol, textCol).selectExpr("doc_id", s"$sparkHs as hs")
+
+  /** Spark: (doc_id, mh0..mh{k-1}) over a (doc_id, hs) frame. */
+  private def minhashSig(hh: DataFrame, k: Int): DataFrame =
+    hh.selectExpr("doc_id" +: (0 until k).map(sparkMh): _*)
+
+  /** Spark: r=1 band rows (doc_id, carry..., band, h) over mh0..mh3 —
+    * band b's key is mh_b. `carry` expressions ride every band row.
+    */
+  private def r1BandRows(sig: DataFrame, carry: String*): DataFrame =
+    sig.selectExpr(("doc_id" +: carry) :+
+      "stack(4, 0, mh0, 1, mh1, 2, mh2, 3, mh3) as (band, h)": _*)
+
+  /** DuckDB twin of [[shingleSets]]/[[shingleHashSets]]: the `t → sh → hh`
+    * CTEs over relation `src`, which must have (doc_id, text).
+    */
+  private def duckShingleCtes(src: String): String =
+    s"""t AS (SELECT doc_id, $duckToks AS toks FROM $src),
+       |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t)""".stripMargin
+  private def duckHashCtes(src: String): String =
+    s"""${duckShingleCtes(src)},
+       |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh)""".stripMargin
+
+  /** DuckDB twin of [[minhashSig]]: the `mh0..mh{k-1}` select list. */
+  private def duckMhList(k: Int): String = (0 until k).map(duckMh).mkString(", ")
+
+  /** DuckDB: `t → sh → hh → sig(doc_id, mh0..mh{k-1})` over `src`. */
+  private def duckSigCtes(k: Int, src: String = "documents"): String =
+    s"""${duckHashCtes(src)},
+       |     sig AS (SELECT doc_id, ${duckMhList(k)} FROM hh)""".stripMargin
+
+  /** DuckDB twin of [[r1BandRows]]: a `name(doc_id, band, h)` CTE over `sig`. */
+  private def duckR1Bands(name: String = "bands"): String =
+    s"""$name AS (
+       |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
+       |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
+       |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
+       |       UNION ALL SELECT doc_id, 3, mh3 FROM sig)""".stripMargin
+
+  /** SimHash bits 0..n-1 as a sum of per-bit majority votes over the
+    * token hashes `hs` (dd05 at 16 bits, dd10 at 48): bit b is set when
+    * at least half the hashes have it.
+    */
+  private def sparkSimBits(n: Int): String = (0 until n).map { b =>
+    s"(case when 2 * size(filter(hs, h -> (shiftright(h, $b) & 1) = 1)) >= size(hs) " +
+      s"then ${1L << b}L else 0L end)"
+  }.mkString(" + ")
+  private def duckSimBits(n: Int): String = (0 until n).map { b =>
+    s"(CASE WHEN 2 * len(list_filter(hs, h -> (h >> $b) & 1 = 1)) >= len(hs) " +
+      s"THEN ${1L << b} ELSE 0 END)"
+  }.mkString(" + ")
+
   private val nBits = 16
 
   /** Max docs per (band, bucket) admitted to pairwise enumeration.
@@ -132,43 +208,78 @@ object DedupOps {
        |                 ON z.band = b.band AND z.h = b.h AND z.n > $bucketCap
        |               WHERE b.doc_id <> z.root)""".stripMargin
 
+  /** DuckDB twin of the overlap half of [[shingleOverlap]]: `ex → sizes →
+    * inter` over `hh` and a `pairs(a_id, b_id)` CTE already in scope.
+    */
+  private def duckOverlapCtes: String =
+    """ex AS (SELECT doc_id, unnest(list_distinct(hs)) AS sng FROM hh),
+      |     sizes AS (SELECT doc_id, count(*) AS c FROM ex GROUP BY doc_id),
+      |     inter AS (SELECT p.a_id, p.b_id, count(*) AS i
+      |               FROM pairs p JOIN ex ea ON ea.doc_id = p.a_id
+      |                            JOIN ex eb ON eb.doc_id = p.b_id AND eb.sng = ea.sng
+      |               GROUP BY p.a_id, p.b_id)""".stripMargin
+
+  /** The bucket-capped band self-join: a window count over (band, `key`),
+    * buckets of more than [[bucketCap]] rows dropped, then the self-join
+    * on (band, `key`) with a_id < b_id. Output: band, `key`, a_id,
+    * a_<c>..., b_id, b_<c>... for each `carry` column c.
+    *
+    * The count rides an unordered window instead of a groupBy + join back
+    * (r18): the banded frame crosses the wire ONCE (the window exchange)
+    * and the self-join is already co-partitioned on (band, key) by it.
+    * Callers project (and verify) before their own `distinct`: carried
+    * columns must be FUNCTIONAL on doc_id, so a pair's projection is the
+    * same in every band it collides in.
+    */
+  private def cappedSelfJoin(bands: DataFrame, key: String,
+      carry: Seq[String] = Nil): DataFrame = {
+    val cols = (("doc_id" +: carry) ++ Seq("band", key)).map(col)
+    val small = bands
+      .select(cols :+ count(lit(1)).over(Window.partitionBy("band", key)).as("n"): _*)
+      .filter(col("n") <= bucketCap)
+      .select(cols: _*)
+    def side(p: String) = small.select(col("doc_id").as(s"${p}_id") +:
+      carry.map(c => col(c).as(s"${p}_$c")) ++: Seq(col("band"), col(key)): _*)
+    side("a").join(side("b"), Seq("band", key)).filter(col("a_id") < col("b_id"))
+  }
+
   /** Candidate pairs from a banded-signature frame `(doc_id, band, h)`,
     * skipping buckets larger than [[bucketCap]] before the self-join.
     * Shuffles only (band, h, doc_id) tuples; output is linear in corpus
     * size because every admitted bucket contributes ≤ cap² pairs.
-    */
-  /** `carry`: per-document columns of `bands` to ride the band rows and
-    * come out on BOTH pair sides as `a_<c>`/`b_<c>` (r19 — dd09 carries
-    * its 4 minhash components so the verify needs no join back to the
-    * signature frame; the dd23/dd10 sh-carry generalized). Carried
-    * columns must be FUNCTIONAL on doc_id: the trailing distinct keys on
-    * (pair, carried...) and dedups exactly the pair iff each id
-    * determines its carried values. Empty (the default) emits the exact
-    * pre-r19 (a_id, b_id) shape.
+    * `carry` columns come out on both sides as `a_<c>`/`b_<c>` (dd09
+    * carries its 4 minhash components so the verify needs no join back
+    * to the signature frame); empty emits (a_id, b_id).
     */
   private[graft] def cappedBandPairs(bands: DataFrame,
-      carry: Seq[String] = Nil): DataFrame = {
-    // bucket size via an unordered (band, h) window instead of a
-    // groupBy + join back (r18): the banded frame crosses the wire ONCE
-    // (the window exchange) and the self-join below is already
-    // co-partitioned on (band, h) by that exchange — the old form
-    // shipped `bands` twice (agg exchange + join exchange) to compute
-    // the same per-bucket count (guide §2.4: share one exchange).
-    val wbh = Window.partitionBy("band", "h")
-    val cols = Seq("doc_id") ++ carry ++ Seq("band", "h")
-    val small = bands
-      .select(cols.map(col) :+ count(lit(1)).over(wbh).as("n"): _*)
-      .filter(col("n") <= bucketCap)
-      .select(cols.map(col): _*)
-    val aSide = small.select(col("doc_id").as("a_id") +:
-      carry.map(c => col(c).as(s"a_$c")) ++: Seq(col("band"), col("h")): _*)
-    val bSide = small.select(col("doc_id").as("b_id") +:
-      carry.map(c => col(c).as(s"b_$c")) ++: Seq(col("band"), col("h")): _*)
-    aSide.join(bSide, Seq("band", "h"))
-      .filter(col("a_id") < col("b_id"))
+      carry: Seq[String] = Nil): DataFrame =
+    cappedSelfJoin(bands, "h", carry)
       .select(("a_id" +: "b_id" +:
         (carry.map(c => s"a_$c") ++ carry.map(c => s"b_$c"))).map(col): _*)
       .distinct()
+
+  /** Shingle-overlap counts of the capped r=1 candidate pairs of
+    * `(doc_id, text)` rows — dd06's Jaccard and dd21's containment both
+    * verify on these: (a_id, b_id, i, ca, cb) with i = |A∩B| and
+    * ca/cb = |A|/|B| over distinct shingle hashes. The overlap join runs
+    * on 60-bit hashes, so text never crosses an exchange. Persists the
+    * hash sets (bands and three overlap consumers) and the bands (both
+    * pair sides); caller clearCache releases.
+    */
+  private def shingleOverlap(docs: DataFrame): DataFrame = {
+    val hh = shingleHashSets(T.spread(docs)).persist()
+    val pairs = cappedBandPairs(r1BandRows(minhashSig(hh, 4)).persist())
+    // per-doc array_distinct ≡ row-level DISTINCT without the re-run of
+    // the pipeline through the exchange (tx06 lesson)
+    val ex = hh.selectExpr("doc_id", "explode(array_distinct(hs)) as sng")
+    val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("c"))
+    pairs
+      .join(ex.withColumnRenamed("doc_id", "a_id"), Seq("a_id"))
+      .join(ex.withColumnRenamed("doc_id", "b_id"), Seq("b_id", "sng"))
+      .groupBy("a_id", "b_id")
+      .agg(count(lit(1)).as("i"))
+      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("c", "ca"), Seq("a_id"))
+      .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("c", "cb"), Seq("b_id"))
   }
 
   /** DISTINCT per-document 60-bit shingle hashes over arbitrary id/text
@@ -178,39 +289,24 @@ object DedupOps {
     * gated dd12 query and the `Dedup.contamination` driver API.
     */
   private[graft] def shingleHashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    T.spread(df).selectExpr(s"$idCol as doc_id", s"split($textCol, '\\\\s+') as toks")
-      .selectExpr("doc_id", s"$sparkShingles as shingles")
-      .selectExpr(
-        "doc_id",
-        s"explode(array_distinct(transform(shingles, x -> ${P.hash60("x")}))) as sng")
+    shingleSets(T.spread(df), idCol, textCol)
+      .selectExpr("doc_id", s"explode(array_distinct($sparkHs)) as sng")
 
   /** r=1 banded MinHash frame `(doc_id, band, h)` over arbitrary id/text
     * columns — the shingle→hash→minhash→band stage shared by the gated
     * dd04 query and the `Dedup.nearDupCandidates` driver API, so the
     * public API and the oracle-checked pipeline can never diverge.
     *
-    * `cache` (default true): persist the banded frame. Required when the
-    * caller consumes it MORE THAN ONCE — the pair self-join would
-    * otherwise recompute the minhash on both sides AND inline the
-    * shingle pipeline into an isnotnull(h) pushdown filter (observed
-    * 13 s → <1 s). Caller-side `spark.catalog.clearCache()` releases it
-    * (bench/verify contract). Single-consumer callers (the clustering
-    * star path, dd27's batch probe, dd15's corpus key side — each one
-    * window or join pass) pass cache=false: the persist there was a pure
-    * extra columnar cache write of the ~4-rows/doc banded frame per
-    * query with zero reuse (r19; guide §1.2 — don't pay for what nothing
-    * reads).
+    * Returned unpersisted. A caller that reads it MORE THAN ONCE (the
+    * pair self-join, dd27's edges + rollup) persists it: otherwise both
+    * sides recompute the minhash AND the shingle pipeline gets inlined
+    * into an isnotnull(h) pushdown filter (observed 13 s → <1 s).
+    * Single-reader callers (the clustering star path, dd27's batch
+    * probe, dd15's corpus key side) must not: a persist there is a pure
+    * extra columnar cache write of the ~4-rows/doc banded frame (r19).
     */
-  private[graft] def r1Bands(df: DataFrame, idCol: String, textCol: String,
-      cache: Boolean = true): DataFrame = {
-    val bands = T.spread(df)
-      .selectExpr(s"$idCol as doc_id", s"split($textCol, '\\\\s+') as toks")
-      .selectExpr("doc_id", s"$sparkShingles as shingles")
-      .selectExpr("doc_id", s"$sparkHs as hs")
-      .selectExpr("doc_id", sparkMh(0), sparkMh(1), sparkMh(2), sparkMh(3))
-      .selectExpr("doc_id", "stack(4, 0, mh0, 1, mh1, 2, mh2, 3, mh3) as (band, h)")
-    if (cache) bands.persist() else bands
-  }
+  private[graft] def r1Bands(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    r1BandRows(minhashSig(shingleHashSets(T.spread(df), idCol, textCol), 4))
 
   /** dd08's full oracle CTE chain — shingle → minhash → r=1 bands →
     * capped pairs + star edges → recursive min-id closure, ending in
@@ -219,15 +315,8 @@ object DedupOps {
     * clustering SQL can't drift between queries.
     */
   private[graft] def duckClusterCtes: String =
-    s"""t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-       |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-       |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-       |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-       |     bands AS (
-       |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-       |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-       |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-       |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+    s"""${duckSigCtes(4)},
+       |     ${duckR1Bands()},
        |     $duckCapPairs,
        |     $duckStarEdges,
        |     link AS (SELECT a_id, b_id FROM pairs
@@ -250,10 +339,9 @@ object DedupOps {
     */
   private[graft] def clusterLabels(docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // cache=false: the star path reads the banded frame exactly once
-    // (bandStarEdges' single window pass, materialized into the edges
-    // localCheckpoint) — persisting it was a wasted cache write (r19)
-    val edges = bandStarEdges(r1Bands(docs, idCol, textCol, cache = false))
+    // unpersisted: the star path reads the banded frame exactly once
+    // (bandStarEdges' single window pass)
+    val edges = bandStarEdges(r1Bands(docs, idCol, textCol))
     graft.functions.Dedup.connectedComponents(
       docs.select(idCol), edges, idCol, "a_id", "b_id")
   }
@@ -271,6 +359,11 @@ object DedupOps {
     * Pairwise-verify queries (dd04/dd06/dd09) keep cappedBandPairs:
     * their OUTPUT is the pair list.
     *
+    * The edges may repeat — a (root, doc) pair sharing several bands
+    * comes out once per band — and are not checkpointed:
+    * `Dedup.connectedComponents` dedups and checkpoints its input on
+    * entry.
+    *
     * NULL band keys (docs below the shingle width) are excluded
     * explicitly: the old pair self-join dropped them by join equality,
     * and the oracle's stars CTE joins on h equality too — a NULL bucket
@@ -278,29 +371,15 @@ object DedupOps {
     * would have connected an over-cap NULL bucket — latent, never hit
     * at fixture scale; the filter closes it.)
     */
-  private[graft] def bandStarEdges(bands: DataFrame): DataFrame = {
-    // Bucket root from ONE unordered (band, h) window pass (r18 form,
-    // minus the bucket count — stars need no cap: they are linear in
-    // the bucket by construction). No join anywhere: root rides every
-    // row out of the window exchange.
-    val wbh = Window.partitionBy("band", "h")
-    val stars = bands
+  private[graft] def bandStarEdges(bands: DataFrame): DataFrame =
+    // bucket root from ONE unordered (band, h) window pass; stars need
+    // no cap (they are linear in the bucket) and no join: root rides
+    // every row out of the window exchange
+    bands
       .filter(col("h").isNotNull)
-      .select(col("doc_id"), min("doc_id").over(wbh).as("root"))
+      .select(col("doc_id"), min("doc_id").over(Window.partitionBy("band", "h")).as("root"))
       .filter(col("doc_id") =!= col("root"))
       .select(col("root").as("a_id"), col("doc_id").as("b_id"))
-    // LAZY localCheckpoint: the consumer's first action (connected-
-    // components' init fingerprint) materializes the edge blocks as
-    // part of its own job — no separate count pass.
-    // Fault-tolerance tradeoff: localCheckpoint blocks live only on
-    // executors, so a lost executor (preemption, dynamic allocation)
-    // makes the edges unrecoverable and fails the job. That is the right
-    // trade for single-host/local runs; a cluster deployment that must
-    // survive executor loss should set spark.checkpoint.dir and use
-    // reliable Dataset.checkpoint() here instead — same lineage cut,
-    // storage-backed blocks.
-    stars.distinct().localCheckpoint(false)
-  }
 
   val queries: Seq[Q] = Seq(
 
@@ -330,16 +409,10 @@ object DedupOps {
     // shingles (shingle→minhash stage of the LSH pipeline).
     Q(
       "dd03_minhash_signatures",
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-         |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh)
-         |SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)}
+      s"""WITH ${duckHashCtes("documents")}
+         |SELECT doc_id, ${duckMhList(4)}
          |FROM hh""".stripMargin) { (s, d) =>
-      T.documents(s, d)
-        .selectExpr("doc_id", s"$sparkToks as toks")
-        .selectExpr("doc_id", s"$sparkShingles as shingles")
-        .selectExpr("doc_id", s"$sparkHs as hs")
-        .selectExpr("doc_id", sparkMh(0), sparkMh(1), sparkMh(2), sparkMh(3))
+      minhashSig(shingleHashSets(T.documents(s, d)), 4)
     },
 
     // LSH banding: candidate pairs sharing ANY of the b=4 band buckets
@@ -351,43 +424,28 @@ object DedupOps {
     // template flood can't make the pair output quadratic.
     Q(
       "dd04_lsh_candidate_pairs",
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-         |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-         |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-         |     bands AS (
-         |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-         |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-         |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-         |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+      s"""WITH ${duckSigCtes(4)},
+         |     ${duckR1Bands()},
          |     $duckCapPairs
          |SELECT a_id, b_id FROM pairs""".stripMargin) {
       (s, d) =>
-        cappedBandPairs(r1Bands(T.documents(s, d), "doc_id", "text"))
+        // persisted: both pair-join sides read it
+        cappedBandPairs(r1Bands(T.documents(s, d), "doc_id", "text").persist())
     },
 
     // SimHash: 16-bit signature — per bit b, majority vote over token
     // hashes' bit b. Near-dup docs land at small Hamming distance.
     Q(
-      "dd05_simhash", {
-        val bits = (0 until nBits).map { b =>
-          s"(CASE WHEN 2 * len(list_filter(hs, h -> (h >> $b) & 1 = 1)) >= len(hs) " +
-            s"THEN ${1L << b} ELSE 0 END)"
-        }.mkString(" + ")
-        s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-           |     h AS (SELECT doc_id,
-           |       list_transform(toks, w -> ${P.duckHash60("w")}) AS hs FROM t)
-           |SELECT doc_id, CAST(${bits} AS BIGINT) AS simhash
-           |FROM h""".stripMargin
-      }) { (s, d) =>
-      val bits = (0 until nBits).map { b =>
-        s"(case when 2 * size(filter(hs, h -> (shiftright(h, $b) & 1) = 1)) >= size(hs) " +
-          s"then ${1L << b}L else 0L end)"
-      }.mkString(" + ")
+      "dd05_simhash",
+      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
+         |     h AS (SELECT doc_id,
+         |       list_transform(toks, w -> ${P.duckHash60("w")}) AS hs FROM t)
+         |SELECT doc_id, CAST(${duckSimBits(nBits)} AS BIGINT) AS simhash
+         |FROM h""".stripMargin) { (s, d) =>
       T.spread(T.documents(s, d))
         .selectExpr("doc_id", s"$sparkToks as toks")
         .selectExpr("doc_id", s"transform(toks, w -> ${P.hash60("w")}) as hs")
-        .selectExpr("doc_id", s"cast($bits as bigint) as simhash")
+        .selectExpr("doc_id", s"cast(${sparkSimBits(nBits)} as bigint) as simhash")
     },
 
     // n-gram Jaccard verification of LSH candidates: exact set overlap of
@@ -398,51 +456,15 @@ object DedupOps {
     // text never crosses an exchange.
     Q(
       "dd06_ngram_jaccard",
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-         |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-         |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-         |     bands AS (
-         |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-         |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-         |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-         |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+      s"""WITH ${duckSigCtes(4)},
+         |     ${duckR1Bands()},
          |     $duckCapPairs,
-         |     ex AS (SELECT doc_id, unnest(list_distinct(hs)) AS sng FROM hh),
-         |     sizes AS (SELECT doc_id, count(*) AS c FROM ex GROUP BY doc_id),
-         |     inter AS (SELECT p.a_id, p.b_id, count(*) AS i
-         |               FROM pairs p JOIN ex ea ON ea.doc_id = p.a_id
-         |                            JOIN ex eb ON eb.doc_id = p.b_id AND eb.sng = ea.sng
-         |               GROUP BY p.a_id, p.b_id)
+         |     $duckOverlapCtes
          |SELECT i.a_id, i.b_id,
          |  CAST(FLOOR(CAST(10000 AS DOUBLE) * i.i / (sa.c + sb.c - i.i)) AS BIGINT) AS jacc_x10000
          |FROM inter i JOIN sizes sa ON sa.doc_id = i.a_id
          |             JOIN sizes sb ON sb.doc_id = i.b_id""".stripMargin) { (s, d) =>
-      // persist both derived tables: hh feeds three consumers (sig, ex —
-      // twice via the pair join), sig self-joins; without materialization
-      // each consumer re-runs the shingle + hash pipeline.
-      val hh = T.spread(T.documents(s, d))
-        .selectExpr("doc_id", s"$sparkToks as toks")
-        .selectExpr("doc_id", s"$sparkShingles as shingles")
-        .selectExpr("doc_id", s"$sparkHs as hs")
-        .persist()
-      val bands = hh
-        .selectExpr("doc_id", sparkMh(0), sparkMh(1), sparkMh(2), sparkMh(3))
-        .selectExpr("doc_id", "stack(4, 0, mh0, 1, mh1, 2, mh2, 3, mh3) as (band, h)")
-        .persist()
-      val pairs = cappedBandPairs(bands)
-      // per-doc array_distinct ≡ row-level DISTINCT without the re-run of
-      // the pipeline through the exchange (tx06 lesson)
-      val ex = hh.selectExpr("doc_id", "explode(array_distinct(hs)) as sng")
-      val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("c"))
-      val inter = pairs
-        .join(ex.withColumnRenamed("doc_id", "a_id"), Seq("a_id"))
-        .join(ex.withColumnRenamed("doc_id", "b_id"), Seq("b_id", "sng"))
-        .groupBy("a_id", "b_id")
-        .agg(count(lit(1)).as("i"))
-      inter
-        .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("c", "ca"), Seq("a_id"))
-        .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("c", "cb"), Seq("b_id"))
+      shingleOverlap(T.documents(s, d))
         .selectExpr(
           "a_id", "b_id",
           "cast(floor(cast(10000 as double) * i / (ca + cb - i)) as bigint) as jacc_x10000")
@@ -482,15 +504,8 @@ object DedupOps {
         val matches = (0 until 4)
           .map(k => s"(CASE WHEN sa.mh$k = sb.mh$k THEN 1 ELSE 0 END)")
           .mkString(" + ")
-        s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-           |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-           |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-           |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-           |     bands AS (
-           |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-           |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-           |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-           |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+        s"""WITH ${duckSigCtes(4)},
+           |     ${duckR1Bands()},
            |     $duckCapPairs
            |SELECT p.a_id, p.b_id,
            |  CAST($matches AS BIGINT) AS match_cnt,
@@ -508,15 +523,10 @@ object DedupOps {
       val matches = (0 until 4)
         .map(k => s"(case when a_mh$k = b_mh$k then 1 else 0 end)")
         .mkString(" + ")
-      val bands = T.documents(s, d)
-        .selectExpr("doc_id", s"$sparkToks as toks")
-        .selectExpr("doc_id", s"$sparkShingles as shingles")
-        .selectExpr("doc_id", s"$sparkHs as hs")
-        .selectExpr("doc_id", sparkMh(0), sparkMh(1), sparkMh(2), sparkMh(3))
-        .selectExpr("doc_id", "mh0", "mh1", "mh2", "mh3",
-          "stack(4, 0, mh0, 1, mh1, 2, mh2, 3, mh3) as (band, h)")
+      val mhs = Seq("mh0", "mh1", "mh2", "mh3")
+      val bands = r1BandRows(minhashSig(shingleHashSets(T.documents(s, d)), 4), mhs: _*)
         .persist() // both pair-join sides; caller clearCache releases
-      cappedBandPairs(bands, carry = Seq("mh0", "mh1", "mh2", "mh3"))
+      cappedBandPairs(bands, carry = mhs)
         .selectExpr(
           "a_id", "b_id",
           s"cast($matches as bigint) as match_cnt",
@@ -531,31 +541,27 @@ object DedupOps {
     // bit_count of the XOR. Only (band, key, doc_id) tuples shuffle; the
     // verify reads one long per side.
     //
-    // Buckets larger than 64 docs are SKIPPED before pairing: pair output
-    // is quadratic in bucket size, and a giant bucket means boilerplate
-    // near-identical docs — the clustering path (dd08-style components,
-    // linear per bucket) owns those, pairwise verify doesn't. The cap is
-    // what keeps this query linear when a template floods the corpus
-    // (measured: 5× candidate cut at sf0.1, zero effect at sf0.01 where
-    // no bucket exceeds the cap).
+    // Buckets larger than `bucketCap` docs are SKIPPED before pairing:
+    // pair output is quadratic in bucket size, and a giant bucket means
+    // boilerplate near-identical docs — the clustering path (dd08-style
+    // components, linear per bucket) owns those, pairwise verify
+    // doesn't. The cap is what keeps this query linear when a template
+    // floods the corpus (measured: 5× candidate cut at sf0.1, zero
+    // effect at sf0.01 where no bucket exceeds the cap).
     Q(
       "dd10_simhash_neardup", {
-        val simBits = (0 until 48).map { b =>
-          s"(CASE WHEN 2 * len(list_filter(hs, h -> (h >> $b) & 1 = 1)) >= len(hs) " +
-            s"THEN ${1L << b} ELSE 0 END)"
-        }.mkString(" + ")
         val bandSel = (0 until 4)
           .map(k => s"SELECT doc_id, $k AS band, (sh >> ${k * 12}) & 4095 AS v FROM s")
           .mkString("\n           UNION ALL ")
         s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
            |     h AS (SELECT doc_id,
            |       list_transform(toks, w -> ${P.duckHash60("w")}) AS hs FROM t),
-           |     s AS (SELECT doc_id, CAST($simBits AS BIGINT) AS sh FROM h),
+           |     s AS (SELECT doc_id, CAST(${duckSimBits(48)} AS BIGINT) AS sh FROM h),
            |     bands AS (
            |       $bandSel),
            |     sized AS (SELECT band, v, count(*) AS n FROM bands GROUP BY band, v),
            |     small AS (SELECT b.doc_id, b.band, b.v FROM bands b
-           |               JOIN sized z ON z.band = b.band AND z.v = b.v AND z.n <= 64),
+           |               JOIN sized z ON z.band = b.band AND z.v = b.v AND z.n <= $bucketCap),
            |     pairs AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
            |               FROM small a JOIN small b
            |                 ON a.band = b.band AND a.v = b.v AND a.doc_id < b.doc_id)
@@ -565,13 +571,9 @@ object DedupOps {
            |             JOIN s sb ON sb.doc_id = p.b_id
            |WHERE bit_count(xor(sa.sh, sb.sh)) <= 3""".stripMargin
       }) { (s, d) =>
-      val simBits = (0 until 48).map { b =>
-        s"(case when 2 * size(filter(hs, h -> (shiftright(h, $b) & 1) = 1)) >= size(hs) " +
-          s"then ${1L << b}L else 0L end)"
-      }.mkString(" + ")
       // The signature RIDES the band rows and the bucket cap rides a
-      // (band, v) window (r19 — dd23's sh-carry + cappedBandPairs'
-      // one-exchange cap applied here): the old form persisted sig AND
+      // (band, v) window (r19 — dd23's sh-carry through the shared
+      // one-exchange cappedSelfJoin): the old form persisted sig AND
       // bands, sized buckets with a groupBy + join back, and joined the
       // surviving pairs BACK to sig twice to fetch sha/shb — two
       // corpus-scale joins to move one long. Now the +8-byte sh column
@@ -589,23 +591,12 @@ object DedupOps {
       val bands = T.spread(T.documents(s, d))
         .selectExpr("doc_id", s"$sparkToks as toks")
         .selectExpr("doc_id", s"transform(toks, w -> ${P.hash60("w")}) as hs")
-        .selectExpr("doc_id", s"cast($simBits as bigint) as sh")
+        .selectExpr("doc_id", s"cast(${sparkSimBits(48)} as bigint) as sh")
         .selectExpr("doc_id", "sh", s"stack(4, $bandVals) as (band, v)")
         .persist() // both pair-join sides; caller clearCache releases
-      val wbv = Window.partitionBy("band", "v")
-      val small = bands
-        .select(col("doc_id"), col("sh"), col("band"), col("v"),
-          count(lit(1)).over(wbv).as("n"))
-        .filter(col("n") <= 64)
-        .select("doc_id", "sh", "band", "v")
-      small
-        .select(col("doc_id").as("a_id"), col("sh").as("sha"),
-          col("band"), col("v"))
-        .join(small.select(col("doc_id").as("b_id"), col("sh").as("shb"),
-          col("band"), col("v")), Seq("band", "v"))
-        .filter(col("a_id") < col("b_id"))
+      cappedSelfJoin(bands, "v", Seq("sh"))
         .selectExpr("a_id", "b_id",
-          "cast(bit_count(sha ^ shb) as bigint) as hamming")
+          "cast(bit_count(a_sh ^ b_sh) as bigint) as hamming")
         .filter(col("hamming") <= 3)
         .distinct()
     },
@@ -638,8 +629,7 @@ object DedupOps {
     // and the distinct count per train doc bounds the output.
     Q(
       "dd12_contamination",
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
+      s"""WITH ${duckShingleCtes("documents")},
          |     ex AS (SELECT DISTINCT doc_id, ${P.duckHash60("unnest(shingles)")} AS sng
          |            FROM sh),
          |     test AS (SELECT DISTINCT sng FROM ex WHERE doc_id % 50 = 0),
@@ -669,10 +659,7 @@ object DedupOps {
         val duckBand = (k: Int) =>
           s"SELECT doc_id, $k AS band, " +
             s"${P.duckHash60(s"mh${2 * k}::VARCHAR || '|' || mh${2 * k + 1}::VARCHAR")} AS h FROM sig"
-        s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-           |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-           |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-           |     sig AS (SELECT doc_id, ${(0 until 8).map(duckMh).mkString(", ")} FROM hh),
+        s"""WITH ${duckSigCtes(8)},
            |     bands AS (
            |       ${(0 until 4).map(duckBand).mkString("\n           UNION ALL ")}),
            |     $duckCapPairs
@@ -681,11 +668,7 @@ object DedupOps {
       val bandKey = (k: Int) =>
         P.hash60(s"concat(cast(mh${2 * k} as string), '|', cast(mh${2 * k + 1} as string))")
       val stackArgs = (0 until 4).map(k => s"$k, ${bandKey(k)}").mkString(", ")
-      val bands = T.documents(s, d)
-        .selectExpr("doc_id", s"$sparkToks as toks")
-        .selectExpr("doc_id", s"$sparkShingles as shingles")
-        .selectExpr("doc_id", s"$sparkHs as hs")
-        .selectExpr("doc_id" +: (0 until 8).map(sparkMh): _*)
+      val bands = minhashSig(shingleHashSets(T.documents(s, d)), 8)
         .selectExpr("doc_id", s"stack(4, $stackArgs) as (band, h)")
         .persist() // sized + both pair sides (dd04 pushdown lesson)
       cappedBandPairs(bands)
@@ -700,15 +683,8 @@ object DedupOps {
     // one key row. Only band keys shuffle.
     Q(
       "dd15_incremental_neardup",
-      s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-         |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-         |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-         |     bands AS (
-         |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-         |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-         |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-         |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+      s"""WITH ${duckSigCtes(4)},
+         |     ${duckR1Bands()},
          |     ck AS (SELECT DISTINCT band, h FROM bands WHERE doc_id < 400),
          |     rej AS (SELECT DISTINCT b.doc_id FROM bands b
          |             JOIN ck c ON c.band = b.band AND c.h = b.h
@@ -905,22 +881,10 @@ object DedupOps {
          |             THEN array_to_string((regexp_split_to_array(p.text, '\\s+'))[1:40], ' ')
          |             ELSE d.text END AS text
          |      FROM documents d LEFT JOIN documents p ON p.doc_id = d.doc_id - 1),
-         |     t AS (SELECT doc_id, $duckToks AS toks FROM aug),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-         |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-         |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-         |     bands AS (
-         |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-         |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-         |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-         |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+         |     ${duckSigCtes(4, "aug")},
+         |     ${duckR1Bands()},
          |     $duckCapPairs,
-         |     ex AS (SELECT doc_id, unnest(list_distinct(hs)) AS sng FROM hh),
-         |     sizes AS (SELECT doc_id, count(*) AS c FROM ex GROUP BY doc_id),
-         |     inter AS (SELECT p.a_id, p.b_id, count(*) AS i
-         |               FROM pairs p JOIN ex ea ON ea.doc_id = p.a_id
-         |                            JOIN ex eb ON eb.doc_id = p.b_id AND eb.sng = ea.sng
-         |               GROUP BY p.a_id, p.b_id),
+         |     $duckOverlapCtes,
          |     ct AS (SELECT i.a_id, i.b_id,
          |              (10000 * i.i) // sa.c AS c_ab_x10000,
          |              (10000 * i.i) // sb.c AS c_ba_x10000
@@ -970,10 +934,7 @@ object DedupOps {
              |  (1000000 * (16777216 - ${scurveComplement(b, r)})) // 16777216 AS p_ppm,
              |  n_pairs FROM hist""".stripMargin
         }.mkString("\nUNION ALL ")
-        s"""WITH t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-           |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-           |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-           |     sig AS (SELECT doc_id, ${(0 until 8).map(duckMh).mkString(", ")} FROM hh),
+        s"""WITH ${duckSigCtes(8)},
            |     bands AS (
            |       $duckBandRows),
            |     $duckCapPairs,
@@ -996,31 +957,15 @@ object DedupOps {
       // join — guide §2.4 remove shuffles outright). The sig persist is
       // gone: the banding is now the hashing's only consumer.
       val sigArr = (0 until 8).map(k => s"mh$k").mkString("array(", ", ", ")")
-      val bands = T.spread(T.documents(s, d))
-        .selectExpr("doc_id", s"$sparkToks as toks")
-        .selectExpr("doc_id", s"$sparkShingles as shingles")
-        .selectExpr("doc_id", s"$sparkHs as hs")
-        .selectExpr("doc_id" +: (0 until 8).map(sparkMh): _*)
-        .selectExpr("doc_id", s"$sigArr as sig",
-          "stack(4, 0, mh0, 1, mh1, 2, mh2, 3, mh3) as (band, h)")
-      val wbh = Window.partitionBy("band", "h")
-      val small = bands
-        .select(col("doc_id"), col("sig"), col("band"), col("h"),
-          count(lit(1)).over(wbh).as("n"))
-        .filter(col("n") <= bucketCap)
-        .select("doc_id", "sig", "band", "h")
+      val bands = r1BandRows(
+        minhashSig(shingleHashSets(T.spread(T.documents(s, d))), 8), s"$sigArr as sig")
       val m8 = (0 until 8)
-        .map(k => s"(case when element_at(siga, ${k + 1}) = " +
-          s"element_at(sigb, ${k + 1}) then 1 else 0 end)")
+        .map(k => s"(case when element_at(a_sig, ${k + 1}) = " +
+          s"element_at(b_sig, ${k + 1}) then 1 else 0 end)")
         .mkString(" + ")
       // persist the ≤9-row m-histogram: each of the three (b, r) arms
       // below re-executed the WHOLE pair pipeline without it (r18)
-      val hist = small
-        .select(col("doc_id").as("a_id"), col("sig").as("siga"),
-          col("band"), col("h"))
-        .join(small.select(col("doc_id").as("b_id"), col("sig").as("sigb"),
-          col("band"), col("h")), Seq("band", "h"))
-        .filter(col("a_id") < col("b_id"))
+      val hist = cappedSelfJoin(bands, "h", Seq("sig"))
         .selectExpr("a_id", "b_id", s"cast($m8 as bigint) as m")
         .distinct()
         .groupBy("m").agg(count(lit(1)).cast("long").as("n_pairs"))
@@ -1105,7 +1050,7 @@ object DedupOps {
            |       $bandSel),
            |  sized AS (SELECT band, v, count(*) AS n FROM bands GROUP BY band, v),
            |  small AS (SELECT b.doc_id, b.idx, b.band, b.v FROM bands b
-           |            JOIN sized z ON z.band = b.band AND z.v = b.v AND z.n <= 64),
+           |            JOIN sized z ON z.band = b.band AND z.v = b.v AND z.n <= $bucketCap),
            |  pairs AS (SELECT DISTINCT a.doc_id AS a_id, a.idx AS a_idx,
            |                   b.doc_id AS b_id, b.idx AS b_idx
            |            FROM small a JOIN small b
@@ -1228,15 +1173,8 @@ object DedupOps {
     Q(
       "dd27_incremental_labels",
       s"""WITH RECURSIVE
-         |     t AS (SELECT doc_id, $duckToks AS toks FROM documents),
-         |     sh AS (SELECT doc_id, $duckShingles AS shingles FROM t),
-         |     hh AS (SELECT doc_id, $duckHs AS hs FROM sh),
-         |     sig AS (SELECT doc_id, ${duckMh(0)}, ${duckMh(1)}, ${duckMh(2)}, ${duckMh(3)} FROM hh),
-         |     allbands AS (
-         |       SELECT doc_id, 0 AS band, mh0 AS h FROM sig
-         |       UNION ALL SELECT doc_id, 1, mh1 FROM sig
-         |       UNION ALL SELECT doc_id, 2, mh2 FROM sig
-         |       UNION ALL SELECT doc_id, 3, mh3 FROM sig),
+         |     ${duckSigCtes(4)},
+         |     ${duckR1Bands("allbands")},
          |     bands AS (SELECT * FROM allbands WHERE doc_id < 400),
          |     $duckCapPairs,
          |     $duckStarEdges,
@@ -1297,7 +1235,7 @@ object DedupOps {
     // which is what actually bounds this query's wall clock (measured
     // ~+25% at sf0.1). Two passes keep the CC path fed by the small
     // corpus frame only.
-    val cb = r1Bands(corpus, idCol, textCol) // persisted; shared by edges + rollup
+    val cb = r1Bands(corpus, idCol, textCol).persist() // edges + rollup
     val edges = bandStarEdges(cb)
     val labels = graft.functions.Dedup.connectedComponents(
         corpus.select(idCol), edges, idCol, "a_id", "b_id")
@@ -1305,7 +1243,7 @@ object DedupOps {
     val bucketLabel = cb.join(labels, "doc_id")
       .groupBy("band", "h")
       .agg(min("cluster_id").as("cl")) // min ≡ the bucket's one label
-    val matched = r1Bands(batch, idCol, textCol, cache = false) // one join pass
+    val matched = r1Bands(batch, idCol, textCol) // one join pass
       .join(bucketLabel, Seq("band", "h"))
       .groupBy("doc_id")
       .agg(min("cl").as("adopted"),
@@ -1367,7 +1305,7 @@ object DedupOps {
     * augmented text; the real-corpus path takes raw docs via
     * `Dedup.passageNearDup`). Aligned 8-token passages → 60-bit
     * token-majority SimHash → 4×15-bit pigeonhole bands, buckets
-    * capped at 64, exact Hamming ≤ 3 verify. Returns (a_id, a_idx,
+    * capped at [[bucketCap]], exact Hamming ≤ 3 verify. Returns (a_id, a_idx,
     * b_id, b_idx, hamming), a_id < b_id.
     *
     * Two sizing decisions carry the scale story (learned from the 10×
@@ -1381,12 +1319,12 @@ object DedupOps {
     *     content-deterministic and exactly unbiased, so random
     *     band keys are uniform.
     *   - BAND WIDTH sized to the corpus. Expected random bucket load
-    *     is N·2^−r; r = 15 keeps load ≪ the 64 cap through ~10⁶
+    *     is N·2^−r; r = 15 keeps load ≪ the [[bucketCap]] through ~10⁶
     *     passages per shard. Beyond that, widen r (two salted token
     *     hashes give 120 signature bits — r = 20 covers ~10⁸) the
     *     same way dd22 sizes (b, r) for document MinHash.
-    * Persists the signature and band frames (multiple consumers);
-    * caller clearCache releases.
+    * Persists the band frame (both pair sides); caller clearCache
+    * releases.
     */
   private[graft] def passageNearDupPairs(docs0: DataFrame): DataFrame = {
     val docs = T.spread(docs0)
@@ -1427,27 +1365,13 @@ object DedupOps {
     val bands = sig
       .selectExpr("doc_id", "idx", "sh", s"stack(4, $bandVals) as (band, v)")
       .persist() // both pair-join sides; caller clearCache releases
-    // bucket cap via one unordered (band, v) window (r19 — the
-    // cappedBandPairs form): the groupBy + join-back sized the buckets
-    // with a second pass over the banded frame; the window's exchange
-    // also CO-PARTITIONS both self-join sides on (band, v). At scale the
-    // sized table is bucket-cardinality (corpus-sized), so the join-back
-    // could never stay a broadcast — the window shape has no such cliff.
-    val wbv = Window.partitionBy("band", "v")
-    val small = bands
-      .select(col("doc_id"), col("idx"), col("sh"), col("band"), col("v"),
-        count(lit(1)).over(wbv).as("n"))
-      .filter(col("n") <= 64)
-      .select("doc_id", "idx", "sh", "band", "v")
-    small
-      .select(col("doc_id").as("a_id"), col("idx").as("a_idx"),
-        col("sh").as("sha"), col("band"), col("v"))
-      .join(small.select(col("doc_id").as("b_id"), col("idx").as("b_idx"),
-        col("sh").as("shb"), col("band"), col("v")), Seq("band", "v"))
-      .filter(col("a_id") < col("b_id"))
+    // bucket cap via one unordered (band, v) window (r19): at scale a
+    // groupBy-sized table is bucket-cardinality (corpus-sized), so a
+    // join-back could never stay a broadcast — the window has no cliff
+    cappedSelfJoin(bands, "v", Seq("idx", "sh"))
       .selectExpr("a_id", "cast(a_idx as bigint) as a_idx",
         "b_id", "cast(b_idx as bigint) as b_idx",
-        "cast(bit_count(sha ^ shb) as bigint) as hamming")
+        "cast(bit_count(a_sh ^ b_sh) as bigint) as hamming")
       .filter(col("hamming") <= 3)
       .distinct()
   }
@@ -1508,27 +1432,8 @@ object DedupOps {
     * shared capped banding, overlap join on 60-bit hashes, text never
     * shuffles. Shared by the gated dd21 query and `Dedup.containment`.
     */
-  private[graft] def containmentPairs(docs: DataFrame): DataFrame = {
-    val hh = T.spread(docs)
-      .selectExpr("doc_id", s"$sparkToks as toks")
-      .selectExpr("doc_id", s"$sparkShingles as shingles")
-      .selectExpr("doc_id", s"$sparkHs as hs")
-      .persist()
-    val bands = hh
-      .selectExpr("doc_id", sparkMh(0), sparkMh(1), sparkMh(2), sparkMh(3))
-      .selectExpr("doc_id", "stack(4, 0, mh0, 1, mh1, 2, mh2, 3, mh3) as (band, h)")
-      .persist()
-    val pairs = cappedBandPairs(bands)
-    val ex = hh.selectExpr("doc_id", "explode(array_distinct(hs)) as sng")
-    val sizes = ex.groupBy("doc_id").agg(count(lit(1)).as("c"))
-    val inter = pairs
-      .join(ex.withColumnRenamed("doc_id", "a_id"), Seq("a_id"))
-      .join(ex.withColumnRenamed("doc_id", "b_id"), Seq("b_id", "sng"))
-      .groupBy("a_id", "b_id")
-      .agg(count(lit(1)).as("i"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("c", "ca"), Seq("a_id"))
-      .join(sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("c", "cb"), Seq("b_id"))
+  private[graft] def containmentPairs(docs: DataFrame): DataFrame =
+    shingleOverlap(docs)
       .selectExpr("a_id", "b_id",
         "(10000 * i) div ca as c_ab_x10000",
         "(10000 * i) div cb as c_ba_x10000")
@@ -1536,7 +1441,6 @@ object DedupOps {
         "case when c_ab_x10000 >= 8000 and c_ab_x10000 >= c_ba_x10000 + 2000 then 'a_in_b' " +
           "when c_ba_x10000 >= 8000 and c_ba_x10000 >= c_ab_x10000 + 2000 then 'b_in_a' " +
           "else 'mutual' end as verdict")
-  }
 
   /** Per-passage boilerplate flags: (doc_id, i, ntok_p, ph, keep) for
     * consecutive `chunk`-token passages of lowercased text; `keep` is

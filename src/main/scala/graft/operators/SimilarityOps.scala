@@ -2716,7 +2716,7 @@ object SimilarityOps {
       // action (measured: a ~1.9 s zero-job driver stall inside st16,
       // guide §7.3 "very large plans"). Same executor-local
       // fault-tolerance trade as the CC loop's checkpoints
-      // (DedupOps.scala bandStarEdges note); blocks release when the
+      // (Dedup.connectedComponents note); blocks release when the
       // frame's RDD is GC'd after the action.
       val led = cur.select("vec_id", "batch", "cell", "embedding")
         .join(dom, Seq("vec_id"), "left")

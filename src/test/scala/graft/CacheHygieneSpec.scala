@@ -24,7 +24,7 @@ class CacheHygieneSpec extends AnyFunSuite {
     "ss10_srp_neardup",         // srpBandPairs capped persist
     "ss11_ivf_trained_recall",  // trained centroids + ivfSearch scored
     "ss13_ivfpq_recall",        // scored persist + residual persist
-    "dd15_incremental_neardup", // two r1Bands persists (corpus + batch)
+    "dd15_incremental_neardup", // r1Bands batch-side persist
     "tx06_top_ngrams",          // token-count persist
     "tx16_bigram_fluency",      // bigram-occurrence persist (3 consumers)
     "sm06_fluency_buckets",     // rides tx16's bigram persist

@@ -139,14 +139,14 @@ class DedupSpec extends AnyFunSuite {
       n.get
     }
     // default conf: the fixture's edge set fits the broadcast budget and
-    // the driver finishes it (10 jobs here; 39 when it ran 5 star rounds)
+    // the driver finishes it in a few jobs
     val driverJobs = jobs()
     assert(graft.functions.Dedup.lastCcRounds == 0)
     assert(driverJobs <= 12, s"$driverJobs Spark jobs")
-    // -1: the star rounds run in exactly the 40 jobs they took before the
-    // size decision existed — reading the edge count adds no job
+    // -1: the 5 star rounds run in 39 jobs — reading the edge count
+    // adds no job
     withBroadcastThreshold(-1) {
-      assert(jobs() == 40)
+      assert(jobs() == 39)
       assert(graft.functions.Dedup.lastCcRounds == 5)
     }
   }
