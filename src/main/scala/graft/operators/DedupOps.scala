@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Portable => P, Q, Tables => T}
+import graft.functions.{MinHashSig, ShingleHashes}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,10 +22,12 @@ import org.apache.spark.sql.functions._
   *
   * Every MinHash/LSH decision has ONE definition per engine here, and
   * every dedup query and `graft.functions.Dedup` API builds through them:
-  *   - the signature builder — Spark [[shingleSets]] → [[shingleHashSets]]
-  *     (`hs`, one md5 per 3-token shingle) → [[minhashSig]] (`mh0..`) →
-  *     [[r1BandRows]]; DuckDB [[duckSigCtes]] (`t → sh → hh → sig`) and
-  *     [[duckR1Bands]];
+  *   - the signature builder — Spark [[shingleHashSets]] (`hs`, the
+  *     native `ShingleHashes` kernel: one md5 per 3-token shingle) →
+  *     [[minhashSig]] (the native `MinHashSig` kernel, one evaluation per
+  *     row, projected to `mh0..`) → [[r1BandRows]]; DuckDB
+  *     [[duckSigCtes]] (`t → sh → hh → sig`: the same hash and
+  *     permutations written in SQL) and [[duckR1Bands]];
   *   - the bucket cap — Spark [[cappedSelfJoin]]; DuckDB `duckCapPairs`;
   *   - the overlap verify — Spark [[shingleOverlap]]; DuckDB
   *     `duckOverlapCtes` (and the SimHash majority vote, `sparkSimBits` /
@@ -38,7 +41,10 @@ object DedupOps {
   private val sparkToks = "split(text, '\\\\s+')"
   private val duckToks = "regexp_split_to_array(text, '\\s+')"
 
-  /** Spark SQL: 3-token shingles from a `toks` column. */
+  /** Spark SQL: 3-token shingles from a `toks` column (tx06 counts the
+    * strings; the MinHash builders hash them natively, see
+    * [[shingleHashSets]]).
+    */
   private val sparkShingles =
     "case when size(toks) < 3 then array() else " +
       "transform(sequence(1, size(toks) - 2), i -> " +
@@ -48,12 +54,12 @@ object DedupOps {
       "toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])"
 
   /** Each shingle hashed ONCE to a 60-bit int — the only md5 in the whole
-    * MinHash pipeline. Every permutation below is a cheap integer hash over
-    * these, so adding signature width (dd13's 8 components) costs integer
-    * ops, not extra md5 passes over the text.
+    * MinHash pipeline (Spark: the `ShingleHashes` kernel, bit-identical to
+    * this fragment's Portable.hash60 per shingle). Every permutation below
+    * is a cheap integer hash over these, so adding signature width (dd13's
+    * 8 components) costs integer ops, not extra md5 passes over the text.
     */
-  private val sparkHs = s"transform(shingles, s -> ${P.hash60("s")})"
-  private val duckHs  = s"list_transform(shingles, s -> ${P.duckHash60("s")})"
+  private val duckHs = s"list_transform(shingles, s -> ${P.duckHash60("s")})"
 
   /** MinHash permutation k: a Broder universal-hash pair composed into a
     * 62-bit value, h_k(x) = h1_k(x)·2³¹ + h2_k(x) with
@@ -63,7 +69,9 @@ object DedupOps {
     * < 2⁶² — exact in 64-bit integer arithmetic, hence bit-identical
     * across engines. One md5/shingle total (vs one per seed per shingle):
     * the permutations are arithmetic, which is both the textbook
-    * construction and ~k× less hashing work on the scan.
+    * construction and ~k× less hashing work on the scan. On Spark the
+    * native `MinHashSig` kernel computes all k minima in one pass over
+    * the `ShingleHashes` array.
     *
     * Why a PAIR of 31-bit hashes instead of one: a single mod-p1 hash
     * puts band keys in a 31-bit space, and two distinct shingle hashes
@@ -76,8 +84,16 @@ object DedupOps {
     * h1-major with h2 as an exact tie-break, so the min-wise statistics
     * match the plain Broder family. (A 61-bit Mersenne-prime hash needs
     * 128-bit products — not expressible as exact BIGINT SQL on both
-    * engines; the two-prime CRT composition is.)
+    * engines; the two-prime CRT composition is.) The constants live in
+    * `MinHashSig`'s companion.
     */
+  private def duckMh(k: Int): String = {
+    import MinHashSig.{a1, a2, b1, b2, p1, p2}
+    s"list_min(list_transform(hs, x -> " +
+      s"((${a1(k)}::BIGINT * (x % $p1) + ${b1(k)}) % $p1) * 2147483648 + " +
+      s"((${a2(k)}::BIGINT * (x % $p2) + ${b2(k)}) % $p2))) AS mh$k"
+  }
+
   /** Fixed 24-token boilerplate tail appended (deterministically, on both
     * engines) to doc_id % 4 == 0 rows by the gated dd18 query, so the
     * exact-substring detector runs against known-positive spans — the
@@ -90,42 +106,28 @@ object DedupOps {
       "either express or implied including without limitation any " +
       "warranty of merchantability or fitness"
 
-  private val mhP1 = 2147483647L // 2^31 - 1
-  private val mhP2 = 2147483629L // 2^31 - 19
-  private val mhA1 = Seq(1103515245L, 1588635695L, 1203248318L, 784588716L,
-    1343692587L, 423493549L, 858993459L, 1640531527L)
-  private val mhB1 = Seq(12345L, 392541289L, 1574243550L, 1914771284L,
-    669059329L, 2027004510L, 1431655765L, 97531L)
-  private val mhA2 = Seq(1597334677L, 1812433253L, 1566083941L, 900000011L,
-    1234567891L, 1111111121L, 362437L, 1300000003L)
-  private val mhB2 = Seq(1013904223L, 2027808443L, 7919L, 104729L,
-    611953L, 1299709L, 15485863L, 32452843L)
-
-  private def sparkMh(k: Int): String =
-    s"array_min(transform(hs, x -> " +
-      s"((${mhA1(k)}L * (x % ${mhP1}L) + ${mhB1(k)}L) % ${mhP1}L) * 2147483648L + " +
-      s"((${mhA2(k)}L * (x % ${mhP2}L) + ${mhB2(k)}L) % ${mhP2}L))) as mh$k"
-  private def duckMh(k: Int): String =
-    s"list_min(list_transform(hs, x -> " +
-      s"((${mhA1(k)}::BIGINT * (x % ${mhP1}) + ${mhB1(k)}) % ${mhP1}) * 2147483648 + " +
-      s"((${mhA2(k)}::BIGINT * (x % ${mhP2}) + ${mhB2(k)}) % ${mhP2}))) AS mh$k"
-
-  /** Spark: (idCol, textCol) → (doc_id, shingles), the 3-token shingle
-    * arrays (tx06 counts them as strings).
+  /** Spark: (doc_id, shingles), the 3-token shingle strings of `text`
+    * (tx06 counts them).
     */
-  private[graft] def shingleSets(df: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    df.selectExpr(s"$idCol as doc_id", s"split($textCol, '\\\\s+') as toks")
+  private[graft] def shingleSets(df: DataFrame): DataFrame =
+    df.selectExpr("doc_id", s"$sparkToks as toks")
       .selectExpr("doc_id", s"$sparkShingles as shingles")
 
-  /** Spark: (doc_id, hs), each shingle hashed once. */
+  /** Spark: (doc_id, hs), each 3-token shingle hashed once by the native
+    * `ShingleHashes` kernel.
+    */
   private def shingleHashSets(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
-    shingleSets(df, idCol, textCol).selectExpr("doc_id", s"$sparkHs as hs")
+    df.select(expr(idCol).as("doc_id"), ShingleHashes.shingleHashes(expr(textCol)).as("hs"))
 
-  /** Spark: (doc_id, mh0..mh{k-1}) over a (doc_id, hs) frame. */
+  /** Spark: (doc_id, mh0..mh{k-1}) over a (doc_id, hs) frame. The native
+    * `MinHashSig` kernel runs once per row into `sig`; the element
+    * projection reads `sig` k times, so CollapseProject keeps the kernel
+    * in its own projection instead of inlining it k times.
+    */
   private def minhashSig(hh: DataFrame, k: Int): DataFrame =
-    hh.selectExpr("doc_id" +: (0 until k).map(sparkMh): _*)
+    hh.select(col("doc_id"), MinHashSig.minHashSig(col("hs"), k).as("sig"))
+      .select(col("doc_id") +: (0 until k).map(j => col("sig").getItem(j).as(s"mh$j")): _*)
 
   /** Spark: r=1 band rows (doc_id, carry..., band, h) over mh0..mh3 —
     * band b's key is mh_b. `carry` expressions ride every band row.
@@ -289,8 +291,8 @@ object DedupOps {
     * gated dd12 query and the `Dedup.contamination` driver API.
     */
   private[graft] def shingleHashes(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    shingleSets(T.spread(df), idCol, textCol)
-      .selectExpr("doc_id", s"explode(array_distinct($sparkHs)) as sng")
+    T.spread(df).select(expr(idCol).as("doc_id"),
+      explode(array_distinct(ShingleHashes.shingleHashes(expr(textCol)))).as("sng"))
 
   /** r=1 banded MinHash frame `(doc_id, band, h)` over arbitrary id/text
     * columns — the shingle→hash→minhash→band stage shared by the gated
@@ -412,7 +414,7 @@ object DedupOps {
       s"""WITH ${duckHashCtes("documents")}
          |SELECT doc_id, ${duckMhList(4)}
          |FROM hh""".stripMargin) { (s, d) =>
-      minhashSig(shingleHashSets(T.documents(s, d)), 4)
+      minhashSig(shingleHashSets(T.spread(T.documents(s, d))), 4)
     },
 
     // LSH banding: candidate pairs sharing ANY of the b=4 band buckets
@@ -524,7 +526,8 @@ object DedupOps {
         .map(k => s"(case when a_mh$k = b_mh$k then 1 else 0 end)")
         .mkString(" + ")
       val mhs = Seq("mh0", "mh1", "mh2", "mh3")
-      val bands = r1BandRows(minhashSig(shingleHashSets(T.documents(s, d)), 4), mhs: _*)
+      val bands = r1BandRows(
+        minhashSig(shingleHashSets(T.spread(T.documents(s, d))), 4), mhs: _*)
         .persist() // both pair-join sides; caller clearCache releases
       cappedBandPairs(bands, carry = mhs)
         .selectExpr(
@@ -668,7 +671,7 @@ object DedupOps {
       val bandKey = (k: Int) =>
         P.hash60(s"concat(cast(mh${2 * k} as string), '|', cast(mh${2 * k + 1} as string))")
       val stackArgs = (0 until 4).map(k => s"$k, ${bandKey(k)}").mkString(", ")
-      val bands = minhashSig(shingleHashSets(T.documents(s, d)), 8)
+      val bands = minhashSig(shingleHashSets(T.spread(T.documents(s, d))), 8)
         .selectExpr("doc_id", s"stack(4, $stackArgs) as (band, h)")
         .persist() // sized + both pair sides (dd04 pushdown lesson)
       cappedBandPairs(bands)

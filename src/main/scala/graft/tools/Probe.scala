@@ -78,8 +78,15 @@ object Probe {
     (m, timeline(m.metrics.spans))
   }
 
-  def plan(spark: SparkSession, q: Q, sfDir: String): String =
-    q.fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+  /** Clears the cache the build left, as [[finalPlan]] does: otherwise a
+    * later query's `persist()` can match this query's cached frame and
+    * print a plan no single run of it has.
+    */
+  def plan(spark: SparkSession, q: Q, sfDir: String): String = {
+    val p = q.fn(spark, sfDir).queryExecution.explainString(FormattedMode)
+    spark.sharedState.cacheManager.clearCache()
+    p
+  }
 
   /** Executes the frame's OWN QueryExecution (the noop sink would run a
     * separate write execution and leave this plan unexecuted), dropping

@@ -19,15 +19,15 @@ class DedupPlanCountsSpec extends AnyFunSuite {
 
   /** query → (jobs, shuffle-write bytes) at sf0.001, local[4]. */
   private val expected: Seq[(String, (Int, Long))] = Seq(
-    "dd03_minhash_signatures" -> (2, 0L),
+    "dd03_minhash_signatures" -> (3, 87721L),
     "dd04_lsh_candidate_pairs" -> (9, 166553L),
     "dd05_simhash" -> (3, 87721L),
     "dd06_ngram_jaccard" -> (16, 181365L),
     "dd08_dedup_clusters" -> (10, 133506L),
-    "dd09_signature_jaccard" -> (8, 157467L),
+    "dd09_signature_jaccard" -> (9, 254017L),
     "dd10_simhash_neardup" -> (9, 157399L),
     "dd12_contamination" -> (8, 96067L),
-    "dd13_lsh_r2" -> (8, 69499L),
+    "dd13_lsh_r2" -> (9, 159896L),
     "dd15_incremental_neardup" -> (11, 111786L),
     "dd16_cluster_stats" -> (12, 135745L),
     "dd20_soft_weights" -> (11, 138710L),

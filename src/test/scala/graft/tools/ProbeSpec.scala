@@ -65,6 +65,20 @@ class ProbeSpec extends AnyFunSuite {
     assert(p.contains("Physical Plan") && p.contains("isFinalPlan=false"), p)
   }
 
+  test("plan leaves no cached frame behind for the next query to match") {
+    // dd06's band frame is dd04's whole r1Bands pipeline; with dd04's
+    // persisted bands still cached, dd06 would print them instead of
+    // banding from its own persisted hash sets
+    def ids(p: String) = p.replaceAll("#\\d+", "#_").replaceAll("plan_id=\\d+", "plan_id=_")
+      .replaceAll("\\(\\d+\\)", "(_)").replaceAll("\\[codegen id : \\d+\\]", "[codegen id : _]")
+    spark.sharedState.cacheManager.clearCache()
+    Probe.plan(spark, Probe.query("dd04_lsh_candidate_pairs"), sf)
+    val after = Probe.plan(spark, Probe.query("dd06_ngram_jaccard"), sf)
+    spark.sharedState.cacheManager.clearCache()
+    val fresh = Probe.plan(spark, Probe.query("dd06_ngram_jaccard"), sf)
+    assert(ids(after) == ids(fresh))
+  }
+
   test("an unknown query name fails explicitly, before any session starts") {
     val e = intercept[IllegalArgumentException](Probe.query("no_such_query"))
     assert(e.getMessage.contains("no_such_query"))
