@@ -1,16 +1,83 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
   * At 100 TB these would be partitioned/bucketed parquet directories; the
-  * loaders keep the access path a plain `spark.read.parquet` so Catalyst's
-  * filter pushdown / column pruning apply unchanged at any scale.
+  * loaders keep the access path a plain parquet file-source scan so
+  * Catalyst's filter pushdown / column pruning apply unchanged at any
+  * scale.
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** A table's inferred schema and what it was inferred from. */
+  private final case class Footer(files: Seq[(String, Long, Long)],
+      confs: Map[String, String], schema: StructType)
+
+  /** Footer-schema cache, one entry per table path.
+    *
+    * A bare `spark.read.parquet` infers the schema with a Spark job
+    * (`mergeSchemasInParallel`) just to read a footer, and every compile,
+    * query build and optimizer check reads its tables again. So each
+    * read passes the schema last inferred for its path
+    * (`spark.read.schema(cached).parquet`), which lists the files on
+    * the driver and launches no job.
+    *
+    *  - Key: the path's leaf-file listing, each file's (path, length,
+    *    mtime) as Spark's own file index lists it, plus the session's
+    *    `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*` confs
+    *    (`events` sets `nanosAsLong`, which changes the inferred type).
+    *  - Miss: when the path has no entry, its confs differ, or the
+    *    cached read lists other files, the schema is inferred exactly as
+    *    a bare read does and the entry is replaced.
+    *  - Lifetime: the JVM, one entry per path, so a long-lived session
+    *    that rewrites its tables keeps one entry per table.
+    *  - Fallback: when the cached read fails (the path is gone), the
+    *    bare read runs and raises Spark's own error, `PATH_NOT_FOUND`.
+    */
+  private val footers =
+    new java.util.concurrent.ConcurrentHashMap[String, Footer]()
+
+  /** Paths with a cached schema (the bound is one entry per path). */
+  private[graft] def cachedPaths: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    footers.keySet.asScala.toSet
+  }
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val cached = Option(footers.get(path)).filter(_.confs == confs).flatMap { f =>
+      try {
+        val df = spark.read.schema(f.schema).parquet(path)
+        if (leafFiles(df).contains(f.files)) Some(df) else None
+      } catch { case _: AnalysisException => None }
+    }
+    cached.getOrElse {
+      val df = spark.read.parquet(path)
+      leafFiles(df).foreach(files => footers.put(path, Footer(files, confs, df.schema)))
+      df
+    }
+  }
+
+  /** The sorted (path, length, mtime) listing behind a file-source read. */
+  private def leafFiles(df: DataFrame): Option[Seq[(String, Long, Long)]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed match {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location match {
+        case index: PartitioningAwareFileIndex =>
+          Some(index.allFiles().map(s =>
+            (s.getPath.toString, s.getLen, s.getModificationTime)).sorted)
+        case _ => None
+      }
+      case _ => None
+    }
+  }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame    = t(s, d, "orders")

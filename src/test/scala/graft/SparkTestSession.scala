@@ -17,10 +17,15 @@ object SparkTestSession {
     * then restore the previous value (unset stays unset). -1 forces every
     * size-gated choice onto its distributed path, e.g. the CC star rounds.
     */
-  def withBroadcastThreshold[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
+  def withBroadcastThreshold[T](bytes: Long)(body: => T): T =
+    withConf("spark.sql.autoBroadcastJoinThreshold", bytes.toString)(body)
+
+  /** Run `body` with session conf `key` at `value`, then restore the
+    * previous value (unset stays unset).
+    */
+  def withConf[T](key: String, value: String)(body: => T): T = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bytes.toString)
+    spark.conf.set(key, value)
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }

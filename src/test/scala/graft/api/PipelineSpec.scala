@@ -39,6 +39,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(Set("expected_parallel_max_rate", "p_busy", "element_ratio").subsetOf(cols))
   }
 
+  test("optimizePipeline reads no parquet footer once its table is warm") {
+    // the trace run, the rewrite and the schema-invariance rail compile
+    // the graph three times; with the table's schema cached none of them
+    // may run a schema-inference job ("parquet at …")
+    graft.Tables.lineitem(spark, sf)
+    val l = new graft.metrics.StageMetricsListener
+    l.collect(spark)(Optimizer.optimizePipeline(spark, Flagship.graph, sf,
+      Optimizer.Config(fastOptimize = true)))
+    assert(l.spans.nonEmpty)
+    assert(!l.spans.exists(_.name.startsWith("parquet at ")),
+      l.spans.map(_.name).mkString(", "))
+  }
+
   test("optimizer un-starves a deliberately serialized pipeline") {
     // the reference's value prop end-to-end: a pipeline whose stages are
     // pinned to parallelism 1 must come out of optimizePipeline with its

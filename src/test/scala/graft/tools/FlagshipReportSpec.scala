@@ -14,31 +14,31 @@ class FlagshipReportSpec extends AnyFunSuite {
   test("the LP's binding-op prediction holds on an instrumented re-run " +
     "of the rewritten pipeline: observed/predicted within [0.25, 4], " +
     "and the rewrite never regresses the wall rate below 0.7x") {
-    // The bands are TIMING bands over two in-test wall measurements; a
+    // The bands are TIMING bands over in-test wall measurements, and a
     // shared box swinging 1.5-1.8x intra-day (r19's documented drift)
-    // can push one sample to ~0.62x and flake the suite while the same
-    // measurement passes solo (observed twice). A violation must
-    // REPRODUCE on one fresh gather before it fails the build — the
-    // bands themselves are unchanged, so the regressions this spec
-    // exists for (10-1000x prediction gaps, real rewrite slowdowns)
-    // still fail, twice.
-    def inBand(x: FlagshipReport.Evidence): Boolean =
-      x.ratio >= 0.25 && x.ratio <= 4.0 && x.speedup >= 0.7
-    val first = FlagshipReport.gather(spark, sf, benchIterations = 2)
-    val e =
-      if (inBand(first)) first
-      else FlagshipReport.gather(spark, sf, benchIterations = 2)
-    assert(e.predictedRate > 0, "LP must produce a positive rate")
-    assert(e.bindingPredicted > 0 && e.bindingObserved > 0,
-      s"degenerate binding-op rates: $e")
-    assert(e.ratio >= 0.25 && e.ratio <= 4.0,
-      f"observed/predicted ${e.ratio}%.3f left the stated band " +
-        f"[0.25, 4] (predicted ${e.bindingPredicted}%.0f, " +
-        f"observed ${e.bindingObserved}%.0f at ${e.bindingOp})")
-    assert(e.speedup >= 0.7,
-      f"rewritten pipeline regressed the wall rate: ${e.speedup}%.2fx")
+    // can push one sample to ~0.62x. So the bands are asserted on the
+    // median of three gathers: a pass needs two of three samples in the
+    // band, while the regressions this spec exists for (10-1000x
+    // prediction gaps, real rewrite slowdowns) move every sample.
+    val samples = Seq.fill(3)(FlagshipReport.gather(spark, sf, benchIterations = 2))
+    def median(f: FlagshipReport.Evidence => Double): Double =
+      samples.map(f).sorted.apply(1)
+    for (e <- samples) {
+      assert(e.predictedRate > 0, "LP must produce a positive rate")
+      assert(e.bindingPredicted > 0 && e.bindingObserved > 0,
+        s"degenerate binding-op rates: $e")
+    }
+    val ratio = median(_.ratio)
+    val speedup = median(_.speedup)
+    assert(ratio >= 0.25 && ratio <= 4.0,
+      f"median observed/predicted $ratio%.3f left the stated band [0.25, 4] " +
+        samples.map(e => f"(predicted ${e.bindingPredicted}%.0f, observed " +
+          f"${e.bindingObserved}%.0f at ${e.bindingOp})").mkString(" "))
+    assert(speedup >= 0.7,
+      f"rewritten pipeline regressed the wall rate: median $speedup%.2fx " +
+        samples.map(e => f"${e.speedup}%.2fx").mkString("(", ", ", ")"))
     // the rendered artifact carries both headline numbers
-    val md = FlagshipReport.render(e)
+    val md = FlagshipReport.render(samples.head)
     assert(md.contains("Estimated_Max_Rate_Convex") &&
       md.contains("OBSERVED effective rate"))
   }
