@@ -52,7 +52,7 @@ object Harness {
     val df = Compiler.compile(spark, g, sfDir).df
     // element count once, untimed; the TIMED action is a full noop-sink
     // materialization — count() as the timed action lets Catalyst prune
-    // the pipeline's own work (the Bench r16 methodology)
+    // the pipeline's own work (see Probe.materialize)
     val n = df.count()
     var iters = 0
     val rates = scala.collection.mutable.ArrayBuffer[Double]()

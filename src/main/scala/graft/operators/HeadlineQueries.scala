@@ -141,15 +141,29 @@ object HeadlineQueries {
     },
 
     // Distinct + exact distinct-count profiling over a fact column.
+    // The two distinct counts are expanded by hand: each row becomes
+    // (k = 0, l_partkey) and (k = 1, l_suppkey), one shuffle dedups the
+    // (k, v) pairs and counts their rows, and a final aggregate counts
+    // the non-null v per k (= count(DISTINCT)) and sums k = 0's row
+    // counts (= count(*)). Two countDistincts in one agg would go
+    // through Spark's RewriteDistinctAggregates, which orders the
+    // distinct columns by iterating a hash map keyed on expression ids,
+    // so each build could plan its Expand in either column order and
+    // write different shuffle bytes. Here the order is fixed.
     Q(
       "q_distinct_profile",
       """SELECT count(DISTINCT l_partkey) AS n_parts,
         |  count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
         |FROM lineitem""".stripMargin) { (s, d) =>
-      T.lineitem(s, d).agg(
-        countDistinct(col("l_partkey")).as("n_parts"),
-        countDistinct(col("l_suppkey")).as("n_supps"),
-        count(lit(1)).as("n_rows"))
+      val (k, v) = (col("k"), col("v"))
+      T.lineitem(s, d)
+        .select(posexplode(array(col("l_partkey"), col("l_suppkey"))).as(Seq("k", "v")))
+        .groupBy(k, v)
+        .agg(count(lit(1)).as("n"))
+        .agg(
+          count(when(k === 0, v)).as("n_parts"),
+          count(when(k === 1, v)).as("n_supps"),
+          coalesce(sum(when(k === 0, col("n"))), lit(0L)).as("n_rows"))
     },
 
     // Approximate distinct via a KMV (k-minimum-values) sketch: the

@@ -386,8 +386,8 @@ object TfRecords {
           ln.split("\"" + field + "\":", 2).lift(1)
             .flatMap(s => scala.util.Try(s.takeWhile(_.isDigit).toLong).toOption)
         lines.flatMap { ln =>
-          // our own fixed writer format — regex-free string splitting
-          // (the Bench parser convention); any malformed line is skipped
+          // our own fixed writer format — regex-free string splitting;
+          // any malformed line is skipped
           for {
             f <- ln.split("\"file\":\"", 2).lift(1).map(_.takeWhile(_ != '"'))
             n <- num(ln, "n_records")

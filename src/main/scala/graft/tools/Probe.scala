@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, Q, Session, SparkEntry}
+import graft.{Q, Session, SparkEntry}
 import graft.metrics.{StageMetricsListener, StageSpan}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
   *
   *   sbt 'runMain graft.tools.Probe <q1,q2,...> [reps|jobs|plan|final-plan] [sfDir] [reps]'
   *
-  *  - `reps` (default): Bench's warm-up, one untimed rep, then `reps` (3)
+  *  - `reps` (default): [[warmUp]], one untimed rep, then `reps` (3)
   *    timed reps: median and min wall, and the fastest rep's jobs,
   *    stages, shuffle read/write and spill.
   *  - `jobs`: each job of one measured rep with its span, the driver gap
@@ -19,22 +19,60 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
   *    reuse shows, with its reuse, broadcast and shuffle-stage counts.
   *
   * sfDir defaults to `SPARK_GRAFT_SF_DIR` and cores to `SPARK_GRAFT_CPUS`
-  * (default 4), as in Bench, so rows line up with Bench rows.
+  * (default 4), as in `graft.Bench`, whose sweep is [[reps]] over every
+  * registered query.
   */
 object Probe {
+
+  /** Fully materializes a frame through the noop sink, the measured action.
+    * `.count()` is not a valid one: Catalyst prunes the columns a row count
+    * does not need, and for window- and aggregate-shaped queries that
+    * deletes the very work being measured (op11's count() shuffled 171
+    * bytes against the real 1 MiB; sm15's lost its three rank exchanges;
+    * q1's scanned one column instead of seven). The noop sink evaluates
+    * every output column and discards it, the cost a consumer of the full
+    * result pays.
+    */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** The p-quantile of `xs` by linear interpolation between closest ranks;
+    * p = 0.5 is the median (the mean of the middle two for an even count).
+    */
+  def quantile(xs: Seq[Double], p: Double): Double = {
+    val s = xs.sorted
+    val h = (s.size - 1) * p
+    val lo = h.toInt
+    if (lo + 1 < s.size) s(lo) + (h - lo) * (s(lo + 1) - s(lo)) else s(lo)
+  }
+
+  def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  /** Untimed warm-up: JIT, codegen, broadcast machinery and FS cache. A
+    * missing or corrupt fixture must surface as that query's failure, not
+    * stop the run before any measurement, so every step is guarded.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1L << 20).selectExpr("sum(id)").collect()
+    for (t <- Seq("lineitem", "orders", "customer", "documents", "embeddings"))
+      try spark.read.parquet(s"$sfDir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    SparkEntry.all.find(_.name == "q3_top_revenue_orders")
+      .foreach(q => try materialize(q.fn(spark, sfDir)) catch { case _: Throwable => () })
+  }
 
   final case class Measured(wallS: Double, metrics: StageMetricsListener,
       executedPlan: SparkPlan)
 
-  /** Builds a frame and materializes it to the noop sink (Bench's timed
-    * action) under ONE listener, so jobs run while the frame is built are
-    * counted; then clears the cache the query left. The frame's plan is
-    * taken first, so cached relations still show in it.
+  /** Builds a frame and [[materialize]]s it under ONE listener, so jobs
+    * run while the frame is built are counted; then clears the cache the
+    * query left. The frame's plan is taken first, so cached relations
+    * still show in it.
     */
   def measure(spark: SparkSession)(build: => DataFrame): Measured = {
     val l = new StageMetricsListener
     val t0 = System.nanoTime()
-    val df = l.collect(spark) { val df = build; Bench.materialize(df); df }
+    val df = l.collect(spark) { val df = build; materialize(df); df }
     val wallS = (System.nanoTime() - t0) / 1e9
     val plan = df.queryExecution.executedPlan
     spark.sharedState.cacheManager.clearCache()
@@ -109,13 +147,13 @@ object Probe {
     val n = args.lift(3).fold(3)(_.toInt)
     val spark = Session.local(Session.envCpus(4))
     def count(p: String, re: String) = re.r.findAllIn(p).size
-    if (mode == "reps") Bench.warmUp(spark, sfDir)
+    if (mode == "reps") warmUp(spark, sfDir)
     qs.foreach { q =>
       println(s"== ${q.name}")
       mode match {
         case "reps" =>
           val r = reps(spark, q, sfDir, n)
-          println(f"median ${Bench.median(r.wallS)}%.3f s  min ${r.wallS.min}%.3f s  " +
+          println(f"median ${median(r.wallS)}%.3f s  min ${r.wallS.min}%.3f s  " +
             f"jobs ${r.jobs}  stages ${r.stages}  shufR ${r.shuffleReadBytes / 1e6}%.2f MB  " +
             f"shufW ${r.shuffleWriteBytes / 1e6}%.2f MB  spill ${r.spillBytes / 1e6}%.2f MB  " +
             "reps " + r.wallS.map(t => f"$t%.3f").mkString(","))

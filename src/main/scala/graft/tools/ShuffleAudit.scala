@@ -276,7 +276,7 @@ object ShuffleAudit {
       val plainRows = q.fn(spark, sfDir).count()
       spark.sharedState.cacheManager.clearCache()
       // rows untimed via count; metrics from a full noop materialization
-      // (count() prunes work — the Bench r16 methodology)
+      // (count() prunes work — see Probe.materialize)
       val rows = q.fn(spark, floodDir).count()
       spark.sharedState.cacheManager.clearCache()
       graft.functions.Dedup.lastCcRounds = -1
