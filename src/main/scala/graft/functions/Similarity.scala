@@ -46,14 +46,10 @@ object Similarity {
     CosineSimilarity.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("qe"))
     val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("ne"))
-    broadcast(q).crossJoin(c)
+    graft.operators.SimilarityOps.rankedTopK(broadcast(q).crossJoin(c)
       .filter(col("q_id") =!= col("n_id"))
-      .selectExpr("q_id", "n_id", "cosine_similarity(qe, ne) as cs")
-      .selectExpr(
-        "q_id", "n_id", "cs",
-        "cast(row_number() over (partition by q_id order by cs desc, n_id) as bigint) as rank")
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "cs")
+      .selectExpr("q_id", "n_id", "cosine_similarity(qe, ne) as cs"),
+      k, "cs", carry = Seq("cs"))
   }
 
   /** Binary-quantization top-k: sign-bit codes ((dim+31)/32 longs per
@@ -70,13 +66,10 @@ object Similarity {
     require(k >= 1 && shortlist >= k,
       s"need 1 <= k <= shortlist, got k=$k shortlist=$shortlist")
     CosineSimilarity.register(corpus.sparkSession)
-    graft.operators.SimilarityOps
-      .hammingShortlist(corpus, queries, idCol, vecCol, shortlist, dim)
-      .selectExpr("q_id", "n_id", "ham",
-        "cast(row_number() over (partition by q_id " +
-          "order by cosine_similarity(qe, ne) desc, n_id) as bigint) as rank")
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id", "ham")
+    import graft.operators.SimilarityOps
+    SimilarityOps.rankedTopK(
+      SimilarityOps.hammingShortlist(corpus, queries, idCol, vecCol, shortlist, dim),
+      k, "cosine_similarity(qe, ne)", carry = Seq("ham"))
   }
 
   /** SRP-LSH (Charikar cosine LSH) near-duplicate pairs over an

@@ -7,9 +7,18 @@ import org.apache.spark.sql.functions._
   * brute-force cosine top-k as the exactness baseline, an IVF-bucketed
   * variant as the scale path, and embedding-cosine near-duplicate pairs.
   *
-  * Determinism: dot products are left-folds (`aggregate` ≡ `list_reduce`)
-  * so both engines execute the identical IEEE add sequence; ordering ties
-  * break on vec_id.
+  * Determinism: the Spark side scores with the native codegen
+  * expressions `cosine_similarity`, `dot_product` and `l2_distance_sq`
+  * (graft.functions), which accumulate in ascending index order in
+  * double, the same IEEE add sequence as the DuckDB oracle's
+  * `list_reduce` left-folds; ordering ties break on vec_id.
+  *
+  * Evaluation: every recall query measures its arm against one ground
+  * truth built the same way. [[exactTopK]] is the brute-force top-k,
+  * [[rankTopK]] the per-query top-k window every arm ranks with, and
+  * [[recallAt]] the recall@k rollup; their DuckDB twins are
+  * [[duckExactCte]], [[duckRecallSelect]] and [[duckCellRanks]] (the
+  * nearest-cell ranking behind every oracle's cell assignment).
   *
   * Scale notes (100 TB): brute force is O(Q·N) — correct but only for
   * small Q; the IVF variant broadcast-joins the (tiny) centroid table,
@@ -243,13 +252,6 @@ object SimilarityOps {
       .drop("rn")
   }
 
-  /** Band a (vec_id, code) frame 4×8 bits and emit distinct same-bucket
-    * candidate pairs (a_id < b_id), each bucket capped at `cap` members
-    * by vec_id order (dd04's flood guard: a template flood yields
-    * ≤ cap·(cap−1)/2 pairs per bucket, never N²). Leaves one persisted
-    * frame behind; callers follow the repo-wide contract of
-    * `spark.catalog.clearCache()` between queries.
-    */
   /** 4×8-bit band rows of a (vec_id, code) frame, each (band, key)
     * bucket capped at `cap` members by vec_id order.
     */
@@ -264,6 +266,13 @@ object SimilarityOps {
       .filter(col("rn") <= cap)
       .select("vec_id", "b", "key")
 
+  /** Band a (vec_id, code) frame 4×8 bits and emit distinct same-bucket
+    * candidate pairs (a_id < b_id), each bucket capped at `cap` members
+    * by vec_id order (dd04's flood guard: a template flood yields
+    * ≤ cap·(cap−1)/2 pairs per bucket, never N²). Leaves one persisted
+    * frame behind; callers follow the repo-wide contract of
+    * `spark.catalog.clearCache()` between queries.
+    */
   private[graft] def srpBandPairs(codes: org.apache.spark.sql.DataFrame,
       cap: Int = 64): org.apache.spark.sql.DataFrame = {
     val capped = srpCappedBands(codes, cap)
@@ -355,12 +364,7 @@ object SimilarityOps {
         e.select(col("vec_id").as("n_id"), col("embedding").as("ne")),
         Seq("n_id"))
       .filter(col("n_id") =!= col("q_id"))
-    cand
-      .selectExpr(
-        "q_id", "n_id",
-        s"cast(row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as bigint) as rank")
-      .filter(col("rank") <= k)
-      .select("q_id", "rank", "n_id")
+    rankedTopK(cand, k, sparkCos("qe", "ne"))
   }
 
   /** EXACT L2 range search accelerated by triangle-inequality cell
@@ -502,11 +506,6 @@ object SimilarityOps {
       keepEmbedding)
   }
 
-  /** Nearest-centroid cell assignment shared by the plain and adaptive
-    * SemDeDup variants: one scored pass against the BROADCAST codebook
-    * (cosine, ties toward the smaller cell id). Returns N slim
-    * (vec_id, cell, embedding) rows.
-    */
   /** Top-`n` codebook cells per vector, computed ENTIRELY inside the
     * scan projection (r17): the broadcast codebook `cent(cell, ce)`
     * collapses to one sorted struct array (the fn11 broadcast idiom);
@@ -571,10 +570,100 @@ object SimilarityOps {
           kNames: _*)
   }
 
-  /** Best-cell assignment against a broadcast codebook — [[topCells]]
-    * with n = 1 (see there for the scan-local argmax contract and the
-    * r17 history; all six gated SemDeDup-family queries re-validated
-    * bit-identical after the migration).
+  /** The per-query top-k window every ss ranking shares: the `k` rows
+    * of each `q_id` in a (q_id, n_id, …) frame with the highest
+    * `scoreSql`, ties to the smaller `n_id`. Returns (q_id, n_id). An
+    * arm and the truth it is measured against rank with this one window,
+    * so their tie rules cannot drift apart.
+    */
+  private[graft] def rankTopK(cand: org.apache.spark.sql.DataFrame, k: Int,
+      scoreSql: String): org.apache.spark.sql.DataFrame =
+    cand.selectExpr("q_id", "n_id", s"${topKOrder(scoreSql)} as rn")
+      .filter(col("rn") <= k)
+      .select("q_id", "n_id")
+
+  /** [[rankTopK]] keeping the 1-based rank as a BIGINT `rank`, and the
+    * `carry` columns of `cand`: (q_id, rank, n_id, carry…), the result
+    * shape of the top-k search APIs.
+    */
+  private[graft] def rankedTopK(cand: org.apache.spark.sql.DataFrame, k: Int,
+      scoreSql: String, carry: Seq[String] = Nil): org.apache.spark.sql.DataFrame =
+    cand.selectExpr(Seq("q_id", "n_id") ++ carry :+
+        s"cast(${topKOrder(scoreSql)} as bigint) as rank": _*)
+      .filter(col("rank") <= k)
+      .select(("q_id" +: "rank" +: "n_id" +: carry).map(col): _*)
+
+  private def topKOrder(scoreSql: String): String =
+    s"row_number() over (partition by q_id order by $scoreSql desc, n_id)"
+
+  /** Brute-force ground truth: each query of `q(q_id, qe)` against every
+    * other row of `corpus(vec_id, embedding)`, queries broadcast over one
+    * corpus scan, then [[rankTopK]] by `scoreSql` over (qe, ne).
+    * Returns (q_id, n_id). O(Q·N), so for the small query sets recall is
+    * measured on; a query with no other corpus row has no exact row.
+    */
+  private[graft] def exactTopK(q: org.apache.spark.sql.DataFrame,
+      corpus: org.apache.spark.sql.DataFrame, k: Int,
+      scoreSql: String): org.apache.spark.sql.DataFrame =
+    rankTopK(broadcast(q)
+      .crossJoin(corpus.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
+      .filter(col("n_id") =!= col("q_id")), k, scoreSql)
+
+  /** Recall@k of an arm's `hits` against the `exact` top-k: each exact
+    * row left-joins its hit, and each group of exact's columns other
+    * than n_id (q_id first, then any per-query columns it carries) gets
+    * `n_hit` and `recall_x100 = (n_hit · 100) div k`. `hits` has two
+    * columns, the query id and the neighbor id, named apart from
+    * exact's. A query with no exact row gets no recall row; one whose
+    * arm found nothing gets 0.
+    */
+  private[graft] def recallAt(exact: org.apache.spark.sql.DataFrame,
+      hits: org.apache.spark.sql.DataFrame, k: Int): org.apache.spark.sql.DataFrame = {
+    val Array(hq, hn) = hits.columns
+    exact.join(hits, col("q_id") === col(hq) && col("n_id") === col(hn), "left")
+      .groupBy(exact.columns.filter(_ != "n_id").map(col).toSeq: _*)
+      .agg(count(col(hn)).as("n_hit"), expr(s"(count($hn) * 100) div $k").as("recall_x100"))
+  }
+
+  /** DuckDB twin of [[exactTopK]]: the `exact(q_id, n_id)` CTE ranking
+    * every other embeddings row against each row of the query's
+    * `q(q_id, qe)` CTE by `score` DESC, ties to the smaller vec_id.
+    */
+  private def duckExactCte(k: Int, score: (String, String) => String): String =
+    s"""exact AS (SELECT q_id, n_id FROM (
+       |    SELECT q.q_id, e.vec_id AS n_id,
+       |      row_number() OVER (PARTITION BY q.q_id
+       |        ORDER BY ${score("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
+       |    FROM q CROSS JOIN embeddings e
+       |    WHERE e.vec_id <> q.q_id) WHERE rn <= $k)""".stripMargin
+
+  /** DuckDB twin of [[recallAt]]: per query of the `exact` CTE, the hits
+    * of the `arm(q_id, n_id)` CTE and recall_x100 at `k`.
+    */
+  private def duckRecallSelect(arm: String, k: Int): String =
+    s"""SELECT x.q_id, count(i.n_id) AS n_hit,
+       |  (count(i.n_id) * 100) // $k AS recall_x100
+       |FROM exact x LEFT JOIN $arm i ON i.q_id = x.q_id AND i.n_id = x.n_id
+       |GROUP BY x.q_id""".stripMargin
+
+  /** DuckDB twin of [[topCells]]' ranking: every row of `src` (aliased
+    * `e`) against every centroid of the query's `cent(cell, ce)` CTE,
+    * numbered `rn` by cosine DESC, cell ASC per vec_id; rn = 1 is the
+    * assignment, rn ≤ n the probe list. `extra` expressions over `e`
+    * ride along between vec_id and cell.
+    */
+  private def duckCellRanks(src: String = "embeddings",
+      extra: Seq[String] = Nil): String =
+    s"""SELECT e.vec_id, ${extra.map(_ + ", ").mkString}c.cell,
+       |      row_number() OVER (PARTITION BY e.vec_id
+       |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
+       |    FROM $src e CROSS JOIN cent c""".stripMargin
+
+  /** Nearest-centroid cell assignment shared by the SemDeDup family:
+    * [[topCells]] with n = 1, one scan-local argmax against the BROADCAST
+    * codebook (cosine, ties toward the smaller cell id; see there for
+    * the contract). Returns N slim (vec_id, cell, embedding) rows, plus
+    * the codebook cardinality `_k` when `emitK`.
     */
   private def semDedupAssign(e: org.apache.spark.sql.DataFrame,
       cent: org.apache.spark.sql.DataFrame,
@@ -824,14 +913,9 @@ object SimilarityOps {
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
       val c = e.select(col("vec_id").as("n_id"), col("embedding").as("ne"))
-      broadcast(q).crossJoin(c)
+      rankedTopK(broadcast(q).crossJoin(c)
         .filter(col("q_id") =!= col("n_id"))
-        .selectExpr("q_id", "n_id", s"${sparkCos("qe", "ne")} as cs")
-        .selectExpr(
-          "q_id", "n_id",
-          "cast(row_number() over (partition by q_id order by cs desc, n_id) as bigint) as rank")
-        .filter(col("rank") <= 5)
-        .select("q_id", "rank", "n_id")
+        .selectExpr("q_id", "n_id", s"${sparkCos("qe", "ne")} as cs"), 5, "cs")
     },
 
     // IVF ANN: centroid per label = member with min vec_id (deterministic
@@ -844,12 +928,9 @@ object SimilarityOps {
          |    SELECT label, embedding,
          |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
          |    FROM embeddings) WHERE rn = 1),
-         |  assign AS (
-         |    SELECT vec_id, cell FROM (
-         |      SELECT e.vec_id, c.cell,
-         |        row_number() OVER (PARTITION BY e.vec_id
-         |          ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |      FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
+         |  scored AS (
+         |    ${duckCellRanks()}),
+         |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
          |  q AS (SELECT e.vec_id AS q_id, e.embedding AS qe, a.cell
          |        FROM embeddings e JOIN assign a ON a.vec_id = e.vec_id
          |        WHERE e.vec_id < 5),
@@ -927,10 +1008,7 @@ object SimilarityOps {
          |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
          |    FROM embeddings) WHERE rn = 1),
          |  scored AS (
-         |    SELECT e.vec_id, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
          |  qc AS (SELECT vec_id AS q_id, cell FROM scored
          |         WHERE vec_id < 5 AND rn <= 2),
@@ -1023,12 +1101,9 @@ object SimilarityOps {
          |    SELECT label, embedding,
          |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
          |    FROM embeddings) WHERE rn = 1),
-         |  assign AS (
-         |    SELECT vec_id, cell FROM (
-         |      SELECT e.vec_id, c.cell,
-         |        row_number() OVER (PARTITION BY e.vec_id
-         |          ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |      FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
+         |  scored AS (
+         |    ${duckCellRanks()}),
+         |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
          |  q AS (SELECT e.vec_id AS q_id, e.embedding AS qe, a.cell
          |        FROM embeddings e JOIN assign a ON a.vec_id = e.vec_id
          |        WHERE e.vec_id < 5),
@@ -1039,52 +1114,22 @@ object SimilarityOps {
          |    FROM q JOIN assign a ON a.cell = q.cell
          |           JOIN embeddings e ON e.vec_id = a.vec_id
          |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3),
-         |  exact AS (SELECT q_id, n_id FROM (
-         |    SELECT q.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.q_id
-         |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-         |    FROM q CROSS JOIN embeddings e
-         |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3)
-         |SELECT x.q_id, count(i.n_id) AS n_hit,
-         |  (count(i.n_id) * 100) // 3 AS recall_x100
-         |FROM exact x LEFT JOIN ivf i ON i.q_id = x.q_id AND i.n_id = x.n_id
-         |GROUP BY x.q_id""".stripMargin) { (s, d) =>
+         |  ${duckExactCte(3, duckCos)}
+         |${duckRecallSelect("ivf", 3)}""".stripMargin) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
       val e = T.embeddings(s, d)
-      val cent = e
-        .selectExpr(
-          "label as cell", "embedding as ce",
-          "row_number() over (partition by label order by vec_id) as rn")
-        .filter(col("rn") === 1)
-        .drop("rn")
-      val assign = topCells(e, cent, 1, Seq("vec_id"))
+      val assign = topCells(e, labelCentroids(e), 1, Seq("vec_id"))
         .select("vec_id", "cell")
         .persist() // query cells + candidate cells
       val q = e.filter(col("vec_id") < 5)
         .join(assign, "vec_id")
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"), col("cell"))
-      def top3(cand: org.apache.spark.sql.DataFrame) = cand
-        .selectExpr(
-          "q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
-      val ivf = top3(broadcast(q)
+      val ivf = rankTopK(broadcast(q)
         .join(assign.withColumnRenamed("vec_id", "n_id"), "cell")
         .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")), Seq("n_id"))
-        .filter(col("n_id") =!= col("q_id")))
-      val exact = top3(broadcast(q.drop("cell"))
-        .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
-        .filter(col("n_id") =!= col("q_id")))
-      val hits = ivf.toDF("hq_id", "hit_id")
-      exact.join(
-        hits,
-        col("q_id") === col("hq_id") && col("n_id") === col("hit_id"),
-        "left")
-        .groupBy("q_id")
-        .agg(
-          count(col("hit_id")).as("n_hit"),
-          expr("(count(hit_id) * 100) div 3").as("recall_x100"))
+        .filter(col("n_id") =!= col("q_id")), 3, sparkCos("qe", "ne"))
+      recallAt(exactTopK(q.drop("cell"), e, 3, sparkCos("qe", "ne")),
+        ivf.toDF("hq_id", "hit_id"), 3)
     },
 
     // Product-quantization ANN (deterministic grid codebook) + recall@3.
@@ -1138,27 +1183,20 @@ object SimilarityOps {
          |    SELECT e.vec_id AS n_id, e.dim, COALESCE(cb.rep, 0.0::DOUBLE) AS rep
          |    FROM ex e JOIN cuts USING (dim)
          |    LEFT JOIN cb ON cb.dim = e.dim AND cb.bucket = ($duckBucket)),
-         |  q AS (SELECT vec_id AS q_id, dim, v AS qv FROM ex WHERE vec_id < 5),
+         |  qx AS (SELECT vec_id AS q_id, dim, v AS qv FROM ex WHERE vec_id < 5),
          |  adc AS (
          |    SELECT q_id, n_id,
          |      CAST(SUM(CAST(qv * rep AS DECIMAL(28,12))) AS DOUBLE) AS score
-         |    FROM q JOIN recon USING (dim) WHERE n_id <> q_id
+         |    FROM qx JOIN recon USING (dim) WHERE n_id <> q_id
          |    GROUP BY q_id, n_id),
          |  pq AS (SELECT q_id, n_id FROM (
          |    SELECT q_id, n_id,
          |      row_number() OVER (PARTITION BY q_id ORDER BY score DESC, n_id) AS rn
          |    FROM adc) WHERE rn <= 3),
-         |  exact AS (SELECT q_id, n_id FROM (
-         |    SELECT qv.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY qv.q_id
-         |        ORDER BY ${duckDot("qv.qe", "e.embedding")} DESC, e.vec_id) AS rn
-         |    FROM (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
-         |          WHERE vec_id < 5) qv
-         |    CROSS JOIN embeddings e WHERE e.vec_id <> qv.q_id) WHERE rn <= 3)
-         |SELECT x.q_id, count(p.n_id) AS n_hit,
-         |  (count(p.n_id) * 100) // 3 AS recall_x100
-         |FROM exact x LEFT JOIN pq p ON p.q_id = x.q_id AND p.n_id = x.n_id
-         |GROUP BY x.q_id""".stripMargin) { (s, d) =>
+         |  q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
+         |        WHERE vec_id < 5),
+         |  ${duckExactCte(3, duckDot)}
+         |${duckRecallSelect("pq", 3)}""".stripMargin) { (s, d) =>
       graft.functions.DotProduct.register(s)
       val e = T.embeddings(s, d)
       val ex = e
@@ -1192,30 +1230,10 @@ object SimilarityOps {
         .filter(col("n_id") =!= col("q_id"))
         .groupBy("q_id", "n_id")
         .agg(expr("cast(sum(cast(qv * rep as decimal(28,12))) as double)").as("score"))
-      val pq = adc
-        .selectExpr(
-          "q_id", "n_id",
-          "row_number() over (partition by q_id order by score desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select(col("q_id").as("pq_id"), col("n_id").as("hit_id"))
-      val exact = broadcast(
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qe")))
-        .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr(
-          "q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkDot("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
-      exact.join(
-        pq,
-        col("q_id") === col("pq_id") && col("n_id") === col("hit_id"),
-        "left")
-        .groupBy("q_id")
-        .agg(
-          count(col("hit_id")).as("n_hit"),
-          expr("(count(hit_id) * 100) div 3").as("recall_x100"))
+      val exact = exactTopK(e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe")), e, 3,
+        sparkDot("qe", "ne"))
+      recallAt(exact, rankTopK(adc, 3, "score").toDF("pq_id", "hit_id"), 3)
     },
 
     // SRP-LSH near-duplicates: signed-random-projection (Charikar cosine
@@ -1340,10 +1358,7 @@ object SimilarityOps {
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings GROUP BY label),
          |  scored AS (
-         |    SELECT e.vec_id, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
          |  qc AS (SELECT vec_id AS q_id, cell FROM scored
          |         WHERE vec_id < 5 AND rn <= 2),
@@ -1357,39 +1372,17 @@ object SimilarityOps {
          |           JOIN assign a ON a.cell = qc.cell
          |           JOIN embeddings e ON e.vec_id = a.vec_id
          |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3),
-         |  exact AS (SELECT q_id, n_id FROM (
-         |    SELECT q.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.q_id
-         |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-         |    FROM q CROSS JOIN embeddings e
-         |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3)
-         |SELECT x.q_id, count(i.n_id) AS n_hit,
-         |  (count(i.n_id) * 100) // 3 AS recall_x100
-         |FROM exact x LEFT JOIN ivf i ON i.q_id = x.q_id AND i.n_id = x.n_id
-         |GROUP BY x.q_id""".stripMargin) { (s, d) =>
+         |  ${duckExactCte(3, duckCos)}
+         |${duckRecallSelect("ivf", 3)}""".stripMargin) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       val ivf = ivfSearch(e, trainedCentroids(e), col("vec_id") < 5,
         k = 3, nprobe = 2)
         .select(col("q_id").as("hq_id"), col("n_id").as("hit_id"))
-      val exact = broadcast(
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qe")))
-        .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr(
-          "q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
-      exact.join(
-        ivf,
-        col("q_id") === col("hq_id") && col("n_id") === col("hit_id"),
-        "left")
-        .groupBy("q_id")
-        .agg(
-          count(col("hit_id")).as("n_hit"),
-          expr("(count(hit_id) * 100) div 3").as("recall_x100"))
+      val exact = exactTopK(e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe")), e, 3,
+        sparkCos("qe", "ne"))
+      recallAt(exact, ivf, 3)
     },
 
     // Semantic contamination audit (Similarity.semanticContamination):
@@ -1457,10 +1450,7 @@ object SimilarityOps {
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings GROUP BY label),
          |  scored AS (
-         |    SELECT e.vec_id, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
          |  qc AS (SELECT vec_id AS q_id, cell FROM scored
          |         WHERE vec_id < 5 AND rn <= 2),
@@ -1510,17 +1500,10 @@ object SimilarityOps {
          |    SELECT q_id, n_id,
          |      row_number() OVER (PARTITION BY q_id ORDER BY score DESC, n_id) AS rn
          |    FROM adc) WHERE rn <= 3),
-         |  exact AS (SELECT q_id, n_id FROM (
-         |    SELECT q.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.q_id
-         |        ORDER BY ${duckDot("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-         |    FROM (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
-         |          WHERE vec_id < 5) q
-         |    CROSS JOIN embeddings e WHERE e.vec_id <> q.q_id) WHERE rn <= 3)
-         |SELECT x.q_id, count(p.n_id) AS n_hit,
-         |  (count(p.n_id) * 100) // 3 AS recall_x100
-         |FROM exact x LEFT JOIN pq p ON p.q_id = x.q_id AND p.n_id = x.n_id
-         |GROUP BY x.q_id""".stripMargin) { (s, d) =>
+         |  q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
+         |        WHERE vec_id < 5),
+         |  ${duckExactCte(3, duckDot)}
+         |${duckRecallSelect("pq", 3)}""".stripMargin) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
       graft.functions.DotProduct.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
@@ -1583,7 +1566,10 @@ object SimilarityOps {
       val qx = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), posexplode(col("embedding")))
         .selectExpr("q_id", "pos + 1 as dim", "cast(col as double) as qv")
-      val cand = qc.join(assign.toDF("n_id", "cell"), "cell")
+      // qc is at most 5 queries × 2 probes: broadcast it, or AQE builds
+      // on whichever side's stage finishes first and the join's output
+      // order (and the next shuffle's bytes) moves between runs
+      val cand = broadcast(qc).join(assign.toDF("n_id", "cell"), "cell")
         .filter(col("n_id") =!= col("q_id"))
         .select("q_id", "n_id")
       // ADC: the candidate×query side (probe-cell members of the 5
@@ -1596,28 +1582,10 @@ object SimilarityOps {
       val adc = recon.join(broadcast(cand.join(qx, "q_id")), Seq("n_id", "dim"))
         .groupBy("q_id", "n_id")
         .agg(expr("cast(sum(cast(qv * recon as decimal(28,12))) as double)").as("score"))
-      val pq = adc
-        .selectExpr("q_id", "n_id",
-          "row_number() over (partition by q_id order by score desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select(col("q_id").as("pq_id"), col("n_id").as("hit_id"))
-      val exact = broadcast(
-        e.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("q_id"), col("embedding").as("qe")))
-        .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkDot("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
-      exact.join(
-        pq,
-        col("q_id") === col("pq_id") && col("n_id") === col("hit_id"),
-        "left")
-        .groupBy("q_id")
-        .agg(
-          count(col("hit_id")).as("n_hit"),
-          expr("(count(hit_id) * 100) div 3").as("recall_x100"))
+      val exact = exactTopK(e.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("q_id"), col("embedding").as("qe")), e, 3,
+        sparkDot("qe", "ne"))
+      recallAt(exact, rankTopK(adc, 3, "score").toDF("pq_id", "hit_id"), 3)
     },
 
     // Johnson-Lindenstrauss projection + shortlist-rerank recall:
@@ -1652,15 +1620,8 @@ object SimilarityOps {
          |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, t.n_id) AS rn
          |    FROM short t JOIN q ON q.q_id = t.q_id
          |                 JOIN embeddings e ON e.vec_id = t.n_id) WHERE rn <= 3),
-         |  exact AS (SELECT q_id, n_id FROM (
-         |    SELECT q.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.q_id
-         |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-         |    FROM q JOIN embeddings e ON e.vec_id <> q.q_id) WHERE rn <= 3)
-         |SELECT x.q_id, count(i.n_id) AS n_hit,
-         |  (count(i.n_id) * 100) // 3 AS recall_x100
-         |FROM exact x LEFT JOIN jl i ON i.q_id = x.q_id AND i.n_id = x.n_id
-         |GROUP BY x.q_id""".stripMargin) { (s, d) =>
+         |  ${duckExactCte(3, duckCos)}
+         |${duckRecallSelect("jl", 3)}""".stripMargin) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
       graft.functions.DotProduct.register(s)
       val e = T.embeddings(s, d)
@@ -1669,38 +1630,15 @@ object SimilarityOps {
       val q = p.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
           col("pe").as("qp"))
-      val short = broadcast(q.drop("qe"))
+      val short = rankTopK(broadcast(q.drop("qe"))
         .crossJoin(p.select(col("vec_id").as("n_id"), col("pe")))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by " +
-            s"${sparkCosN("qp", "pe")} desc, n_id) as rn")
-        .filter(col("rn") <= 25)
-        .select("q_id", "n_id")
-      val jl = short
+        .filter(col("n_id") =!= col("q_id")), 25, sparkCosN("qp", "pe"))
+      val jl = rankTopK(short
         .join(broadcast(q.drop("qp")), "q_id")
         .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")),
-          Seq("n_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by " +
-            s"${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select(col("q_id").as("jq_id"), col("n_id").as("hit_id"))
-      val exact = broadcast(q.drop("qp"))
-        .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by " +
-            s"${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
-      exact.join(jl,
-        col("q_id") === col("jq_id") && col("n_id") === col("hit_id"),
-        "left")
-        .groupBy("q_id")
-        .agg(
-          count(col("hit_id")).as("n_hit"),
-          expr("(count(hit_id) * 100) div 3").as("recall_x100"))
+          Seq("n_id")), 3, sparkCos("qe", "ne"))
+      recallAt(exactTopK(q.drop("qp"), e, 3, sparkCos("qe", "ne")),
+        jl.toDF("jq_id", "hit_id"), 3)
     },
 
     // Lloyd's k-means (Similarity.kmeans; k=8, 2 iterations): the
@@ -1836,22 +1774,14 @@ object SimilarityOps {
            |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
            |    FROM embeddings) WHERE rn = 1),
            |  scored AS (
-           |    SELECT e.vec_id, c.cell,
-           |      row_number() OVER (PARTITION BY e.vec_id
-           |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-           |    FROM embeddings e CROSS JOIN cent c),
+           |    ${duckCellRanks()}),
            |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
            |  q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
            |        WHERE vec_id < 5),
            |  probes AS (SELECT s.vec_id AS q_id, s.cell, s.rn FROM scored s
            |             WHERE s.vec_id < 5 AND s.rn <= 3),
            |$armCtes
-           |  exact AS (SELECT q_id, n_id FROM (
-           |    SELECT q.q_id, e.vec_id AS n_id,
-           |      row_number() OVER (PARTITION BY q.q_id
-           |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-           |    FROM q CROSS JOIN embeddings e
-           |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3)
+           |  ${duckExactCte(3, duckCos)}
            |$armSelects""".stripMargin
       }) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
@@ -1861,13 +1791,7 @@ object SimilarityOps {
       val assign = scored.filter(col("rn") === 1).select("vec_id", "cell")
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-      val exact = broadcast(q)
-        .crossJoin(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
+      val exact = exactTopK(q, e, 3, sparkCos("qe", "ne"))
       // ONE stacked pass for all three arms (r19): a candidate reached
       // through the probe ranked `prank` belongs to every arm k ≥ prank
       // (a vector has exactly one assigned cell, so each (q, n) pair
@@ -1890,6 +1814,8 @@ object SimilarityOps {
         .selectExpr("nprobe", "q_id", "n_id",
           s"row_number() over (partition by nprobe, q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn",
           "count(1) over (partition by nprobe, q_id) as cnt")
+      // not recallAt: the three arms share one ranked frame, so the hit
+      // flag joins the ranking instead of the truth left-joining each arm
       ranked
         .join(broadcast(exact.withColumn("hit", lit(1))),
           Seq("q_id", "n_id"), "left")
@@ -1932,48 +1858,29 @@ object SimilarityOps {
          |      row_number() OVER (PARTITION BY q_id
          |        ORDER BY ${duckCos("qe", "ne")} DESC, n_id) AS rn
          |    FROM sl) WHERE rn <= 3),
-         |  exact AS (SELECT q_id, n_id FROM (
-         |    SELECT q.q_id, e.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.q_id
-         |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-         |    FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.q_id) WHERE rn <= 3),
+         |  ${duckExactCte(3, duckCos)},
          |  hs AS (SELECT q_id, CAST(min(ham) AS BIGINT) AS ham_min,
          |           CAST(max(ham) AS BIGINT) AS ham_max,
-         |           CAST(count(*) AS BIGINT) AS n_cand FROM sl GROUP BY q_id)
-         |SELECT x.q_id, h.n_cand, h.ham_min, h.ham_max,
-         |  count(r.n_id) AS n_hit, (count(r.n_id) * 100) // 3 AS recall_x100
-         |FROM exact x JOIN hs h ON h.q_id = x.q_id
-         |  LEFT JOIN rr r ON r.q_id = x.q_id AND r.n_id = x.n_id
-         |GROUP BY x.q_id, h.n_cand, h.ham_min, h.ham_max""".stripMargin) { (s, d) =>
+         |           CAST(count(*) AS BIGINT) AS n_cand FROM sl GROUP BY q_id),
+         |  rc AS (${duckRecallSelect("rr", 3)})
+         |SELECT r.q_id, h.n_cand, h.ham_min, h.ham_max, r.n_hit, r.recall_x100
+         |FROM rc r JOIN hs h ON h.q_id = r.q_id""".stripMargin) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
       val e = T.embeddings(s, d)
       val sl = hammingShortlist(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", shortlist = 50)
         .persist() // feeds rerank + spread; caller clearCache releases
-      val rr = sl
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
-      val exact = broadcast(e.filter(col("vec_id") < 5)
-          .selectExpr("vec_id as q_id", "embedding as qe"))
-        .crossJoin(e.selectExpr("vec_id as n_id", "embedding as ne"))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
+      val rr = rankTopK(sl, 3, sparkCos("qe", "ne"))
+      val exact = exactTopK(e.filter(col("vec_id") < 5)
+        .selectExpr("vec_id as q_id", "embedding as qe"), e, 3, sparkCos("qe", "ne"))
       val hs = sl.groupBy("q_id").agg(
         min("ham").cast("long").as("ham_min"),
         max("ham").cast("long").as("ham_max"),
         count(lit(1)).cast("long").as("n_cand"))
-      exact.join(hs, "q_id")
-        .join(rr.withColumnRenamed("q_id", "rq_id").withColumnRenamed("n_id", "rn_id"),
-          col("q_id") === col("rq_id") && col("n_id") === col("rn_id"), "left")
-        .groupBy("q_id", "n_cand", "ham_min", "ham_max")
-        .agg(count(col("rn_id")).as("n_hit"))
-        .selectExpr("q_id", "n_cand", "ham_min", "ham_max", "n_hit",
-          "(n_hit * 100) div 3 as recall_x100")
+      // the shortlist spread rides recallAt's per-query group
+      recallAt(exact.join(hs, "q_id")
+          .select("q_id", "n_id", "n_cand", "ham_min", "ham_max"),
+        rr.toDF("rq_id", "rn_id"), 3)
     },
 
     // Shortlist-size tuning curve for binary-quantization ANN (the dd22/
@@ -1993,11 +1900,8 @@ object SimilarityOps {
              |    FROM sl WHERE hrn <= $c) WHERE rn <= 3),""".stripMargin
         }.mkString("\n")
         val armSelects = Seq(10, 25, 50).map { c =>
-          s"""SELECT $c::BIGINT AS shortlist, x.q_id,
-             |  count(r.n_id)::BIGINT AS n_hit,
-             |  (count(r.n_id) * 100) // 3 AS recall_x100
-             |FROM exact x LEFT JOIN rr$c r ON r.q_id = x.q_id AND r.n_id = x.n_id
-             |GROUP BY x.q_id""".stripMargin
+          s"""SELECT $c::BIGINT AS shortlist, q_id, n_hit, recall_x100 FROM (
+             |${duckRecallSelect(s"rr$c", 3)})""".stripMargin
         }.mkString("\nUNION ALL ")
         s"""WITH c AS (SELECT vec_id, ${duckSignWord("embedding", 0)} AS w0,
            |             ${duckSignWord("embedding", 32)} AS w1, embedding FROM embeddings),
@@ -2011,11 +1915,7 @@ object SimilarityOps {
            |            q.qe AS qe, c.embedding AS ne
            |          FROM q CROSS JOIN c WHERE c.vec_id <> q.q_id)) WHERE hrn <= 50),
            |$armCtes
-           |  exact AS (SELECT q_id, n_id FROM (
-           |    SELECT q.q_id, e.vec_id AS n_id,
-           |      row_number() OVER (PARTITION BY q.q_id
-           |        ORDER BY ${duckCos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
-           |    FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.q_id) WHERE rn <= 3)
+           |  ${duckExactCte(3, duckCos)}
            |$armSelects""".stripMargin
       }) { (s, d) =>
       graft.functions.CosineSimilarity.register(s)
@@ -2025,27 +1925,12 @@ object SimilarityOps {
         .selectExpr("q_id", "n_id", "qe", "ne",
           "row_number() over (partition by q_id order by ham, n_id) as hrn")
         .persist() // three arms share the one shortlist pass
-      val exact = broadcast(e.filter(col("vec_id") < 5)
-          .selectExpr("vec_id as q_id", "embedding as qe"))
-        .crossJoin(e.selectExpr("vec_id as n_id", "embedding as ne"))
-        .filter(col("n_id") =!= col("q_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
+      val exact = exactTopK(e.filter(col("vec_id") < 5)
+        .selectExpr("vec_id as q_id", "embedding as qe"), e, 3, sparkCos("qe", "ne"))
       val arms = Seq(10, 25, 50).map { c =>
-        val rr = sl.filter(col("hrn") <= c)
-          .selectExpr("q_id", "n_id",
-            s"row_number() over (partition by q_id order by ${sparkCos("qe", "ne")} desc, n_id) as rn")
-          .filter(col("rn") <= 3)
-          .select("q_id", "n_id")
-        exact
-          .join(rr.withColumnRenamed("q_id", "rq_id").withColumnRenamed("n_id", "rn_id"),
-            col("q_id") === col("rq_id") && col("n_id") === col("rn_id"), "left")
-          .groupBy("q_id")
-          .agg(count(col("rn_id")).cast("long").as("n_hit"))
-          .selectExpr(s"cast($c as bigint) as shortlist", "q_id", "n_hit",
-            "(n_hit * 100) div 3 as recall_x100")
+        val rr = rankTopK(sl.filter(col("hrn") <= c), 3, sparkCos("qe", "ne"))
+        recallAt(exact, rr.toDF("rq_id", "rn_id"), 3)
+          .selectExpr(s"cast($c as bigint) as shortlist", "q_id", "n_hit", "recall_x100")
       }
       arms.reduce(_ unionAll _)
     },
@@ -2109,6 +1994,8 @@ object SimilarityOps {
         .persist() // truth arm re-reads it; caller clearCache releases
       val truth = top.filter(col("d") === 64)
         .select(col("q_id").as("tq_id"), col("n_id").as("tn_id"))
+      // not recallAt: recall is per truncation width over all 5 queries'
+      // 15 truth rows, not per query
       top.join(truth,
           col("q_id") === col("tq_id") && col("n_id") === col("tn_id"), "left")
         .groupBy("d")
@@ -2135,10 +2022,8 @@ object SimilarityOps {
          |  SELECT label AS cell,
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings WHERE vec_id % 2 = 0 GROUP BY label),
-         |  a AS (SELECT e.vec_id, e.vec_id % 2 AS era, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |  a AS (
+         |    ${duckCellRanks(extra = Seq("e.vec_id % 2 AS era"))}),
          |  cnt AS (SELECT cell,
          |      CAST(count(CASE WHEN era = 0 THEN 1 END) AS BIGINT) AS n0,
          |      CAST(count(CASE WHEN era = 1 THEN 1 END) AS BIGINT) AS n1
@@ -2198,10 +2083,8 @@ object SimilarityOps {
       "ss24_filtered_ann",
       s"""WITH cent AS (SELECT vec_id AS cell, embedding AS ce
          |              FROM embeddings WHERE vec_id < 8),
-         |  scored AS (SELECT e.vec_id, e.label, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |  scored AS (
+         |    ${duckCellRanks(extra = Seq("e.label"))}),
          |  assign AS (SELECT vec_id, label, cell FROM scored WHERE rn = 1),
          |  q AS (SELECT vec_id AS q_id, embedding AS qe, label AS ql
          |        FROM embeddings WHERE vec_id < 5),
@@ -2253,27 +2136,20 @@ object SimilarityOps {
         .join(assign, Seq("cell"))
         .filter(col("nl") === col("ql") && col("n_id") =!= col("q_id"))
         .select("q_id", "qe", "n_id").distinct()
-      val ivf = cand
+      val ivf = rankTopK(cand
         .join(e.select(col("vec_id").as("n_id"), col("embedding").as("ne")),
-          Seq("n_id"))
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by " +
-            s"${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select(col("q_id").as("iq_id"), col("n_id").as("hit_id"))
+          Seq("n_id")), 3, sparkCos("qe", "ne"))
+        .toDF("iq_id", "hit_id")
       val rel = broadcast(q)
         .join(e.select(col("vec_id").as("n_id"), col("label").as("nl"),
           col("embedding").as("ne")),
           col("nl") === col("ql") && col("n_id") =!= col("q_id"))
         .persist() // truth ranking + n_rel share it
-      val truth = rel
-        .selectExpr("q_id", "n_id",
-          s"row_number() over (partition by q_id order by " +
-            s"${sparkCos("qe", "ne")} desc, n_id) as rn")
-        .filter(col("rn") <= 3)
-        .select("q_id", "n_id")
+      val truth = rankTopK(rel, 3, sparkCos("qe", "ne"))
       val nrel = rel.groupBy("q_id").agg(count(lit(1)).cast("long").as("n_rel"))
       val ncand = cand.groupBy("q_id").agg(count(lit(1)).cast("long").as("n_cand"))
+      // not recallAt: a label-filtered truth can hold fewer than 3 rows,
+      // so recall divides by the query's own truth count
       truth
         .join(ivf, col("q_id") === col("iq_id") && col("n_id") === col("hit_id"),
           "left")
@@ -2356,10 +2232,7 @@ object SimilarityOps {
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings GROUP BY label),
          |  scored AS (
-         |    SELECT e.vec_id, e.embedding, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks(extra = Seq("e.embedding"))}),
          |  assign AS (SELECT vec_id, embedding, cell FROM scored WHERE rn = 1),
          |  dom AS (
          |    SELECT b.vec_id AS vec_id, min(a.vec_id) AS keeper
@@ -2397,10 +2270,7 @@ object SimilarityOps {
          |      ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |    FROM embeddings WHERE vec_id < 400 GROUP BY label),
          |  cscored AS (
-         |    SELECT c.vec_id, c.embedding, t.cell,
-         |      row_number() OVER (PARTITION BY c.vec_id
-         |        ORDER BY ${duckCos("c.embedding", "t.ce")} DESC, t.cell) AS rn
-         |    FROM corp c CROSS JOIN cent t),
+         |    ${duckCellRanks("corp", Seq("e.embedding"))}),
          |  cassign AS (SELECT vec_id, embedding, cell FROM cscored WHERE rn = 1),
          |  cdom AS (
          |    SELECT b.vec_id AS vec_id, min(a.vec_id) AS keeper
@@ -2412,10 +2282,7 @@ object SimilarityOps {
          |    SELECT s.vec_id, s.cell, s.embedding FROM cassign s
          |    LEFT JOIN cdom d ON d.vec_id = s.vec_id WHERE d.keeper IS NULL),
          |  bscored AS (
-         |    SELECT b.vec_id, b.embedding, t.cell,
-         |      row_number() OVER (PARTITION BY b.vec_id
-         |        ORDER BY ${duckCos("b.embedding", "t.ce")} DESC, t.cell) AS rn
-         |    FROM bat b CROSS JOIN cent t),
+         |    ${duckCellRanks("bat", Seq("e.embedding"))}),
          |  bassign AS (SELECT vec_id, embedding, cell FROM bscored WHERE rn = 1),
          |  dom AS (
          |    SELECT x.vec_id, min(x.a) AS keeper FROM (
@@ -2471,10 +2338,7 @@ object SimilarityOps {
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings GROUP BY label),
          |  scored AS (
-         |    SELECT e.vec_id, e.embedding, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks(extra = Seq("e.embedding"))}),
          |  assign AS (SELECT vec_id, embedding, cell FROM scored WHERE rn = 1),
          |  dom AS (
          |    SELECT b.vec_id AS vec_id,
@@ -2514,10 +2378,7 @@ object SimilarityOps {
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings GROUP BY label),
          |  scored AS (
-         |    SELECT e.vec_id, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
          |  sizes AS (SELECT cell, count(*) AS n FROM assign GROUP BY cell),
          |  t AS (SELECT cast(sum(n) AS BIGINT) AS total FROM sizes),
@@ -2552,10 +2413,7 @@ object SimilarityOps {
          |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
          |  FROM embeddings GROUP BY label),
          |  scored AS (
-         |    SELECT e.vec_id, e.embedding, c.cell,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-         |    FROM embeddings e CROSS JOIN cent c),
+         |    ${duckCellRanks(extra = Seq("e.embedding"))}),
          |  asg AS (SELECT vec_id, embedding, cell FROM scored WHERE rn = 1),
          |  pr AS (
          |    SELECT a.vec_id AS a_id, b.vec_id AS b_id,
@@ -2771,10 +2629,7 @@ object SimilarityOps {
        |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
        |  FROM embeddings GROUP BY label),
        |  scored AS (
-       |    SELECT e.vec_id, e.embedding, c.cell,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY ${duckCos("e.embedding", "c.ce")} DESC, c.cell) AS rn
-       |    FROM embeddings e CROSS JOIN cent c),
+       |    ${duckCellRanks(extra = Seq("e.embedding"))}),
        |  asg AS (SELECT vec_id, embedding, cell, CAST(vec_id % $parts AS INT) AS batch
        |          FROM scored WHERE rn = 1),
        |${levels.mkString(",\n")},

@@ -4,7 +4,9 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** Emits PLANS.md — formatted physical plans of the headline queries at a
   * given scale factor, as reviewable evidence of plan quality (pushdown,
-  * broadcast choice, single-shuffle aggregation, WSCG spans).
+  * broadcast choice, single-shuffle aggregation, WSCG spans). Each plan
+  * goes through [[Probe.normalizePlan]] before it is cut, so regenerating
+  * an unchanged plan gives an empty diff.
   *
   *   sbt 'runMain graft.tools.DumpPlans [sfDir] [outFile]'
   */
@@ -189,7 +191,7 @@ object DumpPlans {
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       df.count() // materialize so AQE settles on the final plan
       sb ++= s"\n## $name\n\n```\n"
-      sb ++= df.queryExecution.explainString(FormattedMode).take(6000)
+      sb ++= Probe.normalizePlan(df.queryExecution.explainString(FormattedMode)).take(6000)
       sb ++= "\n```\n"
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)

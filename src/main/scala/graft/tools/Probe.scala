@@ -18,6 +18,9 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
   *  - `final-plan`: the executed adaptive plan, where AQE's runtime stage
   *    reuse shows, with its reuse, broadcast and shuffle-stage counts.
   *
+  * Both plan modes print through [[normalizePlan]], so the output of two
+  * builds diffs to nothing when their plans are the same.
+  *
   * sfDir defaults to `SPARK_GRAFT_SF_DIR` and cores to `SPARK_GRAFT_CPUS`
   * (default 4), as in `graft.Bench`, whose sweep is [[reps]] over every
   * registered query.
@@ -47,6 +50,39 @@ object Probe {
   }
 
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
+
+  /** A plan's text with everything that moves between runs of the same
+    * plan taken out, so two renderings of one plan compare equal and a
+    * diff shows only plan changes. Counters (expression and plan ids,
+    * whole-stage codegen ids, formatted-mode operator numbers, RDD ids,
+    * AQE query-stage ids) are renumbered in order of first appearance,
+    * which keeps which attribute is which within the plan; lambda
+    * addresses, the random part of temp-directory names, the hash suffix
+    * of temp tables and source line numbers are blanked.
+    */
+  def normalizePlan(plan: String): String = {
+    def renumber(s: String, re: String): String = {
+      val seen = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      re.r.replaceAllIn(s, m => {
+        val n = seen.getOrElseUpdate(m.group(2), seen.size + 1)
+        java.util.regex.Matcher.quoteReplacement(s"${m.group(1)}$n${m.group(3)}")
+      })
+    }
+    Seq(
+      "(#)(\\d+)()",
+      "(plan_id=)(\\d+)()",
+      "(\\[codegen id : |\\*\\()(\\d+)(\\]|\\))",
+      // formatted-mode operator numbers: detail headers "(n) Op", tree
+      // lines (no colon) ending "Op (n)", and "operator id: n" references
+      "(^\\((?=\\d+\\) )|^[^:\\n]*\\s\\((?=\\d+\\)$)|operator id[:=] ?)(\\d+)()",
+      "(RDD\\[)(\\d+)(\\])",
+      "(QueryStage )(\\d+)()"
+    ).foldLeft(plan)((s, re) => renumber(s, "(?m)" + re))
+      .replaceAll("\\$Lambda(\\$\\d+)?/0x[0-9a-f]+@[0-9a-f]+", "\\$Lambda")
+      .replaceAll("(/tmp/[\\w-]*?)\\d{6,}", "$1_")
+      .replaceAll("_[0-9a-f]{8,16}\\b", "_h")
+      .replaceAll("\\.scala:\\d+", ".scala")
+  }
 
   /** Untimed warm-up: JIT, codegen, broadcast machinery and FS cache. A
     * missing or corrupt fixture must surface as that query's failure, not
@@ -162,9 +198,9 @@ object Probe {
           js.foreach(j => println(f"job ${j.id}%4d  ${j.spanMs}%6d ms  gap ${j.gapMs}%5d ms  " +
             f"[${j.stages.size}%2d st]  ${j.stages.distinct.mkString(" | ")}"))
           println(f"TOTAL: ${m.wallS}%.3f s, ${js.size} jobs, ${m.metrics.spans.size} stages")
-        case "plan" => println(plan(spark, q, sfDir))
+        case "plan" => println(normalizePlan(plan(spark, q, sfDir)))
         case "final-plan" =>
-          val p = finalPlan(spark, q, sfDir)
+          val p = normalizePlan(finalPlan(spark, q, sfDir))
           println(s"reuse_nodes=${count(p, "ReusedQueryStage|ReusedExchange")} " +
             s"broadcast_nodes=${count(p, "BroadcastQueryStage|BroadcastExchange")} " +
             s"shuffle_stages=${count(p, "ShuffleQueryStage")}\n$p")

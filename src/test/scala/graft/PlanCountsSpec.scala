@@ -171,7 +171,7 @@ object PlanCountsSpec {
     "dd14_semantic_dedup" -> pin(10, 10042L),
     "ss11_ivf_trained_recall" -> pin(16, 146078L),
     "ss12_semantic_contamination" -> pin(7, 30589L),
-    "ss13_ivfpq_recall" -> jobsOnly(30),
+    "ss13_ivfpq_recall" -> pin(30, 367550L),
     "ss14_jl_recall" -> pin(11, 3320L),
     "ss15_kmeans_lloyd" -> pin(5, 6471L),
     "ss16_range_search" -> pin(10, 137796L),

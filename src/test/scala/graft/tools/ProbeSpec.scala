@@ -69,14 +69,43 @@ class ProbeSpec extends AnyFunSuite {
     // dd06's band frame is dd04's whole r1Bands pipeline; with dd04's
     // persisted bands still cached, dd06 would print them instead of
     // banding from its own persisted hash sets
-    def ids(p: String) = p.replaceAll("#\\d+", "#_").replaceAll("plan_id=\\d+", "plan_id=_")
-      .replaceAll("\\(\\d+\\)", "(_)").replaceAll("\\[codegen id : \\d+\\]", "[codegen id : _]")
     spark.sharedState.cacheManager.clearCache()
     Probe.plan(spark, Probe.query("dd04_lsh_candidate_pairs"), sf)
     val after = Probe.plan(spark, Probe.query("dd06_ngram_jaccard"), sf)
     spark.sharedState.cacheManager.clearCache()
     val fresh = Probe.plan(spark, Probe.query("dd06_ngram_jaccard"), sf)
-    assert(ids(after) == ids(fresh))
+    assert(after != fresh, "two builds should differ in their raw ids")
+    assert(Probe.normalizePlan(after) == Probe.normalizePlan(fresh))
+  }
+
+  test("normalizePlan renumbers run-dependent counters by first appearance " +
+    "and blanks addresses, temp names and line numbers") {
+    def plan(b: Int, rdd: Int, lambda: String, tmp: String, hash: String) =
+      s"""*(${b + 3}) Project [a#${b + 10}L, b#${b + 7}, a#${b + 10}L AS c#${b + 12}]
+         |+- ShuffleQueryStage ${b + 2}
+         |   +- Exchange hashpartitioning(a#${b + 10}L, 4), ENSURE_REQUIREMENTS, [plan_id=${b + 40}]
+         |      +- *(${b + 1}) Scan ExistingRDD[a#${b + 10}L], MapPartitionsRDD[$rdd] at localCheckpoint at SimilarityOps.scala:${b + 700}
+         |+- Filter (${b + 4})
+         |
+         |(${b + 4}) Filter [codegen id : ${b + 1}]
+         |Condition : ntile(4) IN (1)
+         |Arguments: graft.Foo$$$$$$Lambda$$${b + 5}/0x00007f$lambda@3a$lambda, obj#${b + 7}
+         |Location: InMemoryFileIndex [file:/tmp/graft-dd26-labels$tmp/data]
+         |Scan parquet spark_catalog.default.graft_bkt_cust_$hash""".stripMargin
+    val want =
+      """*(1) Project [a#1L, b#2, a#1L AS c#3]
+        |+- ShuffleQueryStage 1
+        |   +- Exchange hashpartitioning(a#1L, 4), ENSURE_REQUIREMENTS, [plan_id=1]
+        |      +- *(2) Scan ExistingRDD[a#1L], MapPartitionsRDD[1] at localCheckpoint at SimilarityOps.scala
+        |+- Filter (1)
+        |
+        |(1) Filter [codegen id : 2]
+        |Condition : ntile(4) IN (1)
+        |Arguments: graft.Foo$$$Lambda, obj#2
+        |Location: InMemoryFileIndex [file:/tmp/graft-dd26-labels_/data]
+        |Scan parquet spark_catalog.default.graft_bkt_cust_h""".stripMargin
+    assert(Probe.normalizePlan(plan(0, 12, "aa", "4761060537460320552", "80e7489c4304cb77")) == want)
+    assert(Probe.normalizePlan(plan(100, 3655, "b0c1", "12825248334221344143", "1937192bda31998")) == want)
   }
 
   test("an unknown query name fails explicitly, before any session starts") {
