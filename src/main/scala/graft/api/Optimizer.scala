@@ -16,15 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Optimizer {
 
   final case class Config(
-      cores: Option[Int] = None,
       applyCaching: Boolean = true,
       maxChange: Option[Double] = None,
       cacheSizeEstimates: Map[Int, Long] = Map.empty,
       noOptimize: Boolean = false,
       fastOptimize: Boolean = false, // skip source calibration
-      // floor LP θs at each node's current allocation
-      // (convex_solver.py:55-75 use_existing_usage)
-      useExistingUsage: Boolean = false,
       // trace with PreciseProfiler (exact per-node self time via iterator
       // barriers, the reference's full-tracing mode) instead of the cheap
       // instrumented pass with proportional CPU attribution
@@ -153,7 +149,7 @@ object Optimizer {
         Analysis.bottleneck(run.nodeMetrics, run.global).map(_.nodeId),
         graft.rules.RuleRunner.Report(Nil, Nil, g0))
     }
-    val cores = cfg.cores.getOrElse(run.global.cores)
+    val cores = run.global.cores
 
     // 2. LP inputs: per-core rates for parallelizable ops; θmax = 1 for
     //    sequential ops (convex_solver.py:41-47)
@@ -192,7 +188,7 @@ object Optimizer {
     val sol =
       if (ops.nonEmpty)
         MaxMinThroughputLP.solve(ops, cores.toDouble, cfg.maxChange,
-          useExistingUsage = cfg.useExistingUsage, bandwidth = bandwidthRow)
+          bandwidth = bandwidthRow)
       else MaxMinThroughputLP.Solution(Map.empty, 0.0, 0.0)
 
     // 3. rewrite plan: strip stale caches, apply θs, place a cache if a

@@ -1,8 +1,14 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+/** Per-user session state carried across micro-batches. */
+final case class SessState(lastTsUs: Long, sessions: Long, events: Long)
 
 /** Genuine Structured Streaming path for the event-time analytics that
   * StreamingOps pins as batch oracles: file-source readStream → watermark →
@@ -11,11 +17,95 @@ import org.apache.spark.sql.streaming.Trigger
   *
   * At scale the same query runs against a Kafka/file stream with the
   * identical plan; watermark bounds state so the agg never grows unbounded.
+  *
+  * Every twin runs inside [[owned]], which deletes the temp dirs it made
+  * before the twin returns; multi-batch twins deliver their micro-batches
+  * through [[stage]], and every memory-sink twin runs through [[drain]].
   */
-/** Per-user session state carried across micro-batches. */
-final case class SessState(lastTsUs: Long, sessions: Long, events: Long)
-
 object StreamRunner {
+
+  /** Prefix of every temp dir StreamRunner makes in `java.io.tmpdir`. */
+  private[streaming] val TempPrefix = "graft-stream-"
+
+  /** The temp dirs one twin makes; [[owned]] deletes them all. */
+  private[streaming] final class Scratch {
+    private[StreamRunner] val dirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+    def dir(): Path = { val d = Files.createTempDirectory(TempPrefix); dirs += d; d }
+  }
+
+  /** Runs `body` and deletes every dir it made through its [[Scratch]] when
+    * it returns or throws. A twin's result is the memory sink's table, so
+    * nothing it returns reads those dirs. Deletion never follows a symlink:
+    * a staged link to a fixture removes the link, not the fixture.
+    */
+  private[streaming] def owned[T](body: Scratch => T): T = {
+    val scratch = new Scratch
+    try body(scratch)
+    finally scratch.dirs.foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(d.toFile))
+  }
+
+  /** Stages `batches` as one parquet file each in a fresh watched dir and
+    * returns a reader; each call opens an independent file stream over that
+    * dir that delivers one file per micro-batch, in the order given.
+    *
+    * Ordering rule: FileStreamSource hands out new files in modification-
+    * time order, so batch k's file gets an mtime k seconds after batch 0's.
+    * Files are named in the opposite order, so only the mtimes can order
+    * them. Each batch is written outside the watched dir and moved in whole,
+    * so the stream never sees a partial write or Spark's side files.
+    */
+  private[streaming] def stage(scratch: Scratch, batches: Seq[DataFrame]): () => DataFrame = {
+    val watched = scratch.dir()
+    val out = scratch.dir()
+    val t0 = System.currentTimeMillis() / 1000L * 1000L
+    batches.zipWithIndex.foreach { case (batch, k) =>
+      val tmp = out.resolve(k.toString)
+      batch.coalesce(1).write.parquet(tmp.toString)
+      val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get.toPath
+      val file = Files.move(part, watched.resolve(f"batch_${batches.size - 1 - k}%04d.parquet"))
+      Files.setLastModifiedTime(file, FileTime.fromMillis(t0 + 1000L * k))
+    }
+    val spark = batches.head.sparkSession
+    val schema = batches.head.schema
+    () => spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(watched.toString)
+  }
+
+  /** Splits `ev` into `parts` event-time ranges of its `ts_us` column,
+    * oldest first, cut at minTs + k * ((maxTs - minTs) / parts) for
+    * k = 1 until parts (one min/max action). Also returns maxTs.
+    */
+  private def timeSplit(ev: DataFrame, parts: Int): (Seq[DataFrame], Long) = {
+    val r = ev.selectExpr("min(ts_us)", "max(ts_us)").head()
+    val (minTs, maxTs) = (r.getLong(0), r.getLong(1))
+    val cuts = (1 until parts).map(k => minTs + k * ((maxTs - minTs) / parts))
+    val ranges = (0 until parts).map { k =>
+      val conds = (if (k > 0) Seq(s"ts_us > ${cuts(k - 1)}") else Nil) ++
+        (if (k < parts - 1) Seq(s"ts_us <= ${cuts(k)}") else Nil)
+      ev.filter(conds.mkString(" and "))
+    }
+    (ranges, maxTs)
+  }
+
+  /** Processes everything available, then stops the query, also when
+    * processing throws.
+    */
+  private def await(q: StreamingQuery): Unit =
+    try q.processAllAvailable() finally q.stop()
+
+  /** Runs `df` to completion into the memory sink `name` in output `mode`
+    * and returns the sink's table.
+    */
+  private def drain(df: DataFrame, mode: String, name: String): DataFrame = {
+    await(df.writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start())
+    df.sparkSession.table(name)
+  }
 
   /** Events fixture as a file-source stream with `ts` normalized to a
     * timestamp. FileStreamSource needs a directory, so a single-file
@@ -23,17 +113,13 @@ object StreamRunner {
     * variant of `ts` (nanosAsLong) is converted exactly like
     * Tables.events does.
     */
-  private def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
+  private def eventsStream(spark: SparkSession, sfDir: String, scratch: Scratch): DataFrame = {
     val schema = graft.Tables.t(spark, sfDir, "events").schema
-    val src = java.nio.file.Paths.get(s"$sfDir/events.parquet")
+    val src = Paths.get(s"$sfDir/events.parquet")
     val streamDir =
-      if (java.nio.file.Files.isDirectory(src)) src.toString
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft-stream-src")
-        java.nio.file.Files.createSymbolicLink(d.resolve("events.parquet"), src)
-        d.toString
-      }
-    val s0 = spark.readStream.schema(schema).format("parquet").load(streamDir)
+      if (Files.isDirectory(src)) src
+      else Files.createSymbolicLink(scratch.dir().resolve("events.parquet"), src).getParent
+    val s0 = spark.readStream.schema(schema).format("parquet").load(streamDir.toString)
     graft.Tables.normalizeTs(s0)
   }
 
@@ -44,34 +130,15 @@ object StreamRunner {
     * st02 semantics — StreamingSpec asserts equality.
     */
   def sessionizeStateful(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_sessions"): DataFrame = {
+      queryName: String = "graft_sessions"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import spark.implicits._
 
-    // stage two time-ordered batch files
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("user_id", "unix_micros(ts) as ts_us", "event_id")
-    val Array(minTs, maxTs) = ev.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-sess")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    emit("batch_a", s"ts_us <= $mid")
-    emit("batch_b", s"ts_us > $mid")
+    val (halves, _) = timeSplit(ev, 2)
 
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-
-    val updates = stream.as[(Long, Long, Long)]
+    val updates = stage(tmp, halves)().as[(Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (uid: Long, it: Iterator[(Long, Long, Long)],
@@ -90,16 +157,8 @@ object StreamRunner {
         })
       .toDF("user_id", "n_sessions", "n_events")
 
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // last update per user = the row with the max cumulative event count
-    spark.table(queryName)
+    drain(updates, "update", queryName)
       .groupBy("user_id")
       .agg(max(struct(col("n_events"), col("n_sessions"))).as("s"))
       .selectExpr("user_id", "s.n_sessions as n_sessions", "s.n_events as n_events")
@@ -117,33 +176,16 @@ object StreamRunner {
     * st05 rendering.
     */
   def firstTouchStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_first_touch"): DataFrame = {
+      queryName: String = "graft_first_touch"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import spark.implicits._
 
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("user_id", "event_type", "unix_micros(ts) as ts_us", "event_id")
-    val Array(minTs, maxTs) = ev.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-first")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
+    val (halves, _) = timeSplit(ev, 2)
     // LATER half first: arrival order is the opposite of event-time
     // order, so the spec's equality with batch proves event-time wins
-    emit("batch_b", s"ts_us > $mid")
-    emit("batch_a", s"ts_us <= $mid")
-
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val stream = stage(tmp, halves.reverse)()
 
     val updates = stream.as[(Long, String, Long, Long)]
       .groupByKey(r => (r._1, r._2))
@@ -157,16 +199,8 @@ object StreamRunner {
         })
       .toDF("user_id", "event_type", "event_id", "ts_us")
 
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // update-mode rows only improve per key → per-key min is final state
-    spark.table(queryName)
+    drain(updates, "update", queryName)
       .groupBy("user_id", "event_type")
       .agg(min(struct(col("ts_us"), col("event_id"))).as("s"))
       .selectExpr("user_id", "event_type", "s.event_id as event_id", "s.ts_us as ts_us")
@@ -179,31 +213,15 @@ object StreamRunner {
     * StreamingSpec asserts equality with the batch distinct.
     */
   def dedupStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_dedup"): DataFrame = {
+      queryName: String = "graft_dedup"): DataFrame = owned { tmp =>
     val ev = graft.Tables.events(spark, sfDir).select("event_id", "ts", "event_type")
-    val stage = java.nio.file.Files.createTempDirectory("graft-dedup")
     // stage the SAME data twice → every event arrives duplicated
-    ev.coalesce(1).write.mode("overwrite").parquet(stage.resolve("a_tmp").toString)
-    val part = new java.io.File(stage.resolve("a_tmp").toString)
-      .listFiles().find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.copy(part.toPath, stage.resolve("copy_a.parquet"))
-    java.nio.file.Files.copy(part.toPath, stage.resolve("copy_b.parquet"))
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val stream = stage(tmp, Seq(ev, ev))()
       .where("event_id is not null")
     val deduped = stream
       .withWatermark("ts", "24 hours")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(deduped, "append", queryName)
   }
 
   /** Stateful per-event running totals with flatMapGroupsWithState: the
@@ -218,34 +236,16 @@ object StreamRunner {
     * st06 — the per-event exactly-once enrichment contract.
     */
   def runningTotalsStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_running"): DataFrame = {
+      queryName: String = "graft_running"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import spark.implicits._
 
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("user_id", "unix_micros(ts) as ts_us", "event_id",
         "cast(cast(value as decimal(28,4)) * 10000 as bigint) as v_x1e4")
-    val Array(minTs, maxTs) = ev.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-running")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    emit("batch_a", s"ts_us <= $mid")
-    emit("batch_b", s"ts_us > $mid")
+    val (halves, _) = timeSplit(ev, 2)
 
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
-
-    val rows = stream.as[(Long, Long, Long, Long)]
+    val rows = stage(tmp, halves)().as[(Long, Long, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(
         (uid: Long, it: Iterator[(Long, Long, Long, Long)],
@@ -260,16 +260,8 @@ object StreamRunner {
         })
       .toDF("event_id", "user_id", "ts_us", "n_so_far", "v_so_far")
 
-    val q = rows.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // each event is emitted exactly once → the sink table IS the result
-    spark.table(queryName)
+    drain(rows, "update", queryName)
   }
 
   /** Genuine stream-stream interval join (the st03 semantics): clicks and
@@ -280,8 +272,8 @@ object StreamRunner {
     * equals the batch st03 rendering.
     */
   def streamStreamJoin(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_ssjoin"): DataFrame = {
-    def source(): DataFrame = eventsStream(spark, sfDir)
+      queryName: String = "graft_ssjoin"): DataFrame = owned { tmp =>
+    def source(): DataFrame = eventsStream(spark, sfDir, tmp)
     val clicks = source()
       .where("event_type = 'click'")
       .selectExpr("event_id as click_id", "user_id as c_uid", "ts as cts")
@@ -294,15 +286,7 @@ object StreamRunner {
       purchases,
       expr("c_uid = p_uid and pts >= cts and pts <= cts + interval 30 minutes"))
       .selectExpr("click_id", "purchase_id", "c_uid as user_id")
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(joined, "append", queryName)
   }
 
   /** Stream-static enrichment join (the st04 semantics): the events
@@ -312,22 +296,14 @@ object StreamRunner {
     * complete mode. StreamingSpec asserts equality with batch st04.
     */
   def streamStaticJoin(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_enrich"): DataFrame = {
+      queryName: String = "graft_enrich"): DataFrame = owned { tmp =>
     val dim = graft.Tables.customer(spark, sfDir)
-    val agg = eventsStream(spark, sfDir)
+    val agg = eventsStream(spark, sfDir, tmp)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n"),
         expr(graft.Portable.dsum("value")).as("v"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(agg, "complete", queryName)
   }
 
   /** Idempotent foreachBatch file sink — the production exactly-once
@@ -338,10 +314,10 @@ object StreamRunner {
     * twice over the same input and asserts the row count is unchanged.
     */
   def idempotentFileSink(spark: SparkSession, sfDir: String, outDir: String,
-      queryName: String = "graft_sink"): Unit = {
-    val stream = eventsStream(spark, sfDir)
+      queryName: String = "graft_sink"): Unit = owned { tmp =>
+    val stream = eventsStream(spark, sfDir, tmp)
       .select("event_id", "user_id", "event_type", "value")
-    val q = stream.writeStream
+    await(stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.write.mode("overwrite")
@@ -349,31 +325,22 @@ object StreamRunner {
       }
       .queryName(queryName)
       .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .start())
   }
 
   /** Run the st01 window aggregation as a real stream over the events
     * fixture; returns the collected result as a DataFrame.
     */
-  def windowedAgg(spark: SparkSession, sfDir: String, queryName: String = "graft_stream"): DataFrame = {
-    val agg = eventsStream(spark, sfDir)
+  def windowedAgg(spark: SparkSession, sfDir: String,
+      queryName: String = "graft_stream"): DataFrame = owned { tmp =>
+    val agg = eventsStream(spark, sfDir, tmp)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("v"))
       .select(
         unix_seconds(col("win.start")).as("win_start_s"),
         col("event_type"), col("n"), col("v"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(agg, "complete", queryName)
   }
 
   /** st07's sliding-window aggregation as a genuine stream: the REAL
@@ -382,8 +349,8 @@ object StreamRunner {
     * StreamingSpec asserts equality with the batch st07 rendering.
     */
   def slidingWindowStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_sliding"): DataFrame = {
-    val agg = eventsStream(spark, sfDir)
+      queryName: String = "graft_sliding"): DataFrame = owned { tmp =>
+    val agg = eventsStream(spark, sfDir, tmp)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour", "15 minutes").as("win"),
         col("event_type"))
@@ -392,24 +359,15 @@ object StreamRunner {
       .select(
         unix_seconds(col("win.start")).as("win_start_s"),
         col("event_type"), col("n"), col("v"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(agg, "complete", queryName)
   }
 
   /** st08's abandoned-click detection as a genuine watermarked
     * stream-stream LEFT OUTER interval join: a click's null-purchase
     * row may only emit once the watermark proves no matching purchase
     * can still arrive — the streaming-correctness subtlety the batch
-    * anti-join hides. The fixture is staged as two time-split files so
-    * the outer-join state genuinely expires across micro-batches.
-    * Returns the emitted (click_id, user_id, ts_us) null-match rows.
+    * anti-join hides. Returns the emitted (click_id, user_id, ts_us)
+    * null-match rows.
     * Eviction needs a LATER batch to advance the watermark past
     * cts + 30 min, so the fixture is staged as THREE time-split files:
     * null rows whose click predates the second file's max event time
@@ -420,30 +378,13 @@ object StreamRunner {
     * deployment's next micro-batch would flush it).
     */
   def abandonedClicksStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_abandoned"): DataFrame = {
+      queryName: String = "graft_abandoned"): DataFrame = owned { tmp =>
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("event_id", "user_id", "event_type", "unix_micros(ts) as ts_us")
-    val Array(minTs, maxTs) = ev.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val t1 = minTs + (maxTs - minTs) / 3
-    val t2 = minTs + 2 * ((maxTs - minTs) / 3)
-    val stage = java.nio.file.Files.createTempDirectory("graft-abandon")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    emit("batch_a", s"ts_us <= $t1")
-    emit("batch_b", s"ts_us > $t1 and ts_us <= $t2")
-    emit("batch_c", s"ts_us > $t2")
-    def source(): DataFrame = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val (thirds, _) = timeSplit(ev, 3)
+    val read = stage(tmp, thirds)
+    // one independent reader per join side
+    def source(): DataFrame = read()
       .withColumn("ts", expr("timestamp_micros(ts_us)"))
     val clicks = source()
       .where("event_type = 'click'")
@@ -457,15 +398,7 @@ object StreamRunner {
       purchases,
       expr("c_uid = p_uid and pts >= cts and pts <= cts + interval 30 minutes"),
       "left_outer")
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(joined, "append", queryName)
       .filter("purchase_id is null")
       .selectExpr("click_id", "c_uid as user_id", "unix_micros(cts) as ts_us")
   }
@@ -478,34 +411,13 @@ object StreamRunner {
     * with first-delivery timestamps (the exactly-once ingest contract).
     */
   def dedupLedgerStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_dedup_ledger"): DataFrame = {
+      queryName: String = "graft_dedup_ledger"): DataFrame = owned { tmp =>
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("event_id", "user_id", "ts")
-    val stage = java.nio.file.Files.createTempDirectory("graft-dedup-ledger")
-    def emit(name: String, df: DataFrame): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    emit("batch_a", ev)
-    emit("batch_b", ev.filter("event_id % 50 = 0"))
-    val admitted = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val admitted = stage(tmp, Seq(ev, ev.filter("event_id % 50 = 0")))()
       .withWatermark("ts", "24 hours")
       .dropDuplicatesWithinWatermark("event_id")
-    val q = admitted.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(admitted, "append", queryName)
       .selectExpr("event_id", "user_id", "unix_micros(ts) as ts_us")
   }
 
@@ -523,46 +435,22 @@ object StreamRunner {
     * with batch st12.
     */
   def sessionWindowStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_session_window"): DataFrame = {
+      queryName: String = "graft_session_window"): DataFrame = owned { tmp =>
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("user_id", "event_id", "value", "ts", "unix_micros(ts) as ts_us")
-    val Array(minTs, maxTs) = ev.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-sesswin")
-    def emit(name: String, df: DataFrame): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    emit("batch_a", ev.filter(s"ts_us <= $mid"))
-    emit("batch_b", ev.filter(s"ts_us > $mid"))
-    emit("batch_c", ev.limit(1).selectExpr("cast(-1 as bigint) as user_id",
+    val (halves, maxTs) = timeSplit(ev, 2)
+    val sentinel = ev.limit(1).selectExpr("cast(-1 as bigint) as user_id",
       "cast(-1 as bigint) as event_id", "cast(0.0 as double) as value",
       s"timestamp_micros(${maxTs + 3L * 3600000000L}) as ts",
-      s"cast(${maxTs + 3L * 3600000000L} as bigint) as ts_us"))
-    val agg = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+      s"cast(${maxTs + 3L * 3600000000L} as bigint) as ts_us")
+    val agg = stage(tmp, halves :+ sentinel)()
       .withWatermark("ts", "1 second")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n"), expr(graft.Portable.dsum("value")).as("v"))
       .selectExpr("user_id",
         "unix_seconds(sw.start) as sess_start_s",
         "unix_seconds(sw.end) as sess_end_s", "n", "v")
-    val q = agg.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName).filter("user_id >= 0")
+    drain(agg, "append", queryName).filter("user_id >= 0")
   }
 
   /** q_cdc_compact's latest-wins changelog compaction as a stateful
@@ -575,34 +463,16 @@ object StreamRunner {
     * equality with the gated q_cdc_compact.
     */
   def cdcCompactStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_cdc_compact"): DataFrame = {
+      queryName: String = "graft_cdc_compact"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import spark.implicits._
 
     val ev = graft.Tables.events(spark, sfDir)
       .selectExpr("user_id", "event_type", "event_id",
         "unix_micros(ts) as ts_us", "value")
-    val Array(minTs, maxTs) = ev.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-cdc")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev.filter(cond).coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
+    val (halves, _) = timeSplit(ev, 2)
     // LATER half first: equality with batch proves event-time wins
-    emit("batch_b", s"ts_us > $mid")
-    emit("batch_a", s"ts_us <= $mid")
-
-    val stream = spark.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val stream = stage(tmp, halves.reverse)()
 
     val updates = stream.as[(Long, String, Long, Long, Double)]
       .groupByKey(r => (r._1, r._2))
@@ -621,16 +491,8 @@ object StreamRunner {
         })
       .toDF("user_id", "event_type", "last_event_id", "last_ts_us", "last_value")
 
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // update-mode rows only improve per key → per-key max is final state
-    spark.table(queryName)
+    drain(updates, "update", queryName)
       .groupBy("user_id", "event_type")
       .agg(max(struct(col("last_ts_us"), col("last_event_id"),
         col("last_value"))).as("s"))
@@ -650,7 +512,7 @@ object StreamRunner {
     * sketch is exactly the batch sketch.
     */
   def windowDistinctStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_windist"): DataFrame = {
+      queryName: String = "graft_windist"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import spark.implicits._
 
@@ -662,27 +524,8 @@ object StreamRunner {
         "user_id",
         s"${graft.Portable.hash60("concat('u|', cast(user_id as string))")} as uh",
         "unix_micros(ts) as ts_us")
-    val Array(minTs, maxTs) = ev0.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-windist")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev0.filter(cond).drop("ts_us").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    emit("batch_a", s"ts_us <= $mid")
-    emit("batch_b", s"ts_us > $mid")
-
-    val ev = spark.readStream
-      .schema(ev0.drop("ts_us").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val (halves, _) = timeSplit(ev0, 2)
+    val ev = stage(tmp, halves.map(_.drop("ts_us")))()
 
     val updates = ev.as[(Long, Long, Long)]
       .groupByKey(_._1)
@@ -701,17 +544,9 @@ object StreamRunner {
         })
       .toDF("win_start_s", "n_events", "n_users", "kmv")
 
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // update mode re-emits a window on every batch that touches it; the
     // final state per window is the row with the largest n_events
-    spark.table(queryName)
+    drain(updates, "update", queryName)
       .selectExpr("win_start_s", "n_events", "n_users", "kmv",
         "row_number() over (partition by win_start_s order by n_events desc) as rn")
       .filter(col("rn") === 1)
@@ -739,7 +574,7 @@ object StreamRunner {
     */
   def windowQuantilesStream(spark: SparkSession, sfDir: String,
       queryName: String = "graft_winquant", k: Int = 16,
-      reversed: Boolean = false): DataFrame = {
+      reversed: Boolean = false): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.GroupStateTimeout
     import spark.implicits._
 
@@ -748,32 +583,8 @@ object StreamRunner {
         "cast(cast(value as decimal(28,4)) * 10000 as bigint) as v",
         s"${graft.Portable.hash60("concat('q|', cast(event_id as string))")} as h",
         "unix_micros(ts) as ts_us")
-    val Array(minTs, maxTs) = ev0.selectExpr("min(ts_us)", "max(ts_us)").head() match {
-      case r => Array(r.getLong(0), r.getLong(1))
-    }
-    val mid = minTs + (maxTs - minTs) / 2
-    val stage = java.nio.file.Files.createTempDirectory("graft-winquant")
-    def emit(name: String, cond: String): Unit = {
-      val tmp = stage.resolve(name + "_tmp").toString
-      ev0.filter(cond).drop("ts_us").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(name + ".parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    if (reversed) {
-      emit("batch_b", s"ts_us > $mid")
-      emit("batch_a", s"ts_us <= $mid")
-    } else {
-      emit("batch_a", s"ts_us <= $mid")
-      emit("batch_b", s"ts_us > $mid")
-    }
-
-    val ev = spark.readStream
-      .schema(ev0.drop("ts_us").schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val (halves, _) = timeSplit(ev0, 2)
+    val ev = stage(tmp, (if (reversed) halves.reverse else halves).map(_.drop("ts_us")))()
 
     // positional-rank pick over rows sorted by (v, h) — ordering by the
     // within-window hash RANK (the batch's rn tiebreak) is ordering by h
@@ -803,17 +614,9 @@ object StreamRunner {
       .toDF("win_start_s", "n_events", "est_p50_x1e4", "ex_p50_x1e4",
         "est_p90_x1e4", "ex_p90_x1e4")
 
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
     // update mode re-emits a window on every batch that touches it; the
     // final state per window is the row with the largest n_events
-    spark.table(queryName)
+    drain(updates, "update", queryName)
       .selectExpr("*",
         "row_number() over (partition by win_start_s order by n_events desc) as rn")
       .filter(col("rn") === 1)
@@ -821,14 +624,6 @@ object StreamRunner {
         "est_p90_x1e4", "ex_p90_x1e4")
   }
 
-  /** st13's windowed top-k as a genuine stream: the watermarked
-    * tumbling-window count/value agg runs INSIDE Structured Streaming
-    * (complete mode — window state is the streaming part); the top-3
-    * rank is applied to the result table per trigger, the standard
-    * top-k-over-streams shape (rank is not an incremental aggregate —
-    * it's a view over the maintained counts). StreamingSpec asserts
-    * equality with the gated st13 batch rendering.
-    */
   /** st16's stateful streaming SemDeDup twin: the embeddings table
     * arrives in FOUR micro-batches (batch = vec_id mod 4, staged
     * oldest-first) and a per-CELL `flatMapGroupsWithState` carries the
@@ -852,7 +647,7 @@ object StreamRunner {
     * sink IS the ledger.
     */
   def semDedupStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_semdedup"): DataFrame = {
+      queryName: String = "graft_semdedup"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import spark.implicits._
     graft.functions.CosineSimilarity.register(spark)
@@ -864,17 +659,7 @@ object StreamRunner {
 
     val ev0 = e.selectExpr("vec_id", "embedding",
       "cast(vec_id % 4 as int) as batch")
-    val stage = java.nio.file.Files.createTempDirectory("graft-semdedup")
-    def emit(b: Int): Unit = {
-      val tmp = stage.resolve(s"batch_${b}_tmp").toString
-      ev0.filter(col("batch") === b).coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(part.toPath, stage.resolve(s"batch_$b.parquet"))
-      Thread.sleep(1100) // distinct mtimes → deterministic oldest-first order
-    }
-    (0 until 4).foreach(emit)
+    val stream = stage(tmp, (0 until 4).map(b => ev0.filter(col("batch") === b)))()
 
     // bit-exact twin of graft.functions.CosineSimilarity.nullSafeEval
     def cos(a: Array[Float], b: Array[Float]): Double = {
@@ -887,10 +672,7 @@ object StreamRunner {
       if (denom == 0.0) Double.NaN else dot / denom // NaN > τ is false, like SQL NULL
     }
 
-    val assigned = spark.readStream
-      .schema(ev0.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(stage.toString)
+    val assigned = stream
       .selectExpr("vec_id", "embedding", "batch",
         s"array_min(transform($cb, c -> struct(" +
           "-cosine_similarity(embedding, c.ce) as nc, c.cell as cell))).cell as cell")
@@ -921,15 +703,7 @@ object StreamRunner {
         })
       .toDF("vec_id", "batch", "cell", "keep_flag", "keeper")
 
-    val q = updates.writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(updates, "update", queryName)
   }
 
   /** Streaming TFRecord ingest: the q_tfrecord_roundtrip shards land as
@@ -945,11 +719,11 @@ object StreamRunner {
     * contract.
     */
   def tfRecordIngestStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_tfrec_ingest"): DataFrame = {
+      queryName: String = "graft_tfrec_ingest"): DataFrame = owned { tmp =>
     import spark.implicits._
     import graft.sources.{TfRecords => TR}
     // stage the shards exactly like the gated query does
-    val path = java.nio.file.Files.createTempDirectory("graft-tfrec-stream").toString
+    val path = tmp.dir().toString
     TR.write(
       graft.Tables.documents(spark, sfDir).repartition(8).selectExpr(
         "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec"),
@@ -979,35 +753,27 @@ object StreamRunner {
       count(lit(1)).cast("long").as("n"),
       sum("doc_id").cast("long").as("id_sum"),
       sum(length(col("text"))).cast("long").as("chars"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(agg, "complete", queryName)
   }
 
+  /** st13's windowed top-k as a genuine stream: the watermarked
+    * tumbling-window count/value agg runs INSIDE Structured Streaming
+    * (complete mode — window state is the streaming part); the top-3
+    * rank is applied to the result table per trigger, the standard
+    * top-k-over-streams shape (rank is not an incremental aggregate —
+    * it's a view over the maintained counts). StreamingSpec asserts
+    * equality with the gated st13 batch rendering.
+    */
   def topKStream(spark: SparkSession, sfDir: String,
-      queryName: String = "graft_topk"): DataFrame = {
-    val agg = eventsStream(spark, sfDir)
+      queryName: String = "graft_topk"): DataFrame = owned { tmp =>
+    val agg = eventsStream(spark, sfDir, tmp)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("win"), col("event_type"))
       .agg(count(lit(1)).as("n"), expr(graft.Portable.dsum("value")).as("v"))
       .select(
         unix_seconds(col("win.start")).as("win_start_s"),
         col("event_type"), col("n"), col("v"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
+    drain(agg, "complete", queryName)
       .selectExpr("win_start_s", "event_type", "n", "v",
         "cast(row_number() over (partition by win_start_s " +
           "order by n desc, event_type) as bigint) as rnk")

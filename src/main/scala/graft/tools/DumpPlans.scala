@@ -188,10 +188,10 @@ object DumpPlans {
     sb ++= "strategy (broadcast for dims, shuffle for fact-fact), partial→final\n"
     sb ++= "aggregation around a single Exchange, and WholeStageCodegen spans.\n"
     headline.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, sfDir)
-      df.count() // materialize so AQE settles on the final plan
+      // run the frame's own execution so its adaptive plan is the final one
+      val qe = Probe.execute(spark, graft.SparkEntry.queries(name)(spark, sfDir))
       sb ++= s"\n## $name\n\n```\n"
-      sb ++= Probe.normalizePlan(df.queryExecution.explainString(FormattedMode)).take(6000)
+      sb ++= Probe.normalizePlan(qe.explainString(FormattedMode)).take(6000)
       sb ++= "\n```\n"
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), sb.toString)

@@ -3,7 +3,7 @@ package graft.tools
 import graft.{Q, Session, SparkEntry}
 import graft.metrics.{StageMetricsListener, StageSpan}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution, SparkPlan}
 
 /** One measurement path for registered queries.
   *
@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.{FormattedMode, SQLExecution, SparkPlan}
   *
   *  - `reps` (default): [[warmUp]], one untimed rep, then `reps` (3)
   *    timed reps: median and min wall, and the fastest rep's jobs,
-  *    stages, shuffle read/write and spill.
+  *    stages, and shuffle read/write and spill in exact bytes.
   *  - `jobs`: each job of one measured rep with its span, the driver gap
   *    before it, and its stage names.
   *  - `plan`: the formatted physical plan before execution.
@@ -164,14 +164,19 @@ object Probe {
 
   /** Executes the frame's OWN QueryExecution (the noop sink would run a
     * separate write execution and leave this plan unexecuted), dropping
-    * every row on the executors so nothing ships to the driver.
+    * every row on the executors so nothing ships to the driver, then
+    * clears the cache the build left. The returned execution's adaptive
+    * plan is the final one.
     */
-  def finalPlan(spark: SparkSession, q: Q, sfDir: String): String = {
-    val qe = q.fn(spark, sfDir).queryExecution
+  def execute(spark: SparkSession, df: DataFrame): QueryExecution = {
+    val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
     spark.sharedState.cacheManager.clearCache()
-    qe.executedPlan.toString
+    qe
   }
+
+  def finalPlan(spark: SparkSession, q: Q, sfDir: String): String =
+    execute(spark, q.fn(spark, sfDir)).executedPlan.toString
 
   def main(args: Array[String]): Unit = {
     val usage = "usage: Probe <q1,q2,...> [reps|jobs|plan|final-plan] [sfDir] [reps]"
@@ -190,8 +195,8 @@ object Probe {
         case "reps" =>
           val r = reps(spark, q, sfDir, n)
           println(f"median ${median(r.wallS)}%.3f s  min ${r.wallS.min}%.3f s  " +
-            f"jobs ${r.jobs}  stages ${r.stages}  shufR ${r.shuffleReadBytes / 1e6}%.2f MB  " +
-            f"shufW ${r.shuffleWriteBytes / 1e6}%.2f MB  spill ${r.spillBytes / 1e6}%.2f MB  " +
+            s"jobs ${r.jobs}  stages ${r.stages}  shufR ${r.shuffleReadBytes} B  " +
+            s"shufW ${r.shuffleWriteBytes} B  spill ${r.spillBytes} B  " +
             "reps " + r.wallS.map(t => f"$t%.3f").mkString(","))
         case "jobs" =>
           val (m, js) = jobs(spark, q, sfDir)

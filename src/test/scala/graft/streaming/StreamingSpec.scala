@@ -281,4 +281,54 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.head._1 > 0)
     spark.catalog.clearCache()
   }
+
+  test("stage delivers micro-batches in mtime order, not file-name order") {
+    import spark.implicits._
+    // tags 0, 1, 2 in staging order; stage names their files in the
+    // opposite order, so only the mtimes can deliver them in this one
+    val got = StreamRunner.owned { tmp =>
+      val read = StreamRunner.stage(tmp, (0L to 2L).map(t => Seq(t).toDF("tag")))
+      val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
+      val q = read().selectExpr("tag", "input_file_name() as file").writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
+          rows ++= batch.collect().map(r => (batchId, r.getLong(0), r.getString(1)))
+          ()
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.processAllAvailable() finally q.stop() // stop joins the batch thread
+      rows.toSeq.sortBy(_._1)
+    }
+    // micro-batch k holds exactly tag k
+    assert(got.map(r => (r._1, r._2)) == Seq((0L, 0L), (1L, 1L), (2L, 2L)))
+    val names = got.map(_._3.split('/').last)
+    assert(names.distinct.size == 3 && names == names.sorted.reverse,
+      s"file names do not sort against delivery order: $names")
+  }
+
+  test("twins delete every temp dir they make and never the events fixture") {
+    def tempDirs(): Set[String] =
+      new java.io.File(System.getProperty("java.io.tmpdir")).list()
+        .filter(_.startsWith(StreamRunner.TempPrefix)).toSet
+    val fixture = java.nio.file.Paths.get(s"$sf/events.parquet")
+    // the prefix check sees an owned dir while it lives, and it goes
+    // even when the body throws
+    val start = tempDirs()
+    intercept[IllegalStateException](StreamRunner.owned { tmp =>
+      tmp.dir()
+      assert(tempDirs().size == start.size + 1)
+      throw new IllegalStateException("body failed")
+    })
+    assert(tempDirs() == start)
+    // a stage-based twin and an eventsStream-based (symlinked fixture) twin
+    Seq[() => Unit](
+      () => StreamRunner.runningTotalsStream(spark, sf, "graft_owned_stage_spec").collect(),
+      () => StreamRunner.windowedAgg(spark, sf, "graft_owned_events_spec").collect()
+    ).foreach { twin =>
+      val before = tempDirs()
+      twin()
+      assert(tempDirs() == before)
+      assert(java.nio.file.Files.isRegularFile(fixture) && java.nio.file.Files.size(fixture) > 0)
+    }
+  }
 }
