@@ -13,7 +13,8 @@ object Demo {
 
     val g0 = api.Flagship.graph
     // honors GRAFT_NO_OPTIMIZE / GRAFT_APPLY_CACHING / GRAFT_MAX_CHANGE /
-    // GRAFT_FAST_OPTIMIZE (the reference's PLUMBER_* env-gate parity)
+    // GRAFT_FAST_OPTIMIZE / GRAFT_PRECISE_PROFILE (the reference's
+    // PLUMBER_* env-gate parity; see Optimizer.Config.fromEnv)
     val res = api.Optimizer.optimizePipeline(spark, g0, sfDir,
       api.Optimizer.Config.fromEnv())
 

@@ -28,8 +28,9 @@ object Optimizer {
 
   object Config {
     /** Env-var gates mirroring the reference's PLUMBER_* knobs
-      * (pipeline_optimizer_wrapper.py:238-307): GRAFT_NO_OPTIMIZE,
-      * GRAFT_APPLY_CACHING, GRAFT_MAX_CHANGE, GRAFT_FAST_OPTIMIZE.
+      * (pipeline_optimizer_wrapper.py:238-307): GRAFT_NO_OPTIMIZE=1,
+      * GRAFT_APPLY_CACHING=0, GRAFT_MAX_CHANGE=<fraction>,
+      * GRAFT_FAST_OPTIMIZE=1 and GRAFT_PRECISE_PROFILE=1.
       */
     def fromEnv(base: Config = Config()): Config = base.copy(
       noOptimize = sys.env.get("GRAFT_NO_OPTIMIZE").exists(_ == "1"),
@@ -131,40 +132,15 @@ object Optimizer {
     //    the cost of breaking codegen — profile mode only, like the
     //    reference's span tracing perturbing the pipeline it measures).
     val run =
-      if (cfg.preciseProfile) {
-        val p = graft.metrics.PreciseProfiler.run(spark, g0, sfDir)
-        // globals come from the FINAL (full-pipeline) pass only — the
-        // harness's own wall/CPU span all N prefix re-runs and would
-        // collapse roofline's jobs-in-flight estimate if reported as one
-        // trace pass (spurious prefetch insertion)
-        Instrument.RunResult(
-          graft.metrics.PreciseProfiler.toNodeMetrics(g0, p),
-          GlobalMetrics.detect(p.finalWallNs, p.finalCpuNs)
-            .copy(diskBandwidthBps = Instrument.measuredBandwidth(sfDir)),
-          p.rowCount)
-      } else Instrument.run(spark, g0, sfDir)
+      if (cfg.preciseProfile) graft.metrics.PreciseProfiler.trace(spark, g0, sfDir)
+      else Instrument.run(spark, g0, sfDir)
     if (cfg.noOptimize) {
       // PLUMBER_NO_OPTIMIZE parity: trace + report, change nothing
       return Result(g0, g0, run.nodeMetrics, run.global, Map.empty, 0.0,
         Analysis.bottleneck(run.nodeMetrics, run.global).map(_.nodeId),
         graft.rules.RuleRunner.Report(Nil, Nil, g0))
     }
-    val cores = run.global.cores
-
-    // 2. LP inputs: per-core rates for parallelizable ops; θmax = 1 for
-    //    sequential ops (convex_solver.py:41-47)
-    val ops = run.nodeMetrics.filter(_.elementsProduced > 0).map { m =>
-      MaxMinThroughputLP.OpRate(
-        id = m.nodeId,
-        perCoreRate = Analysis.expectedPerCoreMaxRate(m) match {
-          case r if r.isFinite => r
-          case _               => 1e12 // effectively unconstrained
-        },
-        thetaMin = 0.0,
-        thetaMax = if (m.isParallelizable) cores.toDouble else 1.0,
-        existing = m.parallelism.toDouble)
-    }
-    // 2b. source calibration → LP bandwidth row (§3.1 step 4b): sweep the
+    // 2. source calibration → LP bandwidth row (§3.1 step 4b): sweep the
     //     source-only pipeline, fit the two-segment curve, and hand the
     //     LP the source's rate-vs-θ cap — this is what fastOptimize
     //     skips (PLUMBER_FAST_OPTIMIZE parity). Calibration failures
@@ -185,11 +161,9 @@ object Optimizer {
         // else means the source isn't the constraint — run uncapped.
         .filter(bw => bw.m1 > 0 && bw.m2 * 64 + bw.b2 > 0)
 
-    val sol =
-      if (ops.nonEmpty)
-        MaxMinThroughputLP.solve(ops, cores.toDouble, cfg.maxChange,
-          bandwidth = bandwidthRow)
-      else MaxMinThroughputLP.Solution(Map.empty, 0.0, 0.0)
+    // 2b. LP over the traced per-node rates (MaxMinThroughputLP.opRates)
+    val sol = MaxMinThroughputLP.solveMetrics(run.nodeMetrics, run.global.cores,
+      maxChange = cfg.maxChange, bandwidth = bandwidthRow)
 
     // 3. rewrite plan: strip stale caches, apply θs, place a cache if a
     //    known working-set estimate fits safely, roofline prefetch marker

@@ -59,21 +59,9 @@ final case class Recommendation(
     * graph_rewrites.py:466-535).
     */
   def lpUpperBounds(naive: Boolean = false, useExistingUsage: Boolean = false,
-      bandwidth: Option[MaxMinThroughputLP.Bandwidth] = None): Double = {
-    val ops = metrics.filter(_.elementsProduced > 0).map { m =>
-      MaxMinThroughputLP.OpRate(
-        m.nodeId,
-        Analysis.expectedPerCoreMaxRate(m) match {
-          case r if r.isFinite => r; case _ => 1e12
-        },
-        thetaMax =
-          if (naive || m.isParallelizable) global.cores.toDouble else 1.0,
-        existing = m.parallelism.toDouble)
-    }
-    if (ops.isEmpty) 0.0
-    else MaxMinThroughputLP.solve(ops, global.cores.toDouble,
+      bandwidth: Option[MaxMinThroughputLP.Bandwidth] = None): Double =
+    MaxMinThroughputLP.solveMetrics(metrics, global.cores, naive,
       useExistingUsage = useExistingUsage, bandwidth = bandwidth).rate
-  }
 
   /** disk_upper_bounds(bandwidth): element-rate ceiling from disk. */
   def diskUpperBounds(bandwidthBps: Double = global.diskBandwidthBps): Double =

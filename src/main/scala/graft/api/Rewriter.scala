@@ -75,8 +75,9 @@ object Rewriter {
         m.isParallelizable && !ignore.contains(m.nodeId) &&
           g.reachableFromSink.contains(m.nodeId))
       // the ranked recommendation (what strategy None would take)
-      val recommended =
-        valid.sortBy(m => Analysis.expectedParallelMaxRate(m, run.global)).headOption
+      val recommended = Analysis.bottleneck(
+        run.nodeMetrics.filter(m => g.reachableFromSink.contains(m.nodeId)),
+        run.global, ignore.toSet)
 
       def choose(s: Strategy, rnd: scala.util.Random): Option[graft.metrics.NodeMetrics] = s match {
         case RankedTop => recommended
@@ -91,18 +92,7 @@ object Rewriter {
 
       // LP thetas over the current metrics (joined onto the node table in
       // the CSVs, graph_rewrites.py:699-759)
-      val ops = ranked.map { m =>
-        MaxMinThroughputLP.OpRate(
-          m.nodeId,
-          Analysis.expectedPerCoreMaxRate(m) match {
-            case r if r.isFinite => r; case _ => 1e12
-          },
-          thetaMax = if (m.isParallelizable) run.global.cores.toDouble else 1.0,
-          existing = m.parallelism.toDouble)
-      }
-      val thetas =
-        if (ops.nonEmpty) MaxMinThroughputLP.solve(ops, run.global.cores.toDouble).thetas
-        else Map.empty[Int, Double]
+      val thetas = MaxMinThroughputLP.solveMetrics(run.nodeMetrics, run.global.cores).thetas
 
       // arm 0 = configured strategy (advances the forward graph);
       // arms 1.. = random_valid_deviation branches from the same base

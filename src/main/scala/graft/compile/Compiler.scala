@@ -18,6 +18,14 @@ import org.apache.spark.sql.functions._
   * With `instrument = true` every node boundary gets a CollectMetrics
   * (`df.observe`) counting elements — observation survives WSCG fusion
   * without breaking it (SURVEY §7.4).
+  *
+  * Keyed-window rule (`Batch`, `GroupByWindow`): the key expression is
+  * materialised as its output column first and the window partitions by
+  * that column, never by the expression, so the grouping aggregate reuses
+  * the window's exchange (see `keyedWindows`).
+  *
+  * The gated `op*` queries whose operator this lowering reproduces exactly
+  * build their graph and compile it here, so the oracle checks this code.
   */
 object Compiler {
 
@@ -54,13 +62,8 @@ object Compiler {
         case MapE(exprs, _)   => in().selectExpr(exprs: _*)
         case FilterE(cond)    => in().filter(expr(cond))
         case Batch(size, drop, shardExpr, orderCols, aggs) =>
-          val w = Window.partitionBy(expr(shardExpr)).orderBy(orderCols.map(col): _*)
-          val b = in()
-            .withColumn("_shard", expr(shardExpr))
-            .withColumn("_rn", row_number().over(w))
-            .withColumn("batch_id", floor((col("_rn") - 1) / size))
-            .groupBy(col("_shard").as("shard"), col("batch_id"))
-            .agg(count(lit(1)).as("batch_n"), aggs.map(a => expr(a)): _*)
+          val b = keyedWindows(in(), shardExpr, "shard", "batch_id", "batch_n",
+            size, orderCols, aggs)
           if (drop) b.filter(col("batch_n") === size) else b
         case ShuffleOp(seed) =>
           // approximate buffer shuffle: redistribute by a seeded hash of the
@@ -128,19 +131,32 @@ object Compiler {
         case Unbatch(c)    =>
           in().withColumn("_el", explode(col(c))).drop(c).withColumnRenamed("_el", c)
         case GroupByWindow(key, ws, ord, aggs) =>
-          val w = Window.partitionBy(expr(key)).orderBy(ord.map(col): _*)
-          in()
-            .withColumn("_bucket", expr(key))
-            .withColumn("_rn", row_number().over(w))
-            .withColumn("window_id", floor((col("_rn") - 1) / ws))
-            .groupBy(col("_bucket").as("bucket"), col("window_id"))
-            .agg(count(lit(1)).as("window_n"), aggs.map(a => expr(a)): _*)
+          keyedWindows(in(), key, "bucket", "window_id", "window_n", ws, ord, aggs)
       }
       obs(id, df)
     })
 
     val df = build(g.sink)
     Compiled(df, observed.toSeq)
+  }
+
+  /** The keyed-window lowering shared by `Batch` and `GroupByWindow`:
+    * rows keyed by `keyExpr`, numbered per key in `orderCols` order, and
+    * cut into windows of `size` consecutive rows, one output row per
+    * (key, window) with its row count and `aggs`. The key is
+    * materialised as column `keyCol` before the window partitions by
+    * that column, so the window's hash exchange on `keyCol` already
+    * satisfies the (keyCol, idCol) aggregate and the plan shuffles once.
+    */
+  private def keyedWindows(df: DataFrame, keyExpr: String, keyCol: String,
+      idCol: String, countCol: String, size: Int, orderCols: Seq[String],
+      aggs: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keyCol).orderBy(orderCols.map(col): _*)
+    df.withColumn(keyCol, expr(keyExpr))
+      .withColumn("_rn", row_number().over(w))
+      .withColumn(idCol, floor((col("_rn") - 1) / size))
+      .groupBy(keyCol, idCol)
+      .agg(count(lit(1)).as(countCol), aggs.map(a => expr(a)): _*)
   }
 
   /** Schema-invariance rail (element_spec immutability,

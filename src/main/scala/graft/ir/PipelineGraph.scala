@@ -213,3 +213,14 @@ final case class PipelineGraph(nodes: Seq[PipelineNode], sink: Int) {
     (Seq("digraph pipeline {") ++ ns ++ es ++ Seq("}")).mkString("\n")
   }
 }
+
+object PipelineGraph {
+  /** A linear pipeline: node k is `ops(k)` reading node k - 1, with the
+    * last op as the sink.
+    */
+  def chain(ops: PipelineOp*): PipelineGraph = PipelineGraph(
+    ops.zipWithIndex.map { case (op, k) =>
+      PipelineNode(k, op, if (k == 0) Nil else Seq(k - 1))
+    },
+    sink = ops.size - 1)
+}

@@ -1,7 +1,7 @@
 package graft.metrics
 
 import graft.compile.Compiler
-import graft.ir.PipelineGraph
+import graft.ir.{PipelineGraph, PipelineOp}
 import org.apache.spark.sql.SparkSession
 
 /** Per-operator metrics — our stats.pb analogue (SURVEY §1.3). One row per
@@ -20,6 +20,31 @@ final case class NodeMetrics(
     isParallelizable: Boolean,
     isSource: Boolean,
     isRandom: Boolean)
+
+object NodeMetrics {
+  /** Node `id`'s row from a traced run of `g`: `produced` and `consumed`
+    * element counts, `timeNs` of processing time, and the run's measured
+    * `sourceBytes`, attributed per element to a source node (feeds
+    * disk_bytes_per_root_element / diskUpperBound, A13).
+    */
+  def of(g: PipelineGraph, id: Int, produced: Long, consumed: Long,
+      timeNs: Long, sourceBytes: Long): NodeMetrics = {
+    val n = g.byId(id)
+    val isSrc = PipelineOp.isSource(n.op)
+    NodeMetrics(
+      nodeId = id,
+      name = g.canonicalNames(id),
+      op = n.op.base,
+      parallelism = n.parallelism,
+      elementsProduced = produced,
+      elementsConsumed = consumed,
+      processingTimeNs = timeNs,
+      bytesPerElement = if (isSrc && produced > 0) sourceBytes.toDouble / produced else 0.0,
+      isParallelizable = PipelineOp.supportsParallelism(n.op),
+      isSource = isSrc,
+      isRandom = n.op.isRandom)
+  }
+}
 
 /** Machine/global snapshot row (machine_info + global counters,
   * graph_rewrites.py:466-535 get_runtime_data).
@@ -107,27 +132,11 @@ object Instrument {
     val totalElems = math.max(1L, g.nodes.map(n => elems(n.id)).sum)
 
     val metrics = g.topoOrder.map { id =>
-      val n = g.byId(id)
       val produced = elems(id)
-      val consumed = n.inputs.map(elems).sum
-      val isSrc = graft.ir.PipelineOp.isSource(n.op)
-      NodeMetrics(
-        nodeId = id,
-        name = g.canonicalNames(id),
-        op = n.op.base,
-        parallelism = n.parallelism,
-        elementsProduced = produced,
-        elementsConsumed = consumed,
-        // proportional attribution of measured CPU time across nodes by
-        // work processed — coarse but honest; PreciseProfiler for exact.
-        processingTimeNs = (cpuNs.toDouble * produced / totalElems).toLong,
-        // measured task input bytes attributed to source nodes — feeds
-        // disk_bytes_per_root_element / diskUpperBound (A13)
-        bytesPerElement =
-          if (isSrc && produced > 0) listener.inputBytes.toDouble / produced else 0.0,
-        isParallelizable = graft.ir.PipelineOp.supportsParallelism(n.op),
-        isSource = isSrc,
-        isRandom = n.op.isRandom)
+      // proportional attribution of measured CPU time across nodes by
+      // work processed — coarse but honest; PreciseProfiler for exact.
+      NodeMetrics.of(g, id, produced, g.byId(id).inputs.map(elems).sum,
+        (cpuNs.toDouble * produced / totalElems).toLong, listener.inputBytes)
     }
     val global = GlobalMetrics.detect(wallNs, cpuNs)
       .copy(

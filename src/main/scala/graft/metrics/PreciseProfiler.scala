@@ -111,21 +111,22 @@ object PreciseProfiler {
     */
   def toNodeMetrics(g: PipelineGraph, p: ProfiledRun): Seq[NodeMetrics] =
     p.timings.map { t =>
-      val n = g.byId(t.nodeId)
-      val isSrc = graft.ir.PipelineOp.isSource(n.op)
-      NodeMetrics(
-        nodeId = t.nodeId,
-        name = g.canonicalNames(t.nodeId),
-        op = n.op.base,
-        parallelism = n.parallelism,
-        elementsProduced = t.elements,
-        elementsConsumed = n.inputs.map(i => p.timings.find(_.nodeId == i).map(_.elements).getOrElse(0L)).sum,
-        processingTimeNs = t.selfNs,
-        bytesPerElement =
-          if (isSrc && t.elements > 0) p.sourceInputBytes.toDouble / t.elements
-          else 0.0,
-        isParallelizable = graft.ir.PipelineOp.supportsParallelism(n.op),
-        isSource = isSrc,
-        isRandom = n.op.isRandom)
+      val consumed = g.byId(t.nodeId).inputs
+        .map(i => p.timings.find(_.nodeId == i).map(_.elements).getOrElse(0L)).sum
+      NodeMetrics.of(g, t.nodeId, t.elements, consumed, t.selfNs, p.sourceInputBytes)
     }
+
+  /** A precise trace in the shape of `Instrument.run`'s result. The
+    * globals come from the FINAL (full-pipeline) pass only: the
+    * profiler's own wall/CPU span all N prefix re-runs and would collapse
+    * roofline's jobs-in-flight estimate if reported as one trace pass
+    * (spurious prefetch insertion).
+    */
+  def trace(spark: SparkSession, g: PipelineGraph, sfDir: String): Instrument.RunResult = {
+    val p = run(spark, g, sfDir)
+    Instrument.RunResult(toNodeMetrics(g, p),
+      GlobalMetrics.detect(p.finalWallNs, p.finalCpuNs)
+        .copy(diskBandwidthBps = Instrument.measuredBandwidth(sfDir)),
+      p.rowCount)
+  }
 }

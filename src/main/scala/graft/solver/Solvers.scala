@@ -139,6 +139,37 @@ object MaxMinThroughputLP {
     Solution(eff.map(_.id).zip(thetas).toMap, rate, thetas.sum)
   }
 
+  /** The LP's rows for traced per-node metrics (convex_solver.py:41-47):
+    * one per node that produced elements, at its per-core rate (a node
+    * with no measured time is effectively unconstrained), with θmax =
+    * `cores` for parallelizable ops and 1 for sequential ones unless
+    * `naive` lifts that clamp.
+    */
+  def opRates(metrics: Seq[graft.metrics.NodeMetrics], cores: Int,
+      naive: Boolean = false): Seq[OpRate] =
+    metrics.filter(_.elementsProduced > 0).map { m =>
+      OpRate(
+        id = m.nodeId,
+        perCoreRate = graft.plans.Analysis.expectedPerCoreMaxRate(m) match {
+          case r if r.isFinite => r
+          case _               => 1e12
+        },
+        thetaMax = if (naive || m.isParallelizable) cores.toDouble else 1.0,
+        existing = m.parallelism.toDouble)
+    }
+
+  /** `solve` over `opRates(metrics, cores, naive)`; with no node that
+    * produced elements there is nothing to allocate: no θ, rate 0.
+    */
+  def solveMetrics(metrics: Seq[graft.metrics.NodeMetrics], cores: Int,
+      naive: Boolean = false, maxChange: Option[Double] = None,
+      useExistingUsage: Boolean = false,
+      bandwidth: Option[Bandwidth] = None): Solution = {
+    val ops = opRates(metrics, cores, naive)
+    if (ops.isEmpty) Solution(Map.empty, 0.0, 0.0)
+    else solve(ops, cores.toDouble, maxChange, useExistingUsage, bandwidth = bandwidth)
+  }
+
   private def clamp(x: Double, lo: Double, hi: Double): Double =
     math.max(lo, math.min(hi, x))
 }

@@ -44,7 +44,7 @@ object PlanCountsSpec {
     "op08_batch" -> pin(2, 71927L),
     "op08b_batch_drop_remainder" -> pin(2, 71927L),
     "op09_padded_batch" -> pin(2, 61185L),
-    "op10_map_and_batch" -> pin(2, 21783L),
+    "op10_map_and_batch" -> pin(2, 21109L),
     "op11_shuffle" -> pin(2, 8842L),
     "op11b_reservoir_shuffle" -> pin(2, 1775L),
     "op11c_reservoir_det" -> pin(2, 68699L),

@@ -1,6 +1,6 @@
 package graft
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withTempDir}
 import graft.api.Sketches
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -161,38 +161,40 @@ class SketchesSpec extends AnyFunSuite {
     // for all three sketches (longs and strings only, so this SHOULD be
     // trivially lossless — the test guards against a schema/nullability
     // drift breaking the contract silently).
-    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-state").toString
-    val docs = Tables.documents(spark, sf)
+    withTempDir("graft-sketch-state") { tmp =>
+      val dir = tmp.toString
+      val docs = Tables.documents(spark, sf)
 
-    val kmvBase = Sketches.kmvBuild(tokens("doc_id < 400"), "source", "w")
-    kmvBase.write.mode("overwrite").parquet(s"$dir/kmv")
-    val kmvLive = Sketches.kmvEstimate(Sketches.kmvMerge(
-        kmvBase, Sketches.kmvBuild(tokens("doc_id >= 400"), "source", "w")))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val kmvReread = Sketches.kmvEstimate(Sketches.kmvMerge(
-        spark.read.parquet(s"$dir/kmv"),
-        Sketches.kmvBuild(tokens("doc_id >= 400"), "source", "w")))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(kmvReread == kmvLive)
+      val kmvBase = Sketches.kmvBuild(tokens("doc_id < 400"), "source", "w")
+      kmvBase.write.mode("overwrite").parquet(s"$dir/kmv")
+      val kmvLive = Sketches.kmvEstimate(Sketches.kmvMerge(
+          kmvBase, Sketches.kmvBuild(tokens("doc_id >= 400"), "source", "w")))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      val kmvReread = Sketches.kmvEstimate(Sketches.kmvMerge(
+          spark.read.parquet(s"$dir/kmv"),
+          Sketches.kmvBuild(tokens("doc_id >= 400"), "source", "w")))
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      assert(kmvReread == kmvLive)
 
-    val grid = Sketches.cmsBuild(tokens("doc_id < 400"), "w")
-    grid.write.mode("overwrite").parquet(s"$dir/cms")
-    val probes = tokens().select("w").distinct().limit(20)
-    def cEst(g: DataFrame) = Sketches.cmsEstimate(
-        Sketches.cmsMerge(g, Sketches.cmsBuild(tokens("doc_id >= 400"), "w")),
-        probes, "w")
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    assert(cEst(spark.read.parquet(s"$dir/cms")) == cEst(grid))
+      val grid = Sketches.cmsBuild(tokens("doc_id < 400"), "w")
+      grid.write.mode("overwrite").parquet(s"$dir/cms")
+      val probes = tokens().select("w").distinct().limit(20)
+      def cEst(g: DataFrame) = Sketches.cmsEstimate(
+          Sketches.cmsMerge(g, Sketches.cmsBuild(tokens("doc_id >= 400"), "w")),
+          probes, "w")
+        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+      assert(cEst(spark.read.parquet(s"$dir/cms")) == cEst(grid))
 
-    val smp = Sketches.quantileSampleBuild(
-      docs.filter("doc_id < 400"), "source", "n_chars", "doc_id")
-    smp.write.mode("overwrite").parquet(s"$dir/qs")
-    def qEst(st: DataFrame) = Sketches.quantileSampleEstimate(
-        Sketches.quantileSampleMerge(st, Sketches.quantileSampleBuild(
-          docs.filter("doc_id >= 400"), "source", "n_chars", "doc_id")))
-      .collect().map(r => (r.getString(0), (r.getLong(2), r.getLong(3)))).toMap
-    assert(qEst(spark.read.parquet(s"$dir/qs")) == qEst(smp))
-    spark.catalog.clearCache()
+      val smp = Sketches.quantileSampleBuild(
+        docs.filter("doc_id < 400"), "source", "n_chars", "doc_id")
+      smp.write.mode("overwrite").parquet(s"$dir/qs")
+      def qEst(st: DataFrame) = Sketches.quantileSampleEstimate(
+          Sketches.quantileSampleMerge(st, Sketches.quantileSampleBuild(
+            docs.filter("doc_id >= 400"), "source", "n_chars", "doc_id")))
+        .collect().map(r => (r.getString(0), (r.getLong(2), r.getLong(3)))).toMap
+      assert(qEst(spark.read.parquet(s"$dir/qs")) == qEst(smp))
+      spark.catalog.clearCache()
+    }
   }
 
   test("sketch states are small: k rows per key / d*w cells, longs only") {

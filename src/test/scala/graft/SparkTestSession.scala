@@ -20,6 +20,15 @@ object SparkTestSession {
   def withBroadcastThreshold[T](bytes: Long)(body: => T): T =
     withConf("spark.sql.autoBroadcastJoinThreshold", bytes.toString)(body)
 
+  /** Run `body` on a fresh dir named `prefix…` in `java.io.tmpdir`, then
+    * delete the dir recursively, whether `body` returns or throws.
+    */
+  def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   /** Run `body` with session conf `key` at `value`, then restore the
     * previous value (unset stays unset).
     */

@@ -1,6 +1,6 @@
 package graft
 
-import graft.SparkTestSession.{sf, spark, withConf}
+import graft.SparkTestSession.{sf, spark, withConf, withTempDir}
 import graft.metrics.StageMetricsListener
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types._
@@ -11,9 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * warm, and re-infers whenever the files or the parquet confs change.
   */
 class TablesSpec extends AnyFunSuite {
-
-  private def tempDir(): String =
-    java.nio.file.Files.createTempDirectory("tables-spec").toString
 
   /** `body`'s result and the schema-inference jobs (stages named
     * `parquet at …`) it launched. Only those count: the listener bus also
@@ -44,25 +41,29 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("the first read of a table infers its schema with one job; the second runs none") {
-    val dir = tempDir()
-    write(spark.range(100).selectExpr("id", "cast(id as string) as s"), dir, "t")
-    val (first, n1) = inferenceJobs(Tables.t(spark, dir, "t"))
-    val (second, n2) = inferenceJobs(Tables.t(spark, dir, "t"))
-    assert((n1, n2) == (1, 0))
-    assert(second.schema == first.schema)
-    assert(second.count() == 100)
+    withTempDir("tables-spec") { tmp =>
+      val dir = tmp.toString
+      write(spark.range(100).selectExpr("id", "cast(id as string) as s"), dir, "t")
+      val (first, n1) = inferenceJobs(Tables.t(spark, dir, "t"))
+      val (second, n2) = inferenceJobs(Tables.t(spark, dir, "t"))
+      assert((n1, n2) == (1, 0))
+      assert(second.schema == first.schema)
+      assert(second.count() == 100)
+    }
   }
 
   test("rewriting a path with another schema returns the new schema") {
-    val dir = tempDir()
-    write(spark.range(10).selectExpr("cast(id as int) as a", "'x' as b"), dir, "t")
-    assert(Tables.t(spark, dir, "t").schema.map(_.dataType) == Seq(IntegerType, StringType))
-    // an added column and a changed type
-    write(spark.range(10).selectExpr("id as a", "'x' as b", "0.5d as c"), dir, "t")
-    val df = Tables.t(spark, dir, "t")
-    assert(df.schema.map(f => f.name -> f.dataType) ==
-      Seq("a" -> LongType, "b" -> StringType, "c" -> DoubleType))
-    assert(df.filter("c = 0.5").count() == 10)
+    withTempDir("tables-spec") { tmp =>
+      val dir = tmp.toString
+      write(spark.range(10).selectExpr("cast(id as int) as a", "'x' as b"), dir, "t")
+      assert(Tables.t(spark, dir, "t").schema.map(_.dataType) == Seq(IntegerType, StringType))
+      // an added column and a changed type
+      write(spark.range(10).selectExpr("id as a", "'x' as b", "0.5d as c"), dir, "t")
+      val df = Tables.t(spark, dir, "t")
+      assert(df.schema.map(f => f.name -> f.dataType) ==
+        Seq("a" -> LongType, "b" -> StringType, "c" -> DoubleType))
+      assert(df.filter("c = 0.5").count() == 10)
+    }
   }
 
   test("the parquet confs are part of the key: nanosAsLong and inferTimestampNTZ") {
@@ -71,61 +72,67 @@ class TablesSpec extends AnyFunSuite {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = tempDir()
-    val schema = MessageTypeParser.parseMessageType(
-      "message events { required int64 ts (TIMESTAMP(NANOS,true)); }")
-    val w = ExampleParquetWriter.builder(
-      new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
-      .withType(schema).build()
-    try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1700000000123456789L))
-    finally w.close()
-    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
-    withConf(nanos, "true") {
-      assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
-      assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
-    }
-    withConf(nanos, "false") {
-      // without the flag Spark refuses the type rather than reusing LongType
-      val e = intercept[AnalysisException](Tables.t(spark, dir, "events"))
-      assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
-    }
-    withConf(nanos, "true") {
-      assert(Tables.events(spark, dir).schema("ts").dataType == TimestampType)
-      assert(Tables.events(spark, dir).head().getTimestamp(0).getTime == 1700000000123L)
-    }
-    // the fixture's TIMESTAMP(MICROS) NTZ column under both NTZ inferences
-    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    withConf(ntz, "true") {
-      assert(Tables.t(spark, sf, "events").schema("ts").dataType == TimestampNTZType)
-    }
-    withConf(ntz, "false") {
-      assert(Tables.t(spark, sf, "events").schema("ts").dataType == TimestampType)
+    withTempDir("tables-spec") { tmp =>
+      val dir = tmp.toString
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val w = ExampleParquetWriter.builder(
+        new org.apache.hadoop.fs.Path(s"$dir/events.parquet/part-0.parquet"))
+        .withType(schema).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup().append("ts", 1700000000123456789L))
+      finally w.close()
+      val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+      withConf(nanos, "true") {
+        assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
+        assert(Tables.t(spark, dir, "events").schema("ts").dataType == LongType)
+      }
+      withConf(nanos, "false") {
+        // without the flag Spark refuses the type rather than reusing LongType
+        val e = intercept[AnalysisException](Tables.t(spark, dir, "events"))
+        assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
+      }
+      withConf(nanos, "true") {
+        assert(Tables.events(spark, dir).schema("ts").dataType == TimestampType)
+        assert(Tables.events(spark, dir).head().getTimestamp(0).getTime == 1700000000123L)
+      }
+      // the fixture's TIMESTAMP(MICROS) NTZ column under both NTZ inferences
+      val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+      withConf(ntz, "true") {
+        assert(Tables.t(spark, sf, "events").schema("ts").dataType == TimestampNTZType)
+      }
+      withConf(ntz, "false") {
+        assert(Tables.t(spark, sf, "events").schema("ts").dataType == TimestampType)
+      }
     }
   }
 
   test("a missing path raises Spark's PATH_NOT_FOUND, cached or not") {
-    val dir = tempDir()
-    val e1 = intercept[AnalysisException](Tables.t(spark, dir, "absent"))
-    assert(e1.getCondition == "PATH_NOT_FOUND")
-    write(spark.range(3).toDF("a"), dir, "gone")
-    assert(Tables.t(spark, dir, "gone").count() == 3)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/gone.parquet"))
-    val e2 = intercept[AnalysisException](Tables.t(spark, dir, "gone"))
-    assert(e2.getCondition == "PATH_NOT_FOUND")
+    withTempDir("tables-spec") { tmp =>
+      val dir = tmp.toString
+      val e1 = intercept[AnalysisException](Tables.t(spark, dir, "absent"))
+      assert(e1.getCondition == "PATH_NOT_FOUND")
+      write(spark.range(3).toDF("a"), dir, "gone")
+      assert(Tables.t(spark, dir, "gone").count() == 3)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/gone.parquet"))
+      val e2 = intercept[AnalysisException](Tables.t(spark, dir, "gone"))
+      assert(e2.getCondition == "PATH_NOT_FOUND")
+    }
   }
 
   test("the cache holds one entry per table path across rewrites and conf changes") {
-    val dir = tempDir()
-    val path = s"$dir/t.parquet"
-    val before = Tables.cachedPaths.size
-    for (i <- 1 to 3) {
-      write(spark.range(i).selectExpr(Seq("id") ++ (1 to i).map(c => s"id as c$c"): _*), dir, "t")
-      assert(Tables.t(spark, dir, "t").columns.length == i + 1)
-      withConf("spark.sql.parquet.binaryAsString", (i % 2 == 0).toString) {
-        Tables.t(spark, dir, "t")
+    withTempDir("tables-spec") { tmp =>
+      val dir = tmp.toString
+      val path = s"$dir/t.parquet"
+      val before = Tables.cachedPaths.size
+      for (i <- 1 to 3) {
+        write(spark.range(i).selectExpr(Seq("id") ++ (1 to i).map(c => s"id as c$c"): _*), dir, "t")
+        assert(Tables.t(spark, dir, "t").columns.length == i + 1)
+        withConf("spark.sql.parquet.binaryAsString", (i % 2 == 0).toString) {
+          Tables.t(spark, dir, "t")
+        }
       }
+      assert(Tables.cachedPaths.contains(path))
+      assert(Tables.cachedPaths.size == before + 1)
     }
-    assert(Tables.cachedPaths.contains(path))
-    assert(Tables.cachedPaths.size == before + 1)
   }
 }

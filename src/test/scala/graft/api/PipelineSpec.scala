@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withTempDir}
 import graft.bench.Harness
 import graft.compile.{Compiler, GraphCodec}
 import graft.ir.PipelineOp._
@@ -120,42 +120,48 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("graph codec: save/load through Spark JSON preserves the pipeline") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ir").toString + "/g"
-    GraphCodec.save(spark, Flagship.graph, path)
-    val loaded = GraphCodec.load(spark, path)
-    assert(loaded.nodes.sortBy(_.id) == Flagship.graph.nodes.sortBy(_.id))
-    // ResumeDataset analogue: the reloaded graph compiles identically
-    assert(Compiler.compile(spark, loaded, sf).df.schema ==
-      Compiler.compile(spark, Flagship.graph, sf).df.schema)
+    withTempDir("graft-ir") { tmp =>
+      val path = tmp.toString + "/g"
+      GraphCodec.save(spark, Flagship.graph, path)
+      val loaded = GraphCodec.load(spark, path)
+      assert(loaded.nodes.sortBy(_.id) == Flagship.graph.nodes.sortBy(_.id))
+      // ResumeDataset analogue: the reloaded graph compiles identically
+      assert(Compiler.compile(spark, loaded, sf).df.schema ==
+        Compiler.compile(spark, Flagship.graph, sf).df.schema)
+    }
   }
 
   test("TfRecordSource: a pipeline starting at REAL TFRecord shards compiles, " +
     "runs, and codec-round-trips") {
     import spark.implicits._
     // stage a real TFRecord corpus (the reference pipelines' entry format)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ir-tfrec").toString
-    graft.sources.TfRecords.write(
-      (0L until 40L).map(i => f"$i%05d|payload".getBytes("UTF-8"))
-        .toDF("rec").repartition(2), "rec", dir)
-    // TFRecordDataset → map(parse) → filter — the canonical ingest prefix
-    val g = PipelineGraph(Seq(
-      PipelineNode(0, TfRecordSource(dir), Nil, parallelism = 2),
-      PipelineNode(1, MapE(Seq(
-        "cast(substring(cast(record as string), 1, 5) as bigint) as id")), Seq(0)),
-      PipelineNode(2, FilterE("id % 2 = 0"), Seq(1))), sink = 2)
-    val ids = Compiler.compile(spark, g, sf).df
-      .collect().map(_.getLong(0)).sorted
-    assert(ids.sameElements(0L until 40L by 2))
-    // source classification + parallelism surface mirror Scan's
-    assert(graft.ir.PipelineOp.isSource(TfRecordSource(dir)))
-    assert(graft.ir.PipelineOp.supportsParallelism(TfRecordSource(dir)))
-    // ResumeDataset analogue holds for the new source
-    val path = java.nio.file.Files.createTempDirectory("graft-ir-tfg").toString + "/g"
-    GraphCodec.save(spark, g, path)
-    val loaded = GraphCodec.load(spark, path)
-    assert(loaded.nodes.sortBy(_.id) == g.nodes.sortBy(_.id))
-    assert(Compiler.compile(spark, loaded, sf).df
-      .collect().map(_.getLong(0)).sorted.sameElements(ids))
+    withTempDir("graft-ir-tfrec") { tmp =>
+      val dir = tmp.toString
+      graft.sources.TfRecords.write(
+        (0L until 40L).map(i => f"$i%05d|payload".getBytes("UTF-8"))
+          .toDF("rec").repartition(2), "rec", dir)
+      // TFRecordDataset → map(parse) → filter — the canonical ingest prefix
+      val g = PipelineGraph(Seq(
+        PipelineNode(0, TfRecordSource(dir), Nil, parallelism = 2),
+        PipelineNode(1, MapE(Seq(
+          "cast(substring(cast(record as string), 1, 5) as bigint) as id")), Seq(0)),
+        PipelineNode(2, FilterE("id % 2 = 0"), Seq(1))), sink = 2)
+      val ids = Compiler.compile(spark, g, sf).df
+        .collect().map(_.getLong(0)).sorted
+      assert(ids.sameElements(0L until 40L by 2))
+      // source classification + parallelism surface mirror Scan's
+      assert(graft.ir.PipelineOp.isSource(TfRecordSource(dir)))
+      assert(graft.ir.PipelineOp.supportsParallelism(TfRecordSource(dir)))
+      // ResumeDataset analogue holds for the new source
+      withTempDir("graft-ir-tfg") { tmp =>
+        val path = tmp.toString + "/g"
+        GraphCodec.save(spark, g, path)
+        val loaded = GraphCodec.load(spark, path)
+        assert(loaded.nodes.sortBy(_.id) == g.nodes.sortBy(_.id))
+        assert(Compiler.compile(spark, loaded, sf).df
+          .collect().map(_.getLong(0)).sorted.sameElements(ids))
+      }
+    }
   }
 
   test("benchmark harness converges (AUTOTUNE state machine)") {

@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withTempDir}
 import org.scalatest.funsuite.AnyFunSuite
 
 class RecommendationSpec extends AnyFunSuite {
@@ -134,10 +134,12 @@ class RecommendationSpec extends AnyFunSuite {
   }
 
   test("to_graphviz writes a DOT file with the bottleneck highlighted") {
-    val p = java.nio.file.Files.createTempDirectory("graft-rec").resolve("stats.dot")
-    rec.toGraphviz(p.toString)
-    val dot = java.nio.file.Files.readString(p)
-    assert(dot.startsWith("digraph"))
-    assert(dot.contains("fillcolor"))
+    withTempDir("graft-rec") { tmp =>
+      val p = tmp.resolve("stats.dot")
+      rec.toGraphviz(p.toString)
+      val dot = java.nio.file.Files.readString(p)
+      assert(dot.startsWith("digraph"))
+      assert(dot.contains("fillcolor"))
+    }
   }
 }

@@ -1,33 +1,35 @@
 package graft.api
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withTempDir}
 import org.scalatest.funsuite.AnyFunSuite
 
 class RewriterSpec extends AnyFunSuite {
 
   test("rewriter loop: steps, parallelism bumps, CSV artifacts (§3.2)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-rw").toString
-    val (g1, steps) = Rewriter.run(spark, Flagship.graph, sf,
-      Rewriter.Config(numSteps = 3, benchIterations = 1, outDir = Some(out)))
-    assert(steps.size == 3)
-    assert(steps.forall(_.rate > 0))
-    assert(steps.forall(_.thetas.nonEmpty))
-    // at least one step bumped a node's parallelism
-    val bumped = steps.exists(_.action.startsWith("parallelism+"))
-    val fused = steps.exists(_.action.contains("fusion"))
-    assert(bumped || fused)
-    if (bumped) {
-      val totalPar = g1.nodes.map(_.parallelism).sum
-      assert(totalPar > Flagship.graph.nodes.map(_.parallelism).sum)
+    withTempDir("graft-rw") { tmp =>
+      val out = tmp.toString
+      val (g1, steps) = Rewriter.run(spark, Flagship.graph, sf,
+        Rewriter.Config(numSteps = 3, benchIterations = 1, outDir = Some(out)))
+      assert(steps.size == 3)
+      assert(steps.forall(_.rate > 0))
+      assert(steps.forall(_.thetas.nonEmpty))
+      // at least one step bumped a node's parallelism
+      val bumped = steps.exists(_.action.startsWith("parallelism+"))
+      val fused = steps.exists(_.action.contains("fusion"))
+      assert(bumped || fused)
+      if (bumped) {
+        val totalPar = g1.nodes.map(_.parallelism).sum
+        assert(totalPar > Flagship.graph.nodes.map(_.parallelism).sum)
+      }
+      // reference CSV artifacts (graph_rewrites.py:966-983)
+      val d = new java.io.File(out)
+      assert(new java.io.File(d, "benchmark_stats.csv").exists())
+      assert(new java.io.File(d, "node_stats_1.csv").exists())
+      assert(new java.io.File(d, "thetas_1.csv").exists())
+      val lines = scala.io.Source.fromFile(new java.io.File(d, "benchmark_stats.csv"))
+        .getLines().toSeq
+      assert(lines.head.startsWith("step,") && lines.size == 4)
     }
-    // reference CSV artifacts (graph_rewrites.py:966-983)
-    val d = new java.io.File(out)
-    assert(new java.io.File(d, "benchmark_stats.csv").exists())
-    assert(new java.io.File(d, "node_stats_1.csv").exists())
-    assert(new java.io.File(d, "thetas_1.csv").exists())
-    val lines = scala.io.Source.fromFile(new java.io.File(d, "benchmark_stats.csv"))
-      .getLines().toSeq
-    assert(lines.head.startsWith("step,") && lines.size == 4)
   }
 
   test("random_valid strategy is seeded-deterministic") {

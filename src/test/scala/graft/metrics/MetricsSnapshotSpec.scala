@@ -1,6 +1,6 @@
 package graft.metrics
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withTempDir}
 import graft.api.Flagship
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,16 +8,18 @@ class MetricsSnapshotSpec extends AnyFunSuite {
 
   test("stats snapshot round-trips and supports offline analysis") {
     val snap = MetricsSnapshot.capture(spark, Flagship.graph, sf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
-    MetricsSnapshot.save(spark, snap, dir)
-    val back = MetricsSnapshot.load(spark, dir)
-    assert(back.graph.nodes.sortBy(_.id) == snap.graph.nodes.sortBy(_.id))
-    assert(back.metrics == snap.metrics.sortBy(_.nodeId))
-    assert(back.global == snap.global)
-    assert(back.rowCount == snap.rowCount)
-    // offline recommendation from the reloaded snapshot (no re-run)
-    val rec = MetricsSnapshot.recommendation(back)
-    assert(rec.bottleneckNode().nonEmpty)
-    assert(rec.lpUpperBounds() > 0)
+    withTempDir("graft-snap") { tmp =>
+      val dir = tmp.toString
+      MetricsSnapshot.save(spark, snap, dir)
+      val back = MetricsSnapshot.load(spark, dir)
+      assert(back.graph.nodes.sortBy(_.id) == snap.graph.nodes.sortBy(_.id))
+      assert(back.metrics == snap.metrics.sortBy(_.nodeId))
+      assert(back.global == snap.global)
+      assert(back.rowCount == snap.rowCount)
+      // offline recommendation from the reloaded snapshot (no re-run)
+      val rec = MetricsSnapshot.recommendation(back)
+      assert(rec.bottleneckNode().nonEmpty)
+      assert(rec.lpUpperBounds() > 0)
+    }
   }
 }

@@ -1,7 +1,12 @@
 package graft.plans
 
 import graft.SparkTestSession.{sf, spark}
+import graft.ir._
+import graft.ir.PipelineOp._
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -334,12 +339,11 @@ class PlanQualitySpec extends AnyFunSuite {
       s"vec_id-partitioned WindowExec found in: ${offenders.mkString(", ")}")
   }
 
-  test("no COMPILED PIPELINE plans an unpartitioned WindowExec over a " +
-    "corpus-sized frame (r17 #2 — the vec_id rail's pattern generalized " +
-    "to Compiler output, covering the string-keyed zip that used to " +
-    "funnel through one partition)") {
-    import graft.ir._
-    import graft.ir.PipelineOp._
+  /** Compiled pipelines, each with its executed plan (AQE off, as for
+    * `built`): a numeric- and a STRING-keyed zip, flagship (`Batch`) and a
+    * length-bucketing `GroupByWindow`.
+    */
+  private lazy val compiledPlans: Seq[(String, SparkPlan)] = {
     val zips = Seq(
       // numeric primary
       ("zip_numeric", ZipOp(Seq("c_custkey"), Seq("s_suppkey")),
@@ -349,25 +353,58 @@ class PlanQualitySpec extends AnyFunSuite {
       ("zip_string", ZipOp(Seq("c_name", "c_custkey"), Seq("s_name", "s_suppkey")),
         Scan("customer", Seq("c_name", "c_custkey")),
         Scan("supplier", Seq("s_name", "s_suppkey"))))
+    val graphs =
+      zips.map { case (name, zip, l, r) =>
+        name -> PipelineGraph(
+          Seq(PipelineNode(0, l), PipelineNode(1, r),
+            PipelineNode(2, zip, Seq(0, 1))), sink = 2)
+      } ++ Seq(
+        "flagship" -> graft.api.Flagship.graph,
+        "group_by_window" -> PipelineGraph.chain(
+          Scan("documents"),
+          MapE(Seq("doc_id", "size(split(text, ' ')) as ntok")),
+          GroupByWindow("floor(ntok / 10D)", 4, Seq("doc_id"), Seq("max(ntok) as max_tok"))))
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val graphs =
-        zips.map { case (name, zip, l, r) =>
-          name -> PipelineGraph(
-            Seq(PipelineNode(0, l), PipelineNode(1, r),
-              PipelineNode(2, zip, Seq(0, 1))), sink = 2)
-        } :+ ("flagship" -> graft.api.Flagship.graph)
-      val offenders = graphs.flatMap { case (name, g) =>
-        graft.compile.Compiler.compile(spark, g, sf).df
-          .queryExecution.executedPlan.collect {
-            case w: WindowExec
-                if w.partitionSpec.isEmpty && !boundedBelow(name, w.child) =>
-              s"$name: global Window over unbounded input"
-          }
+    try graphs.map { case (name, g) =>
+      name -> graft.compile.Compiler.compile(spark, g, sf).df.queryExecution.executedPlan
+    }
+    finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+  }
+
+  test("no COMPILED PIPELINE plans an unpartitioned WindowExec over a " +
+    "corpus-sized frame (r17 #2 — the vec_id rail's pattern generalized " +
+    "to Compiler output, covering the string-keyed zip that used to " +
+    "funnel through one partition)") {
+    val offenders = compiledPlans.flatMap { case (name, plan) =>
+      plan.collect {
+        case w: WindowExec
+            if w.partitionSpec.isEmpty && !boundedBelow(name, w.child) =>
+          s"$name: global Window over unbounded input"
       }
-      assert(offenders.isEmpty, offenders.mkString("\n"))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("a compiled Batch and a compiled GroupByWindow shuffle once: one " +
+    "hash exchange feeds both the keyed window and its aggregate") {
+    val keyed = compiledPlans.filter { case (name, _) =>
+      Set("flagship", "group_by_window")(name) }
+    assert(keyed.size == 2)
+    keyed.foreach { case (name, plan) =>
+      // collect is pre-order: the first aggregate over the window is the
+      // final (key, window id) aggregate
+      val agg = plan.collect {
+        case a: BaseAggregateExec if a.find(_.isInstanceOf[WindowExec]).isDefined => a
+      }.headOption.getOrElse(fail(s"$name: no aggregate over a window"))
+      def hashExchanges(p: SparkPlan) = p.collect {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+      }
+      val window = agg.collectFirst { case w: WindowExec => w }.get
+      assert(hashExchanges(agg).size == 1,
+        s"$name: ${hashExchanges(agg).size} hash exchanges under the aggregate\n$agg")
+      assert(hashExchanges(window).size == 1, s"$name: the exchange is not below the window")
+    }
   }
 
   test("mm13/mm14 composed detection ingest plans: partition-local " +

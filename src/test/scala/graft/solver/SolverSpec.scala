@@ -182,4 +182,28 @@ class SolverSpec extends AnyFunSuite {
     assert(math.abs(f.predict(32.0, xs) - 400.0) < 25.0)
     assert(f.slope2 < f.slope1) // saturation flattens
   }
+
+  test("LP rows from traced metrics: per-core rates, θmax clamps, no row " +
+    "for an idle node, and nothing to allocate without a row") {
+    def m(id: Int, produced: Long, timeNs: Long, par: Boolean, p: Int = 1) =
+      graft.metrics.NodeMetrics(id, s"n$id", "MapE", p, produced, produced, timeNs,
+        0.0, isParallelizable = par, isSource = false, isRandom = false)
+    val ms = Seq(m(0, 1000, 2000000000L, par = true, p = 2), m(1, 1000, 0L, par = false),
+      m(2, 0, 5L, par = true), m(3, 500, 1000000000L, par = false))
+    // the rows perfbench's plumber workload builds for its component timings
+    val perfbench = ms.filter(_.elementsProduced > 0).map { m =>
+      OpRate(m.nodeId,
+        graft.plans.Analysis.expectedPerCoreMaxRate(m) match {
+          case x if x.isFinite => x
+          case _ => 1e12
+        },
+        0.0, if (m.isParallelizable) 4.0 else 1.0, m.parallelism.toDouble)
+    }
+    assert(opRates(ms, 4) == perfbench)
+    assert(opRates(ms, 4) == Seq(OpRate(0, 250.0, 0.0, 4.0, 2.0),
+      OpRate(1, 1e12, 0.0, 1.0, 1.0), OpRate(3, 500.0, 0.0, 1.0, 1.0)))
+    assert(opRates(ms, 4, naive = true).map(_.thetaMax) == Seq(4.0, 4.0, 4.0))
+    assert(solveMetrics(ms, 4) == solve(perfbench, 4.0))
+    assert(solveMetrics(ms.filter(_.elementsProduced == 0), 4) == Solution(Map.empty, 0.0, 0.0))
+  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestSession.{sf, spark}
+import graft.SparkTestSession.{sf, spark, withTempDir}
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
@@ -71,15 +71,17 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("idempotent foreachBatch sink: replay rewrites, never duplicates") {
-    val out = java.nio.file.Files.createTempDirectory("graft-sink").toString
-    StreamRunner.idempotentFileSink(spark, sf, out, "graft_sink_a")
-    val first = spark.read.parquet(out).count()
-    val expected = graft.Tables.events(spark, sf).count()
-    assert(first == expected)
-    // full replay (fresh query, no checkpoint): same batches overwrite
-    // their own partition dirs — row count must be unchanged
-    StreamRunner.idempotentFileSink(spark, sf, out, "graft_sink_b")
-    assert(spark.read.parquet(out).count() == expected)
+    withTempDir("graft-sink") { tmp =>
+      val out = tmp.toString
+      StreamRunner.idempotentFileSink(spark, sf, out, "graft_sink_a")
+      val first = spark.read.parquet(out).count()
+      val expected = graft.Tables.events(spark, sf).count()
+      assert(first == expected)
+      // full replay (fresh query, no checkpoint): same batches overwrite
+      // their own partition dirs — row count must be unchanged
+      StreamRunner.idempotentFileSink(spark, sf, out, "graft_sink_b")
+      assert(spark.read.parquet(out).count() == expected)
+    }
   }
 
   test("streaming sliding-window agg equals the batch st07 rendering") {
