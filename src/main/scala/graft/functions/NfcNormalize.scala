@@ -57,6 +57,5 @@ object NfcNormalize {
 
   /** Register `nfc_normalize` for SQL use on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SqlRegistry.registerOnce(spark, "nfc_normalize",
-      exprs => NfcNormalize(exprs.head))
+    SqlRegistry.registerOnce(spark, "nfc_normalize")
 }

@@ -131,11 +131,5 @@ object ReservoirSample {
     * not an eval NPE).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SqlRegistry.registerOnce(spark, "reservoir_sample",
-      exprs => ReservoirSample(
-        exprs(0),
-        LiteralArg.int("reservoir_sample", "n", exprs(1)),
-        if (exprs.size > 2) LiteralArg.long("reservoir_sample", "seed", exprs(2))
-        else 42L)
-        .toAggregateExpression())
+    SqlRegistry.registerOnce(spark, "reservoir_sample")
 }

@@ -21,14 +21,13 @@ object Similarity {
     * measures the shortlist-rerank recall — ranking in projected space
     * alone loses near-tie neighbors). `inDim` must match the vector
     * width (mismatched rows get NULL components from `dot_product`'s
-    * length guard). Callers need `DotProduct.register` — this method
-    * registers it.
+    * length guard).
     */
   def jlProject(df: DataFrame, vecCol: String, inDim: Int = 64,
       outDim: Int = 16, outCol: String = "projected"): DataFrame = {
     require(inDim >= 1 && outDim >= 1 && outDim <= inDim,
       s"need 1 <= outDim <= inDim, got inDim=$inDim outDim=$outDim")
-    DotProduct.register(df.sparkSession)
+    VectorFold.register(df.sparkSession)
     df.withColumn(outCol,
       org.apache.spark.sql.functions.expr(
         graft.operators.SimilarityOps.jlProjExpr(vecCol, inDim, outDim)))
@@ -43,7 +42,7 @@ object Similarity {
     */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("qe"))
     val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("ne"))
     graft.operators.SimilarityOps.rankedTopK(broadcast(q).crossJoin(c)
@@ -65,7 +64,7 @@ object Similarity {
       vecCol: String, k: Int, shortlist: Int = 50, dim: Int = 64): DataFrame = {
     require(k >= 1 && shortlist >= k,
       s"need 1 <= k <= shortlist, got k=$k shortlist=$shortlist")
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     import graft.operators.SimilarityOps
     SimilarityOps.rankedTopK(
       SimilarityOps.hammingShortlist(corpus, queries, idCol, vecCol, shortlist, dim),
@@ -94,8 +93,7 @@ object Similarity {
       minCosine: Double = 0.3, bucketCap: Int = 64, dim: Int = 64): DataFrame = {
     import graft.operators.SimilarityOps
     val spark = df.sparkSession
-    CosineSimilarity.register(spark)
-    DotProduct.register(spark)
+    VectorFold.register(spark)
     // in-plan guard: stays in the row path (unlike a droppable
     // assert_true column, which the optimizer would prune away)
     val guarded = when(col(vecCol).isNotNull && size(col(vecCol)) === dim,
@@ -131,8 +129,7 @@ object Similarity {
       idCol: String, vecCol: String, minCosine: Double = 0.3,
       bucketCap: Int = 64, dim: Int = 64): DataFrame = {
     import graft.operators.SimilarityOps
-    CosineSimilarity.register(bench.sparkSession)
-    DotProduct.register(bench.sparkSession)
+    VectorFold.register(bench.sparkSession)
     def codesOf(df: DataFrame) = df
       .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
       .selectExpr("vec_id",
@@ -157,7 +154,7 @@ object Similarity {
       centroids: DataFrame, queryPred: org.apache.spark.sql.Column,
       k: Int, nprobe: Int = 1): DataFrame = {
     import graft.operators.SimilarityOps
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     // evaluate the caller's predicate against THEIR column names, then
     // normalize — a pred like col("id") < 5 must resolve on the input
     // frame, not on the internally renamed one
@@ -212,7 +209,7 @@ object Similarity {
   def semDedupCells(corpus: DataFrame, cent: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       tau: Double = 0.3): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     graft.operators.SimilarityOps.semDedupCells(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
       cent, tau)
@@ -238,7 +235,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       tau: Double = 0.3, targetCellSize: Long = 1 << 14,
       maxRounds: Int = 4): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     graft.operators.SimilarityOps.semDedupCellsAdaptive(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
       cent, tau, targetCellSize, maxRounds)
@@ -261,7 +258,7 @@ object Similarity {
   def semDedupIncrement(kept: DataFrame, batch: DataFrame, cent: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       cellCol: String = "cell", tau: Double = 0.3): DataFrame = {
-    CosineSimilarity.register(batch.sparkSession)
+    VectorFold.register(batch.sparkSession)
     graft.operators.SimilarityOps.semDedupIncrement(
       kept.select(col(idCol).as("vec_id"), col(cellCol).as("cell"),
         col(vecCol).as("embedding")),
@@ -281,7 +278,7 @@ object Similarity {
   def semDedupTauSweep(corpus: DataFrame, cent: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       tauPcts: Seq[Int] = Seq(20, 30, 50, 70, 90)): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     graft.operators.SimilarityOps.semDedupTauSweep(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
       cent, tauPcts)
@@ -298,7 +295,7 @@ object Similarity {
     */
   def cellGeometry(corpus: DataFrame, cent: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     graft.operators.SimilarityOps.cellGeometry(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
       cent)
@@ -318,7 +315,7 @@ object Similarity {
   def semDedupSequential(corpus: DataFrame, cent: DataFrame,
       idCol: String = "vec_id", vecCol: String = "embedding",
       tau: Double = 0.3, parts: Int = 4): DataFrame = {
-    CosineSimilarity.register(corpus.sparkSession)
+    VectorFold.register(corpus.sparkSession)
     graft.operators.SimilarityOps.semDedupSequential(
       corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
       cent, tau, parts)
@@ -341,7 +338,7 @@ object Similarity {
   def bitextMarginMine(corpusA: DataFrame, corpusB: DataFrame,
       cent: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", k: Int = 4): DataFrame = {
-    CosineSimilarity.register(corpusA.sparkSession)
+    VectorFold.register(corpusA.sparkSession)
     graft.operators.SimilarityOps.bitextMarginMine(
       corpusA.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
       corpusB.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
@@ -399,7 +396,7 @@ object Similarity {
   def hybridTopK(docs: DataFrame, embeddings: DataFrame,
       terms: Seq[String] = TextOps.bm25DefaultTerms,
       qId: Long = 0L, k: Int = 20): DataFrame = {
-    CosineSimilarity.register(docs.sparkSession)
+    VectorFold.register(docs.sparkSession)
     graft.operators.SimilarityOps.rrfHybrid(docs, embeddings, terms, qId, k)
   }
 }

@@ -113,9 +113,5 @@ object WinnowFingerprints {
     * not an eval NPE).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    SqlRegistry.registerOnce(spark, "winnow_fps",
-      exprs => WinnowFingerprints(
-        exprs(0),
-        LiteralArg.int("winnow_fps", "k", exprs(1)),
-        LiteralArg.int("winnow_fps", "w", exprs(2))))
+    SqlRegistry.registerOnce(spark, "winnow_fps")
 }

@@ -54,8 +54,10 @@ object AudioCodec {
       peak: Long,   // max signed sample value
       sq_sum: Long) // Σ s² — energy of the decoded signal
 
-  /** REAL codec: WAV bytes → PCM frames (javax.sound.sampled). */
-  def features(id: Long, bytes: Array[Byte]): AudioFeatures = {
+  /** REAL codec: WAV bytes → signed 16-bit PCM samples
+    * (javax.sound.sampled; 16-bit mono little-endian only).
+    */
+  def samples(bytes: Array[Byte]): Array[Int] = {
     val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(bytes))
     val fmt = ais.getFormat
@@ -63,17 +65,16 @@ object AudioCodec {
       fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 && !fmt.isBigEndian,
       s"unexpected WAV format: $fmt")
     val data = ais.readAllBytes()
-    val n = data.length / 2
-    var peak = Long.MinValue
-    var sq = 0L
-    var i = 0
-    while (i < n) {
-      val s = ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort.toLong
-      if (s > peak) peak = s
-      sq += s * s
-      i += 1
-    }
-    AudioFeatures(id, n.toLong, peak, sq)
+    Array.tabulate(data.length / 2)(i =>
+      ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort.toInt)
+  }
+
+  /** Decoded statistics: a fold over [[samples]]. */
+  def features(id: Long, bytes: Array[Byte]): AudioFeatures = {
+    val smp = samples(bytes)
+    AudioFeatures(id, smp.length.toLong,
+      smp.foldLeft(Long.MinValue)((p, v) => math.max(p, v.toLong)),
+      smp.foldLeft(0L)((q, v) => q + v.toLong * v))
   }
 
   /** (doc_id, payload BINARY) view: synthetic WAVs for doc_id < n,
@@ -110,23 +111,7 @@ object AudioCodec {
       idCol: String = "doc_id", payloadCol: String = "payload"): Dataset[AudioSamples] = {
     import spark.implicits._
     in.select(idCol, payloadCol).as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.ByteArrayInputStream(bytes))
-        val fmt = ais.getFormat
-        require(
-          fmt.getSampleSizeInBits == 16 && fmt.getChannels == 1 && !fmt.isBigEndian,
-          s"unexpected WAV format: $fmt")
-        val data = ais.readAllBytes()
-        val n = data.length / 2
-        val smp = new Array[Int](n)
-        var i = 0
-        while (i < n) {
-          smp(i) = ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort.toInt
-          i += 1
-        }
-        AudioSamples(id, smp)
-      })
+      .mapPartitions(_.map { case (id, bytes) => AudioSamples(id, samples(bytes)) })
   }
 
   /** Energy-threshold VAD segments over a (doc_id, payload) WAV frame:

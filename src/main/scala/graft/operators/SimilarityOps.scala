@@ -7,11 +7,15 @@ import org.apache.spark.sql.functions._
   * brute-force cosine top-k as the exactness baseline, an IVF-bucketed
   * variant as the scale path, and embedding-cosine near-duplicate pairs.
   *
-  * Determinism: the Spark side scores with the native codegen
+  * Determinism: each vector kernel has one Spark rendering and one
+  * DuckDB fold. The Spark side scores with the native codegen
   * expressions `cosine_similarity`, `dot_product` and `l2_distance_sq`
-  * (graft.functions), which accumulate in ascending index order in
-  * double, the same IEEE add sequence as the DuckDB oracle's
-  * `list_reduce` left-folds; ordering ties break on vec_id.
+  * (graft.functions.VectorFold, registered together by
+  * `VectorFold.register`), which accumulate in ascending index order in
+  * double; the DuckDB side renders every kernel through [[duckFold]],
+  * the `list_reduce` left-fold with the same IEEE add sequence.
+  * Ordering ties break on vec_id. The oracles' centroid tables are
+  * [[duckTrainedCent]] and [[duckLabelCent]].
   *
   * Evaluation: every recall query measures its arm against one ground
   * truth built the same way. [[exactTopK]] is the brute-force top-k,
@@ -56,39 +60,38 @@ object SimilarityOps {
     */
   private[graft] val hotCellFloor = 256L
 
-  /** Left-fold dot product of two array columns, as double. The native
-    * codegen expression (graft.functions.DotProduct) replaces the HOF
-    * `aggregate(zip_with(...))` rendering: identical ascending-index
-    * IEEE accumulation, but allocation-free and inside whole-stage
-    * codegen. Queries using this must call `DotProduct.register`.
+  /** Spark renderings of the three kernels: the native codegen
+    * expressions of graft.functions.VectorFold (queries call
+    * `VectorFold.register`). Cosine over other element types or slices
+    * is [[sparkCosN]], composed of native dots.
     */
   private def sparkDot(a: String, b: String): String =
     s"dot_product($a, $b)"
-  private def duckDot(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, ${dim + 1}), " +
-      s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, v) -> acc + v)"
-
-  /** Spark side uses the native codegen expression (graft.functions.
-    * CosineSimilarity) — same ascending-index double accumulation as the
-    * SQL fold, so results stay bit-identical to the DuckDB oracle while
-    * fusing three folds into one allocation-free pass.
-    */
   private def sparkCos(a: String, b: String): String =
     s"cosine_similarity($a, $b)"
-
-  /** Squared-L2 distance, both renderings. Spark side uses the native
-    * codegen expression (graft.functions.L2DistanceSq) — same
-    * ascending-index double accumulation as the SQL zip_with fold, but
-    * allocation-free and inside whole-stage codegen (callers register
-    * it; lloydKMeans and rangeSearchL2 do). DuckDB side stays the
-    * left-fold, so the two engines agree bit-for-bit.
-    */
   private[graft] def sparkD2(a: String, b: String): String =
     s"l2_distance_sq($a, $b)"
+  private[graft] def sparkCosN(a: String, b: String): String =
+    s"${sparkDot(a, b)} / sqrt(${sparkDot(a, a)} * ${sparkDot(b, b)})"
+
+  /** DuckDB: the ascending-index left fold of `term` (over index `i`,
+    * 1..n) as DOUBLE, the IEEE add sequence every VectorFold kernel
+    * runs. Every DuckDB kernel below is this fold.
+    */
+  private def duckFold(n: Int, term: String): String =
+    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, ${n + 1}), " +
+      s"i -> $term)), (acc, v) -> acc + v)"
+  private def duckDot(a: String, b: String, n: Int = dim): String =
+    duckFold(n, s"$a[i]::DOUBLE * $b[i]::DOUBLE")
   private def duckD2(a: String, b: String): String =
-    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, ${dim + 1}), " +
-      s"i -> ($a[i]::DOUBLE - $b[i]::DOUBLE) * ($a[i]::DOUBLE - $b[i]::DOUBLE))), " +
-      "(acc, v) -> acc + v)"
+    duckFold(dim, s"($a[i]::DOUBLE - $b[i]::DOUBLE) * ($a[i]::DOUBLE - $b[i]::DOUBLE)")
+  /** Cosine over the fixture's `dim`; [[duckCosN]] is the n-dim form,
+    * which parenthesizes each dot.
+    */
+  private def duckCos(a: String, b: String): String =
+    s"${duckDot(a, b)} / sqrt(${duckDot(a, a)} * ${duckDot(b, b)})"
+  private def duckCosN(a: String, b: String, n: Int): String =
+    s"(${duckDot(a, b, n)}) / sqrt((${duckDot(a, a, n)}) * (${duckDot(b, b, n)}))"
 
   /** Per-cell decimal-exact mean centroids of `(cell, embedding)` rows —
     * trainedCentroids' aggregation keyed by an explicit cluster column
@@ -141,7 +144,7 @@ object SimilarityOps {
   private[graft] def lloydKMeans(e: org.apache.spark.sql.DataFrame,
       k: Int, iters: Int): org.apache.spark.sql.DataFrame = {
     require(k >= 1 && iters >= 1, s"need k >= 1 and iters >= 1, got k=$k iters=$iters")
-    graft.functions.L2DistanceSq.register(e.sparkSession)
+    graft.functions.VectorFold.register(e.sparkSession)
     def assign(centSql: String) = e.selectExpr(
       "vec_id", "embedding",
       s"array_min(transform($centSql, " +
@@ -190,8 +193,7 @@ object SimilarityOps {
     * dots in one codegen'd projection (no join, no shuffle). Plane
     * components are generated at width `d` (default: the fixture's 64),
     * so any embedding dimensionality gets real hyperplanes, not
-    * length-mismatch NULL dots. Callers must have run
-    * `DotProduct.register` on the session. Shared by the gated ss10
+    * length-mismatch NULL dots. Shared by the gated ss10
     * query and the public `Similarity.srpNearDup` API so the two can
     * never diverge.
     */
@@ -297,8 +299,6 @@ object SimilarityOps {
       .join(srpCappedBands(codesB, cap).toDF("b_id", "b", "key"), Seq("b", "key"))
       .select("a_id", "b_id")
       .distinct()
-  private def duckCos(a: String, b: String): String =
-    s"${duckDot(a, b)} / sqrt(${duckDot(a, a)} * ${duckDot(b, b)})"
 
   /** The fixture's deterministic codebook: each label's first vector
     * (by vec_id) as that cell's centroid — k-means-free so the oracle
@@ -324,11 +324,32 @@ object SimilarityOps {
   private[graft] def trainedCentroids(e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     centroidsOf(e.selectExpr("label as cell", "embedding"))
 
-  /** DuckDB rendering of one trained-centroid component (kept beside
+  /** DuckDB rendering of a trained centroid: the per-dimension
+    * decimal-exact mean list of the grouped `embedding` rows (kept beside
     * the Spark rendering above so the two can't drift).
     */
-  private def duckCentDim(i: Int): String =
-    s"CAST(CAST(SUM(CAST(embedding[$i]::DOUBLE AS DECIMAL(28,8))) AS DOUBLE) / count(*) AS FLOAT)"
+  private def duckCentVec: String = (1 to dim).map(i =>
+    s"CAST(CAST(SUM(CAST(embedding[$i]::DOUBLE AS DECIMAL(28,8))) AS DOUBLE) / count(*) AS FLOAT)")
+    .mkString("[", ", ", "]")
+
+  /** DuckDB twin of [[trainedCentroids]]: the `cent(cell, ce)` CTE over
+    * the embeddings rows matching `where` (all rows when empty).
+    */
+  private def duckTrainedCent(where: String = ""): String =
+    s"""cent AS (
+       |  SELECT label AS cell,
+       |    $duckCentVec AS ce
+       |  FROM embeddings ${if (where.isEmpty) "" else s"WHERE $where "}GROUP BY label)""".stripMargin
+
+  /** DuckDB twin of [[labelCentroids]]: the `cent(cell, ce)` CTE of each
+    * label's first vector.
+    */
+  private def duckLabelCent: String =
+    """cent AS (
+      |  SELECT label AS cell, embedding AS ce FROM (
+      |    SELECT label, embedding,
+      |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
+      |    FROM embeddings) WHERE rn = 1)""".stripMargin
 
   /** IVF top-k search over a corpus with a supplied centroid table
     * `cent(cell, ce)`: ONE scored pass against the BROADCAST centroids
@@ -396,7 +417,7 @@ object SimilarityOps {
       queryPred: org.apache.spark.sql.Column,
       radius: Double): org.apache.spark.sql.DataFrame = {
     require(radius > 0, s"radius must be positive, got $radius")
-    graft.functions.L2DistanceSq.register(e.sparkSession)
+    graft.functions.VectorFold.register(e.sparkSession)
     val dev = e.selectExpr("vec_id", "label as cell", "embedding")
       .join(broadcast(cent), "cell")
       .selectExpr("vec_id", "cell", "embedding",
@@ -427,7 +448,7 @@ object SimilarityOps {
   private[graft] def embedNearDupPairs(s: org.apache.spark.sql.SparkSession,
       e: org.apache.spark.sql.DataFrame,
       threshold: Double = 0.3): org.apache.spark.sql.DataFrame = {
-    graft.functions.CosineSimilarity.register(s)
+    graft.functions.VectorFold.register(s)
     // a probes block(a) and block(a)+1; b sits in block(b). Since
     // 0 < b-a <= 25 implies block(b) ∈ {block(a), block(a)+1}, each
     // qualifying pair matches on exactly one block key (no dup pairs).
@@ -454,7 +475,6 @@ object SimilarityOps {
     * within-cell ε-pruning) — dd14 is the transitive CC flavor over a
     * blocked global pair graph; the two answer different curation
     * questions (greedy per-cell thinning vs full near-dup clustering).
-    * Callers must have run `CosineSimilarity.register`.
     *
     * Scale notes (100 TB): the codebook broadcasts (k rows); cell
     * assignment is one scored pass (the audited ivfSearch shape); the
@@ -793,7 +813,7 @@ object SimilarityOps {
     require(targetCellSize >= 2, s"targetCellSize must be >= 2, got $targetCellSize")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val spark = e.sparkSession
-    graft.functions.L2DistanceSq.register(spark)
+    graft.functions.VectorFold.register(spark)
     var assign = semDedupAssign(
       e, cent.selectExpr("cast(cell as bigint) as cell", "ce")).persist()
     assign.count()
@@ -908,7 +928,7 @@ object SimilarityOps {
          |SELECT q_id, CAST(rn AS BIGINT) AS rank, n_id FROM (
          |  SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id ORDER BY cs DESC, n_id) AS rn
          |  FROM s) WHERE rn <= 5""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -923,11 +943,7 @@ object SimilarityOps {
     // only the query's cell for top-3.
     Q(
       "ss02_ann_ivf",
-      s"""WITH cent AS (
-         |  SELECT label AS cell, embedding AS ce FROM (
-         |    SELECT label, embedding,
-         |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-         |    FROM embeddings) WHERE rn = 1),
+      s"""WITH $duckLabelCent,
          |  scored AS (
          |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -943,7 +959,7 @@ object SimilarityOps {
          |    row_number() OVER (PARTITION BY q_id
          |      ORDER BY ${duckCos("qe", "ne")} DESC, n_id) AS rn
          |  FROM cand) WHERE rn <= 3""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       // nprobe=1: each query probes only its own assigned cell
       ivfSearch(e, labelCentroids(e), col("vec_id") < 5, k = 3, nprobe = 1)
@@ -1002,11 +1018,7 @@ object SimilarityOps {
     // cell assignment and the query probe list (persisted, consumed twice).
     Q(
       "ss05_ann_nprobe2",
-      s"""WITH cent AS (
-         |  SELECT label AS cell, embedding AS ce FROM (
-         |    SELECT label, embedding,
-         |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-         |    FROM embeddings) WHERE rn = 1),
+      s"""WITH $duckLabelCent,
          |  scored AS (
          |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -1024,7 +1036,7 @@ object SimilarityOps {
          |    row_number() OVER (PARTITION BY q_id
          |      ORDER BY ${duckCos("qe", "ne")} DESC, n_id) AS rn
          |  FROM cand) WHERE rn <= 3""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       ivfSearch(e, labelCentroids(e), col("vec_id") < 5, k = 3, nprobe = 2)
     },
@@ -1096,11 +1108,7 @@ object SimilarityOps {
     // deterministic, so even the recall VALUES are oracle-exact.
     Q(
       "ss08_ivf_recall",
-      s"""WITH cent AS (
-         |  SELECT label AS cell, embedding AS ce FROM (
-         |    SELECT label, embedding,
-         |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-         |    FROM embeddings) WHERE rn = 1),
+      s"""WITH $duckLabelCent,
          |  scored AS (
          |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -1116,7 +1124,7 @@ object SimilarityOps {
          |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3),
          |  ${duckExactCte(3, duckCos)}
          |${duckRecallSelect("ivf", 3)}""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val assign = topCells(e, labelCentroids(e), 1, Seq("vec_id"))
         .select("vec_id", "cell")
@@ -1195,9 +1203,9 @@ object SimilarityOps {
          |    FROM adc) WHERE rn <= 3),
          |  q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
          |        WHERE vec_id < 5),
-         |  ${duckExactCte(3, duckDot)}
+         |  ${duckExactCte(3, duckDot(_, _))}
          |${duckRecallSelect("pq", 3)}""".stripMargin) { (s, d) =>
-      graft.functions.DotProduct.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val ex = e
         .select(col("vec_id"), posexplode(col("embedding")))
@@ -1288,8 +1296,7 @@ object SimilarityOps {
          |FROM cand JOIN embeddings ea ON ea.vec_id = cand.a_id
          |          JOIN embeddings eb ON eb.vec_id = cand.b_id
          |WHERE ${duckCos("ea.embedding", "eb.embedding")} > 0.3""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
-      graft.functions.DotProduct.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val codes = e.selectExpr("vec_id", s"${srpCodeExpr("embedding")} as code")
       val cand = srpBandPairs(codes, cap = 64)
@@ -1353,10 +1360,7 @@ object SimilarityOps {
     // persisted at N×nprobe rows, candidates only from probed cells).
     Q(
       "ss11_ivf_trained_recall",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings GROUP BY label),
+      s"""WITH ${duckTrainedCent()},
          |  scored AS (
          |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -1374,7 +1378,7 @@ object SimilarityOps {
          |    WHERE e.vec_id <> q.q_id) WHERE rn <= 3),
          |  ${duckExactCte(3, duckCos)}
          |${duckRecallSelect("ivf", 3)}""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       val ivf = ivfSearch(e, trainedCentroids(e), col("vec_id") < 5,
         k = 3, nprobe = 2)
@@ -1445,10 +1449,7 @@ object SimilarityOps {
     // hash-sample only (the one ranking window, bounded by design).
     Q(
       "ss13_ivfpq_recall",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings GROUP BY label),
+      s"""WITH ${duckTrainedCent()},
          |  scored AS (
          |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -1502,10 +1503,9 @@ object SimilarityOps {
          |    FROM adc) WHERE rn <= 3),
          |  q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings
          |        WHERE vec_id < 5),
-         |  ${duckExactCte(3, duckDot)}
+         |  ${duckExactCte(3, duckDot(_, _))}
          |${duckRecallSelect("pq", 3)}""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
-      graft.functions.DotProduct.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       // lazily persisted: genuinely TWO consumers here (the topCells
       // broadcast and the exploded cd table), and with no eager count
@@ -1622,8 +1622,7 @@ object SimilarityOps {
          |                 JOIN embeddings e ON e.vec_id = t.n_id) WHERE rn <= 3),
          |  ${duckExactCte(3, duckCos)}
          |${duckRecallSelect("jl", 3)}""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
-      graft.functions.DotProduct.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val p = e.selectExpr("vec_id", "embedding",
         s"${jlProjExpr("embedding")} as pe")
@@ -1662,7 +1661,7 @@ object SimilarityOps {
          |  FROM embeddings e CROSS JOIN c0 c),
          |m1 AS (SELECT vec_id, embedding, cell FROM a1 WHERE rn = 1),
          |c1 AS (
-         |  SELECT cell, ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
+         |  SELECT cell, $duckCentVec AS ce
          |  FROM m1 GROUP BY cell),
          |a2 AS (
          |  SELECT e.vec_id, c.cell, ${duckD2("e.embedding", "c.ce")} AS d2,
@@ -1768,11 +1767,7 @@ object SimilarityOps {
              |FROM exact x LEFT JOIN ivf$k i ON i.q_id = x.q_id AND i.n_id = x.n_id
              |GROUP BY x.q_id""".stripMargin
         }.mkString("\nUNION ALL ")
-        s"""WITH cent AS (
-           |  SELECT label AS cell, embedding AS ce FROM (
-           |    SELECT label, embedding,
-           |      row_number() OVER (PARTITION BY label ORDER BY vec_id) AS rn
-           |    FROM embeddings) WHERE rn = 1),
+        s"""WITH $duckLabelCent,
            |  scored AS (
            |    ${duckCellRanks()}),
            |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -1784,7 +1779,7 @@ object SimilarityOps {
            |  ${duckExactCte(3, duckCos)}
            |$armSelects""".stripMargin
       }) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val scored = topCells(e, labelCentroids(e), 3, Seq("vec_id"))
         .persist() // feeds assignment + all three probe lists; caller clearCache releases
@@ -1865,7 +1860,7 @@ object SimilarityOps {
          |  rc AS (${duckRecallSelect("rr", 3)})
          |SELECT r.q_id, h.n_cand, h.ham_min, h.ham_max, r.n_hit, r.recall_x100
          |FROM rc r JOIN hs h ON h.q_id = r.q_id""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val sl = hammingShortlist(e, e.filter(col("vec_id") < 5),
         "vec_id", "embedding", shortlist = 50)
@@ -1918,7 +1913,7 @@ object SimilarityOps {
            |  ${duckExactCte(3, duckCos)}
            |$armSelects""".stripMargin
       }) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val sl = hammingShortlist(e, e.filter(col("vec_id") < 5),
           "vec_id", "embedding", shortlist = 50)
@@ -1974,6 +1969,7 @@ object SimilarityOps {
            |FROM top t LEFT JOIN truth x ON x.q_id = t.q_id AND x.n_id = t.n_id
            |GROUP BY t.d""".stripMargin
       }) { (s, d) =>
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
@@ -2018,10 +2014,7 @@ object SimilarityOps {
     // back.
     Q(
       "ss22_index_staleness",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings WHERE vec_id % 2 = 0 GROUP BY label),
+      s"""WITH ${duckTrainedCent("vec_id % 2 = 0")},
          |  a AS (
          |    ${duckCellRanks(extra = Seq("e.vec_id % 2 AS era"))}),
          |  cnt AS (SELECT cell,
@@ -2036,7 +2029,7 @@ object SimilarityOps {
          |  1000000::HUGEINT * abs(CAST(n1 AS HUGEINT) * t0 - CAST(n0 AS HUGEINT) * t1)
          |    // (CAST(t0 AS HUGEINT) * t1) > 20000 AS stale
          |FROM cnt CROSS JOIN t""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       val cent = centroidsOf(e.filter(col("vec_id") % 2 === 0)
         .selectExpr("label as cell", "embedding"))
@@ -2119,7 +2112,7 @@ object SimilarityOps {
          |JOIN nrel r ON r.q_id = t.q_id
          |LEFT JOIN ncand c ON c.q_id = t.q_id
          |GROUP BY t.q_id, r.n_rel, c.n_cand""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       val cent = e.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cell"), col("embedding").as("ce"))
@@ -2190,7 +2183,7 @@ object SimilarityOps {
          |  CAST(CASE WHEN min(CASE WHEN nl = ql THEN rnk END) IS NULL THEN 0
          |       ELSE 1000000 // min(CASE WHEN nl = ql THEN rnk END) END AS BIGINT) AS mrr_x1e6
          |FROM r GROUP BY q_id""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d)
       val q = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
@@ -2227,10 +2220,7 @@ object SimilarityOps {
     // Semantics + scale contract live on `semDedupCells` above.
     Q(
       "ss25_semdedup_cells",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings GROUP BY label),
+      s"""WITH ${duckTrainedCent()},
          |  scored AS (
          |    ${duckCellRanks(extra = Seq("e.embedding"))}),
          |  assign AS (SELECT vec_id, embedding, cell FROM scored WHERE rn = 1),
@@ -2245,7 +2235,7 @@ object SimilarityOps {
          |  d.keeper
          |FROM assign s LEFT JOIN dom d ON d.vec_id = s.vec_id""".stripMargin) {
       (s, d) =>
-        graft.functions.CosineSimilarity.register(s)
+        graft.functions.VectorFold.register(s)
         val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
         semDedupCells(e, trainedCentroids(e), tau = 0.3)
     },
@@ -2265,10 +2255,7 @@ object SimilarityOps {
       "ss26_semdedup_increment",
       s"""WITH corp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 400),
          |  bat AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 400),
-         |  cent AS (
-         |    SELECT label AS cell,
-         |      ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |    FROM embeddings WHERE vec_id < 400 GROUP BY label),
+         |  ${duckTrainedCent("vec_id < 400")},
          |  cscored AS (
          |    ${duckCellRanks("corp", Seq("e.embedding"))}),
          |  cassign AS (SELECT vec_id, embedding, cell FROM cscored WHERE rn = 1),
@@ -2300,7 +2287,7 @@ object SimilarityOps {
          |  d.keeper
          |FROM bassign s LEFT JOIN dom d ON d.vec_id = s.vec_id""".stripMargin) {
       (s, d) =>
-        graft.functions.CosineSimilarity.register(s)
+        graft.functions.VectorFold.register(s)
         val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
         val corpus = e.filter(col("vec_id") < 400)
         val batch = e.filter(col("vec_id") >= 400)
@@ -2333,10 +2320,7 @@ object SimilarityOps {
     // that τ by construction (dom > τ ⟺ ∃ lower-id τ-similar cell-mate).
     Q(
       "ss27_semdedup_tau_sweep",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings GROUP BY label),
+      s"""WITH ${duckTrainedCent()},
          |  scored AS (
          |    ${duckCellRanks(extra = Seq("e.embedding"))}),
          |  assign AS (SELECT vec_id, embedding, cell FROM scored WHERE rn = 1),
@@ -2358,7 +2342,7 @@ object SimilarityOps {
          |    OR v.dom <= t.tau_pct / 100.0) AS kept
          |FROM t CROSS JOIN v GROUP BY t.tau_pct""".stripMargin) {
       (s, d) =>
-        graft.functions.CosineSimilarity.register(s)
+        graft.functions.VectorFold.register(s)
         val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
         semDedupTauSweep(e, trainedCentroids(e), Seq(20, 30, 50, 70, 90))
     },
@@ -2373,10 +2357,7 @@ object SimilarityOps {
     // paying the pair stage: one scored pass + a k-row rollup.
     Q(
       "ss28_cell_geometry",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings GROUP BY label),
+      s"""WITH ${duckTrainedCent()},
          |  scored AS (
          |    ${duckCellRanks()}),
          |  assign AS (SELECT vec_id, cell FROM scored WHERE rn = 1),
@@ -2388,7 +2369,7 @@ object SimilarityOps {
          |    THEN 1 ELSE 0 END AS hot
          |FROM sizes s CROSS JOIN t CROSS JOIN kk""".stripMargin) {
       (s, d) =>
-        graft.functions.CosineSimilarity.register(s)
+        graft.functions.VectorFold.register(s)
         val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
         cellGeometry(e, trainedCentroids(e))
     },
@@ -2408,10 +2389,7 @@ object SimilarityOps {
     // engines).
     Q(
       "ss29_bitext_margin",
-      s"""WITH cent AS (
-         |  SELECT label AS cell,
-         |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-         |  FROM embeddings GROUP BY label),
+      s"""WITH ${duckTrainedCent()},
          |  scored AS (
          |    ${duckCellRanks(extra = Seq("e.embedding"))}),
          |  asg AS (SELECT vec_id, embedding, cell FROM scored WHERE rn = 1),
@@ -2439,7 +2417,7 @@ object SimilarityOps {
          |  CAST((2 * t.cq * 1000000) // (ax.ak + bx.bk) AS BIGINT) AS margin_x1e6
          |FROM best t JOIN ax ON ax.a_id = t.a_id
          |  JOIN bx ON bx.b_id = t.b_id""".stripMargin) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       bitextMarginMine(
         e.filter(col("vec_id") % 2 === 0).select("vec_id", "embedding"),
@@ -2624,10 +2602,7 @@ object SimilarityOps {
          |    WHERE a.batch = $b AND d$b.vec_id IS NULL)""".stripMargin
     }
     val doms = (0 until parts).map(b => s"SELECT * FROM d$b").mkString("\n    UNION ALL ")
-    s"""WITH cent AS (
-       |  SELECT label AS cell,
-       |    ${(1 to dim).map(duckCentDim).mkString("[", ", ", "]")} AS ce
-       |  FROM embeddings GROUP BY label),
+    s"""WITH ${duckTrainedCent()},
        |  scored AS (
        |    ${duckCellRanks(extra = Seq("e.embedding"))}),
        |  asg AS (SELECT vec_id, embedding, cell, CAST(vec_id % $parts AS INT) AS batch
@@ -2797,7 +2772,7 @@ object SimilarityOps {
 
   /** RRF hybrid fusion machinery shared by the gated ss17 query and
     * `Similarity.hybridTopK` (the API delegates HERE so the two can't
-    * diverge). Callers must have run `CosineSimilarity.register`.
+    * diverge).
     */
   private[graft] def rrfHybrid(docs: org.apache.spark.sql.DataFrame,
       e: org.apache.spark.sql.DataFrame, terms: Seq[String],
@@ -2873,9 +2848,8 @@ object SimilarityOps {
 
   /** Spark SQL: the `pd`-dim JL projection of `vecCol` as an array of
     * native `dot_product` calls against inlined ±1 literal rows — one
-    * codegen'd scan projection, zero shuffle. Callers must have run
-    * `DotProduct.register`. Shared by the gated ss14 query and
-    * `Similarity.jlProject`.
+    * codegen'd scan projection, zero shuffle. Shared by the gated ss14
+    * query and `Similarity.jlProject`.
     */
   private[graft] def jlProjExpr(vecCol: String, d: Int = dim,
       pd: Int = 16): String =
@@ -2891,23 +2865,6 @@ object SimilarityOps {
   private def duckJlProj(a: String, d: Int = dim, pd: Int = 16): String =
     (0 until pd).map { j =>
       val lits = (1 to d).map(i => jlSign(j, i).toString).mkString(", ")
-      s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, ${d + 1}), " +
-        s"i -> $a[i]::DOUBLE * ([$lits])[i]::DOUBLE)), (acc, v) -> acc + v)"
+      duckDot(a, s"([$lits])", d)
     }.mkString("list_value(", ", ", ")")
-
-  /** n-dim cosine over DOUBLE arrays via explicit HOF folds (the
-    * projected vectors are doubles, not the fixture's floats) — same
-    * ascending-index accumulation as `duckCosN`, the fn05-proven
-    * rendering pair.
-    */
-  private def sparkDotN(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> cast(x as double) * cast(y as double)), " +
-      "cast(0 as double), (acc, v) -> acc + v)"
-  private def sparkCosN(a: String, b: String): String =
-    s"(${sparkDotN(a, b)}) / sqrt((${sparkDotN(a, a)}) * (${sparkDotN(b, b)}))"
-  private def duckDotN(a: String, b: String, n: Int): String =
-    s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, ${n + 1}), " +
-      s"i -> $a[i]::DOUBLE * $b[i]::DOUBLE)), (acc, v) -> acc + v)"
-  private def duckCosN(a: String, b: String, n: Int): String =
-    s"(${duckDotN(a, b, n)}) / sqrt((${duckDotN(a, a, n)}) * (${duckDotN(b, b, n)}))"
 }

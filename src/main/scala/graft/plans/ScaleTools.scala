@@ -41,14 +41,9 @@ object Bucketing {
   */
 object BloomPrefilter {
 
-  def register(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    graft.functions.SqlRegistry.registerOnce(spark, "bloom_filter_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)).toAggregateExpression())
-    graft.functions.SqlRegistry.registerOnce(spark, "might_contain",
-      exprs => new BloomFilterMightContain(exprs(0), exprs(1)))
-  }
+  def register(spark: SparkSession): Unit =
+    Seq("bloom_filter_agg", "might_contain")
+      .foreach(graft.functions.SqlRegistry.registerOnce(spark, _))
 
   private val viewCounter = new java.util.concurrent.atomic.AtomicLong()
 

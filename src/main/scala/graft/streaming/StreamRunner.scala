@@ -650,7 +650,7 @@ object StreamRunner {
       queryName: String = "graft_semdedup"): DataFrame = owned { tmp =>
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import spark.implicits._
-    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.VectorFold.register(spark)
     val tau = 0.3
     val e = graft.Tables.embeddings(spark, sfDir)
       .select("vec_id", "label", "embedding")

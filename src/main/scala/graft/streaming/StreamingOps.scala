@@ -541,7 +541,7 @@ object StreamingOps {
     Q(
       "st16_stream_semdedup",
       graft.operators.SimilarityOps.sequentialOracleSql(4, 0.3)) { (s, d) =>
-      graft.functions.CosineSimilarity.register(s)
+      graft.functions.VectorFold.register(s)
       val e = T.embeddings(s, d).select("vec_id", "label", "embedding")
       graft.operators.SimilarityOps.semDedupSequential(
         e, graft.operators.SimilarityOps.trainedCentroids(e), 0.3, 4)

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.tools.Probe.fmtBytes
 import org.apache.spark.sql.functions._
 
 /** Flood smoke for the adaptive hot-cell splitter (VERDICT r17 #6): the
@@ -22,12 +23,6 @@ import org.apache.spark.sql.functions._
   * (replaced in place on re-run; never touches other sections).
   */
 object AdaptiveFloodSmoke {
-
-  private def fmt(b: Long): String =
-    if (b >= (1L << 30)) f"${b / (1024.0 * 1024 * 1024)}%.2f GiB"
-    else if (b >= (1L << 20)) f"${b / (1024.0 * 1024)}%.1f MiB"
-    else if (b >= (1L << 10)) f"${b / 1024.0}%.1f KiB"
-    else s"$b B"
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
@@ -90,7 +85,7 @@ object AdaptiveFloodSmoke {
     def timed(tag: String)(leg: => Leg): Leg = {
       val r = leg
       println(f"[flood] $tag: rows=${r.rows} pairs=${r.pairs} " +
-        f"shuffle=${fmt(r.shuffle)} wall=${r.wall}%.1f s cells=${r.cells} " +
+        f"shuffle=${fmtBytes(r.shuffle)} wall=${r.wall}%.1f s cells=${r.cells} " +
         f"maxCell=${r.maxCell} hot=${r.hot}")
       r
     }
@@ -119,7 +114,7 @@ object AdaptiveFloodSmoke {
     def row(tag: String, l1: Leg, l10: Leg, l100: Leg): String =
       f"| $tag | ${l1.pairs} / ${l10.pairs} / ${l100.pairs} | " +
         f"${l100.pairs.toDouble / math.max(l1.pairs, 1L)}%.0fx | " +
-        f"${fmt(l1.shuffle)} / ${fmt(l10.shuffle)} / ${fmt(l100.shuffle)} | " +
+        f"${fmtBytes(l1.shuffle)} / ${fmtBytes(l10.shuffle)} / ${fmtBytes(l100.shuffle)} | " +
         f"${l1.wall}%.1f / ${l10.wall}%.1f / ${l100.wall}%.1f s | " +
         f"${l1.maxCell} / ${l10.maxCell} / ${l100.maxCell} | " +
         f"${l1.hot}/${l10.hot}/${l100.hot} |\n"
@@ -163,10 +158,10 @@ object AdaptiveFloodSmoke {
       else cleaned.substring(0, insertAt) + sb.toString +
         cleaned.substring(insertAt)
     java.nio.file.Files.writeString(path, out)
-    println(f"plain   1x/10x shuffle ${fmt(p1.shuffle)} -> ${fmt(pN.shuffle)} " +
+    println(f"plain   1x/10x shuffle ${fmtBytes(p1.shuffle)} -> ${fmtBytes(pN.shuffle)} " +
       f"(${pN.shuffle.toDouble / math.max(p1.shuffle, 1L)}%.1fx), " +
       f"maxCell ${p1.maxCell} -> ${pN.maxCell}, hot ${p1.hot}/${pN.hot}")
-    println(f"adaptive 1x/10x shuffle ${fmt(a1.shuffle)} -> ${fmt(aN.shuffle)} " +
+    println(f"adaptive 1x/10x shuffle ${fmtBytes(a1.shuffle)} -> ${fmtBytes(aN.shuffle)} " +
       f"(${aN.shuffle.toDouble / math.max(a1.shuffle, 1L)}%.1fx), " +
       f"maxCell ${a1.maxCell} -> ${aN.maxCell}, hot ${a1.hot}/${aN.hot}")
     spark.stop()

@@ -51,6 +51,15 @@ object Probe {
 
   def median(xs: Seq[Double]): Double = quantile(xs, 0.5)
 
+  /** A byte count in the largest binary unit it reaches (B, KiB, MiB, GiB),
+    * the unit every SCALE.md table prints.
+    */
+  def fmtBytes(b: Long): String =
+    if (b >= (1L << 30)) f"${b / (1024.0 * 1024 * 1024)}%.2f GiB"
+    else if (b >= (1L << 20)) f"${b / (1024.0 * 1024)}%.1f MiB"
+    else if (b >= (1L << 10)) f"${b / 1024.0}%.1f KiB"
+    else s"$b B"
+
   /** A plan's text with everything that moves between runs of the same
     * plan taken out, so two renderings of one plan compare equal and a
     * diff shows only plan changes. Counters (expression and plan ids,

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.metrics.StageMetricsListener
+import graft.tools.Probe.fmtBytes
 import org.apache.spark.sql.functions._
 
 /** sf1-equivalent smoke for the heavy query family (VERDICT r5 #7): all
@@ -145,10 +146,6 @@ object ScaleSmoke {
     def ccPaths(cc1: Int, ccN: Int): String =
       (for (a <- ShuffleAudit.ccPath(cc1); b <- ShuffleAudit.ccPath(ccN))
         yield s" (CC path 1x: $a; ${copies}x: $b)").getOrElse("")
-    def fmt(b: Long): String =
-      if (b >= (1L << 20)) f"${b / 1048576.0}%.1f MiB"
-      else if (b >= 1024) f"${b / 1024.0}%.1f KiB" else s"$b B"
-
     // (shuffleWrite, spill, wall, rows, ccRounds) — ccRounds is the
     // star-round count when the query drove connectedComponents, else -1.
     // `shufflePartitions` sizes the leg's reduce side (None = the
@@ -268,10 +265,10 @@ object ScaleSmoke {
         val (sN, spN, dtN, rN, ccN) = run(name, dir, Some(nxParts))
         val sRatio = if (s1 > 0) f"${sN.toDouble / s1}%.1fx" else "n/a"
         val wRatio = if (dt1 > 0) f"${dtN / dt1}%.1fx" else "n/a"
-        sb ++= s"| $name | $r1 / $rN | ${fmt(s1)} | ${fmt(sN)} | $sRatio " +
-          f"| ${fmt(spN)} | $dt1%.1f s | $dtN%.1f s | $wRatio " +
+        sb ++= s"| $name | $r1 / $rN | ${fmtBytes(s1)} | ${fmtBytes(sN)} | $sRatio " +
+          f"| ${fmtBytes(spN)} | $dt1%.1f s | $dtN%.1f s | $wRatio " +
           s"| $claim${ccPaths(cc1, ccN)} |\n"
-        println(f"$name subset done: ${fmt(sN)} shuffle, ${fmt(spN)} spill, " +
+        println(f"$name subset done: ${fmtBytes(sN)} shuffle, ${fmtBytes(spN)} spill, " +
           f"$dtN%.1f s ($wRatio wall)")
       }
       writeSection(sb.toString, subsetKind = true)
@@ -310,9 +307,9 @@ object ScaleSmoke {
         }
       if (cc1 >= 0 && ccN >= 0) ccRounds += ((name, cc1, ccN, dt1, dtN))
       val ratio = if (s1 > 0) f"${sN.toDouble / s1}%.1f" + "x" else "n/a"
-      sb ++= s"| $name | $r1 / $rN | ${fmt(s1)} | ${fmt(sN)} | $ratio " +
-        f"| ${fmt(spN)} | $dtN%.1f s | $claim${ccPaths(cc1, ccN)} |\n"
-      println(s"$name done: ${fmt(sN)} shuffle, ${fmt(spN)} spill")
+      sb ++= s"| $name | $r1 / $rN | ${fmtBytes(s1)} | ${fmtBytes(sN)} | $ratio " +
+        f"| ${fmtBytes(spN)} | $dtN%.1f s | $claim${ccPaths(cc1, ccN)} |\n"
+      println(s"$name done: ${fmtBytes(sN)} shuffle, ${fmtBytes(spN)} spill")
     }
     // Diameter-independence, measured: alternating large-star/small-star
     // converges in ~log n rounds, so 10× the data must NOT mean 10× the
@@ -373,8 +370,8 @@ object ScaleSmoke {
     sb ++= s"\n### Cluster-once at ${copies}x: the audit reads labels, not corpus\n\n"
     sb ++= "| fixture | corpus parquet | label table | audit scan | scan/corpus |\n"
     sb ++= "|---|---|---|---|---|\n"
-    sb ++= f"| 1x | ${fmt(cb1)} | ${fmt(lb1)} | ${fmt(as1)} | ${as1.toDouble / cb1}%.4f |\n"
-    sb ++= f"| ${copies}x | ${fmt(cbN)} | ${fmt(lbN)} | ${fmt(asN)} | ${asN.toDouble / cbN}%.4f |\n"
+    sb ++= f"| 1x | ${fmtBytes(cb1)} | ${fmtBytes(lb1)} | ${fmtBytes(as1)} | ${as1.toDouble / cb1}%.4f |\n"
+    sb ++= f"| ${copies}x | ${fmtBytes(cbN)} | ${fmtBytes(lbN)} | ${fmtBytes(asN)} | ${asN.toDouble / cbN}%.4f |\n"
     sb ++= s"\nAt ${copies}x the audit's scan grows with the label table " +
       "(longs/doc), and its corpus fraction shrinks — repeat audits never " +
       "pay corpus-scan cost again.\n"
@@ -389,7 +386,7 @@ object ScaleSmoke {
     // k=10 codebook means batch cells grow with the batch — the k∝N
     // telemetry for THAT lives in the ss25 geometry section; production
     // retrains the codebook as the corpus absorbs batches.)
-    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.VectorFold.register(spark)
     val incCorpus = graft.Tables.embeddings(spark, sfDir)
       .select("vec_id", "label", "embedding").filter(col("vec_id") < 400)
     val incCent = graft.operators.SimilarityOps.trainedCentroids(incCorpus)
@@ -424,8 +421,8 @@ object ScaleSmoke {
     sb ++= "| fixture | batch rows | admitted | kept corpus reps | ingest shuffle | wall |\n"
     sb ++= "|---|---|---|---|---|---|\n"
     val keptRows = spark.read.parquet(keptPath).count()
-    sb ++= f"| 1x | $ib1 | $ia1 | $keptRows | ${fmt(ish1)} | $iw1%.1f s |\n"
-    sb ++= f"| ${copies}x | $ibN | $iaN | $keptRows | ${fmt(ishN)} | $iwN%.1f s |\n"
+    sb ++= f"| 1x | $ib1 | $ia1 | $keptRows | ${fmtBytes(ish1)} | $iw1%.1f s |\n"
+    sb ++= f"| ${copies}x | $ibN | $iaN | $keptRows | ${fmtBytes(ishN)} | $iwN%.1f s |\n"
     sb ++= f"\nThe batch grew ${ibN.toDouble / ib1}%.1fx and ingest shuffle moved " +
       f"${ishN.toDouble / math.max(ish1, 1L)}%.1fx — the corpus enters only as its " +
       s"$keptRows saved reps (identical in both rows), so re-admitting " +

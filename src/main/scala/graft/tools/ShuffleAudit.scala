@@ -1,5 +1,7 @@
 package graft.tools
 
+import graft.tools.Probe.fmtBytes
+
 /** Emits SCALE.md — measured per-query byte flows (input read, shuffle
   * write, spill) at a given scale factor, as evidence for the repo's
   * scale claims: dedup/LSH queries must shuffle KILOBYTES of signatures
@@ -165,11 +167,6 @@ object ShuffleAudit {
     val spark = graft.Session.local(8)
 
     val byName = graft.SparkEntry.all.map(q => q.name -> q).toMap
-    def fmt(b: Long): String =
-      if (b >= (1L << 20)) f"${b / 1048576.0}%.1f MiB"
-      else if (b >= 1024) f"${b / 1024.0}%.1f KiB"
-      else s"$b B"
-
     // Bytes ADDRESSED by the plan's parquet scans after partition pruning
     // (ScanFileListing.totalFileSize) — the task-metric bytesRead counter
     // under-reports for codegen'd parquet scans, and the addressed size is
@@ -217,8 +214,8 @@ object ShuffleAudit {
         if (input > 0) f"${l.shuffleWriteBytes.toDouble / input}%.4f"
         else "n/a"
       val path = ccPath(graft.functions.Dedup.lastCcRounds).fold("")("; CC path: " + _)
-      sb ++= s"| $name | ${fmt(input)} | ${fmt(l.shuffleWriteBytes)} " +
-        s"| ${fmt(l.spillBytes)} | $ratio | $claim$path |\n"
+      sb ++= s"| $name | ${fmtBytes(input)} | ${fmtBytes(l.shuffleWriteBytes)} " +
+        s"| ${fmtBytes(l.spillBytes)} | $ratio | $claim$path |\n"
     }
     sb ++= "\ntx12's shuffle/scan ratio was re-examined (VERDICT r5 #6; recorded in\n"
     sb ++= "`OPTIMIZATION_r19.md`, \"Re-adjudications and negative results\"):\n"
@@ -282,8 +279,8 @@ object ShuffleAudit {
       graft.functions.Dedup.lastCcRounds = -1
       val l = Probe.measure(spark)(q.fn(spark, floodDir)).metrics
       val path = ccPath(graft.functions.Dedup.lastCcRounds).fold("")("; CC path: " + _)
-      sb ++= s"| $name | $plainRows | $rows | ${fmt(l.shuffleWriteBytes)} " +
-        s"| ${fmt(l.spillBytes)} | $claim$path |\n"
+      sb ++= s"| $name | $plainRows | $rows | ${fmtBytes(l.shuffleWriteBytes)} " +
+        s"| ${fmtBytes(l.spillBytes)} | $claim$path |\n"
     }
 
     // Cluster-once / audit-many: materialize the (doc_id, cluster_id)
@@ -306,10 +303,10 @@ object ShuffleAudit {
     sb ++= "run against the SAVED table. Its scan is the label table, not the\n"
     sb ++= "corpus — the shape every repeat audit takes at 100 TB.\n\n"
     sb ++= "| measurement | bytes |\n|---|---|\n"
-    sb ++= s"| documents corpus (what the inline recompute scans) | ${fmt(corpusScan)} |\n"
-    sb ++= s"| audit scan (saved label table) | ${fmt(auditScan)} |\n"
-    sb ++= s"| audit shuffle write | ${fmt(auditL.shuffleWriteBytes)} |\n"
-    sb ++= s"| audit spill | ${fmt(auditL.spillBytes)} |\n"
+    sb ++= s"| documents corpus (what the inline recompute scans) | ${fmtBytes(corpusScan)} |\n"
+    sb ++= s"| audit scan (saved label table) | ${fmtBytes(auditScan)} |\n"
+    sb ++= s"| audit shuffle write | ${fmtBytes(auditL.shuffleWriteBytes)} |\n"
+    sb ++= s"| audit spill | ${fmtBytes(auditL.spillBytes)} |\n"
 
     // preserve ScaleSmoke's `## Derived …` sections: the two tools share
     // SCALE.md, and a full-table regeneration must not silently wipe the

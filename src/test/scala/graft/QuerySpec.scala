@@ -20,6 +20,19 @@ class QuerySpec extends AnyFunSuite {
     }
   }
 
+  test("every query registers the SQL functions it calls") {
+    // the shared session carries every function an earlier query
+    // registered; a new session (same context) carries none
+    val unresolved = SparkEntry.all.flatMap { q =>
+      try { q.fn(spark.newSession(), sf); None }
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "UNRESOLVED_ROUTINE" => Some(s"${q.name}: ${e.getMessage}")
+      } finally spark.catalog.clearCache()
+    }
+    assert(unresolved.isEmpty, unresolved.mkString("\n"))
+  }
+
   test("entry() smoke: flagship rows > 0") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -5,18 +5,26 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("cosine_similarity is available via SparkSessionExtensions injection") {
+  /** Runs `body` on a new session (same SparkContext) built with
+    * GraftExtensions. getOrCreate returns the default session and ignores
+    * withExtensions, so the defaults are cleared first, then restored.
+    */
+  private def withExtensionSession(body: SparkSession => Unit): Unit = {
     val prev = graft.SparkTestSession.spark // ensure the shared context exists
-    // getOrCreate returns the default session and ignores withExtensions,
-    // so clear the defaults to force a genuinely new session (same
-    // SparkContext), then restore.
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    try {
-      val ext = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new GraftExtensions)
-        .getOrCreate()
+    try body(SparkSession.builder()
+      .master("local[4]")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate())
+    finally {
+      SparkSession.setDefaultSession(prev)
+      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  test("cosine_similarity is available via SparkSessionExtensions injection") {
+    withExtensionSession { ext =>
       val r = ext.sql(
         "select cosine_similarity(array(cast(3.0 as float)), array(cast(7.0 as float))) as c")
         .head().getDouble(0)
@@ -31,9 +39,30 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val d2 = ext.sql(
         "select l2_distance_sq(embedding, embedding) as d from emb3").collect()
       d2.foreach(row => assert(row.getDouble(0) == 0.0))
-    } finally {
-      SparkSession.setDefaultSession(prev)
-      SparkSession.setActiveSession(prev)
+    }
+  }
+
+  test("the extension-built session resolves every registered SQL function") {
+    // one minimal query per name in the function table, and its answer
+    def call(name: String): (String, Any) = name match {
+      case "cosine_similarity" =>
+        "select cosine_similarity(array(cast(3.0 as float)), array(cast(7.0 as float)))" -> 1.0
+      case "dot_product" => "select dot_product(array(2.0d), array(3.0d))" -> 6.0
+      case "l2_distance_sq" => "select l2_distance_sq(array(2.0d), array(5.0d))" -> 9.0
+      case "winnow_fps" => "select size(winnow_fps('abcdefgh', 3, 2)) > 0" -> true
+      case "reservoir_sample" => "select size(reservoir_sample(id, 2)) from range(5)" -> 2
+      case "nfc_normalize" => "select nfc_normalize('e\u0301')" -> "\u00e9"
+      case "bloom_filter_agg" =>
+        "select bloom_filter_agg(id, 10L, 100L) is not null from range(10)" -> true
+      case "might_contain" =>
+        "select might_contain((select bloom_filter_agg(id, 10L, 100L) from range(10)), 5L)" -> true
+      case other => fail(s"no minimal call for $other")
+    }
+    withExtensionSession { ext =>
+      SqlRegistry.functions.map(_._1).foreach { name =>
+        val (sql, want) = call(name)
+        assert(ext.sql(sql).head().get(0) == want, s"$name: $sql")
+      }
     }
   }
 

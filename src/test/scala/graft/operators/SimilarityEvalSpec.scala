@@ -53,8 +53,7 @@ class SimilarityEvalSpec extends AnyFunSuite {
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   private def register(): Unit = {
-    graft.functions.CosineSimilarity.register(spark)
-    graft.functions.DotProduct.register(spark)
+    graft.functions.VectorFold.register(spark)
   }
 
   private val scores = Seq(

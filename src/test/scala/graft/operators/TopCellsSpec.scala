@@ -35,7 +35,7 @@ class TopCellsSpec extends AnyFunSuite {
   test("topCells ≡ the row_number window over random vectors, " +
     "duplicate-cosine ties, and NaN scores — both the argmax (n=1) and " +
     "sorted-slice (n>1) paths") {
-    graft.functions.CosineSimilarity.register(spark)
+    graft.functions.VectorFold.register(spark)
     val rnd = new scala.util.Random(17)
     val vecs = (0L until 60L).map { i =>
       val v: Seq[Float] =
