@@ -54,9 +54,9 @@ object Compiler {
           if (node.parallelism > 1) spark.range(0, n, 1, node.parallelism).toDF()
           else spark.range(n).toDF()
         case TfRecordSource(p) =>
-          // shard files are the natural splits (one binaryFile task per
-          // shard); parallelism > 1 re-spreads records when the shard
-          // count undercuts the requested fan-out
+          // shard files are the natural splits (size-balanced bins of
+          // shards, one bin per task); parallelism > 1 re-spreads records
+          // when the shard count undercuts the requested fan-out
           val recs = graft.sources.TfRecords.read(spark, p)
           if (node.parallelism > 1) recs.repartition(node.parallelism) else recs
         case MapE(exprs, _)   => in().selectExpr(exprs: _*)

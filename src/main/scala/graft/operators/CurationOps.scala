@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{Portable => P, Q, Tables => T}
 import graft.functions.TextOps
+import graft.sources.{TfRecords => TR}
 import org.apache.spark.sql.functions._
 
 /** The corpus-curation LEDGER: the whole pre-training data-curation pass
@@ -597,14 +598,14 @@ object CurationOps {
       val recs = T.documents(s, d).select(col("doc_id"), col("text"))
         .join(assign.select("doc_id", "shard_id"), "doc_id")
         .selectExpr("shard_id",
-          "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec")
+          s"${TR.DocRecord.encodeSql} as rec")
       val path = Scratch.dir("graft-equal-mass-export")
-      graft.sources.TfRecords.writeSharded(recs, "rec", "shard_id", 8, path)
-      val back = graft.sources.TfRecords.read(s, path)
+      TR.writeSharded(recs, "rec", "shard_id", 8, path)
+      val back = TR.read(s, path)
         .selectExpr(
           // part-00003.tfrecord → 3: the file name IS the shard id
-          "cast(substring(file, 6, 5) as bigint) as shard_id",
-          "length(substring(cast(record as string), 21)) as chars")
+          s"${TR.fileShardIdSql} as shard_id",
+          s"length(${TR.DocRecord.textSql("record")}) as chars")
       // Single-pass audit (VERDICT r14 #3): the grand total derives from
       // the numShards-row rollup itself via a global window — the export
       // is scanned ONCE (a second shard read for the total doubles a
@@ -671,15 +672,15 @@ object CurationOps {
           // tieCols — ord ties across sources within a shard)
           "lpad(cast(ord as string), 12, '0') as okey",
           "doc_id",
-          "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec")
+          s"${TR.DocRecord.encodeSql} as rec")
       val path = Scratch.dir("graft-curriculum-export")
-      graft.sources.TfRecords.writeShardedSorted(
+      TR.writeShardedSorted(
         recs, "rec", "shard_id", "okey", 8, path, tieCols = Seq("doc_id"))
-      graft.sources.TfRecords.read(s, path)
+      TR.read(s, path)
         .selectExpr(
-          "cast(substring(file, 6, 5) as bigint) as shard_id",
+          s"${TR.fileShardIdSql} as shard_id",
           "rec_idx + 1 as pos",
-          "cast(substring(cast(record as string), 1, 19) as bigint) as doc_id")
+          s"${TR.DocRecord.idSql("record")} as doc_id")
         .groupBy("shard_id")
         .agg(
           count(lit(1)).cast("long").as("n_docs"),
@@ -717,10 +718,10 @@ object CurationOps {
       val recs = T.documents(s, d).select(col("doc_id"), col("text"))
         .join(assign.select("doc_id", "shard_id"), "doc_id")
         .selectExpr("shard_id",
-          "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec")
+          s"${TR.DocRecord.encodeSql} as rec")
       val path = Scratch.dir("graft-manifest-export")
-      graft.sources.TfRecords.writeSharded(recs, "rec", "shard_id", 8, path)
-      graft.sources.TfRecords.readManifest(s, path)
+      TR.writeSharded(recs, "rec", "shard_id", 8, path)
+      TR.readManifest(s, path)
         .selectExpr("shard as shard_id", "n_records", "payload_bytes",
           "framed_bytes")
     },
@@ -835,18 +836,18 @@ object CurationOps {
           s"least((8 * (pos - 1)) div $total, 7) as shard_id",
           "lpad(cast(pos as string), 19, '0') as okey",
           "doc_id",
-          "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec")
+          s"${TR.DocRecord.encodeSql} as rec")
       val path = Scratch.dir("graft-epoch-ordered-export")
       // pos is already unique (the Ordinal's rank), but declaring the
       // doc_id tie makes the reproducible-layout contract structural
       // rather than an invariant the caller has to know
-      graft.sources.TfRecords.writeShardedSorted(
+      TR.writeShardedSorted(
         recs, "rec", "shard_id", "okey", 8, path, tieCols = Seq("doc_id"))
-      graft.sources.TfRecords.read(s, path)
+      TR.read(s, path)
         .selectExpr(
-          "cast(substring(file, 6, 5) as bigint) as shard_id",
+          s"${TR.fileShardIdSql} as shard_id",
           "rec_idx + 1 as pos",
-          "cast(substring(cast(record as string), 1, 19) as bigint) as doc_id")
+          s"${TR.DocRecord.idSql("record")} as doc_id")
         .groupBy("shard_id")
         .agg(
           count(lit(1)).cast("long").as("n_docs"),

@@ -498,15 +498,15 @@ object HeadlineQueries {
         |  CAST(min(doc_id) AS BIGINT) AS first_id,
         |  CAST(max(doc_id) AS BIGINT) AS last_id
         |FROM documents""".stripMargin) { (s, d) =>
+      import graft.sources.TfRecords.{DocRecord => Doc}
       val path = Scratch.dir("graft-tfrec-docs")
       graft.sources.TfRecords.write(
-        T.documents(s, d).repartition(8).selectExpr(
-          "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec"),
+        T.documents(s, d).repartition(8).selectExpr(s"${Doc.encodeSql} as rec"),
         "rec", path)
       graft.sources.TfRecords.read(s, path)
         .selectExpr(
-          "cast(substring(cast(record as string), 1, 19) as bigint) as doc_id",
-          "substring(cast(record as string), 21) as text")
+          s"${Doc.idSql("record")} as doc_id",
+          s"${Doc.textSql("record")} as text")
         .agg(
           count(lit(1)).cast("long").as("n"),
           sum("doc_id").cast("long").as("id_sum"),

@@ -542,24 +542,11 @@ object MultimodalOps {
       val path = Scratch.dir("graft-tfex-ssd")
       val encoded = ImageCodec.payloads(s, d, 64).as[(Long, Array[Byte])]
         .map { case (id, png) =>
-          val w = 16 + id % 5
-          val h = 12 + id % 7
-          val k = (1 + id % 3).toInt
-          val boxes = (0 until k).map { i =>
-            val xmin = (id * 3 + 5 * i) % (w - 4)
-            val ymin = (id * 7 + 3 * i) % (h - 4)
-            (xmin, ymin, xmin + 1 + (id + i) % 4, ymin + 1 + (id + 2 * i) % 4,
-              (id + i) % 10)
-          }
           TfExample.encode(Seq(
             "image/encoded" -> TfExample.Feature(bytes = Seq(png)),
             "image/format" -> TfExample.Feature(bytes = Seq("PNG".getBytes("UTF-8"))),
-            "image/source_id" -> TfExample.Feature(longs = Seq(id)),
-            "image/object/bbox/xmin" -> TfExample.Feature(longs = boxes.map(_._1)),
-            "image/object/bbox/ymin" -> TfExample.Feature(longs = boxes.map(_._2)),
-            "image/object/bbox/xmax" -> TfExample.Feature(longs = boxes.map(_._3)),
-            "image/object/bbox/ymax" -> TfExample.Feature(longs = boxes.map(_._4)),
-            "image/object/class/label" -> TfExample.Feature(longs = boxes.map(_._5))))
+            "image/source_id" -> TfExample.Feature(longs = Seq(id))) ++
+            DetectionBox.features(DetectionBox.boxes(id, 16 + id % 5, 12 + id % 7)))
         }
         .toDF("rec")
       TfRecords.write(encoded.repartition(4), "rec", path)
@@ -569,28 +556,10 @@ object MultimodalOps {
           val id = TfExample.int64(m, "image/source_id", -1L)
           val img = ImageCodec.decodeImage(m("image/encoded").bytes.head)
           val (w, h) = (img.getWidth.toLong, img.getHeight.toLong)
-          val xs = TfExample.int64List(m, "image/object/bbox/xmin")
-          val ys = TfExample.int64List(m, "image/object/bbox/ymin")
-          val xe = TfExample.int64List(m, "image/object/bbox/xmax")
-          val ye = TfExample.int64List(m, "image/object/bbox/ymax")
-          val lb = TfExample.int64List(m, "image/object/class/label")
-          xs.indices.map { i =>
-            // the crop: real pixel reads off the decoded image, summed
-            // over [xmin, xmax) × [ymin, ymax) — the gray channel of the
-            // lossless PNG (all three channels carry it)
-            var cropSum = 0L
-            var y = ys(i)
-            while (y < ye(i)) {
-              var x = xs(i)
-              while (x < xe(i)) {
-                cropSum += (img.getRGB(x.toInt, y.toInt) & 0xff).toLong
-                x += 1
-              }
-              y += 1
-            }
-            (id, i.toLong, lb(i), (xe(i) - xs(i)) * (ye(i) - ys(i)), cropSum,
-              1000000L * xs(i) / w, 1000000L * ys(i) / h,
-              1000000L * xe(i) / w, 1000000L * ye(i) / h)
+          DetectionBox.decode(m).zipWithIndex.map { case (b, i) =>
+            (id, i.toLong, b.label, b.area, b.cropSum(img),
+              1000000L * b.xmin / w, 1000000L * b.ymin / h,
+              1000000L * b.xmax / w, 1000000L * b.ymax / h)
           }
         })
         .toDF("doc_id", "box_idx", "label", "area", "crop_sum",
@@ -713,32 +682,23 @@ object MultimodalOps {
           val (w, h) = dims(id)
           val png = grayPng(w, h,
             (x, y) => ((id * 31 + 7L * x + 13L * y) % 256).toInt)
-          val k = (1 + id % 3).toInt
-          val boxes = (0 until k).map { i =>
-            val xmin = (id * 3 + 5 * i) % (w - 4)
-            val ymin = (id * 7 + 3 * i) % (h - 4)
-            (xmin, ymin, xmin + 1 + (id + i) % 4, ymin + 1 + (id + 2 * i) % 4,
-              (id + i) % 10, if ((id + i) % 5 == 0) 1L else 0L)
-          }
+          val boxes = DetectionBox.boxes(id, w, h)
           // one FULL-SIZE PNG mask per instance: 255 on the parity
           // checkerboard INSIDE the instance's box, 0 elsewhere — the
           // decoder must recover geometry from pixels, not metadata
-          val masks = boxes.zipWithIndex.map { case ((x0, y0, x1, y1, _, _), i) =>
+          val masks = boxes.zipWithIndex.map { case (b, i) =>
             grayPng(w, h, (x, y) =>
-              if (x >= x0 && x < x1 && y >= y0 && y < y1 &&
+              if (x >= b.xmin && x < b.xmax && y >= b.ymin && y < b.ymax &&
                 (x + y + id + i) % 2 == 0) 255 else 0)
           }
           (TfExample.encode(Seq(
             "image/encoded" -> TfExample.Feature(bytes = Seq(png)),
             "image/format" -> TfExample.Feature(bytes = Seq("PNG".getBytes("UTF-8"))),
-            "image/source_id" -> TfExample.Feature(longs = Seq(id)),
-            "image/object/bbox/xmin" -> TfExample.Feature(longs = boxes.map(_._1)),
-            "image/object/bbox/ymin" -> TfExample.Feature(longs = boxes.map(_._2)),
-            "image/object/bbox/xmax" -> TfExample.Feature(longs = boxes.map(_._3)),
-            "image/object/bbox/ymax" -> TfExample.Feature(longs = boxes.map(_._4)),
-            "image/object/class/label" -> TfExample.Feature(longs = boxes.map(_._5)),
-            "image/object/is_crowd" -> TfExample.Feature(longs = boxes.map(_._6)),
-            "image/object/mask" -> TfExample.Feature(bytes = masks))), w > h)
+            "image/source_id" -> TfExample.Feature(longs = Seq(id))) ++
+            DetectionBox.features(boxes) ++ Seq(
+              "image/object/is_crowd" -> TfExample.Feature(longs =
+                boxes.indices.map(i => if ((id + i) % 5 == 0) 1L else 0L)),
+              "image/object/mask" -> TfExample.Feature(bytes = masks))), w > h)
         })
         .toDF("rec", "hor")
       TfRecords.write(encoded.filter(col("hor")).select("rec")
@@ -755,46 +715,31 @@ object MultimodalOps {
           val m = TfExample.decode(rec)
           val id = TfExample.int64(m, "image/source_id", -1L)
           val img = ImageCodec.decodeImage(m("image/encoded").bytes.head)
-          val xs = TfExample.int64List(m, "image/object/bbox/xmin")
-          val ys = TfExample.int64List(m, "image/object/bbox/ymin")
-          val xe = TfExample.int64List(m, "image/object/bbox/xmax")
-          val ye = TfExample.int64List(m, "image/object/bbox/ymax")
-          val lb = TfExample.int64List(m, "image/object/class/label")
+          val boxes = DetectionBox.decode(m)
           val cw = TfExample.int64List(m, "image/object/is_crowd")
           val maskBytes = m("image/object/mask").bytes
           // skip_crowd gather: survivors re-pack into dense slots
-          val kept = xs.indices.filter(i => cw(i) == 0L)
+          val kept = boxes.indices.filter(i => cw(i) == 0L)
           val rows = kept.zipWithIndex.map { case (i, slot) =>
+            val b = boxes(i)
             val mask = ImageCodec.decodeImage(maskBytes(i))
-            var cropSum = 0L
-            var maskPx = 0L
-            var y = ys(i)
-            while (y < ye(i)) {
-              var x = xs(i)
-              while (x < xe(i)) {
-                cropSum += (img.getRGB(x.toInt, y.toInt) & 0xff).toLong
-                if ((mask.getRGB(x.toInt, y.toInt) & 0xff) > 0) maskPx += 1
-                x += 1
-              }
-              y += 1
-            }
+            def on(x: Long, y: Long): Long =
+              if ((mask.getRGB(x.toInt, y.toInt) & 0xff) > 0) 1L else 0L
             // crop_gt_masks' fixed-size resize, as a deterministic 8x8
             // nearest-neighbor resample of the cropped mask
-            val bw = xe(i) - xs(i); val bh = ye(i) - ys(i)
+            val bw = b.xmax - b.xmin; val bh = b.ymax - b.ymin
             var nn8 = 0L
             var jj = 0
             while (jj < 8) {
               var ii = 0
               while (ii < 8) {
-                val sx = xs(i) + ii * bw / 8
-                val sy = ys(i) + jj * bh / 8
-                if ((mask.getRGB(sx.toInt, sy.toInt) & 0xff) > 0) nn8 += 1
+                nn8 += on(b.xmin + ii * bw / 8, b.ymin + jj * bh / 8)
                 ii += 1
               }
               jj += 1
             }
-            (id, slot.toLong, src, lb(i),
-              (xe(i) - xs(i)) * (ye(i) - ys(i)), cropSum, maskPx, nn8)
+            (id, slot.toLong, src, b.label, b.area, b.cropSum(img),
+              b.fold(on), nn8)
           }
           // pad_to_fixed_size: MAX_NUM_INSTANCES = 4, pad value -1
           val pads = (kept.size until 4).map(slot =>
@@ -805,6 +750,63 @@ object MultimodalOps {
           "mask_px", "mask_nn8")
     }
   )
+
+  /** mm13/mm14's detection-box codec: the closed-form boxes off
+    * (doc_id, instance), 1-3 per doc and strictly inside a w×h image;
+    * their `image/object/bbox/{xmin,ymin,xmax,ymax}` and `class/label`
+    * features on encode and int64 lists on decode; the pixel fold over a
+    * box.
+    */
+  private object DetectionBox {
+    final case class Box(xmin: Long, ymin: Long, xmax: Long, ymax: Long,
+        label: Long) {
+      def area: Long = (xmax - xmin) * (ymax - ymin)
+
+      /** Σ f(x, y) over [xmin, xmax) × [ymin, ymax). */
+      def fold(f: (Long, Long) => Long): Long = {
+        var acc = 0L
+        var y = ymin
+        while (y < ymax) {
+          var x = xmin
+          while (x < xmax) {
+            acc += f(x, y)
+            x += 1
+          }
+          y += 1
+        }
+        acc
+      }
+
+      /** The crop: real pixel reads off the decoded image, summed over
+        * the box — the gray channel of the lossless PNG (all three
+        * channels carry it).
+        */
+      def cropSum(img: java.awt.image.BufferedImage): Long =
+        fold((x, y) => (img.getRGB(x.toInt, y.toInt) & 0xff).toLong)
+    }
+
+    private val keys = Seq("image/object/bbox/xmin", "image/object/bbox/ymin",
+      "image/object/bbox/xmax", "image/object/bbox/ymax",
+      "image/object/class/label")
+
+    def boxes(id: Long, w: Long, h: Long): Seq[Box] =
+      (0 until (1 + id % 3).toInt).map { i =>
+        val xmin = (id * 3 + 5 * i) % (w - 4)
+        val ymin = (id * 7 + 3 * i) % (h - 4)
+        Box(xmin, ymin, xmin + 1 + (id + i) % 4, ymin + 1 + (id + 2 * i) % 4,
+          (id + i) % 10)
+      }
+
+    def features(bs: Seq[Box]): Seq[(String, graft.sources.TfExample.Feature)] =
+      keys.zip(Seq[Box => Long](_.xmin, _.ymin, _.xmax, _.ymax, _.label)).map {
+        case (k, f) => k -> graft.sources.TfExample.Feature(longs = bs.map(f))
+      }
+
+    def decode(m: Map[String, graft.sources.TfExample.Feature]): Seq[Box] = {
+      val Seq(xs, ys, xe, ye, lb) = keys.map(graft.sources.TfExample.int64List(m, _))
+      xs.indices.map(i => Box(xs(i), ys(i), xe(i), ye(i), lb(i)))
+    }
+  }
 
   /** Hamming distance to the PREVIOUS doc (by doc_id) without ordering
     * the row frame globally: rows band on `doc_id div 16` and chain

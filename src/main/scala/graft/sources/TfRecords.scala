@@ -57,10 +57,22 @@ private[graft] class SerializableHadoopConf(
   * before writing to set the shard size, and interleave many shards
   * on read. Both CRCs are verified on every record —
   * corruption surfaces as an exception, never as silent truncation.
+  *
+  * Each format decision lives in exactly one place here: one record
+  * walk ([[RecordWalk]] — every strict or lenient read, over a buffer or
+  * a shard, and every stats or CRC fold), one shard-name codec
+  * ([[shardFile]] / [[shardId]] / [[fileShardIdSql]]), one marker-file
+  * reader and writer (`_manifest.json`, `_layout.json`), one commit path
+  * ([[commitShards]] for every writer, [[writeShards]] for both sharded
+  * ones), and one document framing ([[DocRecord]]) for the corpus
+  * exports that carry documents as records.
   */
 object TfRecords {
 
   private val maskDelta = 0xa282ead8L
+
+  private val ManifestMarker = "_manifest.json"
+  private val LayoutMarker = "_layout.json"
 
   /** One shard's manifest stats row: record count, payload bytes, the
     * committed file's physical length, and CRC32C of the ON-DISK byte
@@ -76,6 +88,52 @@ object TfRecords {
     */
   private[graft] final case class ManifestClaim(nRecords: Long,
       payloadBytes: Long, diskBytes: Long, diskCrc: Long)
+
+  /** `_layout.json`'s two declared fields; each is None when the marker
+    * is missing or the field does not parse (a pre-marker export).
+    */
+  private[graft] final case class Layout(numShards: Option[Int],
+      gzip: Option[Boolean])
+
+  /** The corpus exports' document framing: one document per record as
+    * its 19-digit zero-padded decimal `doc_id`, `'|'`, then the UTF-8
+    * `text` — fixed width, so the parse is two substrings and the text's
+    * character count survives multibyte corpora. `encodeSql` reads the
+    * `doc_id` and `text` columns; the parse fragments take the name of
+    * the binary record column.
+    */
+  private[graft] object DocRecord {
+    val encodeSql: String =
+      "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary)"
+    def idSql(rec: String): String =
+      s"cast(substring(cast($rec as string), 1, 19) as bigint)"
+    def textSql(rec: String): String = s"substring(cast($rec as string), 21)"
+  }
+
+  /** The shard-name codec: `part-NNNNN.tfrecord`, `.tfrecord.gz` for
+    * gzip shards (at least five digits, more when the id needs them).
+    */
+  private[graft] def shardFile(id: Long, gzip: Boolean): String =
+    f"part-$id%05d${shardSuffix(gzip)}"
+
+  /** The id of a [[shardFile]] name in the requested format; None for
+    * temps, markers, the other format's shards and foreign files.
+    */
+  private[graft] def shardId(name: String, gzip: Boolean): Option[Long] = {
+    val suffix = shardSuffix(gzip)
+    if (!name.startsWith("part-") || !name.endsWith(suffix)) None
+    else Some(name.substring(5, name.length - suffix.length))
+      .filter(d => d.nonEmpty && d.forall(_.isDigit)).flatMap(_.toLongOption)
+  }
+
+  /** SQL reading the shard id back off [[read]]'s `file` column at any
+    * digit width (the digits between `part-` and the first dot).
+    */
+  private[graft] val fileShardIdSql: String =
+    "cast(substring_index(substring(file, 6), '.', 1) as bigint)"
+
+  private def shardSuffix(gzip: Boolean): String =
+    if (gzip) ".tfrecord.gz" else ".tfrecord"
 
   /** Masked CRC32C of `bytes[off, off+len)` per the TFRecord spec. */
   private[graft] def maskedCrc(bytes: Array[Byte], off: Int, len: Int): Int = {
@@ -100,13 +158,6 @@ object TfRecords {
     buf.array()
   }
 
-  /** Read ONE framed record off a stream, verifying both CRCs: null at a
-    * clean end-of-stream (the stream is positioned exactly at a record
-    * boundary), the verified payload otherwise. Corruption or truncation
-    * throws (EOFException mid-frame, IllegalArgumentException on a CRC or
-    * length-plausibility failure). Allocates the one record only — the
-    * unit of task memory for arbitrarily large shards.
-    */
   /** readFully with mid-frame EOF surfaced as the framing error it is
     * (IllegalArgumentException, like every other malformed-frame case)
     * rather than a bare EOFException.
@@ -120,7 +171,14 @@ object TfRecords {
           s"tfrecord: truncated record in $what")
     }
 
-  private[graft] def readRecord(din: java.io.DataInputStream,
+  /** Read ONE framed record off a stream, verifying both CRCs: null at a
+    * clean end-of-stream (the stream is positioned exactly at a record
+    * boundary), the verified payload otherwise. Corruption or truncation
+    * throws IllegalArgumentException (a CRC, length-plausibility or
+    * mid-frame EOF failure). Allocates the one record only — the unit of
+    * task memory for arbitrarily large shards.
+    */
+  private def readRecord(din: java.io.DataInputStream,
       what: String): Array[Byte] = {
     val first = din.read()
     if (first < 0) return null // clean EOF at a record boundary
@@ -146,21 +204,86 @@ object TfRecords {
     data
   }
 
+  /** CORRUPTION-class failures — the only ones the lenient walk may
+    * swallow: framing/CRC violations (IllegalArgumentException from
+    * [[readRecord]]/[[fully]]), a bad gzip stream (ZipException), or a
+    * truncated gzip header (EOFException out of GZIPInputStream's
+    * constructor). A transient IOException (socket reset, FS hiccup) is
+    * NOT corruption — swallowing it as a truncation verdict would be
+    * silent record loss on a clean file (ADVICE r13); it propagates so
+    * Spark retries the task.
+    */
+  private def isCorruption(e: Throwable): Boolean = e match {
+    case _: IllegalArgumentException => true
+    case _: java.util.zip.ZipException => true
+    case _: java.io.EOFException => true
+    case _ => false
+  }
+
+  /** The one record walk: the verified records of one stream, opened on
+    * the first step (so a corrupt gzip header is the walk's first
+    * failure, not its caller's) and closed as soon as the walk ends — at
+    * a clean EOF, at a corruption cut, or on a thrown failure — so a
+    * many-files-per-task pass never accumulates open FDs. STRICT
+    * (`lenient = false`): corruption throws. LENIENT: an [[isCorruption]]
+    * failure ends the walk instead, and [[clean]] (read once the walk is
+    * drained) reports whether it reached a clean EOF. Resync past a bad
+    * frame is impossible — the format carries no record-boundary
+    * markers, so the rest of the stream is unparseable by construction
+    * (TensorFlow's own readers stop at the first bad frame too). A
+    * transient IOException propagates in both modes.
+    */
+  private final class RecordWalk(open: () => java.io.DataInputStream,
+      what: String, lenient: Boolean) extends Iterator[Array[Byte]] {
+    private var din: java.io.DataInputStream = null
+    private var cut = false
+    private var nxt: Array[Byte] = step()
+
+    private def step(): Array[Byte] =
+      try {
+        if (din == null) din = open()
+        val rec = readRecord(din, what)
+        if (rec == null) din.close()
+        rec
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          if (din != null) {
+            try din.close() catch { case _: java.io.IOException => () }
+          }
+          if (!(lenient && isCorruption(e))) throw e
+          cut = true
+          null
+      }
+
+    override def hasNext: Boolean = nxt != null
+    override def next(): Array[Byte] = {
+      val r = nxt
+      nxt = step()
+      r
+    }
+    def clean: Boolean = !cut
+  }
+
+  /** (record count, payload bytes) of a drained walk. */
+  private def countAndPayload(recs: Iterator[Array[Byte]]): (Long, Long) =
+    recs.foldLeft((0L, 0L)) { case ((n, b), r) => (n + 1, b + r.length) }
+
+  private def bufferWalk(content: Array[Byte], lenient: Boolean): RecordWalk =
+    new RecordWalk(() => new java.io.DataInputStream(
+      new java.io.ByteArrayInputStream(content)), "buffer", lenient)
+
+  private def fileWalk(fullPath: String,
+      conf: org.apache.hadoop.conf.Configuration, lenient: Boolean,
+      rawCrc: Option[java.util.zip.CRC32C] = None): RecordWalk =
+    new RecordWalk(() => openStream(fullPath, conf, rawCrc),
+      shardName(fullPath), lenient)
+
   /** Parse one buffer's bytes into its records, verifying both CRCs —
     * the in-memory twin of the streamed read, for callers that already
     * hold the framed bytes (micro-batch sinks, specs).
     */
-  private[graft] def decodeAll(content: Array[Byte]): Seq[Array[Byte]] = {
-    val din = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(content))
-    val out = Seq.newBuilder[Array[Byte]]
-    var rec = readRecord(din, "buffer")
-    while (rec != null) {
-      out += rec
-      rec = readRecord(din, "buffer")
-    }
-    out.result()
-  }
+  private[graft] def decodeAll(content: Array[Byte]): Seq[Array[Byte]] =
+    bufferWalk(content, lenient = false).toSeq
 
   /** Like [[decodeAll]], but a framing/CRC failure TRUNCATES instead of
     * throwing: returns the records that verified before the failure
@@ -169,49 +292,39 @@ object TfRecords {
     * the property suite's corruption laws.
     */
   private[graft] def decodeLenient(content: Array[Byte]): (Seq[Array[Byte]], Boolean) = {
-    val din = new java.io.DataInputStream(
-      new java.io.ByteArrayInputStream(content))
-    val out = Seq.newBuilder[Array[Byte]]
-    var clean = true
-    try {
-      var rec = readRecord(din, "buffer")
-      while (rec != null) {
-        out += rec
-        rec = readRecord(din, "buffer")
-      }
-    } catch {
-      case scala.util.control.NonFatal(_) => clean = false
-    }
-    (out.result(), clean)
+    val walk = bufferWalk(content, lenient = true)
+    val recs = walk.toSeq
+    (recs, walk.clean)
   }
 
   /** One task's shard commit: stream the partition's records to a
     * task-attempt-unique `.inprogress` temp, then rename into place.
-    * On a no-overwrite filesystem (HDFS) the FIRST commit wins: `write`
-    * cleared the directory up front, so the first attempt's rename
-    * lands on a fresh name and succeeds; a slower concurrent attempt
-    * (speculation, zombie) finds the name taken, deletes its own temp,
-    * accepts the committed shard, and RE-DERIVES its stats from the
-    * winner's bytes. On an overwrite-rename filesystem (POSIX rename —
-    * RawLocalFileSystem) the LAST rename lands instead — still a whole
-    * file, never interleaved — and [[writeManifest]]'s length
-    * cross-check corrects any stats drift before the manifest
-    * publishes. Either way there is no pre-delete of the destination: a
-    * delete-then-rename pair would let a zombie delete a committed
-    * shard and die before its own rename, losing the shard with no
-    * retry (ADVICE r13).
+    * On a no-overwrite filesystem (HDFS) the FIRST commit wins: the
+    * writer cleared the directory (or the shard) up front, so the first
+    * attempt's rename lands on a fresh name and succeeds; a slower
+    * concurrent attempt (speculation, zombie) finds the name taken,
+    * deletes its own temp, accepts the committed shard, and RE-DERIVES
+    * its stats from the winner's bytes. On an overwrite-rename
+    * filesystem (POSIX rename — RawLocalFileSystem) the LAST rename
+    * lands instead — still a whole file, never interleaved — and
+    * [[writeManifest]]'s length cross-check corrects any stats drift
+    * before the manifest publishes. Either way there is no pre-delete of
+    * the destination: a delete-then-rename pair would let a zombie
+    * delete a committed shard and die before its own rename, losing the
+    * shard with no retry (ADVICE r13).
     *
-    * Returns (record count, payload bytes, on-disk bytes of the file the
-    * stats describe) — the length is measured on the TEMP file before
-    * rename (or on the winner's committed bytes after a lost race), so
-    * [[writeManifest]] can verify that the stats still describe the
-    * COMMITTED shard even for gzip files, whose framed length is
-    * otherwise opaque (ADVICE r14).
+    * Returns the shard's stats with the on-disk length of the file they
+    * describe — measured on the TEMP file before rename (or on the
+    * winner's committed bytes after a lost race), so [[writeManifest]]
+    * can verify that the stats still describe the COMMITTED shard even
+    * for gzip files, whose framed length is otherwise opaque (ADVICE
+    * r14).
     */
   private def commitShard(it: Iterator[Array[Byte]], dir: String,
-      name: String, gzip: Boolean,
+      id: Long, gzip: Boolean,
       conf: org.apache.hadoop.conf.Configuration): ShardStat = {
     val tc = org.apache.spark.TaskContext.get()
+    val name = shardFile(id, gzip)
     val shard = new org.apache.hadoop.fs.Path(dir, name)
     val tmp = new org.apache.hadoop.fs.Path(dir,
       s".$name.${tc.taskAttemptId()}.inprogress")
@@ -235,9 +348,10 @@ object TfRecords {
       out.write(encodeRecord(rec))
     }
     finally out.close()
-    var diskLen = fs.getFileStatus(tmp).getLen
-    var diskCrc = crc.getValue
-    if (!fs.rename(tmp, shard)) {
+    val st = ShardStat(id, name, n, payload, fs.getFileStatus(tmp).getLen,
+      crc.getValue)
+    if (fs.rename(tmp, shard)) st
+    else {
       // lost the commit race: a concurrent attempt's whole shard is in
       // place, ours is redundant — clean up, accept, and RE-DERIVE the
       // stats from the WINNER's bytes (rare path, one extra pass over
@@ -247,13 +361,25 @@ object TfRecords {
       // cu18 gate exists to catch
       fs.delete(tmp, false)
       require(fs.exists(shard), s"tfrecord: commit of $shard failed")
-      diskLen = fs.getFileStatus(shard).getLen
-      val (rn, rb) = deriveStats(shard.toString, conf)
-      n = rn
-      payload = rb
-      diskCrc = fileCrc(shard.toString, conf)
+      derivedStat(st, dir, conf)
     }
-    ShardStat(-1L, name, n, payload, diskLen, diskCrc)
+  }
+
+  /** `st` with every field but its shard id and name re-derived from the
+    * committed file's bytes: length, (count, payload) by a strict walk —
+    * a shard whose stats are about to be PUBLISHED must decode cleanly —
+    * and the raw-byte CRC. Shared by [[commitShard]]'s lost-race path,
+    * [[writeManifest]]'s mismatch re-derive, and the resume path's
+    * distributed re-derive; one record of memory.
+    */
+  private def derivedStat(st: ShardStat, dir: String,
+      conf: org.apache.hadoop.conf.Configuration): ShardStat = {
+    val p = new org.apache.hadoop.fs.Path(dir, st.file)
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    val (n, payload) =
+      countAndPayload(fileWalk(p.toString, conf, lenient = false))
+    st.copy(nRecords = n, payloadBytes = payload, diskBytes = len,
+      diskCrc = fileCrc(p.toString, conf))
   }
 
   /** CRC32C of a file's RAW on-disk bytes (no decompression, no frame
@@ -279,29 +405,23 @@ object TfRecords {
     crc.getValue
   }
 
-  /** Stream-decode one committed shard's stats (record count, payload
-    * bytes) with both CRCs verified — shared by [[commitShard]]'s
-    * lost-race path, [[writeManifest]]'s mismatch re-derive, and the
-    * resume path's distributed re-derive. One record of memory;
-    * corruption throws (a shard whose stats we are about to PUBLISH must
-    * decode cleanly).
-    */
-  private def deriveStats(fullPath: String,
-      conf: org.apache.hadoop.conf.Configuration): (Long, Long) = {
-    var n = 0L
-    var payload = 0L
-    val din = openStream(fullPath, conf)
-    try {
-      var rec = readRecord(din, shardName(fullPath))
-      while (rec != null) {
-        n += 1
-        payload += rec.length
-        rec = readRecord(din, shardName(fullPath))
-      }
-    } finally {
-      try din.close() catch { case _: java.io.IOException => () }
+  /** Text of the marker file `name` under `dir`, None when absent. */
+  private def readMarker(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, name: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir, name)
+    if (!fs.exists(p)) None
+    else {
+      val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
+      try Some(src.mkString) finally src.close()
     }
-    (n, payload)
+  }
+
+  /** (Over)write the marker file `name` under `dir`, one line per entry. */
+  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, name: String, lines: Seq[String]): Unit = {
+    val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+      fs.create(new org.apache.hadoop.fs.Path(dir, name), true), "UTF-8"))
+    try lines.foreach(w.println) finally w.close()
   }
 
   /** The export MANIFEST every writer emits beside its shards
@@ -345,25 +465,16 @@ object TfRecords {
     // readLenient) catch exactly that class (VERDICT r15 #1).
     val rows = rows0.map { st =>
       val p = new org.apache.hadoop.fs.Path(dir, st.file)
-      val len = fs.getFileStatus(p).getLen
-      if (len == st.diskBytes) st.copy(diskBytes = len)
-      else {
-        val (rn, rb) = deriveStats(p.toString, conf)
-        st.copy(nRecords = rn, payloadBytes = rb, diskBytes = len,
-          diskCrc = fileCrc(p.toString, conf))
-      }
+      if (fs.getFileStatus(p).getLen == st.diskBytes) st
+      else derivedStat(st, dir, conf)
     }
-    val mp = new org.apache.hadoop.fs.Path(dir, "_manifest.json")
-    val w = new java.io.PrintWriter(
-      new java.io.OutputStreamWriter(fs.create(mp, true), "UTF-8"))
-    try rows.sortBy(_.shard).foreach { st =>
-      w.println(
+    writeMarker(fs, new org.apache.hadoop.fs.Path(dir), ManifestMarker,
+      rows.sortBy(_.shard).map { st =>
         s"""{"shard":${st.shard},"file":"${st.file}","n_records":${st.nRecords},""" +
           s""""payload_bytes":${st.payloadBytes},""" +
           s""""framed_bytes":${st.payloadBytes + 16 * st.nRecords},""" +
-          s""""disk_bytes":${st.diskBytes},"disk_crc32c":${st.diskCrc}}""")
-    }
-    finally w.close()
+          s""""disk_bytes":${st.diskBytes},"disk_crc32c":${st.diskCrc}}"""
+      })
   }
 
   /** Best-effort per-file claims from `_manifest.json`: file name →
@@ -376,27 +487,22 @@ object TfRecords {
   private[graft] def manifestClaims(spark: SparkSession,
       path: String): Map[String, ManifestClaim] =
     try {
-      val p = new org.apache.hadoop.fs.Path(path, "_manifest.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Map.empty
-      else {
-        val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-        val lines = try src.getLines().toList finally src.close()
-        def num(ln: String, field: String): Option[Long] =
-          ln.split("\"" + field + "\":", 2).lift(1)
-            .flatMap(s => scala.util.Try(s.takeWhile(_.isDigit).toLong).toOption)
-        lines.flatMap { ln =>
-          // our own fixed writer format — regex-free string splitting;
-          // any malformed line is skipped
-          for {
-            f <- ln.split("\"file\":\"", 2).lift(1).map(_.takeWhile(_ != '"'))
-            n <- num(ln, "n_records")
-            b <- num(ln, "payload_bytes")
-          } yield f -> ManifestClaim(n, b,
-            num(ln, "disk_bytes").getOrElse(-1L),
-            num(ln, "disk_crc32c").getOrElse(-1L))
-        }.toMap
-      }
+      val dir = new org.apache.hadoop.fs.Path(path)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def num(ln: String, field: String): Option[Long] =
+        ln.split("\"" + field + "\":", 2).lift(1)
+          .flatMap(s => scala.util.Try(s.takeWhile(_.isDigit).toLong).toOption)
+      readMarker(fs, dir, ManifestMarker).toSeq.flatMap(_.linesIterator).flatMap { ln =>
+        // our own fixed writer format — regex-free string splitting;
+        // any malformed line is skipped
+        for {
+          f <- ln.split("\"file\":\"", 2).lift(1).map(_.takeWhile(_ != '"'))
+          n <- num(ln, "n_records")
+          b <- num(ln, "payload_bytes")
+        } yield f -> ManifestClaim(n, b,
+          num(ln, "disk_bytes").getOrElse(-1L),
+          num(ln, "disk_crc32c").getOrElse(-1L))
+      }.toMap
     } catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** Read an export's `_manifest.json` back as a DataFrame
@@ -404,19 +510,81 @@ object TfRecords {
     * disk_crc32c)`. The file is `numShards` lines — driver-side by
     * construction (Spark's file sources ignore underscore-prefixed
     * paths, deliberately: the manifest is metadata, not data). Fields a
-    * pre-r15/r16 manifest lacks surface as NULL.
+    * pre-r15/r16 manifest lacks surface as NULL; a missing manifest
+    * throws FileNotFoundException.
     */
   def readManifest(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val p = new org.apache.hadoop.fs.Path(path, "_manifest.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-    val lines = try src.getLines().toList finally src.close()
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val txt = readMarker(fs, dir, ManifestMarker).getOrElse(
+      throw new java.io.FileNotFoundException(s"tfrecord: no $ManifestMarker under $path"))
     spark.read
       .schema("shard LONG, file STRING, n_records LONG, " +
         "payload_bytes LONG, framed_bytes LONG, disk_bytes LONG, " +
         "disk_crc32c LONG")
-      .json(spark.createDataset(lines))
+      .json(spark.createDataset(txt.linesIterator.toList))
+  }
+
+  /** Read `_layout.json` back: the intended layout, written BEFORE any
+    * shard commits, so resume can enforce shard-count equality in BOTH
+    * directions (ADVICE r16 — the forall(_ < numShards) presence check
+    * catches a shrink but lets a GROWN count silently mix two
+    * assignments' shards) and the format exactly like the count (ADVICE
+    * r17 — without it a flipped gzip flag silently swept every committed
+    * shard of the original format and re-exported the corpus). A
+    * missing or garbage marker (pre-marker export) gives None for each
+    * field, and resume keeps its pre-marker behavior.
+    */
+  private[graft] def readLayout(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Layout = {
+    val txt =
+      try readMarker(fs, dir, LayoutMarker)
+      catch { case scala.util.control.NonFatal(_) => None }
+    def field(k: String): Option[String] =
+      txt.flatMap(_.split("\"" + k + "\":", 2).lift(1))
+    Layout(
+      field("num_shards").flatMap(_.takeWhile(_.isDigit).toIntOption),
+      field("gzip").map(_.takeWhile(_.isLetter)).collect {
+        case "true"  => true
+        case "false" => false
+      })
+  }
+
+  /** Prepare an export directory: a fresh write clears it whole; a
+    * resume keeps committed shards but clears the crashed run's orphaned
+    * `.part-N.<attempt>.inprogress` temps — invisible to readers
+    * (dot-prefixed) but up to near-shard-size each, and repeated
+    * crash/resume cycles would accumulate them forever. Safe because
+    * resume is single-writer by contract: no live task owns a temp here.
+    */
+  private def prepareExportDir(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, resume: Boolean): Unit = {
+    if (!resume) fs.delete(dir, true)
+    else if (fs.exists(dir))
+      Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, ".*.inprogress")))
+        .foreach(_.foreach(st => fs.delete(st.getPath, false)))
+    fs.mkdirs(dir)
+  }
+
+  /** The one commit step of every writer: each partition of `recs`
+    * commits as shard `partitionId` through [[commitShard]]'s temp +
+    * rename, except the ids in `done` (committed by a prior run on
+    * resume — their rows were already filtered out, and an
+    * unconditional commit would replace a complete file with an empty
+    * one on an overwrite-rename filesystem). Takes the broadcast HANDLE
+    * so the raw set never serializes into a task closure. Returns one
+    * stats row per committed shard — driver-bounded metadata.
+    */
+  private def commitShards(recs: org.apache.spark.rdd.RDD[Array[Byte]],
+      path: String, gzip: Boolean,
+      done: org.apache.spark.broadcast.Broadcast[Set[Long]]): Seq[ShardStat] = {
+    val hconf = new SerializableHadoopConf(recs.sparkContext.hadoopConfiguration)
+    recs.mapPartitions { it =>
+      val pid = org.apache.spark.TaskContext.get().partitionId().toLong
+      if (done.value.contains(pid)) Iterator.empty
+      else Iterator(commitShard(it, path, pid, gzip, hconf.value))
+    }.collect().toSeq
   }
 
   /** Write `bytesCol` (binary) as TFRecord shards under `path` — one
@@ -430,41 +598,13 @@ object TfRecords {
     */
   def write(df: DataFrame, bytesCol: String, path: String,
       gzip: Boolean = false): Unit = {
-    val spark = df.sparkSession
+    val sc = df.sparkSession.sparkContext
     val dir = new org.apache.hadoop.fs.Path(path)
-    val fsDriver = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fsDriver.delete(dir, true)
-    fsDriver.mkdirs(dir)
-    val suffix = if (gzip) ".tfrecord.gz" else ".tfrecord"
-    val hconf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val stats = df.select(col(bytesCol).cast("binary")).rdd
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.get().partitionId()
-        val name = f"part-$pid%05d$suffix"
-        val st = commitShard(it.map(_.getAs[Array[Byte]](0)), path, name,
-          gzip, hconf.value)
-        Iterator(st.copy(shard = pid.toLong))
-      }.collect().toSeq // one row per shard — driver-bounded metadata
-    writeManifest(spark.sparkContext.hadoopConfiguration, path, stats)
+    prepareExportDir(dir.getFileSystem(sc.hadoopConfiguration), dir, resume = false)
+    val recs = df.select(col(bytesCol).cast("binary")).rdd.map(_.getAs[Array[Byte]](0))
+    writeManifest(sc.hadoopConfiguration, path,
+      commitShards(recs, path, gzip, sc.broadcast(Set.empty[Long])))
   }
-
-  /** Shard ids already COMMITTED under `path` (resume support):
-    * `part-NNNNN$suffix` names parsed back to shard ids. [[commitShard]]
-    * publishes via temp + atomic rename, so any present shard file is a
-    * COMPLETE commit from a prior run — presence alone proves
-    * completeness; a killed attempt leaves only a dot-prefixed temp the
-    * listing ignores.
-    */
-  private def committedShardIds(spark: SparkSession, path: String,
-      suffix: String): Set[Long] =
-    listShards(spark, path).flatMap { f =>
-      val n = shardName(f)
-      if (n.startsWith("part-") && n.endsWith(suffix))
-        scala.util.Try(
-          n.stripPrefix("part-").stripSuffix(suffix).toLong).toOption
-      else None
-    }.toSet
 
   /** Manifest stats rows for the shards a resume SKIPPED: reuse the prior
     * manifest's claim when it is consistent with the committed bytes.
@@ -488,133 +628,47 @@ object TfRecords {
     * the same way: only claimed names are stat'ed on the driver — the
     * no-manifest crash case does ZERO driver stats.
     */
-  private def resumedStatsRows(spark: SparkSession,
-      dir: String, suffix: String, ids: Seq[Long],
-      claims: Map[String, ManifestClaim],
-      hconf: SerializableHadoopConf): Seq[ShardStat] = {
+  private def resumedStatsRows(spark: SparkSession, dir: String,
+      gzip: Boolean, ids: Seq[Long],
+      claims: Map[String, ManifestClaim]): Seq[ShardStat] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val named = ids.sorted.map(s => (s, f"part-$s%05d$suffix"))
-    val (withClaim, noClaim) = named.partition { case (_, n) => claims.contains(n) }
-    val checked = withClaim.map { case (s, name) =>
-      val p = new org.apache.hadoop.fs.Path(dir, name)
+    val (withClaim, noClaim) = ids.sorted
+      .map(s => ShardStat(s, shardFile(s, gzip), -1L, -1L, -1L, -1L))
+      .partition(st => claims.contains(st.file))
+    val checked = withClaim.map { st =>
+      val p = new org.apache.hadoop.fs.Path(dir, st.file)
       val len = p.getFileSystem(conf).getFileStatus(p).getLen
-      val c = claims(name)
+      val c = claims(st.file)
       val consistent = c.diskCrc >= 0 && {
-        if (name.endsWith(".gz")) c.diskBytes >= 0 && len == c.diskBytes
+        if (gzip) c.diskBytes >= 0 && len == c.diskBytes
         else len == c.payloadBytes + 16 * c.nRecords
       }
-      (s, name, c, len, consistent)
+      (st.copy(nRecords = c.nRecords, payloadBytes = c.payloadBytes,
+        diskBytes = len, diskCrc = c.diskCrc), consistent)
     }
-    val claimedRows = checked.collect {
-      case (s, name, c, len, true) =>
-        ShardStat(s, name, c.nRecords, c.payloadBytes, len, c.diskCrc)
-    }
-    val toDerive = noClaim ++
-      checked.collect { case (s, name, _, _, false) => (s, name) }
-    val derivedRows =
+    val toDerive = noClaim ++ checked.collect { case (st, false) => st }
+    val hconf = new SerializableHadoopConf(conf)
+    checked.collect { case (st, true) => st } ++ (
       if (toDerive.isEmpty) Seq.empty
       else spark.sparkContext
         .parallelize(toDerive, math.max(1, math.min(toDerive.size, 256)))
-        .map { case (s, name) =>
-          val p = new org.apache.hadoop.fs.Path(dir, name)
-          val len = p.getFileSystem(hconf.value).getFileStatus(p).getLen
-          val (n, b) = deriveStats(p.toString, hconf.value)
-          ShardStat(s, name, n, b, len, fileCrc(p.toString, hconf.value))
-        }.collect().toSeq // one row per resumed shard — driver-bounded
-    claimedRows ++ derivedRows
+        .map(st => derivedStat(st, dir, hconf.value))
+        .collect().toSeq) // one row per resumed shard — driver-bounded
   }
 
-  /** Prepare an export directory: a fresh write clears it whole; a
-    * resume keeps committed shards but clears the crashed run's orphaned
-    * `.part-N.<attempt>.inprogress` temps — invisible to readers
-    * (dot-prefixed) but up to near-shard-size each, and repeated
-    * crash/resume cycles would accumulate them forever. Safe because
-    * resume is single-writer by contract: no live task owns a temp here.
+  /** The resume scaffold of [[writeShards]] — ONE copy of the contract
+    * (directory prep, shape enforcement, committed-shard set, content
+    * verification) for both sharded writers. Returns the shard ids a
+    * prior run committed (empty on a fresh write) and the prior
+    * manifest's claims.
     */
-  private def prepareExportDir(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, resume: Boolean): Unit = {
-    if (!resume) fs.delete(dir, true)
-    else if (fs.exists(dir))
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, ".*.inprogress")))
-        .foreach(_.foreach(st => fs.delete(st.getPath, false)))
-    fs.mkdirs(dir)
-  }
-
-  /** The resume scaffold shared by [[writeSharded]] and
-    * [[writeShardedSorted]] — ONE copy of the contract (directory prep,
-    * shape enforcement, committed-shard set, content verification, skip
-    * guard, manifest union), so a fix to any of it cannot silently
-    * diverge between the two writers.
-    */
-  private final case class ShardedWrite(done: Set[Long],
-      doneB: org.apache.spark.broadcast.Broadcast[Set[Long]], suffix: String,
-      claims: Map[String, ManifestClaim])
-
-  /** Read `_layout.json`'s declared shard count back, if the marker
-    * exists and parses: the intended layout, written BEFORE any shard
-    * commits, so resume can enforce shard-count equality in BOTH
-    * directions (ADVICE r16 — the forall(_ < numShards) presence check
-    * catches a shrink but lets a GROWN count silently mix two
-    * assignments' shards).
-    */
-  private[graft] def layoutNumShards(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Int] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir, "_layout.json")
-      if (!fs.exists(p)) None
-      else {
-        val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-        val txt = try src.mkString finally src.close()
-        txt.split("\"num_shards\":", 2).lift(1)
-          .flatMap(s =>
-            scala.util.Try(s.takeWhile(_.isDigit).toInt).toOption)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Read `_layout.json`'s declared gzip flag back (ADVICE r17): the
-    * format is part of the layout contract exactly like the shard count,
-    * so a resume under the OTHER compression must fail loud too — without
-    * this check a flipped flag silently swept (deleted) every committed
-    * shard of the original format and re-exported the full corpus, while
-    * the equivalent shard-count violation failed loud. Same degradation
-    * contract as [[layoutNumShards]]: a missing or garbage marker
-    * (pre-marker export) returns None and resume keeps the sweep
-    * behavior.
-    */
-  private[graft] def layoutGzip(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Option[Boolean] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dir, "_layout.json")
-      if (!fs.exists(p)) None
-      else {
-        val src = scala.io.Source.fromInputStream(fs.open(p), "UTF-8")
-        val txt = try src.mkString finally src.close()
-        txt.split("\"gzip\":", 2).lift(1).map(_.takeWhile(_.isLetter)).collect {
-          case "true"  => true
-          case "false" => false
-        }
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def writeLayout(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, numShards: Int, gzip: Boolean): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_layout.json")
-    val w = new java.io.PrintWriter(
-      new java.io.OutputStreamWriter(fs.create(p, true), "UTF-8"))
-    try w.println(s"""{"num_shards":$numShards,"gzip":$gzip}""")
-    finally w.close()
-  }
-
   private def beginShardedWrite(spark: SparkSession, path: String,
-      gzip: Boolean, resume: Boolean, numShards: Int,
-      verifyOnResume: Boolean = true): ShardedWrite = {
+      gzip: Boolean, resume: Boolean,
+      numShards: Int): (Set[Long], Map[String, ManifestClaim]) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(conf)
     prepareExportDir(fs, dir, resume)
-    val suffix = if (gzip) ".tfrecord.gz" else ".tfrecord"
     val claims: Map[String, ManifestClaim] =
       if (resume) manifestClaims(spark, path) else Map.empty
     val done: Set[Long] =
@@ -628,25 +682,26 @@ object TfRecords {
         // the original format and re-export the corpus, while the
         // equivalent shard-count violation failed loud. Pre-marker dirs
         // (no/garbage _layout.json → None) keep the sweep behavior.
-        layoutGzip(fs, dir).foreach { declared =>
+        val layout = readLayout(fs, dir)
+        layout.gzip.foreach { declared =>
           require(declared == gzip,
             s"tfrecord: resume with gzip=$gzip but the export was " +
               s"started with gzip=$declared (_layout.json) — resume " +
               "requires the failed run's format (clear the directory to " +
               "change the layout)")
         }
-        // (a) part-* shard files in the OTHER format
-        // (a flipped gzip flag between runs, pre-marker dirs only now)
-        // are swept: they can never
-        // count as committed (suffix mismatch), and leaving them would
-        // make read()'s *.tfrecord* glob return the corpus twice.
-        val foreign = listShards(spark, path).filter { f =>
-          val n = shardName(f)
-          n.startsWith("part-") && !n.endsWith(suffix)
-        }
-        foreign.foreach(f =>
-          fs.delete(new org.apache.hadoop.fs.Path(f), false))
-        val committed = committedShardIds(spark, path, suffix)
+        // (a) shard files in the OTHER format (a flipped gzip flag
+        // between runs, pre-marker dirs only now) are swept: they can
+        // never count as committed, and leaving them would make read()'s
+        // *.tfrecord* glob return the corpus twice.
+        val names = listShardSizes(spark, path).map { case (f, _) => shardName(f) }
+        names.filter(shardId(_, !gzip).isDefined).foreach(n =>
+          fs.delete(new org.apache.hadoop.fs.Path(dir, n), false))
+        // rename-commit publishes atomically, so any present shard file
+        // is a COMPLETE commit from a prior run — presence alone proves
+        // completeness; a killed attempt leaves only a dot-prefixed temp
+        // the listing ignores
+        val committed = names.flatMap(shardId(_, gzip)).toSet
         // (b) the `_layout.json` marker — written at export START, before
         // any shard commits — declares the intended shard count, so a
         // resume under a DIFFERENT count (grown OR shrunk) fails loud
@@ -654,7 +709,7 @@ object TfRecords {
         // (ADVICE r16: the presence check below catches only a shrink).
         // Pre-marker exports (no _layout.json) keep the presence check as
         // their only shrink guard.
-        layoutNumShards(fs, dir).foreach { declared =>
+        layout.numShards.foreach { declared =>
           require(declared == numShards,
             s"tfrecord: resume with numShards=$numShards but the export " +
               s"was started with numShards=$declared (_layout.json) — " +
@@ -681,19 +736,10 @@ object TfRecords {
         // resume is single-writer by contract and the file is provably
         // wrong). Claims without a CRC (pre-r16 manifest, or no manifest
         // at all) keep presence-proves-completeness semantics.
-        // `verifyOnResume = false` skips the pass entirely (ADVICE r16):
-        // the full-corpus streaming read re-runs on EVERY resume attempt,
-        // so a crash-looping 10,000-shard export re-pays O(corpus) I/O
-        // per attempt even for shards verified last attempt — a caller
-        // that trusts its storage's durability between attempts can
-        // amortize to O(missing shards); the full pass stays the default.
-        val withCrc =
-          if (!verifyOnResume) Seq.empty
-          else committed.toSeq.sorted
-            .map(s => (s, f"part-$s%05d$suffix"))
-            .flatMap { case (s, n) =>
-              claims.get(n).filter(_.diskCrc >= 0).map(c => (s, n, c.diskCrc))
-            }
+        val withCrc = committed.toSeq.sorted.flatMap { s =>
+          val n = shardFile(s, gzip)
+          claims.get(n).filter(_.diskCrc >= 0).map(c => (s, n, c.diskCrc))
+        }
         val bad: Set[Long] =
           if (withCrc.isEmpty) Set.empty
           else {
@@ -706,46 +752,49 @@ object TfRecords {
               }.collect().toSet // ≤ numShards ids — driver-bounded
           }
         bad.foreach { s =>
-          fs.delete(new org.apache.hadoop.fs.Path(dir, f"part-$s%05d$suffix"),
-            false)
+          fs.delete(new org.apache.hadoop.fs.Path(dir, shardFile(s, gzip)), false)
         }
         committed -- bad
       }
     // declare the intended layout BEFORE any shard commits — fresh writes
     // seed the marker, pre-marker resumes upgrade in place (the require
     // above proved the count consistent with whatever evidence existed)
-    writeLayout(fs, dir, numShards, gzip)
-    ShardedWrite(done, spark.sparkContext.broadcast(done), suffix, claims)
+    writeMarker(fs, dir, LayoutMarker,
+      Seq(s"""{"num_shards":$numShards,"gzip":$gzip}"""))
+    (done, claims)
   }
 
-  /** One writer task's body: commit this partition's records as its
-    * shard — unless the shard was committed by a prior run (resume), in
-    * which case the rows were already filtered out and the file must
-    * never be touched (an unconditional commit would replace a complete
-    * file with an empty one on an overwrite-rename filesystem). Takes
-    * the broadcast HANDLE, not the ShardedWrite carrier: capturing the
-    * carrier would serialize the raw `done` set into every task closure
-    * beside the broadcast that exists to avoid exactly that.
+  /** The body both sharded writers share: resume scaffold, the map-side
+    * filter of committed shards' rows (a resume at 97% shuffles ~3% of
+    * the corpus), `place` routing each row to its shard's partition
+    * through the one range-checked shard partitioner (shard id IS the
+    * partition id; an out-of-range id fails the task rather than
+    * silently writing a misnamed file), the commit, and the manifest
+    * over committed plus resumed shards. `rows` is built only after the
+    * directory is prepared.
     */
-  private def commitTask(
-      doneB: org.apache.spark.broadcast.Broadcast[Set[Long]], suffix: String,
-      path: String, gzip: Boolean, hconf: SerializableHadoopConf)(
-      it: Iterator[Array[Byte]]): Iterator[ShardStat] = {
-    val pid = org.apache.spark.TaskContext.get().partitionId()
-    if (doneB.value.contains(pid.toLong)) Iterator.empty
-    else {
-      val name = f"part-$pid%05d$suffix"
-      Iterator(
-        commitShard(it, path, name, gzip, hconf.value).copy(shard = pid.toLong))
+  private def writeShards[K](spark: SparkSession, path: String,
+      numShards: Int, gzip: Boolean, resume: Boolean,
+      rows: => org.apache.spark.rdd.RDD[(K, Array[Byte])], shardOf: K => Long)(
+      place: (org.apache.spark.rdd.RDD[(K, Array[Byte])],
+        org.apache.spark.Partitioner) => org.apache.spark.rdd.RDD[(K, Array[Byte])]): Unit = {
+    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
+    val (done, claims) = beginShardedWrite(spark, path, gzip, resume, numShards)
+    val doneB = spark.sparkContext.broadcast(done)
+    val byShard = new org.apache.spark.Partitioner {
+      override def numPartitions: Int = numShards
+      override def getPartition(key: Any): Int = {
+        val s = shardOf(key.asInstanceOf[K])
+        require(s >= 0L && s < numShards,
+          s"tfrecord: shard id $s outside [0, $numShards)")
+        s.toInt
+      }
     }
-  }
-
-  private def finishShardedWrite(spark: SparkSession, path: String,
-      w: ShardedWrite, hconf: SerializableHadoopConf,
-      stats: Seq[ShardStat]): Unit =
+    val placed = place(rows.filter(r => !doneB.value.contains(shardOf(r._1))), byShard)
     writeManifest(spark.sparkContext.hadoopConfiguration, path,
-      stats ++
-        resumedStatsRows(spark, path, w.suffix, w.done.toSeq, w.claims, hconf))
+      commitShards(placed.map(_._2), path, gzip, doneB) ++
+        resumedStatsRows(spark, path, gzip, done.toSeq, claims))
+  }
 
   /** PHYSICAL sharded export: write exactly `numShards` TFRecord files
     * where row → file is dictated by `shardCol` (a long in
@@ -773,46 +822,23 @@ object TfRecords {
     * ~3% of the corpus), their tasks commit nothing, and their manifest
     * rows come from the prior manifest's claims (verified against the
     * framed length for plain shards; re-derived by streaming decode when
-    * missing or inconsistent). Resume assumes the SAME input and shard
-    * count as the failed run — the assignment is deterministic for every
-    * caller in this repo, which is what makes the skipped shards' bytes
-    * still correct.
+    * missing or inconsistent). A committed shard whose claim carries
+    * `disk_crc32c` is content-verified first, and rewritten when its
+    * bytes do not hash to the claim. Resume assumes the SAME input and
+    * shard count as the failed run — the assignment is deterministic for
+    * every caller in this repo, which is what makes the skipped shards'
+    * bytes still correct.
     */
   def writeSharded(df: DataFrame, bytesCol: String, shardCol: String,
       numShards: Int, path: String, gzip: Boolean = false,
-      resume: Boolean = false, verifyOnResume: Boolean = true): Unit = {
-    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
-    val spark = df.sparkSession
-    val w = beginShardedWrite(spark, path, gzip, resume, numShards,
-      verifyOnResume)
-    // locals for the task closures — never capture `w` itself (its raw
-    // done set would serialize into every task beside the broadcast)
-    val doneB = w.doneB
-    val suffix = w.suffix
-    val hconf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val byShard = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = numShards
-      override def getPartition(key: Any): Int = {
-        val s = key.asInstanceOf[Long]
-        require(s >= 0L && s < numShards,
-          s"tfrecord: shard id $s outside [0, $numShards)")
-        s.toInt
-      }
-    }
-    val stats = df.select(col(shardCol).cast("long"), col(bytesCol).cast("binary"))
-      .rdd.map { r =>
-        require(!r.isNullAt(0), "tfrecord: shard id must not be null")
-        (r.getLong(0), r.getAs[Array[Byte]](1))
-      }
-      // completed shards' rows never shuffle: the filter sits map-side,
-      // before the exchange
-      .filter(r => !doneB.value.contains(r._1))
-      .partitionBy(byShard)
-      .mapPartitions(it => commitTask(doneB, suffix, path, gzip, hconf)(it.map(_._2)))
-      .collect().toSeq // one row per shard — driver-bounded metadata
-    finishShardedWrite(spark, path, w, hconf, stats)
-  }
+      resume: Boolean = false): Unit =
+    writeShards[Long](df.sparkSession, path, numShards, gzip, resume,
+      df.select(col(shardCol).cast("long"), col(bytesCol).cast("binary"))
+        .rdd.map { r =>
+          require(!r.isNullAt(0), "tfrecord: shard id must not be null")
+          (r.getLong(0), r.getAs[Array[Byte]](1))
+        },
+      s => s)(_ partitionBy _)
 
   /** [[writeSharded]] with a WITHIN-SHARD ORDER contract: rows land in
     * their shard's file sorted ascending by `orderCol` (a string key —
@@ -858,26 +884,7 @@ object TfRecords {
   def writeShardedSorted(df: DataFrame, bytesCol: String, shardCol: String,
       orderCol: String, numShards: Int, path: String,
       gzip: Boolean = false, resume: Boolean = false,
-      tieCols: Seq[String] = Seq.empty,
-      verifyOnResume: Boolean = true): Unit = {
-    require(numShards >= 1, s"numShards must be >= 1, got $numShards")
-    val spark = df.sparkSession
-    val w = beginShardedWrite(spark, path, gzip, resume, numShards,
-      verifyOnResume)
-    // locals for the task closures — never capture `w` (see writeSharded)
-    val doneB = w.doneB
-    val suffix = w.suffix
-    val hconf = new SerializableHadoopConf(
-      spark.sparkContext.hadoopConfiguration)
-    val byShardKey = new org.apache.spark.Partitioner {
-      override def numPartitions: Int = numShards
-      override def getPartition(key: Any): Int = {
-        val s = key.asInstanceOf[(Long, String, String)]._1
-        require(s >= 0L && s < numShards,
-          s"tfrecord: shard id $s outside [0, $numShards)")
-        s.toInt
-      }
-    }
+      tieCols: Seq[String] = Seq.empty): Unit = {
     // order-preserving string encoding per tie column (scaladoc above);
     // the whole tie key is one concatenated string so the shuffle key
     // stays a flat Tuple3 with the stock lexicographic Ordering
@@ -898,27 +905,25 @@ object TfRecords {
         }
         Seq(lit("\u0000"), enc)
       }: _*)
-    val stats = df.select(col(shardCol).cast("long"), col(orderCol).cast("string"),
-        tieExpr.cast("string"), col(bytesCol).cast("binary"))
-      .rdd.map { r =>
-        require(!r.isNullAt(0), "tfrecord: shard id must not be null")
-        require(!r.isNullAt(1),
-          "tfrecord: order key must not be null (a null cannot be placed)")
-        require(!r.isNullAt(2),
-          "tfrecord: tie-break key must not be null (a null cannot be placed)")
-        ((r.getLong(0), r.getString(1), r.getString(2)), r.getAs[Array[Byte]](3))
-      }
-      .filter(r => !doneB.value.contains(r._1._1)) // map-side, pre-shuffle
-      .repartitionAndSortWithinPartitions(byShardKey)
-      .mapPartitions(it => commitTask(doneB, suffix, path, gzip, hconf)(it.map(_._2)))
-      .collect().toSeq // one row per shard — driver-bounded metadata
-    finishShardedWrite(spark, path, w, hconf, stats)
+    writeShards[(Long, String, String)](df.sparkSession, path, numShards,
+      gzip, resume,
+      df.select(col(shardCol).cast("long"), col(orderCol).cast("string"),
+          tieExpr.cast("string"), col(bytesCol).cast("binary"))
+        .rdd.map { r =>
+          require(!r.isNullAt(0), "tfrecord: shard id must not be null")
+          require(!r.isNullAt(1),
+            "tfrecord: order key must not be null (a null cannot be placed)")
+          require(!r.isNullAt(2),
+            "tfrecord: tie-break key must not be null (a null cannot be placed)")
+          ((r.getLong(0), r.getString(1), r.getString(2)), r.getAs[Array[Byte]](3))
+        },
+      _._1)(_ repartitionAndSortWithinPartitions _)
   }
 
-  /** Shard listing for [[read]]/[[readLenient]]: direct children matching
-    * `*.tfrecord*`, minus dot/underscore-prefixed work files (temps,
-    * Hadoop markers) — the same hidden-file convention Spark's file
-    * sources apply. Sorted for a deterministic file→task assignment;
+  /** Shard listing for [[read]], [[readLenient]] and resume: direct
+    * children matching `*.tfrecord*`, minus dot/underscore-prefixed work
+    * files (temps, Hadoop markers) — the same hidden-file convention
+    * Spark's file sources apply. Sorted for a deterministic file→task assignment;
     * sizes ride along so the assignment can be SIZE-WEIGHTED.
     */
   private[graft] def listShardSizes(spark: SparkSession,
@@ -938,9 +943,6 @@ object TfRecords {
             .sortBy(_._1)
         }
   }
-
-  private[graft] def listShards(spark: SparkSession, path: String): Seq[String] =
-    listShardSizes(spark, path).map(_._1)
 
   /** Size-weighted file→task assignment: LPT (longest-processing-time)
     * greedy bin packing — files sorted largest-first, each placed on
@@ -973,17 +975,37 @@ object TfRecords {
 
   /** Open one shard as a buffered (and, for `.gz`, inflating) record
     * stream. Closed on task completion even if the consumer abandons the
-    * iterator mid-file (limit/take downstream).
+    * walk mid-file (limit/take downstream). With `rawCrc`, a
+    * CheckedInputStream UNDER the inflater/buffer folds exactly the
+    * physical bytes into it; its close first drains any raw tail the
+    * decoder did not pull (a gzip member's next-member probe can stop
+    * short of physical EOF), so after a clean walk the CRC covers the
+    * whole file regardless of buffering internals.
     */
   private def openStream(fullPath: String,
-      conf: org.apache.hadoop.conf.Configuration): java.io.DataInputStream = {
+      conf: org.apache.hadoop.conf.Configuration,
+      rawCrc: Option[java.util.zip.CRC32C] = None): java.io.DataInputStream = {
     val p = new org.apache.hadoop.fs.Path(fullPath)
-    val fs = p.getFileSystem(conf)
-    val raw = fs.open(p)
+    val file = p.getFileSystem(conf).open(p)
+    val raw = rawCrc.fold[java.io.InputStream](file) { crc =>
+      new java.util.zip.CheckedInputStream(file, crc) {
+        override def close(): Unit =
+          try {
+            val buf = new Array[Byte](65536)
+            while (this.read(buf) != -1) ()
+          } finally super.close()
+      }
+    }
     val in: java.io.InputStream =
-      if (fullPath.endsWith(".gz"))
-        new java.util.zip.GZIPInputStream(raw, 65536)
-      else new java.io.BufferedInputStream(raw, 65536)
+      try {
+        if (fullPath.endsWith(".gz"))
+          new java.util.zip.GZIPInputStream(raw, 65536) // header fails here
+        else new java.io.BufferedInputStream(raw, 65536)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          try file.close() catch { case _: java.io.IOException => () }
+          throw e
+      }
     val tc = org.apache.spark.TaskContext.get()
     if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
       try in.close() catch { case _: java.io.IOException => () }
@@ -991,36 +1013,12 @@ object TfRecords {
     new java.io.DataInputStream(in)
   }
 
-  /** STRICT streamed record iterator — corruption throws (the [[read]]
-    * contract). The stream closes as soon as the last record is out.
-    */
-  private def recordIterator(fullPath: String,
-      conf: org.apache.hadoop.conf.Configuration): Iterator[Array[Byte]] = {
-    val what = shardName(fullPath)
-    val din = openStream(fullPath, conf)
-    new Iterator[Array[Byte]] {
-      private var nxt = readRecord(din, what)
-      // a zero-record shard (legitimate: an empty shard id in a sharded
-      // export) must release its FD immediately too — many empty files
-      // can share one task after LPT packing
-      if (nxt == null) {
-        try din.close() catch { case _: java.io.IOException => () }
-      }
-      override def hasNext: Boolean = nxt != null
-      override def next(): Array[Byte] = {
-        val r = nxt
-        nxt = readRecord(din, what)
-        if (nxt == null) din.close()
-        r
-      }
-    }
-  }
-
   /** Read TFRecord shards under `path`: one row per record —
     * (file, rec_idx, record) with `rec_idx` the record's ordinal within
     * its file (TFRecord order is positional; the ordinal is the only
     * identity the format itself carries). Records stream off the file —
     * a 100 GiB shard costs one record of task memory, not one file.
+    * Corruption throws.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -1035,123 +1033,12 @@ object TfRecords {
       .parallelize(bins.map(_.toList), math.max(1, bins.size))
       .flatMap(_.iterator.flatMap { f =>
         val file = shardName(f)
-        recordIterator(f, hconf.value).zipWithIndex.map {
+        fileWalk(f, hconf.value, lenient = false).zipWithIndex.map {
           case (rec, i) => (file, i.toLong, rec)
         }
       })
     spark.createDataset(rdd).toDF("file", "rec_idx", "record")
   }
-
-  /** CORRUPTION-class failures — the only ones the lenient read may
-    * swallow: framing/CRC violations (IllegalArgumentException from
-    * [[readRecord]]/[[fully]]), a bad gzip stream (ZipException), or a
-    * truncated gzip header (EOFException out of GZIPInputStream's
-    * constructor). A transient IOException (socket reset, FS hiccup) is
-    * NOT corruption — swallowing it as a truncation verdict would be
-    * silent record loss on a clean file (ADVICE r13); it propagates so
-    * Spark retries the task.
-    */
-  private def isCorruption(e: Throwable): Boolean = e match {
-    case _: IllegalArgumentException => true
-    case _: java.util.zip.ZipException => true
-    case _: java.io.EOFException => true
-    case _ => false
-  }
-
-  /** Pass 1 of the lenient read: a CRC-only streamed walk (payloads
-    * discarded as they verify, their lengths summed) producing the
-    * per-file verdict — (records that verify before any failure point,
-    * verified payload bytes, file was clean, raw-byte CRC32C). Resync
-    * past a bad frame is
-    * impossible: the format carries no record-boundary markers, so the
-    * rest of the file is unparseable by construction (TensorFlow's own
-    * readers stop at the first bad frame too). Only [[isCorruption]]
-    * failures flip the verdict; a transient IOException fails the task
-    * for retry.
-    *
-    * The RAW CRC rides this same pass for free (a CheckedInputStream
-    * under the inflater/buffer sees exactly the physical bytes) — so
-    * the manifest `disk_crc32c` cross-check costs zero extra reads. It
-    * is meaningful only on a CLEAN walk (corruption cuts the walk short
-    * and the verdict is already false); the drain loop makes the value
-    * buffering-independent at clean EOF.
-    */
-  private def scanVerdict(fullPath: String,
-      conf: org.apache.hadoop.conf.Configuration): (Long, Long, Boolean, Long) = {
-    var n = 0L
-    var payload = 0L
-    var clean = true
-    val crc = new java.util.zip.CRC32C
-    var checked: java.util.zip.CheckedInputStream = null
-    var din: java.io.DataInputStream = null
-    try {
-      val p = new org.apache.hadoop.fs.Path(fullPath)
-      checked = new java.util.zip.CheckedInputStream(
-        p.getFileSystem(conf).open(p), crc)
-      val in: java.io.InputStream =
-        if (fullPath.endsWith(".gz"))
-          new java.util.zip.GZIPInputStream(checked, 65536) // header fails here
-        else new java.io.BufferedInputStream(checked, 65536)
-      din = new java.io.DataInputStream(in)
-      var rec = readRecord(din, shardName(fullPath))
-      while (rec != null) {
-        n += 1
-        payload += rec.length
-        rec = readRecord(din, shardName(fullPath))
-      }
-      // drain any raw tail the decoder didn't pull (a gzip member's
-      // next-member probe can stop short of physical EOF) so the CRC
-      // covers the whole file regardless of buffering internals
-      val buf = new Array[Byte](65536)
-      while (checked.read(buf) != -1) ()
-    } catch {
-      case e if isCorruption(e) => clean = false
-    } finally {
-      if (din != null) {
-        try din.close() catch { case _: java.io.IOException => () }
-      } else if (checked != null) {
-        try checked.close() catch { case _: java.io.IOException => () }
-      }
-    }
-    (n, payload, clean, crc.getValue)
-  }
-
-  /** Pass 2 of the lenient read: like [[recordIterator]] but a framing /
-    * CRC / gzip CORRUPTION failure ENDS the iterator instead of
-    * throwing — it replays exactly the records pass 1 counted (same
-    * bytes, same failure point). A transient IOException still throws
-    * (task retry), and [[readLenient]] cross-checks the replay count
-    * against pass 1's.
-    */
-  private def lenientIterator(fullPath: String,
-      conf: org.apache.hadoop.conf.Configuration): Iterator[Array[Byte]] =
-    try {
-      val what = shardName(fullPath)
-      val din = openStream(fullPath, conf)
-      def advance(): Array[Byte] = {
-        val rec =
-          try readRecord(din, what)
-          catch { case e if isCorruption(e) => null }
-        // close at EITHER end — clean EOF or corruption cut — so a
-        // many-files-per-task lenient pass never accumulates open FDs
-        // the way a task-completion-only close would
-        if (rec == null) {
-          try din.close() catch { case _: java.io.IOException => () }
-        }
-        rec
-      }
-      new Iterator[Array[Byte]] {
-        private var nxt = advance()
-        override def hasNext: Boolean = nxt != null
-        override def next(): Array[Byte] = {
-          val r = nxt
-          nxt = advance()
-          r
-        }
-      }
-    } catch {
-      case e if isCorruption(e) => Iterator.empty
-    }
 
   /** [[read]]'s PERMISSIVE twin for petabyte-scale ingest, where one
     * flipped bit in one shard must not kill a 1000-executor job: a
@@ -1164,8 +1051,11 @@ object TfRecords {
     * row, so no bad file is ever silent. The verdict requires knowing
     * whether the END of the file verifies, which a single streamed pass
     * cannot know before its last row — so each file takes two
-    * bounded-memory passes (a CRC-only walk, then the emitting replay)
-    * instead of the old whole-file buffering.
+    * bounded-memory lenient walks: pass 1 folds (count, payload bytes,
+    * clean, raw-byte CRC32C) with payloads discarded as they verify,
+    * pass 2 replays exactly the records pass 1 counted (same bytes, same
+    * failure point) as rows. Only corruption-class failures flip the
+    * verdict; a transient IOException fails the task for retry.
     *
     * When the export carries a `_manifest.json`, each file's verified
     * record count AND payload byte total are cross-checked against the
@@ -1218,7 +1108,9 @@ object TfRecords {
       .parallelize(bins.map(_.toList), math.max(1, bins.size))
       .flatMap(_.iterator.flatMap { f =>
         val file = shardName(f)
-        val (n, pay, verified, rawCrc) = scanVerdict(f, hconf.value)
+        val rawCrc = new java.util.zip.CRC32C
+        val scan = fileWalk(f, hconf.value, lenient = true, Some(rawCrc))
+        val (n, pay) = countAndPayload(scan)
         // manifest cross-check: CRC-clean but count OR payload bytes
         // differ from the writer's claim ⇒ the file is not the one the
         // writer described (payload matters: a swap with the SAME record
@@ -1230,10 +1122,10 @@ object TfRecords {
         val claimOk = claims.get(file) match {
           case Some(c) =>
             c.nRecords == n && c.payloadBytes == pay &&
-              (c.diskCrc < 0 || c.diskCrc == rawCrc)
+              (c.diskCrc < 0 || c.diskCrc == rawCrc.getValue)
           case None => claims.isEmpty
         }
-        val clean = verified && claimOk
+        val clean = scan.clean && claimOk
         if (n == 0L && !clean)
           Iterator((file, -1L, null.asInstanceOf[Array[Byte]], false))
         else {
@@ -1244,7 +1136,7 @@ object TfRecords {
           // would be silent record loss (ADVICE r13). IOException →
           // Spark retries the task.
           var emitted = 0L
-          lenientIterator(f, hconf.value).zipWithIndex.map {
+          fileWalk(f, hconf.value, lenient = true).zipWithIndex.map {
             case (rec, i) =>
               emitted += 1
               (file, i.toLong, rec, clean)

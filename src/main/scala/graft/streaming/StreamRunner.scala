@@ -726,7 +726,7 @@ object StreamRunner {
     val path = tmp.dir().toString
     TR.write(
       graft.Tables.documents(spark, sfDir).repartition(8).selectExpr(
-        "cast(concat(lpad(cast(doc_id as string), 19, '0'), '|', text) as binary) as rec"),
+        s"${TR.DocRecord.encodeSql} as rec"),
       "rec", path)
     // binaryFile's fixed schema, stated explicitly (streaming sources
     // don't infer)
@@ -747,8 +747,8 @@ object StreamRunner {
       .select("content").as[Array[Byte]]
       .flatMap(bytes => TR.decodeAll(bytes).iterator)
       .selectExpr(
-        "cast(substring(cast(value as string), 1, 19) as bigint) as doc_id",
-        "substring(cast(value as string), 21) as text")
+        s"${TR.DocRecord.idSql("value")} as doc_id",
+        s"${TR.DocRecord.textSql("value")} as text")
     val agg = recs.agg(
       count(lit(1)).cast("long").as("n"),
       sum("doc_id").cast("long").as("id_sum"),

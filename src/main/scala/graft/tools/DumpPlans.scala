@@ -166,8 +166,9 @@ object DumpPlans {
     // bitext mining must show the cell-keyed (never A×B) pair join and
     // per-vector rank windows over the one persisted pair frame
     "ss29_bitext_margin",
-    // the TFRecord round-trip must show the binaryFile scan (one task
-    // per shard) feeding the decode flatMap — no exchange before the agg
+    // the TFRecord round-trip must show the shard scan (size-balanced
+    // bins of shards, one bin per task) feeding the decode flatMap — no
+    // exchange before the agg
     "q_tfrecord_roundtrip", "fn12_tfexample_roundtrip",
     "mm12_imagenet_ingest", "fn13_varlen_roundtrip",
     // round-16: deterministic reservoir — the pinned plan must show

@@ -42,9 +42,9 @@ object ShuffleAudit {
     "ss10_srp_neardup" -> "planes are plan literals; only (vec_id, band, key) longs shuffle",
     "dd14_semantic_dedup" -> "block join caps pair fan-out; CC shuffles (id, label) longs only",
     "cu01_curation_ledger" -> "signal projections share a scan (banding scans once more); only digest, band-key and label longs shuffle",
-    "tx11_winnow_fingerprints" -> "winnow selection entirely inside the scan projection: zero shuffle",
+    "tx11_winnow_fingerprints" -> "winnow selection entirely inside the scan projection; the only shuffle is `spread`'s round-robin fan-out of the documents",
     "tx12_winnow_overlap" -> "fp set + cap-bounded pair rows shuffle (linear under floods); text never does",
-    "tx13_gopher_rules" -> "pure scan projection: zero shuffle",
+    "tx13_gopher_rules" -> "pure scan projection; the only shuffle is `spread`'s round-robin fan-out of the documents",
     "sm04_mixture_weights" -> "per-source ppm broadcasts back; the fact table never shuffles",
     "cu02_adaptive_quality" -> "one exchange of (id, source, score); stacked windows share it",
     "ss12_semantic_contamination" -> "cross-set banding: only (id, band, key) longs shuffle, per-side caps",
@@ -154,9 +154,9 @@ object ShuffleAudit {
     "ss28_cell_geometry" -> "pre-flight before the pair stage: broadcast-scored assignment + k-row cell rollup, hot rule by integer cross-multiply — no pair join, no quadratic anywhere",
     "st16_stream_semdedup" -> "sequential SemDeDup over 4 ingest batches on ONE persisted assignment: per level a cell-keyed kept-side join + a within-batch self-join, both bounded by the k∝N cell contract; the streaming twin's state is the kept reps per cell. NOTE: scans 0 B because the per-level localCheckpoint truncates lineage — the audited final plan is a union of checkpoint block scans; the per-level exchanges run while the frame is built (planning each checkpoint executes its adaptive plan), which the audit window includes",
     "ss29_bitext_margin" -> "A×B never forms: cross-side pairs are cell-keyed (k∝N-bounded); k-NN averages are per-vector windows over the ONE persisted pair frame; margin is row-local integer arithmetic on a three-way id join",
-    "q_tfrecord_roundtrip" -> "native TFRecord sink+source: shards are the read-parallelism unit (one binaryFile task per shard), records stream sequentially within a shard with both CRCs verified — TFRecordDataset's own contract; the shuffle is the sink's repartition(8) of the document records into shards, the read side adds only the 1-row agg",
+    "q_tfrecord_roundtrip" -> "native TFRecord sink+source: shards are the read-parallelism unit (size-balanced bins of shards, one bin per task), records stream sequentially within a shard with both CRCs verified — TFRecordDataset's own contract; the shuffle is the sink's repartition(8) of the document records into shards, the read side adds only the 1-row agg",
     "fn12_tfexample_roundtrip" -> "Example encode/parse are per-record byte arithmetic inside Dataset maps — no driver, no exchange before the final 6-row rollup; the TFRecord shards carry the parallelism",
-    "mm12_imagenet_ingest" -> "TFRecord→Example→PNG-decode all partition-local (Dataset maps over binaryFile shards); the read side's only exchange is the 10-row label rollup — the imagenet_input path with zero shuffle before the agg; the rest is the sink's repartition(4) of the encoded Examples into shards",
+    "mm12_imagenet_ingest" -> "TFRecord→Example→PNG-decode all partition-local (Dataset maps over size-balanced bins of TFRecord shards, one bin per task); the read side's only exchange is the 10-row label rollup — the imagenet_input path with zero shuffle before the agg; the rest is the sink's repartition(4) of the encoded Examples into shards",
     "fn13_varlen_roundtrip" -> "variable-length int64 features (token-length lists) encode/parse partition-local; the output is per-document, so there is NO exchange at all — ingest of sequence features is pure scan work",
     "fn14_wmt_ingest" -> "the composed GNMT text chain: one corpus scan, vocab broadcast as one sorted array (lookup inside the scan projection), ONE bucket exchange that the batch-max window reuses (plan-pinned) — padded_batch costs a sort, never a second corpus shuffle",
     "mm13_ssd_ingest" -> "the composed detection chain: TFRecord→Example(VarLen boxes)→PNG-decode→per-box crop all partition-local Dataset maps; output is per-box rows, so the read side has NO exchange at all; the shuffle is the sink's repartition(4) of the encoded Examples into shards")

@@ -736,8 +736,8 @@ class TfRecordsSpec extends AnyFunSuite {
       TfRecords.writeSharded(df, "rec", "shard_id", 3, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(TfRecords.layoutGzip(fs,
-        new org.apache.hadoop.fs.Path(path)).contains(false))
+      assert(TfRecords.readLayout(fs,
+        new org.apache.hadoop.fs.Path(path)).gzip.contains(false))
       // flipped format on resume with the marker present: fail loud, SAME
       // contract as a changed shard count — before ADVICE r17 this path
       // silently deleted every committed shard and re-exported the corpus
@@ -756,8 +756,8 @@ class TfRecordsSpec extends AnyFunSuite {
       java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_layout.json"))
       TfRecords.writeSharded(df, "rec", "shard_id", 3, path, gzip = true,
         resume = true)
-      assert(TfRecords.layoutGzip(fs,
-        new org.apache.hadoop.fs.Path(path)).contains(true),
+      assert(TfRecords.readLayout(fs,
+        new org.apache.hadoop.fs.Path(path)).gzip.contains(true),
         "the resume must re-seed a marker declaring the new format")
       val names = new java.io.File(path).listFiles().map(_.getName)
       assert(names.count(_.endsWith(".tfrecord.gz")) == 3)
@@ -803,12 +803,14 @@ class TfRecordsSpec extends AnyFunSuite {
       TfRecords.writeSharded(df, "rec", "shard_id", 2, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(TfRecords.layoutNumShards(fs,
-        new org.apache.hadoop.fs.Path(path)).contains(2))
+      assert(TfRecords.readLayout(fs,
+        new org.apache.hadoop.fs.Path(path)).numShards.contains(2))
       // corrupt the marker: resume must not fail on unparseable metadata —
       // it silently falls back to the shrink-only presence check
       java.nio.file.Files.write(
         java.nio.file.Paths.get(path, "_layout.json"), Array[Byte](0, 1, -1))
+      assert(TfRecords.readLayout(fs, new org.apache.hadoop.fs.Path(path)) ==
+        TfRecords.Layout(None, None), "a garbage marker declares neither field")
       new java.io.File(path).listFiles()
         .filter(_.getName.endsWith(".crc")).foreach(_.delete())
       java.nio.file.Files.delete(
@@ -816,8 +818,8 @@ class TfRecordsSpec extends AnyFunSuite {
       TfRecords.writeSharded(df, "rec", "shard_id", 2, path, resume = true)
       assert(TfRecords.read(spark, path).count() == 20)
       // and the resume re-seeded a parseable marker for the next attempt
-      assert(TfRecords.layoutNumShards(fs,
-        new org.apache.hadoop.fs.Path(path)).contains(2))
+      assert(TfRecords.readLayout(fs,
+        new org.apache.hadoop.fs.Path(path)).numShards.contains(2))
     }
   }
 
@@ -853,45 +855,6 @@ class TfRecordsSpec extends AnyFunSuite {
     }
   }
 
-  test("verifyOnResume=false amortizes the resume content pass: committed " +
-    "shards are trusted (no CRC read, no rewrite) while missing shards " +
-    "still write (ADVICE r16)") {
-    import spark.implicits._
-    val df = spark.range(40).selectExpr("id % 2 as shard_id",
-      "cast(printf('p-A-%03d', id) as binary) as rec")
-    withTempDir("graft-tfrec-novrfy") { tmp =>
-      val path = tmp.toString
-      TfRecords.writeSharded(df, "rec", "shard_id", 2, path)
-      // same-length content swap of shard 0 (the class only the CRC pass
-      // catches), and shard 1 deleted (a genuinely missing shard)
-      val victim = new java.io.File(path, "part-00000.tfrecord")
-      val swapped = (0L until 40L).filter(_ % 2 == 0)
-        .map(i => TfRecords.encodeRecord(f"p-B-$i%03d".getBytes("UTF-8")))
-        .reduce(_ ++ _)
-      java.nio.file.Files.write(victim.toPath, swapped)
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(path, "part-00001.tfrecord"))
-      new java.io.File(path).listFiles()
-        .filter(_.getName.endsWith(".crc")).foreach(_.delete())
-      TfRecords.writeSharded(df, "rec", "shard_id", 2, path, resume = true,
-        verifyOnResume = false)
-      // the missing shard was rewritten; the swapped one was TRUSTED —
-      // that is the documented trade: O(missing) resume I/O, and the
-      // lenient read's disk_crc32c cross-check remains the detection net
-      val s0 = TfRecords.decodeAll(java.nio.file.Files.readAllBytes(victim.toPath))
-        .map(new String(_, "UTF-8"))
-      assert(s0.forall(_.startsWith("p-B-")),
-        "verifyOnResume=false must not rewrite a committed shard")
-      val s1 = TfRecords.decodeAll(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path, "part-00001.tfrecord")))
-      assert(s1.size == 20)
-      val flagged = TfRecords.readLenient(spark, path).collect()
-        .filter(!_.getBoolean(3)).map(_.getString(0)).distinct
-      assert(flagged.toSeq == Seq("part-00000.tfrecord"),
-        "readLenient must still flag the trusted-but-swapped shard")
-    }
-  }
-
   test("manifestClaims parsing: pre-disk_bytes manifests fall back to -1, " +
     "malformed lines are skipped, a garbage file degrades to no claims") {
     withTempDir("graft-tfrec-oldmani") { dir =>
@@ -917,5 +880,70 @@ class TfRecordsSpec extends AnyFunSuite {
         assert(TfRecords.manifestClaims(spark, dir.toString).isEmpty)
       }
     }
+  }
+
+  test("the shard-name codec round-trips ids of any width and gives no id " +
+    "for temps, markers or the other format's names") {
+    import spark.implicits._
+    for (id <- Seq(0L, 7L, 123456L); gzip <- Seq(false, true)) {
+      val name = TfRecords.shardFile(id, gzip)
+      assert(TfRecords.shardId(name, gzip).contains(id), name)
+      assert(TfRecords.shardId(name, !gzip).isEmpty, name)
+    }
+    assert(TfRecords.shardFile(7L, gzip = false) == "part-00007.tfrecord")
+    assert(TfRecords.shardFile(123456L, gzip = true) == "part-123456.tfrecord.gz")
+    Seq(".part-00001.17.inprogress", "_manifest.json", "_layout.json",
+      "part-00000.tfrecord.gz").foreach { n =>
+      assert(TfRecords.shardId(n, gzip = false).isEmpty, n)
+    }
+    // the read-side SQL reads every digit; a fixed five-digit substring
+    // reads part-123456 back as shard 12345
+    val ids = Seq("part-00003.tfrecord", "part-123456.tfrecord",
+      "part-00042.tfrecord.gz").toDF("file")
+      .selectExpr(TfRecords.fileShardIdSql,
+        "cast(substring(file, 6, 5) as bigint)")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(ids == Seq((3L, 3L), (123456L, 12345L), (42L, 42L)))
+  }
+
+  test("readLenient's rows equal decodeLenient of the same bytes: same " +
+    "record prefix, same clean flag, and the marker row when no record " +
+    "verifies") {
+    val recs = (0 until 6).map(i => s"doc-$i-${"x" * i}".getBytes("UTF-8"))
+    val file = recs.map(TfRecords.encodeRecord).reduce(_ ++ _)
+    def flip(at: Int): Array[Byte] = {
+      val b = file.clone()
+      b(at) = (b(at) ^ 0x01).toByte
+      b
+    }
+    val payload3 = recs.take(3).map(16 + _.length).sum + 12
+    Seq(
+      "intact" -> file,
+      "bad first frame" -> flip(0),
+      "flipped payload bit mid-file" -> flip(payload3),
+      "truncated tail" -> file.dropRight(3),
+      "trailing partial header" -> (file ++ file.take(5))
+    ).foreach { case (what, bytes) =>
+      // a one-shard export with no manifest, written without the local
+      // filesystem's .crc sidecar, so only the frame CRCs judge it
+      withTempDir("graft-tfrec-agree") { dir =>
+        java.nio.file.Files.write(dir.resolve("part-00000.tfrecord"), bytes)
+        val (want, clean) = TfRecords.decodeLenient(bytes)
+        assert(clean == (what == "intact"), what)
+        val rows = TfRecords.readLenient(spark, dir.toString).collect()
+          .sortBy(_.getLong(1))
+        assert(rows.forall(_.getString(0) == "part-00000.tfrecord"), what)
+        if (want.isEmpty) {
+          assert(rows.length == 1 && rows(0).getLong(1) == -1L &&
+            rows(0).isNullAt(2) && !rows(0).getBoolean(3), what)
+        } else {
+          assert(rows.map(_.getLong(1)).toSeq == want.indices.map(_.toLong), what)
+          assert(rows.zip(want).forall { case (r, w) =>
+            r.getAs[Array[Byte]](2).sameElements(w) && r.getBoolean(3) == clean
+          }, what)
+        }
+      }
+    }
+    assert(TfRecords.decodeLenient(flip(payload3))._1.length == 3)
   }
 }
