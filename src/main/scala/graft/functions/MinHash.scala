@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the 60-bit md5 hash of every 3-token
@@ -15,10 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * pays. Bit-identical to the SQL chain
   * `split(text, '\\s+')` → `concat_ws(' ', t_i, t_i+1, t_i+2)` →
   * `cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)`
-  * (Portable.hash60 of each shingle, in order): tokens come from the
-  * same `UTF8String.split` call Spark's `split` makes, each shingle's
-  * UTF-8 bytes feed a thread-local MD5 without building the string, and
-  * the first 15 hex digits of the digest are its first 8 bytes >>> 4.
+  * (Portable.hash60 of each shingle, in order): tokens are the byte
+  * spans between runs of `\s` bytes, read in place for ASCII text and
+  * after the same String decode `split` makes for any other; each
+  * shingle's bytes are copied into one reused buffer that feeds a
+  * thread-local MD5, and the first 15 hex digits of the digest are its
+  * first 8 bytes >>> 4.
   * NULL text gives NULL; fewer than 3 tokens give `[]`.
   *
   * The SQL chain runs interpreted higher-order lambdas, a hex string and
@@ -46,28 +49,78 @@ case class ShingleHashes(child: Expression) extends UnaryExpression {
 }
 
 object ShingleHashes {
-  private val whitespace = UTF8String.fromString("\\s+")
-  private val md5 = ThreadLocal.withInitial[MessageDigest](() => MessageDigest.getInstance("MD5"))
+  /** Per-thread MD5 and buffers: token bounds, one shingle's bytes, one digest. */
+  private final class Scratch {
+    val md: MessageDigest = MessageDigest.getInstance("MD5")
+    val digest = new Array[Byte](16)
+    var bounds = new Array[Int](64) // start and end byte offset of each token
+    var buf = new Array[Byte](256)
+    def addToken(t: Int, from: Int, until: Int): Unit = {
+      if (bounds.length < 2 * t + 2) bounds = java.util.Arrays.copyOf(bounds, bounds.length * 2)
+      bounds(2 * t) = from
+      bounds(2 * t + 1) = until
+    }
+    def shingle(n: Int): Array[Byte] = { if (buf.length < n) buf = new Array[Byte](n * 2); buf }
+  }
+  private val scratch = ThreadLocal.withInitial[Scratch](() => new Scratch)
+
+  /** Java's `\\s` (space, \t, \n, \x0B, \f, \r): ASCII bytes, which never
+    * occur inside a multi-byte UTF-8 sequence.
+    */
+  private def isSpace(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
 
   /** Top 60 bits of the md5 of each 3-token shingle of `s`, in order. */
   def compute(s: UTF8String): ArrayData = {
-    val toks = s.split(whitespace, -1)
-    val n = math.max(toks.length - 2, 0)
-    val out = new Array[Long](n)
-    val md = md5.get()
+    // ASCII is read in place; other text goes through the String decode
+    // `split` makes, so malformed bytes become U+FFFD as there
+    val u = if (s.isFullAscii) s else UTF8String.fromString(s.toString)
+    val sc = scratch.get()
+    // tokens are the spans between maximal runs of whitespace, leading and
+    // trailing empty ones included: exactly `split(u, "\\s+", -1)`
+    val len = u.numBytes
+    var nTok = 0
+    var start = 0
     var i = 0
-    while (i < n) {
-      md.update(toks(i).getBytes)
-      md.update(' '.toByte)
-      md.update(toks(i + 1).getBytes)
-      md.update(' '.toByte)
-      md.update(toks(i + 2).getBytes)
-      val d = md.digest()
-      var top = 0L
+    while (i < len) {
+      if (isSpace(u.getByte(i))) {
+        sc.addToken(nTok, start, i)
+        nTok += 1
+        i += 1
+        while (i < len && isSpace(u.getByte(i))) i += 1
+        start = i
+      } else i += 1
+    }
+    sc.addToken(nTok, start, len)
+    nTok += 1
+    val bounds = sc.bounds
+    val n = math.max(nTok - 2, 0)
+    val out = new Array[Long](n)
+    val md = sc.md
+    val d = sc.digest
+    val base = u.getBaseObject
+    val offset = u.getBaseOffset
+    var t = 0
+    while (t < n) {
+      // the shingle's bytes: its three tokens joined by single spaces (no
+      // longer than their span in `u`, whose separator runs are nonempty)
+      val buf = sc.shingle(bounds(2 * t + 5) - bounds(2 * t))
+      var pos = 0
       var j = 0
+      while (j < 3) {
+        if (j > 0) { buf(pos) = ' '; pos += 1 }
+        val from = bounds(2 * (t + j))
+        val tokLen = bounds(2 * (t + j) + 1) - from
+        Platform.copyMemory(base, offset + from, buf, Platform.BYTE_ARRAY_OFFSET + pos, tokLen)
+        pos += tokLen
+        j += 1
+      }
+      md.update(buf, 0, pos)
+      md.digest(d, 0, 16)
+      var top = 0L
+      j = 0
       while (j < 8) { top = (top << 8) | (d(j) & 0xffL); j += 1 }
-      out(i) = top >>> 4
-      i += 1
+      out(t) = top >>> 4
+      t += 1
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }

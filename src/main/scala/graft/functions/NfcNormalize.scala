@@ -44,16 +44,19 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 
 object NfcNormalize {
 
-  /** NFC-normalize one UTF8String. The fast path skips the String
-    * round-trip entirely: `Normalizer.isNormalized` is O(n) with no
-    * allocation, and real corpora are overwhelmingly already NFC.
+  /** NFC-normalize one UTF8String. All-ASCII text is NFC by definition
+    * and comes back as the same instance without a decode; other text
+    * still skips the re-encode when `Normalizer.isNormalized` holds, as
+    * real corpora overwhelmingly are already NFC.
     */
-  def normalize(s: UTF8String): UTF8String = {
-    val str = s.toString
-    if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
-    else UTF8String.fromString(
-      java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
-  }
+  def normalize(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s
+    else {
+      val str = s.toString
+      if (java.text.Normalizer.isNormalized(str, java.text.Normalizer.Form.NFC)) s
+      else UTF8String.fromString(
+        java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
+    }
 
   /** Register `nfc_normalize` for SQL use on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =

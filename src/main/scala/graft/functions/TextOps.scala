@@ -114,7 +114,7 @@ object TextOps {
     */
   private[graft] def winnowFps(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // the selection runs in the native WinnowFingerprints expression —
-    // a true O(1)-rolling hash + deque window min, one static call
+    // a true O(1)-rolling hash + robust-winnowing window min, one static call
     // inside whole-stage codegen. The journey here is instructive:
     // explode + doc-partitioned window min shuffled every position
     // (18.8 MiB vs a 0.6 MiB scan); array HOFs with substring(norm, i)

@@ -29,6 +29,20 @@ object SparkTestSession {
     finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  /** The two evaluation paths of a native expression: interpreted
+    * `nullSafeEval` (NO_CODEGEN, whole-stage codegen off) and `doGenCode`
+    * inside whole-stage codegen (CODEGEN_ONLY). Pairs of factory mode and
+    * whole-stage flag, for [[withCodegenMode]].
+    */
+  val codegenModes: Seq[(String, Boolean)] = Seq("NO_CODEGEN" -> false, "CODEGEN_ONLY" -> true)
+
+  /** Run `body` with `spark.sql.codegen.factoryMode` at `factoryMode` and
+    * whole-stage codegen on or off, then restore both.
+    */
+  def withCodegenMode[T](factoryMode: String, wholeStage: Boolean)(body: => T): T =
+    withConf("spark.sql.codegen.factoryMode", factoryMode)(
+      withConf("spark.sql.codegen.wholeStage", wholeStage.toString)(body))
+
   /** Run `body` with session conf `key` at `value`, then restore the
     * previous value (unset stays unset).
     */

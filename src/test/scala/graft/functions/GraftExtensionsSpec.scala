@@ -88,6 +88,11 @@ class GraftExtensionsSpec extends AnyFunSuite {
       spark.sql("select winnow_fps(text, 5, double(4.0)) from docs_lit").collect()
     }
     assert(dblW.getMessage.contains("w must be an integer literal"))
+    // a window or k-gram of no positions is out of range, not an empty answer
+    val zeroW = intercept[Exception] {
+      spark.sql("select winnow_fps(text, 5, 0) from docs_lit").collect()
+    }
+    assert(zeroW.getMessage.contains("k and w must be at least 1"))
     // foldable literals still work, including arithmetic that folds
     assert(spark.sql("select winnow_fps(text, 5, 2 + 2) from docs_lit").count() == 5)
   }

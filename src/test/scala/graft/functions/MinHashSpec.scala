@@ -1,6 +1,8 @@
 package graft.functions
 
-import graft.SparkTestSession.{sf, spark}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.SparkTestSession.{codegenModes, sf, spark, withCodegenMode}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -29,12 +31,18 @@ class MinHashSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       s"((${a2(k)}L * (x % ${p2}L) + ${b2(k)}L) % ${p2}L))) as mh$k"
   }
 
-  private val edgeCases: Seq[Option[String]] = Seq(
+  private val edgeCases: Seq[Option[Array[Byte]]] = Seq(
     None, Some(""), Some("   "), Some("\t\n "), Some("one"), Some("one two"),
     Some("one two three"), Some("  leading and trailing whitespace  "),
     Some("tabs\tand\nnewlines\r\nmixed  \t in between words"),
     Some("naïve café déjà vu 日本語 テキスト 🙂 emoji ünïcödé"),
-    Some("a b c a b c a b c"))
+    Some("a b c a b c a b c"),
+    Some("vertical\u000Btab\fform feed \u000B\f separators"),
+    Some(" \t\n\u000B\f\r")).map(_.map(_.getBytes(UTF_8))) ++ Seq(
+    // malformed UTF-8, lone 0xFF and truncated 0xC3 bytes, which split
+    // reads as U+FFFD: "a \xFF b\xFFc d\xC3e \xC3"
+    Some(Array(0x61, 0x20, 0xff, 0x20, 0x62, 0xff, 0x63, 0x20, 0x64, 0xc3, 0x65, 0x20, 0xc3)
+      .map(_.toByte)))
 
   private def randomDocs(n: Int, seed: Int): Seq[Option[String]] = {
     val rnd = new scala.util.Random(seed)
@@ -54,18 +62,12 @@ class MinHashSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  private lazy val docs: DataFrame = (edgeCases ++ randomDocs(2000, 7)).zipWithIndex
-    .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    .repartition(3) // keeps the projections off the driver's LocalRelation folding
-
-  private def withMode[T](factoryMode: String, wholeStage: Boolean)(body: => T): T = {
-    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-    val prev = keys.map(spark.conf.getOption)
-    spark.conf.set(keys(0), factoryMode)
-    spark.conf.set(keys(1), wholeStage.toString)
-    try body
-    finally keys.zip(prev).foreach { case (k, p) => p.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
+  // text is cast from bytes so malformed UTF-8 reaches the kernels as is
+  private lazy val docs: DataFrame =
+    (edgeCases ++ randomDocs(2000, 7).map(_.map(_.getBytes(UTF_8)))).zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "raw")
+      .repartition(3) // keeps the projections off the driver's LocalRelation folding
+      .selectExpr("doc_id", "cast(raw as string) as text")
 
   private def rows(df: DataFrame): Map[Long, Seq[Any]] =
     df.collect().map(r => r.getLong(0) -> r.toSeq.tail.map {
@@ -73,9 +75,9 @@ class MinHashSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       case v => v
     }).toMap
 
-  for ((mode, wholeStage) <- Seq("NO_CODEGEN" -> false, "CODEGEN_ONLY" -> true))
+  for ((mode, wholeStage) <- codegenModes)
     test(s"ShingleHashes and MinHashSig equal the HOF reference under $mode") {
-      withMode(mode, wholeStage) {
+      withCodegenMode(mode, wholeStage) {
         for (k <- Seq(4, 8)) {
           val ref = docs
             .selectExpr("doc_id", "split(text, '\\\\s+') as toks")

@@ -52,6 +52,15 @@ class NfcNormalizeSpec extends AnyFunSuite {
     assert(e.eval(null).toString == composed)
   }
 
+  test("ASCII input comes back as the same instance; mixed input still composes") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val ascii = UTF8String.fromString("plain ascii, tabs\tand 0123456789 ~")
+    assert(NfcNormalize.normalize(ascii) eq ascii)
+    val mixed = NfcNormalize.normalize(UTF8String.fromString(s"ascii $decomposed ascii"))
+    assert(mixed.toString == s"ascii $composed ascii")
+    assert(normSql(s"ascii $decomposed ascii").head == s"ascii $composed ascii")
+  }
+
   test("non-string input fails analysis with a clear message") {
     NfcNormalize.register(spark)
     val err = intercept[Exception] {

@@ -1,14 +1,84 @@
 package graft.functions
 
-import graft.SparkTestSession.{sf, spark}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import graft.SparkTestSession.{codegenModes, sf, spark, withCodegenMode}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Winnowing (MOSS) fingerprint properties: the w+k-1 match guarantee,
+/** Winnowing (MOSS) fingerprint properties: the `winnow_fps` kernel's
+  * exact output against a literal reference, the w+k-1 match guarantee,
   * selection density, and the overlap query's consistency with the
   * fingerprint set it joins.
   */
-class WinnowSpec extends AnyFunSuite {
+class WinnowSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** Literal winnowing of one UTF-8 byte string: decode as Java does
+    * (malformed bytes become U+FFFD), hash every k-gram of code points by
+    * its closed form, take the rightmost minimum of every w-window of
+    * hashes, and keep the distinct selected values in first-occurrence
+    * order.
+    */
+  private def refWinnow(bytes: Array[Byte], k: Int, w: Int): Seq[Long] = {
+    val cps = new String(bytes, UTF_8).codePoints.toArray.toSeq
+    if (cps.length < k + w - 1) return Nil
+    val hs = cps.sliding(k).map(_.foldLeft(0L)((acc, c) => (acc * 256 + c) % 2147483647L)).toVector
+    hs.indices.sliding(w).map(win => hs(win.reverse.minBy(hs))).toSeq.distinct
+  }
+
+  private val kernelCases: Seq[Array[Byte]] = {
+    val rnd = new scala.util.Random(11)
+    def text(alphabet: Vector[String], maxLen: Int) =
+      Seq.fill(rnd.nextInt(maxLen))(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val fixed = Seq(
+      "", "a", "ab", "short", "the quick brown fox jumps over the lazy dog",
+      "café naïve déjà vu 日本 🙂 emoji 🙂🙂 ünïcödé 日本語テキスト",
+      "abababababababababababababababab", "aaaaaaaaaaaaaaaaaaaaaaaa",
+      "🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂🙂").map(_.getBytes(UTF_8))
+    // malformed UTF-8: a lone 0xFF inside text and a truncated 0xC3 in the
+    // middle and at the end
+    val malformed = Seq(
+      "valid text then ".getBytes(UTF_8) ++ Array(0xff.toByte) ++ " and more text after it".getBytes(UTF_8),
+      "caf".getBytes(UTF_8) ++ Array(0xc3.toByte) ++ " au lait with a cut byte ".getBytes(UTF_8) ++
+        Array(0xc3.toByte))
+    val ascii = Vector("a", "b", "c", " ", "the", "fox")
+    val mixed = Vector("a", "b", " ", "é", "日本", "🙂")
+    fixed ++ malformed ++
+      Seq.fill(100)(text(Vector("a", "b"), 60).getBytes(UTF_8)) ++ // all ties
+      Seq.fill(100)(text(ascii, 40).getBytes(UTF_8)) ++
+      Seq.fill(100)(text(mixed, 40).getBytes(UTF_8))
+  }
+
+  for ((mode, wholeStage) <- codegenModes)
+    test(s"winnow_fps equals the literal reference array under $mode") {
+      val raw = kernelCases.zipWithIndex.map { case (b, i) => (i.toLong, b) }.toDF("id", "raw")
+        .repartition(3) // keeps the projection off the driver's LocalRelation folding
+        .selectExpr("id", "raw", "cast(raw as string) as text")
+      withCodegenMode(mode, wholeStage) {
+        for ((k, w) <- Seq((12, 8), (1, 1), (3, 4), (5, 1), (1, 6))) {
+          val df = raw.select(col("id"), col("raw"),
+            WinnowFingerprints.winnowFps(col("text"), k, w).as("fps"),
+            col("text").cast("binary").as("bytes"))
+          val got = df.collect()
+          // the kernel ran inside whole-stage codegen exactly when asked to
+          val fused = collect(df.queryExecution.executedPlan) {
+            case p: WholeStageCodegenExec if p.toString.contains("winnowfingerprints(") => p
+          }
+          assert(fused.nonEmpty == wholeStage)
+          assert(got.length == kernelCases.size)
+          got.foreach { r =>
+            val bytes = r.getAs[Array[Byte]]("raw")
+            // the cast hands the kernel the bytes unchanged, malformed ones too
+            assert(r.getAs[Array[Byte]]("bytes").sameElements(bytes))
+            assert(r.getSeq[Long](2) == refWinnow(bytes, k, w),
+              s"k=$k w=$w text=${new String(bytes, UTF_8)}")
+          }
+        }
+      }
+    }
 
   test("docs sharing a span >= w+k-1 chars share a fingerprint") {
     // k=12, w=8: guarantee threshold is 19 normalized chars. The shared
